@@ -1,19 +1,26 @@
 """Output checks against the DuckDB oracles.
 
-Every check folds a Spark result and its DuckDB twin down to a row count
-and two 60-bit hash sums, using the canonical cell rendering of
-``tests/oracle.py`` (``compare_agghash``), so no result rows leave either
-engine. The DuckDB side of a registry query depends only on the
-generated tables and the oracle text, so its hash is cached on disk per
-(oracle text, data directory) and paid once per checkout.
+A registry query is checked with ``compare_agghash`` from
+``tests/oracle.py``: column names, canonical types, row count and two
+60-bit hash sums, so no result rows leave either engine. Its Spark side
+renders timestamps with ``unix_micros``, which rejects TIMESTAMP_NTZ;
+the generated tables carry naive timestamps like the engine's test data,
+so NTZ result columns are cast to the session-zone TIMESTAMP first (the
+session zone is UTC, so the wall-clock value is kept). The i94 ETL
+tables have no registry query over the generated inputs, so they are
+folded the same way here, with the same canonical cell rendering, and
+compared with the DuckDB twins of ``pipe_i94_fact`` and
+``pipe_i94_port_demographics``.
+
+``PERFBENCH_BREAK_ORACLE=1`` perturbs every expected hash; the self-test
+uses it to show that a mismatch fails the run.
 """
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
 import sys
+from contextlib import contextmanager
 
 import duckdb
 
@@ -22,43 +29,74 @@ sys.path.insert(0, os.path.join(_ROOT, "tests"))
 
 import oracle  # noqa: E402  (tests/oracle.py)
 
-from udacity_data_engineer_capstone_spark.catalog import TABLES  # noqa: E402
-
 
 class CheckFailed(AssertionError):
     pass
 
 
-def duck_con(sf_dir: str | None, spill_dir: str) -> duckdb.DuckDBPyConnection:
+def _broken() -> bool:
+    return os.environ.get("PERFBENCH_BREAK_ORACLE") == "1"
+
+
+def _ltz(sdf):
+    ntz = {f.name for f in sdf.schema.fields if f.dataType.typeName() == "timestamp_ntz"}
+    if not ntz:
+        return sdf
+    return sdf.select([sdf[c].cast("timestamp").alias(c) if c in ntz else sdf[c]
+                       for c in sdf.columns])
+
+
+@contextmanager
+def _oracle_patched(spill_dir: str):
+    """For the duration of one ``compare_agghash`` call: keep DuckDB's
+    spill directory inside ``spill_dir``, hash NTZ columns as TIMESTAMP,
+    and apply the broken-oracle switch."""
+    saved = (oracle.duckdb_con, oracle._agghash_scalars_spark,
+             oracle._agghash_scalars_duck)
+    con_orig, spark_orig, duck_orig = saved
+
+    def con(sf_dir):
+        c = con_orig(sf_dir)
+        c.execute(f"SET temp_directory='{spill_dir}'")
+        return c
+
+    def spark_side(sdf, *a, **k):
+        return spark_orig(_ltz(sdf), *a, **k)
+
+    def broken_duck(*a, **k):
+        n, h1, h2 = duck_orig(*a, **k)
+        return n, h1 + 1, h2
+
+    oracle.duckdb_con, oracle._agghash_scalars_spark = con, spark_side
+    if _broken():
+        oracle._agghash_scalars_duck = broken_duck
+    try:
+        yield
+    finally:
+        (oracle.duckdb_con, oracle._agghash_scalars_spark,
+         oracle._agghash_scalars_duck) = saved
+
+
+def check_query(spark, op: str, sf_dir: str, spill_dir: str) -> None:
+    """Raise unless registry query ``op`` matches its DuckDB oracle."""
+    with _oracle_patched(spill_dir):
+        oracle.compare_agghash(spark, op, sf_dir)
+
+
+def duck_con(spill_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     con.execute("SET memory_limit='2GB'")
     con.execute(f"SET temp_directory='{spill_dir}'")
     con.execute("SET threads=2")
-    if sf_dir is not None:
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-            )
     return con
 
 
-def _spark_side(sdf):
-    oracle.assert_no_decimal("result", sdf)
-    fields = {f.name: oracle.canon_spark_type(f.dataType) for f in sdf.schema.fields}
-    cols = sorted(sdf.columns)
-    return cols, [fields[c] for c in cols]
-
-
-def _duck_side(con, sql: str):
+def duck_hash(con, sql: str) -> dict:
     rel = con.sql(sql)
     raw = list(rel.columns)
     types = [oracle.canon_duck_type(t) for t in rel.types]
     order = sorted(range(len(raw)), key=lambda i: raw[i])
-    return [raw[i] for i in order], [types[i] for i in order]
-
-
-def duck_hash(con, sql: str) -> dict:
-    cols, types = _duck_side(con, sql)
+    cols, types = [raw[i] for i in order], [types[i] for i in order]
     n, h1, h2 = oracle._agghash_scalars_duck(
         con, sql, cols, types, oracle._AGGHASH_DOUBLE_SCALE
     )
@@ -66,14 +104,11 @@ def duck_hash(con, sql: str) -> dict:
 
 
 def spark_hash(sdf) -> dict:
-    # TIMESTAMP_NTZ canonicalizes as timestamp, but unix_micros() needs a
-    # session-zone TIMESTAMP; the session zone is UTC, so the cast keeps
-    # the wall-clock value the oracle renders.
-    ntz = {f.name for f in sdf.schema.fields if f.dataType.typeName() == "timestamp_ntz"}
-    if ntz:
-        sdf = sdf.select([sdf[c].cast("timestamp").alias(c) if c in ntz else sdf[c]
-                          for c in sdf.columns])
-    cols, types = _spark_side(sdf)
+    sdf = _ltz(sdf)
+    oracle.assert_no_decimal("result", sdf)
+    fields = {f.name: oracle.canon_spark_type(f.dataType) for f in sdf.schema.fields}
+    cols = sorted(sdf.columns)
+    types = [fields[c] for c in cols]
     n, h1, h2 = oracle._agghash_scalars_spark(
         sdf, cols, types, oracle._AGGHASH_DOUBLE_SCALE
     )
@@ -82,45 +117,11 @@ def spark_hash(sdf) -> dict:
 
 def compare(name: str, got: dict, want: dict) -> None:
     """Raise :class:`CheckFailed` unless the two hashes agree on column
-    names, canonical types, row count and both hash sums.
-
-    ``PERFBENCH_BREAK_ORACLE=1`` perturbs the expected hash; the
-    self-test uses it to show that a mismatch fails the run."""
-    if os.environ.get("PERFBENCH_BREAK_ORACLE") == "1":
+    names, canonical types, row count and both hash sums."""
+    if _broken():
         want = dict(want, h1=want["h1"] + 1)
     for key in ("cols", "types", "n", "h1", "h2"):
         if got[key] != want[key]:
             raise CheckFailed(
                 f"{name}: {key} differs: spark={got[key]!r} duckdb={want[key]!r}"
             )
-
-
-class OracleCache:
-    """DuckDB-side hashes of registry oracles, cached on disk."""
-
-    def __init__(self, cache_dir: str, sf_dir: str, spill_dir: str) -> None:
-        self.cache_dir = cache_dir
-        self.sf_dir = sf_dir
-        self.spill_dir = spill_dir
-        self._con = None
-        os.makedirs(cache_dir, exist_ok=True)
-
-    def expected(self, sql: str) -> dict:
-        key = hashlib.sha256(f"{self.sf_dir}\n{sql}".encode()).hexdigest()[:24]
-        path = os.path.join(self.cache_dir, f"{key}.json")
-        if os.path.exists(path):
-            with open(path, encoding="utf-8") as fh:
-                return json.load(fh)
-        if self._con is None:
-            self._con = duck_con(self.sf_dir, self.spill_dir)
-        want = duck_hash(self._con, sql)
-        tmp = f"{path}.{os.getpid()}"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(want, fh)
-        os.replace(tmp, path)
-        return want
-
-    def close(self) -> None:
-        if self._con is not None:
-            self._con.close()
-            self._con = None

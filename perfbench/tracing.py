@@ -193,12 +193,29 @@ def jvm_heap_after_gc_mb(spark) -> float:
     return used.getHeapMemoryUsage().getUsed() / (1 << 20)
 
 
-def _children(pid: int) -> list[int]:
-    try:
-        with open(f"/proc/{pid}/task/{pid}/children", encoding="ascii") as fh:
-            return [int(x) for x in fh.read().split()]
-    except OSError:
-        return []
+def _stat(pid: int) -> list[str]:
+    """Fields of ``/proc/<pid>/stat`` after the command name."""
+    with open(f"/proc/{pid}/stat", encoding="ascii") as fh:
+        return fh.read().rsplit(")", 1)[1].split()
+
+
+def _descendants(pid: int) -> list[int]:
+    """Every live descendant of ``pid``, found through each process's
+    parent. ``/proc/<pid>/task/<pid>/children`` lists only the main
+    thread's children, and a JVM starts processes from other threads."""
+    kids: dict[int, list[int]] = {}
+    for name in os.listdir("/proc"):
+        if name.isdigit():
+            try:
+                kids.setdefault(int(_stat(int(name))[1]), []).append(int(name))
+            except (OSError, IndexError, ValueError):
+                pass
+    out, todo = [], list(kids.get(pid, []))
+    while todo:
+        p = todo.pop()
+        out.append(p)
+        todo.extend(kids.get(p, []))
+    return out
 
 
 def _hwm_kb(pid: int) -> int:
@@ -212,14 +229,22 @@ def _hwm_kb(pid: int) -> int:
     return 0
 
 
+def tree_cpu_s() -> float:
+    """User plus system CPU seconds of this process and every live
+    descendant (the driver JVM and the Python workers it forks)."""
+    ticks = 0
+    for pid in [os.getpid()] + _descendants(os.getpid()):
+        try:
+            fields = _stat(pid)
+            ticks += int(fields[11]) + int(fields[12])  # utime, stime
+        except (OSError, IndexError, ValueError):
+            pass
+    return ticks / os.sysconf("SC_CLK_TCK")
+
+
 def peak_rss_mb() -> float:
     """Peak resident memory of this process and every live descendant
     (the driver JVM and the Python workers it forks), in MB."""
-    total = 0
-    todo = _children(os.getpid())
-    while todo:
-        pid = todo.pop()
-        total += _hwm_kb(pid)
-        todo.extend(_children(pid))
+    total = sum(_hwm_kb(pid) for pid in _descendants(os.getpid()))
     total += resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
     return total / 1024.0

@@ -7,8 +7,12 @@ nothing shipped to the driver), one streaming drain, or one i94 pipeline
 run. The seed sets the order of the operations in each pass and, for
 the ETL operation, the generated input; the engine only sees the inputs.
 
-The timed window always runs whole passes over a workload's operations,
-so every seed times the same operations, only in another order.
+The timed window runs a fixed number of whole passes over a workload's
+operations: ``--seconds`` divided by the nominal pass time ``PASS_S``,
+rounded. So every seed and every host times the same operations, only in
+another order; a window that ran until a clock ran out would time two
+passes on a slow host and three on a fast one, and the later passes run
+faster as the JVM warms.
 """
 
 from __future__ import annotations
@@ -24,22 +28,21 @@ import tempfile
 import time
 from dataclasses import dataclass, field, replace
 
-import checks
 import datagen
 import tracing
 
 PKG = "udacity_data_engineer_capstone_spark"
 
-# Eight of the scan/join/aggregate registry queries: the star joins, the
-# SAS date decode, three TPC-H shapes and AQE skew handling.
+# Six of the scan/join/aggregate registry queries: the reference star
+# join, a group-by, the SAS date decode, two TPC-H shapes and AQE skew
+# handling.
 STAR_QUERIES = (
-    "flagship_regional_revenue", "join_left_5way", "agg_groupby_sum",
-    "udf_sas_date", "tpch_q1_pricing_summary", "tpch_q3_shipping_priority",
-    "tpch_q21_waiting_supplier", "skew_zipf_aqe",
+    "flagship_regional_revenue", "agg_groupby_sum", "udf_sas_date",
+    "tpch_q1_pricing_summary", "tpch_q3_shipping_priority", "skew_zipf_aqe",
 )
-# Two fixpoint graph operators over the shared adjacency and an
+# A fixpoint graph operator over the shared adjacency and an
 # availableNow drain.
-ITERATIVE_STREAM = ("graph_pagerank", "graph_kcore", "stream_tumbling_counts")
+ITERATIVE_STREAM = ("graph_pagerank", "stream_tumbling_counts")
 
 
 @dataclass(frozen=True)
@@ -48,23 +51,34 @@ class Workload:
     ops: tuple[str, ...]
     sf: float
     builds: tuple[str, ...] = ()
-    # Operations only the traced run adds: their layers are measured, but
-    # one run of them costs more than the run budget of every untraced
-    # run can carry.
+    # Operations only the traced run adds, in its first timed pass only:
+    # their layers are measured, but one run of them costs more than the
+    # run budget of every untraced run can carry.
     traced_ops: tuple[str, ...] = ()
     etl_rows: int = 0
+    # Extra driver JVM flags. star_queries runs the C1 compiler only: at
+    # the same median latency it halved the run-to-run spread, while on
+    # iterative_stream C1 only doubled graph_pagerank's latency (see
+    # README.md).
+    jvm_flags: str = ""
 
 
 WORKLOADS = {
     w.name: w
     for w in (
-        Workload("star_queries", STAR_QUERIES, 0.01),
+        Workload("star_queries", STAR_QUERIES, 0.01,
+                 jvm_flags="-XX:TieredStopAtLevel=1"),
         Workload("iterative_stream", ITERATIVE_STREAM, 0.001,
                  builds=("graph_adjacency", "events_staging"),
                  traced_ops=("i94_etl",), etl_rows=50_000),
     )
 }
+# Nominal seconds of one timed pass of either workload on a 4-core
+# machine; sets the number of passes a window of --seconds runs.
+PASS_S = 4.0
 DRIVER_HEAP = "1536m"
+# A fixed heap and the serial collector keep heap sizing out of the
+# figures.
 JVM_FLAGS = "-XX:-UsePerfData -Xlog:disable -XX:+UseSerialGC -Xms1536m"
 
 # Layers are named by the module that defines each operation. These keep
@@ -94,10 +108,10 @@ OTHER_LAYERS = (
     ("session.gc_ms", "ms"), ("session.heap_growth_mb", "MB"),
     ("streaming.events.batches", "count"), ("streaming.events.batch_ms", "ms"),
     ("streaming.events.state_rows", "count"), ("bench.trace_overhead_ms", "ms"),
-    ("bench.traced_latency_p50_s", "s"), ("bench.warmup_s", "s"),
+    ("bench.traced_latency_p50_s", "s"), ("bench.traced_cpu_s_per_op", "s"),
+    ("bench.warmup_s", "s"),
     ("bench.cold_start_s", "s"),
 )
-SETUP_REPS = 3
 OP_TIMEOUT_S = 120.0
 
 
@@ -122,6 +136,7 @@ class OpRecord:
     name: str
     layer: str
     wall: float
+    cpu: float = 0.0
     build: float = 0.0
     action: float = 0.0
     counts: dict = field(default_factory=dict)
@@ -165,40 +180,32 @@ class Run:
 
     # -- set-up -----------------------------------------------------------
 
-    def _fresh_tmp(self, rep: int) -> None:
-        """A fresh temp root: the catalog layout cache and the events-log
-        cache live under it, so every set-up starts cold."""
-        d = os.path.join(self.run_dir, f"tmp{rep}")
+    def setup(self, t_process: float, inputs_s: float) -> float:
+        """Start the engine once, cold, then run the workload's one-time
+        builds. Returns the time from process start to ready, less the
+        time spent generating inputs.
+
+        The engine is not imported before this point, so the time
+        includes the Python imports, the JVM launch, ``load_all`` and
+        view registration. A fresh temp root resets the catalog layout
+        cache and the events-log cache, which live under it and would
+        otherwise survive across runs."""
+        d = os.path.join(self.run_dir, "tmp")
         os.makedirs(d)
         os.environ["TMPDIR"] = d
         tempfile.tempdir = d
-
-    def setup(self, t_process: float) -> float:
-        """Start the engine ``SETUP_REPS`` times (the first time counts
-        from process start), then run the workload's one-time builds
-        once. Returns the median start time plus the build time."""
-        times = []
-        parts: dict[str, list[float]] = {n: [] for n in SETUP_LAYERS[:3]}
-        for rep in range(SETUP_REPS):
-            if self.spark is not None:
-                self.spark.stop()
-                self.spark = None
-            self._fresh_tmp(rep)
-            t0 = t_process if rep == 0 else time.perf_counter()
-            with self.tracer.span("setup", rep=rep):
-                got = self._start()
-            times.append(time.perf_counter() - t0)
-            for k, v in got.items():
-                parts[k].append(v)
-        self.layers.update({k: statistics.median(v) for k, v in parts.items()})
-        self.layers["bench.cold_start_s"] = times[0]
+        with self.tracer.span("setup"):
+            self.layers.update(self._start())
+        start = time.perf_counter() - t_process - inputs_s
+        self.layers["bench.cold_start_s"] = start
         t0 = time.perf_counter()
         with self.tracer.span("one_time_builds"):
             self.layers.update(self._builds())
         builds = time.perf_counter() - t0
-        print("setup reps: " + " ".join(f"{x:.2f}" for x in times)
-              + f" builds={builds:.2f}", file=sys.stderr)
-        return statistics.median(times) + builds
+        print(f"setup: start={start:.2f}s builds={builds:.2f}s "
+              + " ".join(f"{k}={v:.2f}" for k, v in self.layers.items()),
+              file=sys.stderr)
+        return start + builds
 
     def _start(self) -> dict[str, float]:
         """Session build, registry load and view registration."""
@@ -218,7 +225,7 @@ class Run:
                 .appName(f"perfbench-{self.w.name}")
                 .config("spark.driver.memory", DRIVER_HEAP)
                 .config("spark.driver.extraJavaOptions",
-                        f"-Djava.io.tmpdir={self.run_dir} {JVM_FLAGS}")
+                        f"-Djava.io.tmpdir={self.run_dir} {JVM_FLAGS} {self.w.jvm_flags}")
                 .config("spark.ui.showConsoleProgress", "false")
             )
             self.spark = session.configure(builder).getOrCreate()
@@ -266,7 +273,9 @@ class Run:
         tr = self.tracer
         result = None
         with tr.span(op, layer=rec.layer, n=n) as span:
+            cpu0 = tracing.tree_cpu_s()
             epoch0 = time.time()
+            span["epoch0"] = epoch0
             t0 = time.perf_counter()
             try:
                 if op == "i94_etl":
@@ -280,7 +289,7 @@ class Run:
                         df = self._fn(op)(self.spark, self.sf_dir)
                     t1 = time.perf_counter()
                     with tr.job_group(self.spark, "action") as ja:
-                        df.write.format("noop").mode("overwrite").save()
+                        materialize(df)
                     rec.build, rec.action = t1 - t0, time.perf_counter() - t1
                     counts = [jb, ja]
                     result = df
@@ -288,13 +297,14 @@ class Run:
                 rec.error = f"{type(e).__name__}: {str(e)[:300]}"
                 counts = []
             rec.wall = time.perf_counter() - t0
+            rec.cpu = tracing.tree_cpu_s() - cpu0
             if rec.wall > OP_TIMEOUT_S and rec.error is None:
                 rec.error = f"timeout: {rec.wall:.1f}s > {OP_TIMEOUT_S}s"
             span.update(build=rec.build, action=rec.action, wall=rec.wall,
-                        error=rec.error)
+                        cpu=rec.cpu, error=rec.error)
         if tr.enabled and counts:
             rec.counts = _merge_counts(counts, epoch0, epoch0 + rec.wall)
-            span.update({k: v for k, v in rec.counts.items() if k != "intervals"})
+            span.update(rec.counts)
         return rec, result
 
     def _etl(self, out: str) -> dict:
@@ -330,11 +340,11 @@ class Run:
 
     # -- output checks ----------------------------------------------------
 
-    def warm_and_check(self, op: str, oracles: checks.OracleCache) -> float:
-        """Run ``op`` once, untimed, with the oracle hash as its action,
-        so the warm-up execution is also the output check. Returns its
-        wall time; a failure is recorded in ``check_errors``."""
-        from udacity_data_engineer_capstone_spark.registry import QUERIES
+    def warm_and_check(self, op: str) -> float:
+        """Run ``op`` once, untimed, exactly as the timed loop does, then
+        check its output against the DuckDB oracle. Returns the wall time
+        of both; a failure is recorded in ``check_errors``."""
+        import checks
 
         t0 = time.perf_counter()
         try:
@@ -343,16 +353,18 @@ class Run:
                 self._check_etl(res)
                 shutil.rmtree(res["out"], ignore_errors=True)
             else:
-                got = checks.spark_hash(self._fn(op)(self.spark, self.sf_dir))
-                checks.compare(op, got, oracles.expected(QUERIES[op].oracle_text()))
+                materialize(self._fn(op)(self.spark, self.sf_dir))
+                checks.check_query(self.spark, op, self.sf_dir,
+                                   os.path.join(self.run_dir, "duck_spill"))
         except Exception as e:  # a check that cannot run is a failed check
             self.check_errors.append(f"{op}: {type(e).__name__}: {str(e)[:300]}")
         return time.perf_counter() - t0
 
     def _check_etl(self, res: dict) -> None:
+        import checks
         from udacity_data_engineer_capstone_spark.queries import pipeline
 
-        con = checks.duck_con(None, os.path.join(self.run_dir, "duck_spill"))
+        con = checks.duck_con(os.path.join(self.run_dir, "duck_spill"))
         try:
             for table, twin in (("immigrations", pipeline._FACT_ORACLE),
                                 ("port_demographics", pipeline._PORT_DEMO_ORACLE)):
@@ -368,6 +380,11 @@ class Run:
                                checks.duck_hash(con, sql))
         finally:
             con.close()
+
+
+def materialize(df) -> None:
+    """The timed action: compute every column, ship nothing back."""
+    df.write.format("noop").mode("overwrite").save()
 
 
 class _Probe:
@@ -461,10 +478,8 @@ def _run(r: Run, t_process: float) -> dict:
     r.make_inputs()
     phases = {"inputs": time.perf_counter() - t}
     t = time.perf_counter()
-    setup_s = r.setup(t_process)
+    setup_s = r.setup(t_process, phases["inputs"])
     phases["setup"] = time.perf_counter() - t
-    oracles = checks.OracleCache(
-        os.path.join(r.work, "oracle"), r.sf_dir, os.path.join(r.run_dir, "duck_spill"))
     spark = r.spark
     if r.tracer.enabled:
         listener = tracing.StreamProgress()
@@ -478,41 +493,38 @@ def _run(r: Run, t_process: float) -> dict:
     order = list(r.ops)
     rng.shuffle(order)
     r.warmup_order = order
-    warm_walls = {op: r.warm_and_check(op, oracles) for op in order}
+    warm_walls = {op: r.warm_and_check(op) for op in order}
     phases["warmup+checks"] = time.perf_counter() - t
     r.layers["bench.warmup_s"] = phases["warmup+checks"]
     t = time.perf_counter()
-    timed = 0.0
     n = 0
-    while timed < r.seconds or n == 0:
-        order = list(r.ops)
-        rng.shuffle(order)
-        for op in order:
-            rec, result = r.run_op(op, n)
-            n += 1
-            timed += rec.wall
-            r.records.append(rec)
-            if op == "i94_etl" and result is not None:
-                r.layers.update({k: v for k, v in result.items()
-                                 if k in dict(ETL_LAYERS)})
-                shutil.rmtree(result["out"], ignore_errors=True)
-            del result
-    oracles.close()
+    with r.tracer.span("window"):
+        for k in range(max(1, round(r.seconds / PASS_S))):
+            order = list(r.ops if k == 0 else r.w.ops)
+            rng.shuffle(order)
+            for op in order:
+                rec, result = r.run_op(op, n)
+                n += 1
+                r.records.append(rec)
+                if op == "i94_etl" and result is not None:
+                    r.layers.update({k: v for k, v in result.items()
+                                     if k in dict(ETL_LAYERS)})
+                    shutil.rmtree(result["out"], ignore_errors=True)
+                del result
     phases["window"] = time.perf_counter() - t
     print("phases: " + " ".join(f"{k}={v:.1f}s" for k, v in phases.items()),
           file=sys.stderr)
     print("ops (warm-up, timed median): " + " ".join(
         f"{op}={warm_walls.get(op, 0):.2f},{statistics.median([x.wall for x in r.records if x.name == op] or [0]):.2f}"
         for op in r.ops), file=sys.stderr)
-    lat = [rec.wall for rec in r.records if rec.error is None]
+    ok = [rec for rec in r.records if rec.error is None]
     failed_ops = {e.split(":")[0] for e in r.check_errors}
     failed = sum(1 for rec in r.records if rec.error or rec.name in failed_ops)
     attempted = len(r.records)
     metrics: dict[str, tuple[float, str]] = {}
     if not r.tracer.enabled:
         metrics["setup_s"] = (setup_s, "s")
-        metrics["ops_per_min"] = (60.0 * len(lat) / max(timed, 1e-9), "ops/min")
-        metrics["latency_p50_s"] = (statistics.median(lat) if lat else 0.0, "s")
+        metrics["cpu_s_per_op"] = (sum(rec.cpu for rec in ok) / max(len(ok), 1), "s")
         metrics["peak_rss_mb"] = (tracing.peak_rss_mb(), "MB")
     else:
         r.layers["session.gc_ms"] = tracing.jvm_gc_ms(spark) - gc0
@@ -523,8 +535,11 @@ def _run(r: Run, t_process: float) -> dict:
         r.layers["streaming.events.batch_ms"] = listener.batch_ms / max(listener.batches, 1)
         r.layers["streaming.events.state_rows"] = listener.state_rows / n_stream
         r.layers["bench.trace_overhead_ms"] = 1e3 * r.tracer.overhead_s / max(attempted, 1)
-        same = [rec.wall for rec in r.records if rec.error is None and rec.name in r.w.ops]
-        r.layers["bench.traced_latency_p50_s"] = statistics.median(same) if same else 0.0
+        same = [rec for rec in ok if rec.name in r.w.ops]
+        r.layers["bench.traced_latency_p50_s"] = (
+            statistics.median(rec.wall for rec in same) if same else 0.0)
+        r.layers["bench.traced_cpu_s_per_op"] = (
+            sum(rec.cpu for rec in same) / max(len(same), 1))
         r.layers.update(_op_layers(r.records, r.cores))
         for name, unit in per_layer_names():
             metrics[name] = (float(r.layers.get(name, 0.0)), unit)
@@ -546,14 +561,19 @@ def labels(r: Run) -> dict:
 
     import pyspark
 
+    ok = [rec.wall for rec in r.records if rec.error is None]
     return {
         "workload": r.w.name, "seed": r.seed, "seconds": r.seconds,
         "traced": r.tracer.enabled, "nproc": r.cores, "driver_heap": DRIVER_HEAP,
-        "jvm_flags": JVM_FLAGS,
+        "jvm_flags": f"{JVM_FLAGS} {r.w.jvm_flags}".strip(),
         "sf": r.w.sf, "etl_rows": r.w.etl_rows, "spark": pyspark.__version__,
         "python": platform.python_version(), "source": source_revision(r.root),
         "warmup_order": r.warmup_order,
         "op_order": [rec.name for rec in r.records],
+        "op_walls": [round(rec.wall, 4) for rec in r.records],
+        "op_cpu": [round(rec.cpu, 3) for rec in r.records],
+        "latency_p50_s": statistics.median(ok) if ok else None,
+        "ops_per_min": 60.0 * len(ok) / max(sum(ok), 1e-9),
         "inputs": getattr(r, "input_digest", None),
     }
 
