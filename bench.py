@@ -24,7 +24,6 @@ single queries.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import random
@@ -211,7 +210,7 @@ HIGH_VARIANCE = {
 # rides in BENCH_DETAIL only (same median-of-runs protocol) and never
 # enters the headline total, keeping round-over-round totals
 # comparable. The round number comes from SPARK_GRAFT_ROUND or, by
-# default, from the highest committed BENCH_r{N}.json + 1.
+# default, from the highest BENCH_r{N}.json in ``git ls-files`` + 1.
 ROTATION_N = 20
 
 
@@ -411,9 +410,20 @@ def _current_round(repo_dir: str) -> int:
             return int(env)
         except ValueError:
             pass
+    # Tracked files only: a BENCH file written for the current round but
+    # not yet committed must not advance the round, or the prior-tree
+    # control would resolve to HEAD and compare it with itself.
+    import subprocess
+
+    listed = subprocess.run(
+        ["git", "-C", repo_dir, "ls-files", "BENCH_r*.json"],
+        capture_output=True,
+        text=True,
+        timeout=60,
+    ).stdout.split()
     rounds = [
         int(m.group(1))
-        for p in glob.glob(os.path.join(repo_dir, "BENCH_r*.json"))
+        for p in listed
         if (m := re.search(r"BENCH_r(\d+)\.json$", p))
     ]
     return (max(rounds) + 1) if rounds else 1

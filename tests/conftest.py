@@ -1,10 +1,12 @@
 from __future__ import annotations
 
-
+import os
+import uuid
+from contextlib import contextmanager
 
 import pytest
 
-from udacity_data_engineer_capstone_spark.session import get_spark
+from udacity_data_engineer_capstone_spark.session import configure
 
 SF_DIR = "/root/testdata/sf0.001"
 SF_DIR_MED = "/root/testdata/sf0.01"
@@ -41,7 +43,15 @@ def _fresh_session():
         SparkContext._jvm = None
     except Exception:
         pass
-    s = get_spark("engine-tests")
+    # get_spark's session plus an explicit driver heap. With the JVM's
+    # 1 GB default, test_overflow_audit's 3.2M-row spearman input ran out
+    # of heap late in a full run (it passes alone).
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    s = configure(
+        SparkSession.builder.master(f"local[{cpus}]")
+        .appName("engine-tests")
+        .config("spark.driver.memory", "2g")
+    ).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     # r13 (suite budget — VERDICT r12 item 1): the gate fixtures are
     # ≤ 2 MB, so the profile's 32 shuffle partitions are pure per-stage
@@ -113,6 +123,24 @@ def bind_active_session(spark) -> None:
         )
     except Exception:
         pass  # non-classic session: nothing to bind
+
+
+@contextmanager
+def spark_job_ids(spark):
+    """Yield a list that, after the block, holds the ids of the Spark jobs
+    the block launched from this thread (tagged through a fresh job group,
+    read from ``statusTracker`` once the listener bus has drained)."""
+    sc = spark.sparkContext
+    group = f"tests-{uuid.uuid4().hex}"
+    ids: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def pytest_collection_modifyitems(config, items):

@@ -7,6 +7,7 @@ submit would use.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 import udacity_data_engineer_capstone_spark as engine
@@ -15,6 +16,8 @@ from udacity_data_engineer_capstone_spark.plans.audit import (
     assert_not_in_plan,
     plan_text,
 )
+
+from tests.conftest import spark_job_ids
 
 engine.load_all()
 Q = engine.QUERIES
@@ -1505,3 +1508,25 @@ def test_bfs_bucketed_scan_prunes_partitions_and_rowgroups(spark, sf_dir):
     assert "PushedFilters" in text, text
     pushed = text.split("PushedFilters")[1][:250]
     assert "s" in pushed, pushed
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "flagship_regional_revenue",
+        "agg_groupby_sum",
+        "udf_sas_date",
+        "tpch_q1_pricing_summary",
+        "tpch_q3_shipping_priority",
+        "skew_zipf_aqe",
+    ],
+)
+def test_warm_plan_build_launches_no_job(spark, sf_dir, name):
+    """Building a star query's plan a second time on a warm session runs
+    no Spark job: the catalog supplies each table's cached schema instead
+    of re-reading its parquet footer, so only the action launches jobs."""
+    fn = Q[name].fn
+    fn(spark, sf_dir)
+    with spark_job_ids(spark) as ids:
+        fn(spark, sf_dir)
+    assert ids == [], f"{name}: plan build launched jobs {ids}"

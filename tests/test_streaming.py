@@ -358,7 +358,9 @@ def test_python_stream_source_resumes_from_checkpoint(spark, sf_dir, tmp_path):
         q2 = start(chunk=max(100, total // 20))
         deadline = time.time() + 120
         while time.time() < deadline:
-            n = spark.read.parquet(out_dir).count()
+            # wait on distinct ids: a replayed batch adds duplicate rows,
+            # so the raw count can reach total before every id arrived
+            n = spark.read.parquet(out_dir).select("event_id").distinct().count()
             if n >= total:
                 break
             time.sleep(0.2)

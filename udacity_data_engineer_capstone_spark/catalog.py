@@ -7,13 +7,31 @@ views so both the DataFrame and SQL surfaces see the same names.
 
 All testdata tables are parquet; at 100 TB this is exactly the layout you
 want (columnar scan, predicate pushdown, partition pruning all free).
+
+Each table's schema is resolved once. A schema-less
+``spark.read.parquet(path)`` launches one Spark job to read the footer,
+so inferring it on every ``load_table`` call cost a star join one driver
+job per table before it planned anything. ``load_table`` instead
+reads with ``spark.read.schema(cached).parquet(path)``: the first read of
+a file infers its ``StructType`` and every later read supplies it. The
+memo is keyed by the resolved read path (after the layout shim), the
+file's ``(st_mtime_ns, st_size)`` and the session values of the confs
+that change parquet schema inference, so a rewritten file or a changed
+conf resolves again. Only the ``StructType`` is kept, never a DataFrame:
+each call still returns a fresh relation with fresh expression IDs, so a
+self-join of two ``load_table`` frames stays unambiguous. Directories and
+paths ``os.stat`` cannot read fall through to plain inference.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StructType
 
 TABLES = (
     "region",
@@ -62,7 +80,6 @@ _TARGET_ROW_GROUPS = 32
 
 
 def _layout_cache_dir() -> str | None:
-    import stat
     import tempfile
 
     d = os.path.join(
@@ -124,27 +141,91 @@ def _normalized_path(sf_dir: str, name: str) -> str:
         return src  # any surprise (no pyarrow, unreadable) → original path
 
 
+# --- resolve-once schemas (see module docstring) ------------------------
+
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+# Session confs whose value changes the schema parquet inference returns.
+_SCHEMA_CONFS = (
+    _NANOS_AS_LONG,
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+class _SchemaMemo:
+    """A locked LRU of inferred ``StructType``s. It holds no Spark
+    resources, so eviction only drops a key."""
+
+    def __init__(self, capacity: int) -> None:
+        self._capacity = capacity
+        self._lock = threading.Lock()
+        self._schemas: OrderedDict[tuple, StructType] = OrderedDict()
+
+    def get(self, key: tuple) -> StructType | None:
+        with self._lock:
+            schema = self._schemas.get(key)
+            if schema is not None:
+                self._schemas.move_to_end(key)
+            return schema
+
+    def put(self, key: tuple, schema: StructType) -> None:
+        with self._lock:
+            self._schemas[key] = schema
+            self._schemas.move_to_end(key)
+            while len(self._schemas) > self._capacity:
+                self._schemas.popitem(last=False)
+
+
+_SCHEMAS = _SchemaMemo(capacity=256)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a file's schema once."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (
+        os.path.abspath(path),
+        st.st_mtime_ns,
+        st.st_size,
+        tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS.put(key, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     if name == "events":
         return _load_events(spark, sf_dir)
-    return spark.read.parquet(_normalized_path(sf_dir, name))
+    return _read_parquet(spark, _normalized_path(sf_dir, name))
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Some testdata generations write events.parquet with TIMESTAMP(NANOS),
     which Spark's vectorized parquet reader rejects by default; others write
-    plain microsecond timestamps. Handle both: read nanos as long (legacy
-    conf is runtime-settable) and rebuild a microsecond timestamp with exact
-    integer division — nanos since epoch exceed 2^53, so float division
-    would corrupt low microseconds. When the file already carries a real
-    timestamp, pass it through unchanged."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType
+    plain microsecond timestamps. Handle both: read nanos as long and
+    rebuild a microsecond timestamp with exact integer division — nanos
+    since epoch exceed 2^53, so float division would corrupt low
+    microseconds. When the file already carries a real timestamp, pass it
+    through unchanged.
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(_normalized_path(sf_dir, "events"))
+    ``session.configure`` sets ``nanosAsLong`` at build time; only a
+    session built without the engine's configs gets it set here, once."""
+    from pyspark.sql import functions as F
+
+    if spark.conf.get(_NANOS_AS_LONG, None) != "true":
+        spark.conf.set(_NANOS_AS_LONG, "true")
+    df = _read_parquet(spark, _normalized_path(sf_dir, "events"))
     if isinstance(df.schema["ts"].dataType, LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     else:

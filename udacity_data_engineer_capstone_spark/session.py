@@ -186,6 +186,10 @@ def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Deterministic timestamp semantics vs the DuckDB oracle.
         .config("spark.sql.session.timeZone", "UTC")
+        # Read TIMESTAMP(NANOS) parquet columns as longs; the events
+        # loader rebuilds microsecond timestamps from them
+        # (catalog._load_events). Set here so no query writes it.
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
     )
     for k, v in profile_from_env().derive().items():
