@@ -9,7 +9,9 @@ rank-mass conservation.
 from __future__ import annotations
 
 import warnings
+from types import SimpleNamespace
 
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from udacity_data_engineer_capstone_spark.operators.clustering import (
@@ -21,8 +23,9 @@ from udacity_data_engineer_capstone_spark.operators.graph import (
     SCALE,
     graph_pagerank,
 )
+from udacity_data_engineer_capstone_spark.session import sized_partitions
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, SF_DIR_MED
 
 
 def test_star_cc_deep_chain_logarithmic(spark):
@@ -104,6 +107,78 @@ def test_adjacency_build_shared_across_graph_family(spark):
     graph_pagerank(spark, SF_DIR).collect()
     graph_pagerank_personalized(spark, SF_DIR).collect()
     assert len(_GRAPH_CACHE) == n_entries  # both queries hit the cache
+
+
+def _sizing_session(parallelism: int, shuffle: int, min_part: str = "1048576b"):
+    conf = {
+        "spark.sql.shuffle.partitions": str(shuffle),
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": min_part,
+    }
+    return SimpleNamespace(
+        conf=SimpleNamespace(get=conf.__getitem__),
+        sparkContext=SimpleNamespace(defaultParallelism=parallelism),
+    )
+
+
+def test_sized_partitions_clamps():
+    """One partition per minPartitionSize of data, floored at 1 and
+    capped by defaultParallelism and by spark.sql.shuffle.partitions."""
+    mb = 1 << 20
+    s = _sizing_session(parallelism=4, shuffle=8)
+    assert sized_partitions(s, 0) == 1
+    assert sized_partitions(s, 2900 * 24) == 1  # an sf0.001 adjacency
+    assert sized_partitions(s, 3 * mb) == 3
+    assert sized_partitions(s, 3 * mb + 1) == 4
+    assert sized_partitions(s, 100 * mb) == 4  # defaultParallelism cap
+    assert sized_partitions(_sizing_session(32, 8), 100 * mb) == 8  # shuffle cap
+    assert sized_partitions(_sizing_session(32, 32), 27 * mb) == 27
+    assert sized_partitions(_sizing_session(32, 32, "64k"), mb) == 16
+    assert sized_partitions(_sizing_session(32, 32, "1MB"), 2 * mb) == 2
+
+
+def test_adjacency_partitions_sized_to_data(spark):
+    """At sf0.001 (about 2,900 directed edges, ~70 KB) every frame the
+    graph family iterates over is built in one partition, whatever the
+    session's shuffle partition count. At sf0.01 (~2.2 MB, three 1 MB
+    partitions by the sizing rule) the adjacency keeps
+    spark.sql.shuffle.partitions instead, so the rounds' joins can reuse
+    its partitioning."""
+    from udacity_data_engineer_capstone_spark.operators.graph import (
+        _purchase_graph,
+    )
+
+    g = _purchase_graph(spark, SF_DIR)
+    for name in ("bidir", "deg", "adj", "nodes"):
+        assert g[name].rdd.getNumPartitions() == 1, name
+    want = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    if spark.sparkContext.defaultParallelism == 1:
+        want = 1  # one core: the rule itself gives one partition
+    med = _purchase_graph(spark, SF_DIR_MED)
+    for name in ("bidir", "adj"):
+        assert med[name].rdd.getNumPartitions() == want, name
+
+
+def test_invalidate_graph_cache_unpersists_every_build_frame(spark):
+    """invalidate_graph_cache() releases every frame the adjacency build
+    persisted, the edge frame its count pass reads included: no RDD the
+    build cached stays registered as persistent."""
+    from udacity_data_engineer_capstone_spark.operators.graph import (
+        _purchase_graph,
+        invalidate_graph_cache,
+    )
+
+    invalidate_graph_cache()
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    g = _purchase_graph(spark, SF_DIR)
+    for df in g.values():
+        df.count()
+    built = set(jsc.getPersistentRDDs().keys()) - before
+    assert len(built) >= len(g)
+    invalidate_graph_cache()
+    assert built.isdisjoint(jsc.getPersistentRDDs().keys())
+    for name, df in g.items():
+        assert df.storageLevel == StorageLevel.NONE, name
 
 
 def test_iterative_fixpoint_exit_fires_on_converging_state(spark):

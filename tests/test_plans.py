@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 import udacity_data_engineer_capstone_spark as engine
 from udacity_data_engineer_capstone_spark.plans.audit import (
+    _jchildren,
     assert_in_plan,
     assert_not_in_plan,
     plan_text,
@@ -1530,3 +1531,40 @@ def test_warm_plan_build_launches_no_job(spark, sf_dir, name):
     with spark_job_ids(spark) as ids:
         fn(spark, sf_dir)
     assert ids == [], f"{name}: plan build launched jobs {ids}"
+
+
+def _plan_nodes(plan, expand_cache: bool, out: list[str]) -> list[str]:
+    """Node names of a JVM physical plan, walked through AQE query stages.
+    A cached relation's own plan is entered only while ``expand_cache``
+    holds, so the walk stops at the frames that plan reads from cache."""
+    name = plan.nodeName()
+    out.append(name)
+    if name == "AdaptiveSparkPlan":
+        kids = [plan.executedPlan()]
+    elif name.endswith("QueryStage"):
+        kids = [plan.plan()]
+    elif name == "InMemoryTableScan":
+        kids = [plan.relation().cachedPlan()] if expand_cache else []
+        expand_cache = False
+    else:
+        kids = _jchildren(plan)
+    for kid in kids:
+        _plan_nodes(kid, expand_cache, out)
+    return out
+
+
+def test_warm_pagerank_on_small_graph_runs_without_shuffle(spark, sf_dir):
+    """At sf0.001 the shared adjacency is one partition, so a warm
+    graph_pagerank launches at most 12 jobs (chunk materializations,
+    per-round broadcasts of the adjacency, the final write), and the plan
+    of its last chunk of rounds over the cached adjacency holds no
+    shuffle ``Exchange`` node."""
+    fn = Q["graph_pagerank"].fn
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    with spark_job_ids(spark) as ids:
+        df = fn(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+    assert len(ids) <= 12, ids
+    nodes = _plan_nodes(df._jdf.queryExecution().executedPlan(), True, [])
+    assert "HashAggregate" in nodes, nodes  # the rounds were walked
+    assert "Exchange" not in nodes, nodes

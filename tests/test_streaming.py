@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from udacity_data_engineer_capstone_spark.catalog import load_table
@@ -24,14 +25,69 @@ def _rows(df, cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
-def test_stream_matches_batch_tumbling(spark, sf_dir):
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def test_stream_matches_batch_tumbling(spark, sf_dir, monkeypatch):
+    """The drained stream equals the batch aggregate. run_to_memory
+    leaves no memory-sink view behind (the returned frame still reads the
+    rows), and SPARK_GRAFT_STREAM_PARTS=0 clamps to one state partition
+    instead of failing the drain."""
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTS", "0")
     src = stage_events_dir(spark, sf_dir)
+    before = _temp_views(spark)
     streamed = run_to_memory(
         tumbling_counts(stream_events(spark, src)), output_mode="complete"
     )
+    assert _temp_views(spark) == before
     batch = evt_window_tumbling(spark, sf_dir)
     cols = ["window_start", "event_type", "n_events"]
     assert _rows(streamed, cols) == _rows(batch, cols)
+
+
+def test_python_source_drain_drops_its_sink_view(spark, sf_dir):
+    """The Python-source drain drops its ``pystream_*`` view too; the
+    returned per-type counts still match the events table."""
+    from udacity_data_engineer_capstone_spark.streaming.events import (
+        stream_python_source,
+    )
+
+    before = _temp_views(spark)
+    out = stream_python_source(spark, sf_dir)
+    assert not any(v.startswith("pystream_") for v in _temp_views(spark) - before)
+    truth = (
+        load_table(spark, sf_dir, "events")
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
+    )
+    cols = ["event_type", "n_events"]
+    assert _rows(out, cols) == _rows(truth, cols)
+
+
+def test_drain_env_overrides_clamped(spark, sf_dir, monkeypatch):
+    """SPARK_GRAFT_STREAM_PARTS / SPARK_GRAFT_STREAM_DRAIN_SEC: unset
+    gives the default, values below 1 clamp to 1, and a non-integer
+    raises a ValueError naming the variable before any stream starts."""
+    from udacity_data_engineer_capstone_spark.streaming.events import _env_count
+
+    for var, default in (
+        ("SPARK_GRAFT_STREAM_PARTS", 8),
+        ("SPARK_GRAFT_STREAM_DRAIN_SEC", 120),
+    ):
+        monkeypatch.delenv(var, raising=False)
+        assert _env_count(var, default) == default
+        for raw, want in (("0", 1), ("-3", 1), ("1", 1), ("16", 16)):
+            monkeypatch.setenv(var, raw)
+            assert _env_count(var, default) == want
+        monkeypatch.setenv(var, "1.5")
+        with pytest.raises(ValueError, match=var):
+            _env_count(var, default)
+    src = stage_events_dir(spark, sf_dir)
+    n_active = len(spark.streams.active)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_DRAIN_SEC"):
+        run_to_memory(tumbling_counts(stream_events(spark, src)))
+    assert len(spark.streams.active) == n_active
 
 
 def test_running_user_totals_stateful(spark, sf_dir):

@@ -18,14 +18,17 @@ SCALE=1e9; shrink SCALE for bigger graphs.)
 
 Scale shape: each iteration is one equi-join of the static
 (src, dst, deg) adjacency against the current rank vector plus one
-partial+final integer aggregate — hash-width shuffles, no driver data
-collect at all (fixed iteration count, no convergence scalar even).
-Fixed-round loops (PageRank/PPR/LPA) chain 3 rounds per Spark job with
-per-round fixpoint probes riding ``observe()`` metrics
+partial+final integer aggregate, with no driver data collect. The
+adjacency is built once per session and persisted (:func:`_purchase_graph`):
+a graph under ~1 MB sits in one partition and its rounds shuffle
+nothing; a larger one is hash-partitioned by source into
+``spark.sql.shuffle.partitions``, so only the node-sized vector moves.
+Fixed-round loops (PageRank/PPR/LPA) chain 3 rounds per materializing
+action with per-round fixpoint probes riding ``observe()`` metrics
 (:func:`_chunked_fixpoint_rounds`); convergence-driven loops (BFS,
-k-core) keep one job per round because the frontier/peel count decides
-whether to continue. The DuckDB oracle unrolls the same recurrence as
-chained CTEs — identical integer semantics, declaratively.
+k-core) keep one action per round because the frontier/peel count
+decides whether to continue. The DuckDB oracle unrolls the same
+recurrence as chained CTEs — identical integer semantics, declaratively.
 
 Reference parity: the reference (``/root/reference/etl.py``) has no
 graph stage; extension surface (SURVEY §6).
@@ -40,6 +43,7 @@ from pyspark.sql import functions as F
 
 from udacity_data_engineer_capstone_spark.catalog import load_table, register_views
 from udacity_data_engineer_capstone_spark.registry import query
+from udacity_data_engineer_capstone_spark.session import sized_partitions
 
 ITERS = 6
 SCALE = 1_000_000_000  # rank mass per node, in micro-units
@@ -90,30 +94,32 @@ def invalidate_graph_cache() -> None:
 
 def _purchase_graph(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """The bipartite purchase graph every iterative operator here walks:
-    distinct (customer, supplier) edges symmetrized, hash-partitioned by
-    source ONCE and localCheckpointed, plus the derived degree table,
-    (s, d, deg) adjacency, and node set. Cached per (application,
-    sf_dir), so graph_pagerank / graph_pagerank_personalized / BFS /
-    k-core / LPA / assortativity share ONE adjacency build instead of
-    each re-running the identical orders⋈lineitem DISTINCT — the only
-    edge-sized shuffle in the family, now paid once per session like a
-    materialized view. At 100 TB this build dominates every individual
-    query's cost; amortizing it across the graph workload is the same
-    move a production graph pipeline makes by staging the edge list."""
+    distinct (customer, supplier) edges symmetrized and hash-partitioned
+    by source ONCE (``bidir``), plus the derived degree table (``deg``),
+    (s, d, deg) adjacency (``adj``) and node set (``nodes``), all
+    persisted. Cached per (application, sf_dir), so graph_pagerank /
+    graph_pagerank_personalized / BFS / k-core / LPA / HITS /
+    assortativity share ONE adjacency build instead of each re-running
+    the identical orders⋈lineitem DISTINCT — the only edge-sized shuffle
+    in the family, paid once per session like a materialized view.
+
+    Partition count: a persisted frame keeps the partitioning it was
+    built with, and every round of every operator here inherits it. The
+    build counts the distinct edges once (the persisted ``edges`` frame,
+    which the symmetrized build then reads) and applies
+    :func:`sized_partitions` to 24 B (three BIGINTs) per directed edge.
+    When that gives one partition (a graph under 1 MB, e.g. sf0.001's
+    ~2,900 directed edges), ``bidir``/``adj`` are built in ONE partition
+    and the PageRank / PPR / LPA rounds shuffle nothing. Otherwise they
+    keep ``spark.sql.shuffle.partitions``: a count in between makes every
+    round re-shuffle the adjacency. SCALE.md "Persisted frames are sized
+    to their data" has the measurements."""
     key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
     hit = _GRAPH_CACHE.get(key)
     if hit is not None:
         return hit
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
-    edges = (
-        orders.join(lineitem, orders["o_orderkey"] == lineitem["l_orderkey"])
-        .select(
-            (F.col("o_custkey") * 2).alias("s"),
-            (F.col("l_suppkey") * 2 + 1).alias("d"),
-        )
-        .distinct()
-    )
     # Cache entries use persist(), NOT localCheckpoint: a local
     # checkpoint's blocks are the only copy (lineage truncated), so
     # unpersisting an evicted entry would break any still-referenced
@@ -122,9 +128,24 @@ def _purchase_graph(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     # Per-round frames inside the iterative loops still localCheckpoint
     # (they genuinely need O(1) lineage); only the shared base is
     # recompute-safe.
+    edges = (
+        orders.join(lineitem, orders["o_orderkey"] == lineitem["l_orderkey"])
+        .select(
+            (F.col("o_custkey") * 2).alias("s"),
+            (F.col("l_suppkey") * 2 + 1).alias("d"),
+        )
+        .distinct()
+        .persist()
+    )
+    parts = sized_partitions(spark, 2 * edges.count() * 24)
+    if parts > 1:
+        # A join reuses a cached side's hash partitioning only when it has
+        # at least spark.sql.shuffle.partitions partitions; with fewer,
+        # every round re-shuffles the adjacency to meet the rank vector.
+        parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     bidir = (
         edges.union(edges.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .repartition(F.col("s"))
+        .repartition(parts, F.col("s"))
         .persist()
     )
     deg = (
@@ -139,11 +160,11 @@ def _purchase_graph(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         # Pregel round's join then reuses this distribution instead of
         # re-exchanging the (big) adjacency — edges stay put, only the
         # node-sized rank/label vector moves.
-        .repartition(F.col("s"))
+        .repartition(parts, F.col("s"))
         .persist()
     )
     nodes = deg.select(F.col("s").alias("node")).persist()
-    out = {"bidir": bidir, "deg": deg, "adj": adj, "nodes": nodes}
+    out = {"edges": edges, "bidir": bidir, "deg": deg, "adj": adj, "nodes": nodes}
     if len(_GRAPH_CACHE) >= _GRAPH_CACHE_MAX:
         _graph_cache_evict(_GRAPH_CACHE.pop(next(iter(_GRAPH_CACHE))))
     _GRAPH_CACHE[key] = out
@@ -194,8 +215,8 @@ def _chunked_fixpoint_rounds(
     iters: int,
     chunk: int = 3,
 ) -> DataFrame:
-    """Run ``iters`` synchronous rounds of ``step`` while paying only
-    ``ceil(iters / chunk)`` Spark jobs instead of one per round:
+    """Run ``iters`` synchronous rounds of ``step`` with one
+    materializing action per ``chunk`` rounds instead of one per round:
     ``chunk`` rounds are chained lazily in a single plan, each round
     tagged with an ``observe()`` metric computing the SAME
     (count, xxhash64-XOR) fixpoint signature as
@@ -205,9 +226,14 @@ def _chunked_fixpoint_rounds(
     matches, every later round is the identity, so the already-
     materialized chunk-end frame equals the fixpoint and the loop
     stops. The rounds, math, and early-exit condition are bit-identical
-    to the one-job-per-round form; only the job-barrier count changes
-    (6 jobs → 2 for PageRank at the local latency floor, and at
-    cluster scale the same shuffles with fewer scheduling waits).
+    to the one-action-per-round form; only the action count changes
+    (6 → 2 for PageRank). Under AQE that is not the job count: each
+    action also launches a job per broadcast and per shuffle stage it
+    materializes. A warm 6-round ``graph_pagerank``, noop write
+    included, measured 19 jobs over a 4-partition adjacency and 11 over
+    the one-partition sf0.001 adjacency (local[4]): the two chunk
+    actions, the write, and eight stage jobs AQE runs for the rounds'
+    broadcasts and cached-frame reads.
 
     Chunk ends persist() (recompute-safe lineage back to the persisted
     adjacency) rather than localCheckpoint: plan depth is bounded by
@@ -288,7 +314,7 @@ def _pagerank_oracle() -> str:
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Six damped PageRank iterations over the purchase graph in exact
     integer micro-units (see module docstring). The adjacency (src, dst,
-    src-degree) comes from the SESSION-SHARED checkpointed build
+    src-degree) comes from the SESSION-SHARED persisted build
     (:func:`_purchase_graph` — one edge-sized shuffle amortized across
     the whole graph family); each round joins it to the rank vector,
     re-aggregates, and probes the exact-fixpoint signature, stopping
@@ -591,7 +617,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(log n) in practice; per ADVICE r2 (clustering MAX_ITERS), we FAIL
     LOUDLY if the fixpoint is not reached within the oracle's unroll
     depth instead of returning a non-fixpoint silently. The starting
-    edge list is the session-shared checkpointed build
+    edge list is the session-shared persisted build
     (:func:`_purchase_graph`)."""
     cur = _purchase_graph(spark, sf_dir)["bidir"]
     n_edges = cur.count()
@@ -689,7 +715,7 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier (one scalar count per round, ``localCheckpoint``
     truncates lineage); FAILS LOUDLY if the diameter exceeds the
     oracle's unroll depth. The edge list is the session-shared
-    checkpointed build (:func:`_purchase_graph`)."""
+    persisted build (:func:`_purchase_graph`)."""
     bidir = _purchase_graph(spark, sf_dir)["bidir"]
     seeds = spark.createDataFrame(
         [(_BFS_SEED, 0)], "node long, lvl long"
@@ -942,7 +968,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the label vector and one (node, label) hash aggregate topped by a
     WindowGroupLimit rank — the Pregel message shape, like
     ``graph_pagerank``. The adjacency comes from the session-shared
-    checkpointed build (:func:`_purchase_graph`); labels are
+    persisted build (:func:`_purchase_graph`); labels are
     node-sized, never edge-sized, on the shuffle. An exact-fixpoint
     signature probe exits early if labels stabilize — which on THIS
     bipartite graph they measurably never do (synchronous LPA
@@ -1222,7 +1248,7 @@ def graph_bfs_multisource(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs share every edge scan). At 100 TB the per-round cost follows
     the frontier wave, not the graph. Fixpoint = empty frontier, one
     scalar count per round; fails loudly past the oracle's unroll
-    depth. The edge list is the session-shared checkpointed build
+    depth. The edge list is the session-shared persisted build
     (:func:`_purchase_graph`)."""
     bidir = _purchase_graph(spark, sf_dir)["bidir"]
     seeds = spark.createDataFrame(

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import math
 import os
+import re
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
@@ -195,3 +196,33 @@ def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
     for k, v in profile_from_env().derive().items():
         builder = builder.config(k, v)
     return builder
+
+
+def _byte_string(v: str) -> int:
+    """Parse a Spark byte-size string ("1048576b", "64k", "1MB", "512")."""
+    m = re.fullmatch(r"\s*(\d+)\s*([kmgtp]?)b?\s*", v.lower())
+    if m is None:
+        raise ValueError(f"not a byte size: {v!r}")
+    unit = m.group(2)
+    return int(m.group(1)) * (1024 ** ("kmgtp".index(unit) + 1) if unit else 1)
+
+
+def sized_partitions(spark: SparkSession, nbytes: int) -> int:
+    """Partition count for a persisted frame of ``nbytes``, by AQE's own
+    coalescing arithmetic: one partition per
+    ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` of data,
+    at most ``sc.defaultParallelism`` and ``spark.sql.shuffle.partitions``,
+    at least 1. A persisted frame keeps the partition count it was built
+    with (AQE does not coalesce a cached plan), so a frame that later
+    stages reuse is sized here, once, from its measured size."""
+    min_part = _byte_string(
+        spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    )
+    return max(
+        1,
+        min(
+            spark.sparkContext.defaultParallelism,
+            math.ceil(nbytes / min_part),
+            int(spark.conf.get("spark.sql.shuffle.partitions")),
+        ),
+    )

@@ -176,6 +176,26 @@ def capture_stream_plans():
         _PLAN_CAPTURE = prev
 
 
+def _env_count(var: str, default: int) -> int:
+    """A positive integer env override: unset ⇒ ``default``, below 1 ⇒ 1,
+    not an integer ⇒ ``ValueError`` naming the variable."""
+    raw = os.environ.get(var)
+    if raw is None:
+        return default
+    try:
+        n = int(raw)
+    except ValueError:
+        raise ValueError(f"{var} must be an integer, got {raw!r}") from None
+    return max(1, n)
+
+
+def _detach_sink(spark: SparkSession, name: str) -> DataFrame:
+    """Bind the memory sink ``name`` as a frame, then drop its temp view."""
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
+
+
 def run_to_memory(
     df: DataFrame, output_mode: str = "complete", timeout_sec: int | None = None
 ) -> DataFrame:
@@ -189,7 +209,13 @@ def run_to_memory(
     count anyway.  Both drain knobs are environment-tunable for bigger
     inputs (the round-10 sf10 ladder runs 100x the default data):
     ``SPARK_GRAFT_STREAM_DRAIN_SEC`` (default 120) and
-    ``SPARK_GRAFT_STREAM_PARTS`` (default 8).
+    ``SPARK_GRAFT_STREAM_PARTS`` (default 8), each clamped to at least 1
+    (see :func:`_env_count`).
+
+    The sink's temp view is dropped before returning: the returned
+    frame is bound to the sink's plan, so its rows stay reachable
+    through it and are released with it, instead of piling up in
+    driver heap under a view name nothing reads again.
 
     The timeout FAILS LOUDLY: a drain that exceeds the cap raises
     instead of returning the partially-filled sink — a silently
@@ -201,8 +227,8 @@ def run_to_memory(
     if _capture_for_audit(df):
         return spark.createDataFrame([], df.schema)
     if timeout_sec is None:
-        timeout_sec = int(os.environ.get("SPARK_GRAFT_STREAM_DRAIN_SEC", "120"))
-    drain_parts = os.environ.get("SPARK_GRAFT_STREAM_PARTS", "8")
+        timeout_sec = _env_count("SPARK_GRAFT_STREAM_DRAIN_SEC", 120)
+    drain_parts = str(_env_count("SPARK_GRAFT_STREAM_PARTS", 8))
     name = f"mem_{uuid.uuid4().hex[:12]}"
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
@@ -227,7 +253,7 @@ def run_to_memory(
                 q.stop()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(name)
+    return _detach_sink(spark, name)
 
 
 _TUMBLING_STREAM_ORACLE = """
@@ -1953,7 +1979,7 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.awaitTermination(30)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(name)
+    return _detach_sink(spark, name)
 
 
 # ---------------------------------------------------------------------------
