@@ -23,6 +23,7 @@ from tests.oracle import compare
 from udacity_data_engineer_capstone_spark.session import (
     LOCAL_PROFILE,
     SizingProfile,
+    get_spark,
     profile_from_env,
 )
 
@@ -153,3 +154,15 @@ def cluster_sim_session(spark):
 def test_slice_green_under_cluster_profile(cluster_sim_session, sf_dir, name):
     assert name in engine.QUERIES, name
     compare(cluster_sim_session, name, sf_dir)
+
+
+def test_get_spark_leaves_the_running_session_conf(spark):
+    """get_spark() in a process that already runs a session returns that
+    session without re-applying the engine's confs to it."""
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        assert get_spark("another-app").conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, prior)

@@ -25,7 +25,7 @@ from udacity_data_engineer_capstone_spark.operators.graph import (
 )
 from udacity_data_engineer_capstone_spark.session import sized_partitions
 
-from tests.conftest import SF_DIR, SF_DIR_MED
+from tests.conftest import SF_DIR, SF_DIR_MED, spark_job_ids
 
 
 def test_star_cc_deep_chain_logarithmic(spark):
@@ -238,6 +238,32 @@ def test_chunked_rounds_early_exit_on_fixpoint(spark):
     # round 1 changes state, round 2 equals round 1 → exit after the
     # FIRST chunk: exactly 3 step calls (the chunk), never 100
     assert len(calls) == 3
+
+
+def test_chunked_rounds_last_chunk_stays_lazy(spark):
+    """The chunk that reaches ``iters`` is returned unmaterialized: with
+    ``iters <= chunk`` (and with the default, all rounds in one chunk)
+    building the rounds launches no Spark job, and the caller's action
+    still sees every round."""
+    from udacity_data_engineer_capstone_spark.operators.graph import (
+        _chunked_fixpoint_rounds,
+    )
+
+    init = spark.createDataFrame(
+        [(1, 1), (2, 3), (3, 5)], "node long, r long"
+    )
+
+    def step(df):
+        return df.select("node", (F.col("r") * 2).alias("r"))
+
+    for iters, chunk in ((3, 3), (2, 5), (5, None)):
+        with spark_job_ids(spark) as ids:
+            out = _chunked_fixpoint_rounds(
+                init, step, ("node", "r"), iters, chunk
+            )
+        assert ids == [], (iters, chunk, ids)
+        got = {r["node"]: r["r"] for r in out.collect()}
+        assert got == {n: r << iters for n, r in ((1, 1), (2, 3), (3, 5))}
 
 
 def test_scc_functional_semantics(spark, sf_dir):

@@ -1533,10 +1533,9 @@ def test_warm_plan_build_launches_no_job(spark, sf_dir, name):
     assert ids == [], f"{name}: plan build launched jobs {ids}"
 
 
-def _plan_nodes(plan, expand_cache: bool, out: list[str]) -> list[str]:
+def _plan_nodes(plan, out: list[str]) -> list[str]:
     """Node names of a JVM physical plan, walked through AQE query stages.
-    A cached relation's own plan is entered only while ``expand_cache``
-    holds, so the walk stops at the frames that plan reads from cache."""
+    The walk stops at the frames the plan reads from cache."""
     name = plan.nodeName()
     out.append(name)
     if name == "AdaptiveSparkPlan":
@@ -1544,27 +1543,27 @@ def _plan_nodes(plan, expand_cache: bool, out: list[str]) -> list[str]:
     elif name.endswith("QueryStage"):
         kids = [plan.plan()]
     elif name == "InMemoryTableScan":
-        kids = [plan.relation().cachedPlan()] if expand_cache else []
-        expand_cache = False
+        kids = []
     else:
         kids = _jchildren(plan)
     for kid in kids:
-        _plan_nodes(kid, expand_cache, out)
+        _plan_nodes(kid, out)
     return out
 
 
 def test_warm_pagerank_on_small_graph_runs_without_shuffle(spark, sf_dir):
     """At sf0.001 the shared adjacency is one partition, so a warm
-    graph_pagerank launches at most 12 jobs (chunk materializations,
-    per-round broadcasts of the adjacency, the final write), and the plan
-    of its last chunk of rounds over the cached adjacency holds no
-    shuffle ``Exchange`` node."""
+    graph_pagerank launches at most 8 jobs (the final write and the stage
+    jobs for the per-round broadcasts of the adjacency), and the plan of
+    its rounds over the cached adjacency holds no shuffle ``Exchange``
+    node. All six rounds sit in the returned frame's plan; the walk does
+    not enter the cached adjacency, whose one-time build has one."""
     fn = Q["graph_pagerank"].fn
     fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
     with spark_job_ids(spark) as ids:
         df = fn(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
-    assert len(ids) <= 12, ids
-    nodes = _plan_nodes(df._jdf.queryExecution().executedPlan(), True, [])
+    assert len(ids) <= 8, ids
+    nodes = _plan_nodes(df._jdf.queryExecution().executedPlan(), [])
     assert "HashAggregate" in nodes, nodes  # the rounds were walked
     assert "Exchange" not in nodes, nodes

@@ -7,6 +7,7 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from udacity_data_engineer_capstone_spark.catalog import load_table
 from udacity_data_engineer_capstone_spark.operators.events import (
@@ -88,6 +89,121 @@ def test_drain_env_overrides_clamped(spark, sf_dir, monkeypatch):
     with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_DRAIN_SEC"):
         run_to_memory(tumbling_counts(stream_events(spark, src)))
     assert len(spark.streams.active) == n_active
+
+
+class _StatePartitions(StreamingQueryListener):
+    """Records each drain's state partition counts, by query name."""
+
+    def __init__(self) -> None:
+        self.parts: dict[str, set[int]] = {}
+
+    def onQueryStarted(self, event) -> None:
+        pass
+
+    def onQueryProgress(self, event) -> None:
+        p = event.progress
+        for op in p.stateOperators or []:
+            self.parts.setdefault(p.name, set()).add(op.numShufflePartitions)
+
+    def onQueryIdle(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        pass
+
+
+def test_drains_size_state_partitions_to_input(spark, sf_dir, monkeypatch):
+    """With SPARK_GRAFT_STREAM_PARTS unset, a drain's state stores are
+    sized to the bytes its source reads: sf0.001's staged events (~40 KB)
+    and its sorted event log each drain through ONE state partition."""
+    from udacity_data_engineer_capstone_spark.streaming.events import (
+        stream_python_source,
+    )
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTS", raising=False)
+    src = stage_events_dir(spark, sf_dir)
+    listener = _StatePartitions()
+    spark.streams.addListener(listener)
+    try:
+        run_to_memory(tumbling_counts(stream_events(spark, src)))
+        stream_python_source(spark, sf_dir)
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+    drains = {
+        name.split("_")[0]: parts
+        for name, parts in listener.parts.items()
+        if name and name.startswith(("mem_", "pystream_"))
+    }
+    assert drains == {"mem": {1}, "pystream": {1}}, listener.parts
+
+
+def test_drain_restores_conf_while_query_runs(spark, sf_dir, monkeypatch):
+    """The drain writes ``spark.sql.shuffle.partitions`` only around
+    ``start()``: while the started query is still active the session
+    reads its prior value, and the query keeps the drain's count."""
+    from udacity_data_engineer_capstone_spark.streaming.events import (
+        _start_drain,
+        _stream_source_bytes,
+    )
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTS", raising=False)
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try:
+        src = stage_events_dir(spark, sf_dir)
+        df = tumbling_counts(stream_events(spark, src))
+        writer = (
+            df.writeStream.format("memory")
+            .queryName(f"conf_probe_{os.getpid()}")
+            .outputMode("complete")
+            .trigger(processingTime="0 seconds")
+        )
+        q = _start_drain(writer, spark, _stream_source_bytes(df))
+        try:
+            assert q.isActive
+            assert spark.conf.get(key) == "4"
+            q.processAllAvailable()
+            assert q.isActive
+            assert spark.conf.get(key) == "4"
+            ops = q.lastProgress["stateOperators"]
+            assert [op["numShufflePartitions"] for op in ops] == [1]
+        finally:
+            q.stop()
+            spark.catalog.dropTempView(f"conf_probe_{os.getpid()}")
+    finally:
+        spark.conf.set(key, prior)
+
+
+def test_concurrent_drains_keep_conf_and_results(spark, sf_dir, monkeypatch):
+    """Four threads draining at once on one session: the session's
+    shuffle-partition conf ends where it started, and each drain equals
+    the serial drain."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from tests.conftest import bind_active_session
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTS", raising=False)
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "5")
+    src = stage_events_dir(spark, sf_dir)
+    cols = ["window_start", "event_type", "n_events", "sum_value_micros"]
+
+    def drain(_=None):
+        bind_active_session(spark)
+        drained = run_to_memory(tumbling_counts(stream_events(spark, src)))
+        return _rows(drained, cols)
+
+    try:
+        serial = drain()
+        with ThreadPoolExecutor(4) as pool:
+            results = list(pool.map(drain, range(4)))
+        assert spark.conf.get(key) == "5"
+    finally:
+        spark.conf.set(key, prior)
+    assert all(r == serial for r in results)
 
 
 def test_running_user_totals_stateful(spark, sf_dir):

@@ -23,8 +23,8 @@ adjacency is built once per session and persisted (:func:`_purchase_graph`):
 a graph under ~1 MB sits in one partition and its rounds shuffle
 nothing; a larger one is hash-partitioned by source into
 ``spark.sql.shuffle.partitions``, so only the node-sized vector moves.
-Fixed-round loops (PageRank/PPR/LPA) chain 3 rounds per materializing
-action with per-round fixpoint probes riding ``observe()`` metrics
+Fixed-round loops (PageRank/PPR/LPA) chain all their rounds into one
+lazy plan that the caller's own action runs
 (:func:`_chunked_fixpoint_rounds`); convergence-driven loops (BFS,
 k-core) keep one action per round because the frontier/peel count
 decides whether to continue. The DuckDB oracle unrolls the same
@@ -37,6 +37,7 @@ graph stage; extension surface (SURVEY §6).
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -186,10 +187,11 @@ def _state_signature(df: DataFrame, cols: tuple[str, ...]) -> tuple[int, int]:
     from a 1e9 base — exact fixpoint needs ~tens of rounds), and
     synchronous LPA two-colors the bipartite purchase graph into a
     stable OSCILLATION (labels alternate sides each round, never
-    equal). So at these SFs the early exit is armed but does not fire
-    for those three; it fires where fixpoints exist (BFS frontier
-    exhaustion, k-core peel, and any production graph whose rank lanes
-    quantize to stability before the round cap)."""
+    equal). So at these SFs an early exit would not fire for those
+    three, and they run their fixed rounds unprobed
+    (:func:`_chunked_fixpoint_rounds`); it fires where fixpoints exist
+    (BFS frontier exhaustion, k-core peel, and any production graph
+    whose rank lanes quantize to stability before the round cap)."""
     hashed = df.select(
         F.xxhash64(*[F.col(c) for c in cols]).alias("h")
     )
@@ -200,12 +202,26 @@ def _state_signature(df: DataFrame, cols: tuple[str, ...]) -> tuple[int, int]:
     return (r["n"], r["sig"])
 
 
-# Final iterative-state frames stay persisted for the caller's single
-# action; this bounded ring evicts the oldest (unpersist with lineage
-# intact → any late re-evaluation silently recomputes) so hundreds of
-# bench/test runs in one session can't accumulate CacheManager entries.
+# Chunk ends that a returned lazy result still reads stay persisted; this
+# bounded ring evicts the oldest (unpersist with lineage intact → any late
+# re-evaluation silently recomputes) so hundreds of bench/test runs in one
+# session can't accumulate CacheManager entries. Guarded by a lock: driver
+# threads that share a session run fixpoints concurrently.
 _ITER_STATE_RING: list[DataFrame] = []
 _ITER_STATE_RING_MAX = 8
+_ITER_STATE_LOCK = threading.Lock()
+
+
+def _retain_chunk_end(df: DataFrame) -> None:
+    with _ITER_STATE_LOCK:
+        _ITER_STATE_RING.append(df)
+        old = (
+            _ITER_STATE_RING.pop(0)
+            if len(_ITER_STATE_RING) > _ITER_STATE_RING_MAX
+            else None
+        )
+    if old is not None:
+        old.unpersist()  # recompute-safe: lineage survives
 
 
 def _chunked_fixpoint_rounds(
@@ -213,46 +229,48 @@ def _chunked_fixpoint_rounds(
     step,
     sig_cols: tuple[str, ...],
     iters: int,
-    chunk: int = 3,
+    chunk: int | None = None,
 ) -> DataFrame:
-    """Run ``iters`` synchronous rounds of ``step`` with one
-    materializing action per ``chunk`` rounds instead of one per round:
-    ``chunk`` rounds are chained lazily in a single plan, each round
-    tagged with an ``observe()`` metric computing the SAME
-    (count, xxhash64-XOR) fixpoint signature as
-    :func:`_state_signature`, and one action materializes the chunk —
-    firing every round's probe for free. Exit parity is exact, not
-    chunk-granular: if any CONSECUTIVE pair of per-round signatures
-    matches, every later round is the identity, so the already-
-    materialized chunk-end frame equals the fixpoint and the loop
-    stops. The rounds, math, and early-exit condition are bit-identical
-    to the one-action-per-round form; only the action count changes
-    (6 → 2 for PageRank). Under AQE that is not the job count: each
-    action also launches a job per broadcast and per shuffle stage it
-    materializes. A warm 6-round ``graph_pagerank``, noop write
-    included, measured 19 jobs over a 4-partition adjacency and 11 over
-    the one-partition sf0.001 adjacency (local[4]): the two chunk
-    actions, the write, and eight stage jobs AQE runs for the rounds'
-    broadcasts and cached-frame reads.
+    """Run ``iters`` synchronous rounds of ``step``, ``chunk`` rounds per
+    plan (``None``: all of them in one).
+
+    The chunk that reaches ``iters`` is returned unmaterialized: its
+    rounds are chained lazily onto the previous chunk end and run by the
+    caller's own action. No round follows it, so an early exit there could
+    not change the result, and it carries no probe. With the default, a
+    fixed-round loop (PageRank, PPR, LPA, the PageRank-approx sibling
+    check) builds one plan and launches no Spark job itself. A warm
+    6-round ``graph_pagerank`` with its noop write runs 7 jobs over the
+    one-partition sf0.001 adjacency (local[4]), down from 11 with a
+    persisted, counted 3-round chunk per action: the write and the stage
+    jobs AQE runs for the rounds' broadcasts and cached-frame reads.
+
+    Every chunk that has rounds after it is materialized by one action:
+    each of its rounds is tagged with an ``observe()`` metric computing
+    the SAME (count, xxhash64-XOR) fixpoint signature as
+    :func:`_state_signature`, and ``persist()`` + ``count()`` fires every
+    round's probe at once. Exit parity is exact, not chunk-granular: if
+    any CONSECUTIVE pair of per-round signatures matches, every later
+    round is the identity, so the materialized chunk end equals the
+    fixpoint and the loop stops. The rounds, math and early-exit
+    condition are bit-identical to the one-action-per-round form.
 
     Chunk ends persist() (recompute-safe lineage back to the persisted
-    adjacency) rather than localCheckpoint: plan depth is bounded by
-    the fixed round cap (≤ 6 here), so O(1)-per-round lineage
-    truncation is unnecessary — and localCheckpoint materialization is
-    an RDD job that does NOT fire observe() metrics (measured: the
-    probes read n=0), so persist is load-bearing here. The returned
-    final frame stays persisted for the caller's action; it is entered
-    into a bounded eviction ring (recompute-safe — unpersist keeps
-    lineage) so repeated query runs can't accumulate cache entries."""
+    adjacency) rather than localCheckpoint: localCheckpoint
+    materialization is an RDD job that does NOT fire observe() metrics
+    (measured: the probes read n=0), so persist is load-bearing here. The
+    chunk end the returned frame reads (or returns, on an early exit)
+    stays persisted and enters the bounded, locked
+    ``_ITER_STATE_RING``."""
+    chunk = chunk or iters
     sig_expr = "bit_xor(xxhash64({}))".format(", ".join(sig_cols))
     prev_sig: tuple | None = None
-    prev_persisted: DataFrame | None = None
+    chunk_end: DataFrame | None = None
     done = 0
-    while done < iters:
-        k = min(chunk, iters - done)
+    while iters - done > chunk:
         probes: list[Observation] = []
         cur = state
-        for _ in range(k):
+        for _ in range(chunk):
             cur = step(cur)
             ob = Observation()
             cur = cur.observe(
@@ -263,11 +281,10 @@ def _chunked_fixpoint_rounds(
             probes.append(ob)
         cur = cur.persist()
         cur.count()  # ONE job: materializes the chunk, fires all probes
-        done += k
-        if prev_persisted is not None:
-            prev_persisted.unpersist()
-        prev_persisted = cur
-        state = cur
+        done += chunk
+        if chunk_end is not None:
+            chunk_end.unpersist()
+        chunk_end = state = cur
         fixpoint = False
         for ob in probes:
             m = ob.get
@@ -277,13 +294,11 @@ def _chunked_fixpoint_rounds(
             prev_sig = sig
         if fixpoint:
             break
-    _ITER_STATE_RING.append(state)
-    if len(_ITER_STATE_RING) > _ITER_STATE_RING_MAX:
-        old = _ITER_STATE_RING.pop(0)
-        try:
-            old.unpersist()  # recompute-safe: lineage survives
-        except Exception:
-            pass
+    else:  # no early exit: chain the last chunk's rounds lazily
+        for _ in range(iters - done):
+            state = step(state)
+    if chunk_end is not None:
+        _retain_chunk_end(chunk_end)
     return state
 
 
@@ -316,13 +331,9 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer micro-units (see module docstring). The adjacency (src, dst,
     src-degree) comes from the SESSION-SHARED persisted build
     (:func:`_purchase_graph` — one edge-sized shuffle amortized across
-    the whole graph family); each round joins it to the rank vector,
-    re-aggregates, and probes the exact-fixpoint signature, stopping
-    early when a round changes nothing (parity-safe: remaining oracle
-    rounds would be identity — see :func:`_state_signature` for why
-    that exit is measured NOT to fire at test SFs). Rounds run
-    chunk-chained (3 per Spark job) with the per-round probe riding
-    ``observe()`` metrics — see :func:`_chunked_fixpoint_rounds`.
+    the whole graph family); each round joins it to the rank vector and
+    re-aggregates. All six rounds chain into one lazy plan that the
+    caller's action runs — see :func:`_chunked_fixpoint_rounds`.
     Rank mass ≈ conserved (modulo integer truncation), so high-degree
     suppliers surface with rank ≫ SCALE."""
     g = _purchase_graph(spark, sf_dir)
@@ -969,11 +980,11 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     WindowGroupLimit rank — the Pregel message shape, like
     ``graph_pagerank``. The adjacency comes from the session-shared
     persisted build (:func:`_purchase_graph`); labels are
-    node-sized, never edge-sized, on the shuffle. An exact-fixpoint
-    signature probe exits early if labels stabilize — which on THIS
-    bipartite graph they measurably never do (synchronous LPA
-    two-colors it into a stable oscillation), so the fixed-K contract
-    with the oracle holds.""".replace("{n}", str(_LPA_ITERS))
+    node-sized, never edge-sized, on the shuffle. The {n} rounds chain
+    into one lazy plan (:func:`_chunked_fixpoint_rounds`), so no
+    early exit runs; on THIS bipartite graph labels measurably never
+    stabilize anyway (synchronous LPA two-colors it into a stable
+    oscillation).""".replace("{n}", str(_LPA_ITERS))
     g = _purchase_graph(spark, sf_dir)
     bidir = g["bidir"]
     labels = g["nodes"].select("node", F.col("node").alias("label"))
@@ -992,8 +1003,6 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("nd").alias("node"), "label")
         )
 
-    # all 3 rounds chain into ONE job; the per-round stability probe
-    # rides observe() metrics (_chunked_fixpoint_rounds)
     labels = _chunked_fixpoint_rounds(
         labels, _round, ("node", "label"), _LPA_ITERS
     )
@@ -1507,8 +1516,8 @@ def graph_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round 1 touches only the seeds' out-edges — at 100 TB the cost
     grows with the seeds' damped reach, not the graph. Shares the
     session-cached adjacency (:func:`_purchase_graph`); unrolled-CTE
-    oracle; exact-fixpoint early exit riding chunk-chained rounds
-    (:func:`_chunked_fixpoint_rounds`, 3 rounds per job)."""
+    oracle; all rounds chain into one lazy plan
+    (:func:`_chunked_fixpoint_rounds`)."""
     g = _purchase_graph(spark, sf_dir)
     adj, nodes = g["adj"], g["nodes"]
     seed_base = (BASE * 2) // len(_PPR_SEEDS)
@@ -1690,8 +1699,8 @@ def graph_ego_network_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 #
 # The exact iterative queries run a FIXED round count so their unrolled
-# SQL oracles stay byte-exact, and the exact-fixpoint probe measurably
-# cannot fire for pagerank/HITS/LPA at these SFs (graph.py:150-158).
+# SQL oracles stay byte-exact, and an exact-fixpoint probe measurably
+# cannot fire for pagerank/HITS/LPA at these SFs (_state_signature).
 # Production rarely needs value-exact ranks, though — it needs the
 # *ranking* (or the community structure) to stop moving. These ``_approx``
 # twins keep the exact variants untouched and add the production escape

@@ -155,7 +155,15 @@ def get_spark(app_name: str = "udacity_data_engineer_capstone_spark") -> SparkSe
     controls core count, and the ``SPARK_GRAFT_CORES`` / ``..._MEM_GB_PER_CORE``
     / ``..._INPUT_GB`` / ``..._TARGET_PARTITION_MB`` profile surface for
     cluster-shaped sizing (see :func:`profile_from_env`).
+
+    A session already active in this process is returned as it is:
+    ``getOrCreate`` with the engine's options would rewrite its runtime
+    SQL confs (e.g. ``spark.sql.shuffle.partitions``) under every query
+    that shares it.
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

@@ -21,6 +21,7 @@ import contextlib
 import os
 import shutil
 import tempfile
+import threading
 import time
 import uuid
 
@@ -32,6 +33,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from udacity_data_engineer_capstone_spark.catalog import load_table
 from udacity_data_engineer_capstone_spark.registry import query
+from udacity_data_engineer_capstone_spark.session import sized_partitions
 
 EVENTS_STREAM_SCHEMA = T.StructType(
     [
@@ -196,21 +198,89 @@ def _detach_sink(spark: SparkSession, name: str) -> DataFrame:
     return out
 
 
+def _path_bytes(path: str) -> int | None:
+    """Bytes of the data files at ``path`` (a file or a directory tree,
+    skipping the ``_``/``.`` files Spark's listing skips); None when the
+    path cannot be read."""
+    if os.path.isfile(path):
+        return os.path.getsize(path)
+    if not os.path.isdir(path):
+        return None
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(path)
+        for f in files
+        if not f.startswith(("_", "."))
+    )
+
+
+def _stream_source_bytes(df: DataFrame) -> int | None:
+    """Bytes the file sources of the streaming frame ``df`` will read:
+    the ``path`` of each ``StreamingRelation`` leaf of its analyzed plan.
+    None when any streaming leaf has no readable path (e.g. a Python
+    data source's ``StreamingRelationV2``)."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    total = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if not leaf.isStreaming():
+            continue  # the static side of a stream-static join
+        if leaf.nodeName() != "StreamingRelation":
+            return None
+        path = leaf.dataSource().options().get("path")
+        n = _path_bytes(path.get()) if path.isDefined() else None
+        if n is None:
+            return None
+        total += n
+    return total
+
+
+# spark.sql.shuffle.partitions is session-global; drains hold it only
+# around start(), one at a time, so two drains cannot restore each
+# other's value.
+_DRAIN_CONF_LOCK = threading.Lock()
+
+
+def _start_drain(writer, spark: SparkSession, nbytes: int | None):
+    """``writer.start()`` with ``spark.sql.shuffle.partitions`` (the
+    stream's state-store count) at ``SPARK_GRAFT_STREAM_PARTS`` when set
+    (clamped, :func:`_env_count`), else :func:`sized_partitions` of the
+    input's ``nbytes``, else 8 when the input size is unknown. The
+    session's value is restored as soon as ``start()`` returns: the
+    query's ``StreamExecution`` clones the session when it is built, so
+    the clone keeps the drain's count and records it in the checkpoint's
+    offset log."""
+    with _DRAIN_CONF_LOCK:
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        sized = 8 if nbytes is None else sized_partitions(spark, nbytes)
+        parts = _env_count("SPARK_GRAFT_STREAM_PARTS", sized)
+        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+        try:
+            return writer.start()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
 def run_to_memory(
     df: DataFrame, output_mode: str = "complete", timeout_sec: int | None = None
 ) -> DataFrame:
     """Drain a streaming DataFrame with trigger(availableNow) into a
     memory sink; returns the sink table as a batch DataFrame.
 
-    State-store parallelism is bounded for the drain (and restored
-    after): a vanilla session's 200 shuffle partitions mean 200 state
-    stores per stateful operator per micro-batch — pure fixed overhead
-    at test scale, and a knob a cluster job would size to its executor
-    count anyway.  Both drain knobs are environment-tunable for bigger
-    inputs (the round-10 sf10 ladder runs 100x the default data):
+    State stores are sized to the input (:func:`_start_drain`): one per
+    ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` of the
+    files the stream's sources read (:func:`_stream_source_bytes`),
+    capped like a batch shuffle. A vanilla session's 200 shuffle
+    partitions would mean 200 state stores per stateful operator per
+    micro-batch, pure fixed overhead for an input of a few MB; sf0.001's
+    staged events (~40 KB) drain through one. The session-global conf is
+    written only around ``start()``, under a module lock, and restored
+    as soon as ``start()`` returns. Both drain knobs are
+    environment-tunable for bigger inputs (the round-10 sf10 ladder runs
+    100x the default data):
     ``SPARK_GRAFT_STREAM_DRAIN_SEC`` (default 120) and
-    ``SPARK_GRAFT_STREAM_PARTS`` (default 8), each clamped to at least 1
-    (see :func:`_env_count`).
+    ``SPARK_GRAFT_STREAM_PARTS`` (default: sized), each clamped to at
+    least 1 (see :func:`_env_count`).
 
     The sink's temp view is dropped before returning: the returned
     frame is bound to the sink's plan, so its rows stay reachable
@@ -228,31 +298,25 @@ def run_to_memory(
         return spark.createDataFrame([], df.schema)
     if timeout_sec is None:
         timeout_sec = _env_count("SPARK_GRAFT_STREAM_DRAIN_SEC", 120)
-    drain_parts = str(_env_count("SPARK_GRAFT_STREAM_PARTS", 8))
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    writer = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+    )
+    q = _start_drain(writer, spark, _stream_source_bytes(df))
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", drain_parts)
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            finished = q.awaitTermination(timeout_sec)
-            if not finished:
-                raise RuntimeError(
-                    f"streaming drain exceeded {timeout_sec}s (availableNow "
-                    "did not terminate) — raise SPARK_GRAFT_STREAM_DRAIN_SEC "
-                    "for bigger inputs; refusing to return a partial sink"
-                )
-        finally:
-            if q.isActive:
-                q.stop()
+        finished = q.awaitTermination(timeout_sec)
+        if not finished:
+            raise RuntimeError(
+                f"streaming drain exceeded {timeout_sec}s (availableNow "
+                "did not terminate) — raise SPARK_GRAFT_STREAM_DRAIN_SEC "
+                "for bigger inputs; refusing to return a partial sink"
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+        if q.isActive:
+            q.stop()
     return _detach_sink(spark, name)
 
 
@@ -1953,32 +2017,28 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     if _capture_for_audit(agg):
         return spark.createDataFrame([], agg.schema)
     name = f"pystream_{_uuid.uuid4().hex[:12]}"
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    writer = (
+        agg.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
+        .trigger(processingTime="0 seconds")
+    )
+    # the log file is all the source reads: size state stores to it
+    q = _start_drain(writer, spark, os.path.getsize(path))
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        try:
-            deadline = _time.time() + 120
-            while _time.time() < deadline:
-                snap = spark.table(name).agg(F.sum("n_events")).collect()[0][0]
-                if snap == expected:
-                    break  # cursor reached end of log; snapshot complete
-                _time.sleep(0.2)
-            else:
-                raise TimeoutError(
-                    f"python streaming source drained {snap}/{expected} rows"
-                )
-        finally:
-            q.stop()
-            q.awaitTermination(30)
+        deadline = _time.time() + 120
+        while _time.time() < deadline:
+            snap = spark.table(name).agg(F.sum("n_events")).collect()[0][0]
+            if snap == expected:
+                break  # cursor reached end of log; snapshot complete
+            _time.sleep(0.2)
+        else:
+            raise TimeoutError(
+                f"python streaming source drained {snap}/{expected} rows"
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+        q.stop()
+        q.awaitTermination(30)
     return _detach_sink(spark, name)
 
 
