@@ -1,11 +1,12 @@
 """The catalog's resolve-once schema memo: a table's parquet footer is
-inferred by one Spark job on its first read, later reads supply the
-cached ``StructType`` and launch none, and a rewritten file, the layout
-shim's kill switch and concurrent loaders all still see the right
-schema."""
+converted in the driver JVM on its first read, with no Spark job and to
+the schema Spark's inference gives, later reads supply the cached
+``StructType``, and a rewritten file, the layout shim's kill switch and
+concurrent loaders all still see the right schema."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 import tempfile
@@ -13,12 +14,15 @@ from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR, bind_active_session, spark_job_ids
 from udacity_data_engineer_capstone_spark.catalog import (
     TABLES,
+    _footer_schema,
     load_table,
+    register_views,
     table_path,
 )
 
@@ -35,11 +39,42 @@ def test_second_load_launches_no_job(spark, tmp_path):
         first = load_table(spark, sf, "orders")
     with spark_job_ids(spark) as warm:
         second = load_table(spark, sf, "orders")
-    # the cold read infers the footer with a job, so the counter works
-    assert cold, "first read of an unseen file should infer its schema"
-    assert warm == []
+    with spark_job_ids(spark) as action:
+        n = second.count()
+    assert action, "the job counter should see the count's job"
+    assert cold == [] and warm == []  # the footer is read in the driver
     assert second.schema == first.schema
-    assert second.count() == first.count()
+    assert n == first.count()
+
+
+def test_register_views_launches_no_job(spark, tmp_path):
+    sf = _copy_tables(tmp_path)  # unseen paths: every schema resolves cold
+    child = spark.newSession()  # keeps the temp views off the shared session
+    with spark_job_ids(spark) as ids:
+        views = register_views(child, sf)
+    assert ids == []
+    assert set(views) == set(TABLES)
+
+
+_TIERS = sorted(
+    d for d in os.listdir(os.path.dirname(SF_DIR)) if d.startswith("sf")
+)
+
+
+@pytest.mark.parametrize("tier", _TIERS)
+def test_footer_schema_equals_inferred(spark, tier):
+    sf = os.path.join(os.path.dirname(SF_DIR), tier)
+    for name in TABLES:
+        path = table_path(sf, name)
+        assert _footer_schema(spark, path) == spark.read.parquet(path).schema, name
+
+
+def test_unreadable_footer_gives_no_schema(spark, tmp_path):
+    """A Py4J error from the footer read yields None, so the caller
+    falls back to Spark's inference."""
+    path = tmp_path / "junk.parquet"
+    path.write_bytes(b"not a parquet file")
+    assert _footer_schema(spark, str(path)) is None
 
 
 def test_in_place_rewrite_is_picked_up(spark, tmp_path):

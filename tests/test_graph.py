@@ -136,6 +136,25 @@ def test_sized_partitions_clamps():
     assert sized_partitions(_sizing_session(32, 32, "1MB"), 2 * mb) == 2
 
 
+def test_adjacency_held_on_driver_by_bytes_not_cores():
+    """The adjacency is held as a driver-local relation when its size is
+    at most one minPartitionSize, whatever the core count: a one-core
+    session, where the sizing rule gives one partition for any size,
+    still persists a large graph."""
+    from udacity_data_engineer_capstone_spark.operators.graph import (
+        _adjacency_layout,
+    )
+
+    small, large = 2900 * 24, 3 << 20  # sf0.001 and a ~3 MB graph
+    for cores in (1, 4, 32):
+        s = _sizing_session(parallelism=cores, shuffle=8)
+        assert _adjacency_layout(s, small) == (True, 1), cores
+        want = 1 if cores == 1 else 8  # sized_partitions, then shuffle count
+        assert _adjacency_layout(s, large) == (False, want), cores
+    # the threshold is the session's minPartitionSize
+    assert _adjacency_layout(_sizing_session(4, 8, "64k"), small) == (False, 8)
+
+
 def test_adjacency_partitions_sized_to_data(spark):
     """At sf0.001 (about 2,900 directed edges, ~70 KB) every frame the
     graph family iterates over is built in one partition, whatever the
@@ -159,9 +178,12 @@ def test_adjacency_partitions_sized_to_data(spark):
 
 
 def test_invalidate_graph_cache_unpersists_every_build_frame(spark):
-    """invalidate_graph_cache() releases every frame the adjacency build
-    persisted, the edge frame its count pass reads included: no RDD the
-    build cached stays registered as persistent."""
+    """A small graph's build leaves no persistent RDD behind: its entry
+    frames are driver-local relations and the edge frame its count pass
+    read is released. For a persisted graph (sf0.01),
+    invalidate_graph_cache() releases every frame the build persisted,
+    the edge frame included: no RDD the build cached stays registered as
+    persistent."""
     from udacity_data_engineer_capstone_spark.operators.graph import (
         _purchase_graph,
         invalidate_graph_cache,
@@ -170,7 +192,11 @@ def test_invalidate_graph_cache_unpersists_every_build_frame(spark):
     invalidate_graph_cache()
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keys())
-    g = _purchase_graph(spark, SF_DIR)
+    small = _purchase_graph(spark, SF_DIR)
+    for df in small.values():
+        df.count()
+    assert set(jsc.getPersistentRDDs().keys()) == before
+    g = _purchase_graph(spark, SF_DIR_MED)
     for df in g.values():
         df.count()
     built = set(jsc.getPersistentRDDs().keys()) - before
@@ -179,6 +205,20 @@ def test_invalidate_graph_cache_unpersists_every_build_frame(spark):
     assert built.isdisjoint(jsc.getPersistentRDDs().keys())
     for name, df in g.items():
         assert df.storageLevel == StorageLevel.NONE, name
+
+
+def test_lazy_pagerank_survives_graph_cache_invalidation(spark):
+    """A graph_pagerank frame built before invalidate_graph_cache() and
+    evaluated after it returns the same rows: the evicted entry's
+    driver-local relations carry their rows in the plan."""
+    from udacity_data_engineer_capstone_spark.operators.graph import (
+        invalidate_graph_cache,
+    )
+
+    lazy = graph_pagerank(spark, SF_DIR)
+    want = sorted(graph_pagerank(spark, SF_DIR).collect())
+    invalidate_graph_cache()
+    assert sorted(lazy.collect()) == want
 
 
 def test_iterative_fixpoint_exit_fires_on_converging_state(spark):

@@ -60,7 +60,9 @@ class _PrefetchRunner:
         return self._futs[name].result()
 
     def shutdown(self) -> None:
-        self._pool.shutdown(wait=False)
+        # cancel compares not yet started and wait for running ones, so
+        # no in-flight query runs on into the next module's session state
+        self._pool.shutdown(wait=True, cancel_futures=True)
 
 
 def _selected(fn_name: str, default: list[str]) -> list[str]:

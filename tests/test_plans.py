@@ -1552,18 +1552,27 @@ def _plan_nodes(plan, out: list[str]) -> list[str]:
 
 
 def test_warm_pagerank_on_small_graph_runs_without_shuffle(spark, sf_dir):
-    """At sf0.001 the shared adjacency is one partition, so a warm
-    graph_pagerank launches at most 8 jobs (the final write and the stage
-    jobs for the per-round broadcasts of the adjacency), and the plan of
-    its rounds over the cached adjacency holds no shuffle ``Exchange``
-    node. All six rounds sit in the returned frame's plan; the walk does
-    not enter the cached adjacency, whose one-time build has one."""
+    """At sf0.001 the shared adjacency is a one-partition driver-local
+    relation, so a warm graph_pagerank launches at most 3 jobs (the final
+    write and two broadcasts) and its rounds hold no shuffle ``Exchange``
+    node. AQE builds the adjacency broadcast once and every later round
+    reuses it: round 1 broadcasts the initial rank vector against the
+    streamed adjacency, rounds 2-6 share one adjacency
+    ``BroadcastExchange`` (1 built, 4 ``ReusedExchange``). No cached
+    frame sits in the lineage, so the plan string stays under 64 KB."""
+    from udacity_data_engineer_capstone_spark.operators.graph import ITERS
+
     fn = Q["graph_pagerank"].fn
     fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
     with spark_job_ids(spark) as ids:
         df = fn(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
-    assert len(ids) <= 8, ids
-    nodes = _plan_nodes(df._jdf.queryExecution().executedPlan(), [])
+    assert len(ids) <= 3, ids
+    df.collect()  # runs df's own adaptive plan to its final form
+    qe = df._jdf.queryExecution()
+    nodes = _plan_nodes(qe.executedPlan(), [])
     assert "HashAggregate" in nodes, nodes  # the rounds were walked
     assert "Exchange" not in nodes, nodes
+    assert nodes.count("BroadcastExchange") == 2, nodes
+    assert nodes.count("ReusedExchange") == ITERS - 2, nodes
+    assert len(qe.toString()) < 64 * 1024

@@ -8,12 +8,13 @@ views so both the DataFrame and SQL surfaces see the same names.
 All testdata tables are parquet; at 100 TB this is exactly the layout you
 want (columnar scan, predicate pushdown, partition pruning all free).
 
-Each table's schema is resolved once. A schema-less
+Each table's schema is resolved once, with no Spark job. A schema-less
 ``spark.read.parquet(path)`` launches one Spark job to read the footer,
 so inferring it on every ``load_table`` call cost a star join one driver
 job per table before it planned anything. ``load_table`` instead
 reads with ``spark.read.schema(cached).parquet(path)``: the first read of
-a file infers its ``StructType`` and every later read supplies it. The
+a file converts its footer to a ``StructType`` in the driver JVM, with
+Spark's own conversion, and every later read supplies it. The
 memo is keyed by the resolved read path (after the layout shim), the
 file's ``(st_mtime_ns, st_size)`` and the session values of the confs
 that change parquet schema inference, so a rewritten file or a changed
@@ -25,11 +26,13 @@ paths ``os.stat`` cannot read fall through to plain inference.
 
 from __future__ import annotations
 
+import json
 import os
 import stat
 import threading
 from collections import OrderedDict
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StructType
 
@@ -154,7 +157,7 @@ _SCHEMA_CONFS = (
 
 
 class _SchemaMemo:
-    """A locked LRU of inferred ``StructType``s. It holds no Spark
+    """A locked LRU of resolved ``StructType``s. It holds no Spark
     resources, so eviction only drops a key."""
 
     def __init__(self, capacity: int) -> None:
@@ -181,7 +184,7 @@ _SCHEMAS = _SchemaMemo(capacity=256)
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` that infers a file's schema once."""
+    """``spark.read.parquet(path)`` that resolves a file's schema once."""
     try:
         st = os.stat(path)
     except OSError:
@@ -195,11 +198,39 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
         tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS),
     )
     schema = _SCHEMAS.get(key)
-    if schema is not None:
-        return spark.read.schema(schema).parquet(path)
-    df = spark.read.parquet(path)
-    _SCHEMAS.put(key, df.schema)
-    return df
+    if schema is None:
+        schema = _footer_schema(spark, path) or spark.read.parquet(path).schema
+        _SCHEMAS.put(key, schema)
+    return spark.read.schema(schema).parquet(path)
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The ``StructType`` Spark's parquet inference gives the file at
+    ``path``, read from its footer in the driver JVM with Spark's own
+    conversion (``ParquetFileFormat.readSchemaFromFooter``, which honours
+    the Spark row-metadata key and the session's schema confs). Launches
+    no Spark job. ``None`` on any Py4J error (an unreadable footer, a
+    type the conversion rejects), so the caller falls back to inference
+    and its error messages."""
+    try:
+        jvm = spark._jvm
+        state = spark._jsparkSession.sessionState()
+        hadoop = jvm.org.apache.parquet.hadoop
+        jpath = jvm.org.apache.hadoop.fs.Path(path)
+        reader = hadoop.ParquetFileReader.open(
+            hadoop.util.HadoopInputFile.fromPath(jpath, state.newHadoopConf())
+        )
+        try:
+            footer = hadoop.Footer(jpath, reader.getFooter())
+        finally:
+            reader.close()
+        parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+        schema = parquet.ParquetFileFormat.readSchemaFromFooter(
+            footer, parquet.ParquetToSparkSchemaConverter(state.conf())
+        )
+        return StructType.fromJson(json.loads(schema.json()))
+    except Py4JError:
+        return None
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

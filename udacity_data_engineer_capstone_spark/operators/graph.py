@@ -18,10 +18,11 @@ SCALE=1e9; shrink SCALE for bigger graphs.)
 
 Scale shape: each iteration is one equi-join of the static
 (src, dst, deg) adjacency against the current rank vector plus one
-partial+final integer aggregate, with no driver data collect. The
-adjacency is built once per session and persisted (:func:`_purchase_graph`):
-a graph under ~1 MB sits in one partition and its rounds shuffle
-nothing; a larger one is hash-partitioned by source into
+partial+final integer aggregate, with no driver data collect per
+round. The adjacency is built once per session (:func:`_purchase_graph`):
+a graph under ~1 MB is held as a one-partition driver-local relation,
+so its rounds shuffle nothing and share one adjacency broadcast; a
+larger one is persisted and hash-partitioned by source into
 ``spark.sql.shuffle.partitions``, so only the node-sized vector moves.
 Fixed-round loops (PageRank/PPR/LPA) chain all their rounds into one
 lazy plan that the caller's own action runs
@@ -44,7 +45,10 @@ from pyspark.sql import functions as F
 
 from udacity_data_engineer_capstone_spark.catalog import load_table, register_views
 from udacity_data_engineer_capstone_spark.registry import query
-from udacity_data_engineer_capstone_spark.session import sized_partitions
+from udacity_data_engineer_capstone_spark.session import (
+    min_partition_bytes,
+    sized_partitions,
+)
 
 ITERS = 6
 SCALE = 1_000_000_000  # rank mass per node, in micro-units
@@ -72,9 +76,12 @@ _GRAPH_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = {}
 # persisted adjacencies pin executor storage blocks: bound the cache so
 # a long-lived session iterating many sf_dirs doesn't accumulate them —
 # oldest entry evicted (and its blocks unpersisted). Entries are
-# persist()ed, not localCheckpointed, so eviction is recompute-safe for
-# any still-referenced derived frame (lineage survives unpersist).
+# driver-local relations (their rows live in the plan) or persist()ed
+# frames, never localCheckpointed ones, so eviction is recompute-safe
+# for any still-referenced derived frame (lineage survives unpersist).
 _GRAPH_CACHE_MAX = 4
+
+_EDGE_BYTES = 24  # one (s, d, deg) adjacency row: three BIGINTs
 
 
 def _graph_cache_evict(entry: dict[str, DataFrame]) -> None:
@@ -87,48 +94,82 @@ def _graph_cache_evict(entry: dict[str, DataFrame]) -> None:
 
 def invalidate_graph_cache() -> None:
     """Explicit invalidation hook: drop every cached adjacency and
-    release its checkpointed blocks (e.g. after the underlying tables
+    release its persisted blocks (e.g. after the underlying tables
     are rewritten in place)."""
     while _GRAPH_CACHE:
         _graph_cache_evict(_GRAPH_CACHE.pop(next(iter(_GRAPH_CACHE))))
+
+
+def _adjacency_layout(spark: SparkSession, nbytes: int) -> tuple[bool, int]:
+    """``(driver_local, partitions)`` for an adjacency of ``nbytes``.
+
+    A graph of at most one ``minPartitionSize`` is held as a driver-local
+    relation in one partition. The test is on bytes, not on
+    :func:`sized_partitions` returning 1: that also happens on any
+    one-core session, and must not pull a large graph onto the driver.
+    A larger graph is persisted in ``spark.sql.shuffle.partitions``
+    hash partitions (one where the sizing rule gives one): a join reuses
+    a cached side's hash partitioning only when it has at least that
+    many, so with fewer every round re-shuffles the adjacency."""
+    if nbytes <= min_partition_bytes(spark):
+        return True, 1
+    if sized_partitions(spark, nbytes) == 1:
+        return False, 1
+    return False, int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+def _driver_local(df: DataFrame) -> DataFrame:
+    """``df``'s rows as a one-partition ``LocalRelation`` (Arrow
+    round-trip through the driver)."""
+    return df.sparkSession.createDataFrame(df.toArrow()).coalesce(1)
 
 
 def _purchase_graph(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """The bipartite purchase graph every iterative operator here walks:
     distinct (customer, supplier) edges symmetrized and hash-partitioned
     by source ONCE (``bidir``), plus the derived degree table (``deg``),
-    (s, d, deg) adjacency (``adj``) and node set (``nodes``), all
-    persisted. Cached per (application, sf_dir), so graph_pagerank /
+    (s, d, deg) adjacency (``adj``) and node set (``nodes``). Cached per
+    (application, sf_dir), so graph_pagerank /
     graph_pagerank_personalized / BFS / k-core / LPA / HITS /
     assortativity share ONE adjacency build instead of each re-running
     the identical orders⋈lineitem DISTINCT — the only edge-sized shuffle
     in the family, paid once per session like a materialized view.
 
-    Partition count: a persisted frame keeps the partitioning it was
-    built with, and every round of every operator here inherits it. The
-    build counts the distinct edges once (the persisted ``edges`` frame,
-    which the symmetrized build then reads) and applies
-    :func:`sized_partitions` to 24 B (three BIGINTs) per directed edge.
-    When that gives one partition (a graph under 1 MB, e.g. sf0.001's
-    ~2,900 directed edges), ``bidir``/``adj`` are built in ONE partition
-    and the PageRank / PPR / LPA rounds shuffle nothing. Otherwise they
-    keep ``spark.sql.shuffle.partitions``: a count in between makes every
-    round re-shuffle the adjacency. SCALE.md "Persisted frames are sized
-    to their data" has the measurements."""
+    Layout: the build counts the distinct edges once (the persisted
+    ``edges`` frame) and sizes the adjacency at 24 B (three BIGINTs) per
+    directed edge (:func:`_adjacency_layout`).
+
+    - A graph under ``minPartitionSize`` (1 MB; sf0.001 has ~2,900
+      directed edges, ~68 KB) is held as driver-local relations: each
+      entry frame is collected through Arrow into a one-partition
+      ``LocalRelation`` and the persisted edge frame is released. The
+      rounds read a plan leaf, not a cached frame, so AQE builds the
+      adjacency broadcast once and every later round reuses it
+      (``ReusedExchange``; AQE never reuses a broadcast over a
+      persisted frame's ``TableCacheQueryStage``), all rounds run in
+      one stage with no shuffle, and analysis walks no nested cache
+      lineage. A warm sf0.001 ``graph_pagerank`` with its noop write
+      runs 3 jobs, down from 7 over the persisted adjacency.
+    - A larger graph is persisted and hash-partitioned into
+      ``spark.sql.shuffle.partitions`` partitions, which every round of
+      every operator here inherits, so only the node-sized vector moves.
+
+    SCALE.md "Persisted frames are sized to their data" has the
+    measurements."""
     key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
     hit = _GRAPH_CACHE.get(key)
     if hit is not None:
         return hit
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
-    # Cache entries use persist(), NOT localCheckpoint: a local
-    # checkpoint's blocks are the only copy (lineage truncated), so
-    # unpersisting an evicted entry would break any still-referenced
-    # derived frame with missing-block errors. persist() keeps the
-    # lineage — after eviction a late evaluation silently recomputes.
-    # Per-round frames inside the iterative loops still localCheckpoint
-    # (they genuinely need O(1) lineage); only the shared base is
-    # recompute-safe.
+    # Cache entries are never localCheckpointed: a local checkpoint's
+    # blocks are the only copy (lineage truncated), so unpersisting an
+    # evicted entry would break any still-referenced derived frame with
+    # missing-block errors. persist() keeps the lineage (after eviction
+    # a late evaluation silently recomputes) and a driver-local
+    # relation carries its rows in the plan. Per-round frames inside the
+    # iterative loops still localCheckpoint (they genuinely need O(1)
+    # lineage); only the shared base is recompute-safe.
     edges = (
         orders.join(lineitem, orders["o_orderkey"] == lineitem["l_orderkey"])
         .select(
@@ -138,23 +179,17 @@ def _purchase_graph(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         .distinct()
         .persist()
     )
-    parts = sized_partitions(spark, 2 * edges.count() * 24)
-    if parts > 1:
-        # A join reuses a cached side's hash partitioning only when it has
-        # at least spark.sql.shuffle.partitions partitions; with fewer,
-        # every round re-shuffles the adjacency to meet the rank vector.
-        parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    bidir = (
+    local, parts = _adjacency_layout(spark, 2 * edges.count() * _EDGE_BYTES)
+    keep = _driver_local if local else DataFrame.persist
+    if local:
+        counted, edges = edges, _driver_local(edges)
+        counted.unpersist()
+    bidir = keep(
         edges.union(edges.select(F.col("d").alias("s"), F.col("s").alias("d")))
         .repartition(parts, F.col("s"))
-        .persist()
     )
-    deg = (
-        bidir.groupBy("s")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-        .persist()
-    )
-    adj = (
+    deg = keep(bidir.groupBy("s").agg(F.count(F.lit(1)).cast("long").alias("deg")))
+    adj = keep(
         bidir.join(deg.withColumnRenamed("s", "node"), bidir["s"] == F.col("node"))
         .select("s", "d", "deg")
         # hash-partition the static edge list by its join key ONCE: each
@@ -162,9 +197,8 @@ def _purchase_graph(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         # re-exchanging the (big) adjacency — edges stay put, only the
         # node-sized rank/label vector moves.
         .repartition(parts, F.col("s"))
-        .persist()
     )
-    nodes = deg.select(F.col("s").alias("node")).persist()
+    nodes = keep(deg.select(F.col("s").alias("node")))
     out = {"edges": edges, "bidir": bidir, "deg": deg, "adj": adj, "nodes": nodes}
     if len(_GRAPH_CACHE) >= _GRAPH_CACHE_MAX:
         _graph_cache_evict(_GRAPH_CACHE.pop(next(iter(_GRAPH_CACHE))))
@@ -240,10 +274,11 @@ def _chunked_fixpoint_rounds(
     not change the result, and it carries no probe. With the default, a
     fixed-round loop (PageRank, PPR, LPA, the PageRank-approx sibling
     check) builds one plan and launches no Spark job itself. A warm
-    6-round ``graph_pagerank`` with its noop write runs 7 jobs over the
-    one-partition sf0.001 adjacency (local[4]), down from 11 with a
-    persisted, counted 3-round chunk per action: the write and the stage
-    jobs AQE runs for the rounds' broadcasts and cached-frame reads.
+    6-round ``graph_pagerank`` with its noop write runs 3 jobs over the
+    driver-local sf0.001 adjacency (local[4]): the write, the initial
+    rank broadcast and one adjacency broadcast that the other rounds
+    share (7 jobs over a persisted adjacency, whose reads AQE broadcasts
+    once per round).
 
     Every chunk that has rounds after it is materialized by one action:
     each of its rounds is tagged with an ``observe()`` metric computing
@@ -255,7 +290,7 @@ def _chunked_fixpoint_rounds(
     fixpoint and the loop stops. The rounds, math and early-exit
     condition are bit-identical to the one-action-per-round form.
 
-    Chunk ends persist() (recompute-safe lineage back to the persisted
+    Chunk ends persist() (recompute-safe lineage back to the shared
     adjacency) rather than localCheckpoint: localCheckpoint
     materialization is an RDD job that does NOT fire observe() metrics
     (measured: the probes read n=0), so persist is load-bearing here. The
@@ -325,36 +360,46 @@ def _pagerank_oracle() -> str:
     )
 
 
+def _pagerank_init(g: dict[str, DataFrame]) -> DataFrame:
+    return g["deg"].select(
+        F.col("s").alias("node"), F.lit(SCALE).cast("long").alias("r")
+    )
+
+
+def _pagerank_step(adj: DataFrame):
+    """One damped PageRank round over ``adj`` (the :data:`_PR_STEP`
+    recurrence): ``(node, r) -> (node, r)``."""
+
+    def step(prev: DataFrame) -> DataFrame:
+        return (
+            adj.join(prev, adj["s"] == prev["node"])
+            .groupBy(F.col("d").alias("node"))
+            .agg(
+                F.expr(
+                    f"CAST({BASE} + (85 * SUM(r DIV deg)) DIV 100 AS BIGINT)"
+                ).alias("r")
+            )
+        )
+
+    return step
+
+
 @query("graph_pagerank", oracle=_pagerank_oracle(), tags=("graph", "iterative"))
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Six damped PageRank iterations over the purchase graph in exact
     integer micro-units (see module docstring). The adjacency (src, dst,
-    src-degree) comes from the SESSION-SHARED persisted build
+    src-degree) comes from the SESSION-SHARED build
     (:func:`_purchase_graph` — one edge-sized shuffle amortized across
-    the whole graph family); each round joins it to the rank vector and
-    re-aggregates. All six rounds chain into one lazy plan that the
-    caller's action runs — see :func:`_chunked_fixpoint_rounds`.
+    the whole graph family); each round (:func:`_pagerank_step`) joins
+    it to the rank vector and re-aggregates. All six rounds chain into
+    one lazy plan that the caller's action runs — see
+    :func:`_chunked_fixpoint_rounds`.
     Rank mass ≈ conserved (modulo integer truncation), so high-degree
     suppliers surface with rank ≫ SCALE."""
     g = _purchase_graph(spark, sf_dir)
-    adj = g["adj"]
-    ranks = g["deg"].select(
-        F.col("s").alias("node"), F.lit(SCALE).cast("long").alias("r")
+    ranks = _chunked_fixpoint_rounds(
+        _pagerank_init(g), _pagerank_step(g["adj"]), ("node", "r"), ITERS
     )
-
-    def _round(prev: DataFrame) -> DataFrame:
-        return (
-            adj.join(prev, adj["s"] == prev["node"])
-            .select(F.col("d"), F.expr("r DIV deg").alias("c"))
-            .groupBy("d")
-            .agg(F.sum("c").alias("mass"))
-            .select(
-                F.col("d").alias("node"),
-                F.expr(f"CAST({BASE} + (85 * mass) DIV 100 AS BIGINT)").alias("r"),
-            )
-        )
-
-    ranks = _chunked_fixpoint_rounds(ranks, _round, ("node", "r"), ITERS)
     return ranks.select(F.col("node").alias("node_id"), F.col("r").alias("pr_rank"))
 
 
@@ -1753,8 +1798,8 @@ def _churn_stable(top: frozenset, prev: frozenset | None, k: int) -> bool:
 # produces AT THE CONVERGED ROUND, evaluated through an INDEPENDENT
 # code path:
 #   pagerank: converged top-100 membership == the exact query's
-#     chunked-fixpoint runner (_chunked_fixpoint_rounds + the same
-#     _round body graph_pagerank_topk_fixed's unrolled oracle
+#     chunked-fixpoint runner (_chunked_fixpoint_rounds + the
+#     _pagerank_step kernel graph_pagerank_topk_fixed's unrolled oracle
 #     certifies) run for exactly `rounds` rounds;
 #   HITS: converged top-20 authority membership ==
 #     _hits_auth_rounds(spark, sf_dir, rounds) — the literal shared
@@ -1806,53 +1851,22 @@ def graph_pagerank_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     sibling :func:`graph_pagerank_topk_fixed` (round-11 directive 5);
     this variant only adds the churn exit."""
     g = _purchase_graph(spark, sf_dir)
-    adj = g["adj"]
-    ranks = g["deg"].select(
-        F.col("s").alias("node"), F.lit(SCALE).cast("long").alias("r")
-    )
+    step = _pagerank_step(g["adj"])
+    ranks = _pagerank_init(g)
     prev_top = None
     rounds = 0
     for _ in range(ITERS):
-        ranks = (
-            adj.join(ranks, adj["s"] == ranks["node"])
-            .select(F.col("d"), F.expr("r DIV deg").alias("c"))
-            .groupBy("d")
-            .agg(F.sum("c").alias("mass"))
-            .select(
-                F.col("d").alias("node"),
-                F.expr(f"CAST({BASE} + (85 * mass) DIV 100 AS BIGINT)").alias("r"),
-            )
-            .localCheckpoint(eager=False)
-        )
+        ranks = step(ranks).localCheckpoint(eager=False)
         rounds += 1
         top = _topk_ids(ranks, "r")
         if _churn_stable(top, prev_top, _APPROX_TOPK):
             break  # ranking churn below tolerance; values may still drift
         prev_top = top
     if _APPROX_SELFCHECK:
-        # sibling kernel at the CONVERGED round through the exact
-        # query's independent chunked runner (module self-check note)
-        def _round(prev: DataFrame) -> DataFrame:
-            return (
-                adj.join(prev, adj["s"] == prev["node"])
-                .select(F.col("d"), F.expr("r DIV deg").alias("c"))
-                .groupBy("d")
-                .agg(F.sum("c").alias("mass"))
-                .select(
-                    F.col("d").alias("node"),
-                    F.expr(
-                        f"CAST({BASE} + (85 * mass) DIV 100 AS BIGINT)"
-                    ).alias("r"),
-                )
-            )
-
+        # the kernel at the CONVERGED round through the exact query's
+        # independent chunked runner (module self-check note)
         sib_ranks = _chunked_fixpoint_rounds(
-            g["deg"].select(
-                F.col("s").alias("node"), F.lit(SCALE).cast("long").alias("r")
-            ),
-            _round,
-            ("node", "r"),
-            rounds,
+            _pagerank_init(g), step, ("node", "r"), rounds
         )
         _assert_sibling_equal(
             "graph_pagerank_approx", top, _topk_ids(sib_ranks, "r"), rounds

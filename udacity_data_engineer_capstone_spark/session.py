@@ -215,6 +215,14 @@ def _byte_string(v: str) -> int:
     return int(m.group(1)) * (1024 ** ("kmgtp".index(unit) + 1) if unit else 1)
 
 
+def min_partition_bytes(spark: SparkSession) -> int:
+    """``spark.sql.adaptive.coalescePartitions.minPartitionSize`` in bytes:
+    the smallest partition AQE coalesces a shuffle into."""
+    return _byte_string(
+        spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    )
+
+
 def sized_partitions(spark: SparkSession, nbytes: int) -> int:
     """Partition count for a persisted frame of ``nbytes``, by AQE's own
     coalescing arithmetic: one partition per
@@ -223,14 +231,11 @@ def sized_partitions(spark: SparkSession, nbytes: int) -> int:
     at least 1. A persisted frame keeps the partition count it was built
     with (AQE does not coalesce a cached plan), so a frame that later
     stages reuse is sized here, once, from its measured size."""
-    min_part = _byte_string(
-        spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
-    )
     return max(
         1,
         min(
             spark.sparkContext.defaultParallelism,
-            math.ceil(nbytes / min_part),
+            math.ceil(nbytes / min_partition_bytes(spark)),
             int(spark.conf.get("spark.sql.shuffle.partitions")),
         ),
     )
