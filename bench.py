@@ -132,9 +132,7 @@ HEADLINE = [
     "graph_pagerank_approx",      # ranking-churn early exit (vs exact)
                                   # (r12+: includes the rows-only
                                   # sibling-equality self-check — one
-                                  # extra fixed-round kernel eval;
-                                  # SPARK_GRAFT_APPROX_SELFCHECK=0 for
-                                  # the pure early-exit latency)
+                                  # extra fixed-round kernel eval)
     "graph_lpa_approx",           # period-2 oscillation-detect early exit
                                   # (r12+: includes the fixpoint re-vote
                                   # self-check, one coarse-graph round)

@@ -8,7 +8,6 @@ rank-mass conservation.
 
 from __future__ import annotations
 
-import warnings
 from types import SimpleNamespace
 
 from pyspark import StorageLevel
@@ -25,7 +24,7 @@ from udacity_data_engineer_capstone_spark.operators.graph import (
 )
 from udacity_data_engineer_capstone_spark.session import sized_partitions
 
-from tests.conftest import SF_DIR, SF_DIR_MED, spark_job_ids
+from tests.conftest import SF_DIR, SF_DIR_MED
 
 
 def test_star_cc_deep_chain_logarithmic(spark):
@@ -38,10 +37,8 @@ def test_star_cc_deep_chain_logarithmic(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "a_id long, b_id long"
     )
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")  # non-convergence warns -> fail
-        labels, rounds = star_components(pairs)
-        rows = {r["u"]: r["label"] for r in labels.collect()}
+    labels, rounds = star_components(pairs)  # raises if not converged
+    rows = {r["u"]: r["label"] for r in labels.collect()}
     assert rounds < STAR_MAX_ROUNDS, "chain did not converge early"
     assert rounds <= 8, f"expected O(log n) rounds on a 64-chain, got {rounds}"
     assert rows == {i: 0 for i in range(1, n)}
@@ -234,76 +231,6 @@ def test_iterative_fixpoint_exit_fires_on_converging_state(spark):
     sa = _state_signature(a, ("node", "r"))
     assert sa == _state_signature(b, ("node", "r"))  # order-insensitive
     assert sa != _state_signature(c, ("node", "r"))
-
-
-def test_chunked_rounds_match_one_job_per_round_loop(spark):
-    """_chunked_fixpoint_rounds: K rounds chained per job must produce
-    the bit-identical state a one-job-per-round loop produces, for a
-    non-converging step (doubling) across chunk boundaries."""
-    from udacity_data_engineer_capstone_spark.operators.graph import (
-        _chunked_fixpoint_rounds,
-    )
-
-    init = spark.createDataFrame(
-        [(1, 1), (2, 3), (3, 5)], "node long, r long"
-    )
-
-    def step(df):
-        return df.select("node", (F.col("r") * 2).alias("r"))
-
-    out = _chunked_fixpoint_rounds(init, step, ("node", "r"), 5, chunk=2)
-    got = {r["node"]: r["r"] for r in out.collect()}
-    assert got == {1: 32, 2: 96, 3: 160}  # 5 doublings, all executed
-
-
-def test_chunked_rounds_early_exit_on_fixpoint(spark):
-    """A step that reaches its fixpoint inside the first chunk must
-    stop there: the observe()-riding per-round signatures detect the
-    consecutive-equal pair, and no further chunk runs (a counting step
-    function would otherwise be called for rounds 4..99)."""
-    from udacity_data_engineer_capstone_spark.operators.graph import (
-        _chunked_fixpoint_rounds,
-    )
-
-    init = spark.createDataFrame([(1, 100), (2, 7)], "node long, r long")
-    calls = []
-
-    def step(df):
-        calls.append(1)  # plan-construction count == rounds scheduled
-        return df.select("node", F.greatest(F.col("r"), F.lit(64)).alias("r"))
-
-    out = _chunked_fixpoint_rounds(init, step, ("node", "r"), 100, chunk=3)
-    got = {r["node"]: r["r"] for r in out.collect()}
-    assert got == {1: 100, 2: 64}  # fixpoint after round 1
-    # round 1 changes state, round 2 equals round 1 → exit after the
-    # FIRST chunk: exactly 3 step calls (the chunk), never 100
-    assert len(calls) == 3
-
-
-def test_chunked_rounds_last_chunk_stays_lazy(spark):
-    """The chunk that reaches ``iters`` is returned unmaterialized: with
-    ``iters <= chunk`` (and with the default, all rounds in one chunk)
-    building the rounds launches no Spark job, and the caller's action
-    still sees every round."""
-    from udacity_data_engineer_capstone_spark.operators.graph import (
-        _chunked_fixpoint_rounds,
-    )
-
-    init = spark.createDataFrame(
-        [(1, 1), (2, 3), (3, 5)], "node long, r long"
-    )
-
-    def step(df):
-        return df.select("node", (F.col("r") * 2).alias("r"))
-
-    for iters, chunk in ((3, 3), (2, 5), (5, None)):
-        with spark_job_ids(spark) as ids:
-            out = _chunked_fixpoint_rounds(
-                init, step, ("node", "r"), iters, chunk
-            )
-        assert ids == [], (iters, chunk, ids)
-        got = {r["node"]: r["r"] for r in out.collect()}
-        assert got == {n: r << iters for n, r in ((1, 1), (2, 3), (3, 5))}
 
 
 def test_scc_functional_semantics(spark, sf_dir):

@@ -13,17 +13,17 @@ Scale posture (100 TB):
 - Each iteration is one equi-join (edges ⋈ labels on a long key) + one
   partial+final min aggregate + one left join — all hash-width shuffles,
   no document payloads.
-- ``localCheckpoint`` per iteration truncates lineage, so the plan stays
-  O(1) per round instead of growing exponentially.
-- Convergence is detected with a single scalar aggregate (sum of labels,
-  strictly decreasing until fixpoint) — one tiny driver round-trip per
-  iteration, never a data collect.
+- Both loops run through :func:`~.fixpoint.converge`: each round's
+  state is checkpointed lazily (O(1) lineage per round) and a scalar
+  probe — the label sum for min-label propagation, an edge-set checksum
+  for large-star/small-star — is the round's one action, never a data
+  collect.
 - Iterations needed = component diameter. Near-dup clusters in web
-  corpora are shallow (copies of copies, diameter ≲ 10); the loop caps
-  at ``MAX_ITERS`` and stops early at the fixpoint. For adversarially
-  deep graphs the alternating large-star/small-star algorithm
-  (Kiveris et al., "Connected Components in MapReduce and Beyond") drops
-  rounds to O(log n); the per-round dataflow below is its building block.
+  corpora are shallow (copies of copies, diameter ≲ 10); the loop stops
+  at the fixpoint and raises if ``MAX_ITERS`` rounds do not reach it. For
+  adversarially deep graphs the alternating large-star/small-star
+  algorithm (Kiveris et al., "Connected Components in MapReduce and
+  Beyond") drops rounds to O(log n).
 
 Reference parity: the reference (``/root/reference/etl.py``) has no
 clustering stage — this is part of the north-star training-data surface
@@ -41,6 +41,7 @@ from udacity_data_engineer_capstone_spark.operators.dedup import (
     corpus,
     dedup_minhash_lsh,
 )
+from udacity_data_engineer_capstone_spark.operators.fixpoint import converge
 from udacity_data_engineer_capstone_spark.registry import query
 
 MAX_ITERS = 15
@@ -84,7 +85,8 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Min-label propagation: ``label(v) ← min(label(v), min over neighbors
     u of label(u))`` iterated to fixpoint. Each round is pure DataFrame
     joins/aggregates (distributed); the driver only sees one scalar per
-    round for the convergence check."""
+    round, the label sum: labels never increase, so an equal sum means
+    the fixpoint."""
     pairs = (
         dedup_minhash_lsh(spark, sf_dir)
         .select("a_id", "b_id")
@@ -101,53 +103,28 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
 
-    prev_sum: int | None = None
-    converged = False
-    for _ in range(MAX_ITERS):
+    def _round(labels: DataFrame) -> DataFrame:
         nbr_min = (
             edges.join(labels, edges["src"] == labels["doc_id"])
             .groupBy("dst")
             .agg(F.min("label").alias("nbr_min"))
         )
-        # r13 (VERDICT r12 item 7, guide §2 barriers): LAZY checkpoint —
-        # the convergence aggregate below is the round's FIRST action,
-        # so its one job both materializes the checkpoint (caching
-        # every partition, lineage truncated for the next round) and
-        # returns the witness. The eager checkpoint + separate sum
-        # collect used to cost TWO driver jobs per round; the witness
-        # computation itself is unchanged.
-        labels = (
-            labels.join(nbr_min, labels["doc_id"] == nbr_min["dst"], "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        # labels are monotonically non-increasing, so the sum is a
-        # strictly-decreasing convergence witness: equal sum ⇒ fixpoint.
-        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-
-    if not converged:
-        # a component with diameter > MAX_ITERS would silently return
-        # non-fixpoint labels (diverging from true connected components)
-        import warnings
-
-        warnings.warn(
-            f"dedup_cluster_cc: min-label propagation did not converge "
-            f"within {MAX_ITERS} iterations; labels may be non-fixpoint "
-            f"(a component's diameter exceeds the round cap — switch to "
-            f"the large-star/small-star variant for deep graphs)",
-            RuntimeWarning,
-            stacklevel=2,
+        return labels.join(
+            nbr_min, labels["doc_id"] == nbr_min["dst"], "left"
+        ).select(
+            "doc_id",
+            F.least(
+                F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))
+            ).alias("label"),
         )
 
+    labels, _, _ = converge(
+        labels,
+        _round,
+        lambda lab: lab.agg(F.sum("label")).collect()[0][0],
+        MAX_ITERS,
+        name="dedup_cluster_cc",
+    )
     return labels.select("doc_id", F.col("label").alias("cluster_id"))
 
 
@@ -158,11 +135,50 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 STAR_MAX_ROUNDS = 12
 
 
+def _star_round(oriented: DataFrame) -> DataFrame:
+    """One large-star then small-star round over the larger->smaller
+    edges ``(u, v)``."""
+    # large-star over the symmetric neighbor view
+    sym = oriented.select(F.col("u").alias("s"), F.col("v").alias("d")).union(
+        oriented.select(F.col("v").alias("s"), F.col("u").alias("d"))
+    )
+    nbhd_min = sym.groupBy("s").agg(F.least(F.col("s"), F.min("d")).alias("m"))
+    large = (
+        sym.join(nbhd_min, "s")
+        .where(F.col("d") > F.col("s"))
+        .select(F.greatest("d", "m").alias("u"), F.least("d", "m").alias("v"))
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+    )
+    # small-star on the larger->smaller orientation
+    small_min = large.groupBy("u").agg(F.min("v").alias("m"))
+    return (
+        large.join(small_min, "u")
+        .select(F.col("v").alias("a"), F.col("m").alias("b"))
+        .union(small_min.select(F.col("u").alias("a"), F.col("m").alias("b")))
+        .where(F.col("a") != F.col("b"))
+        .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
+        .distinct()
+    )
+
+
+def _edge_checksum(oriented: DataFrame) -> tuple:
+    return tuple(
+        oriented.agg(
+            F.count(F.lit(1)),
+            F.sum("u"),
+            F.sum("v"),
+            F.sum(F.col("u") * F.lit(1000003) + F.col("v")),
+        ).collect()[0]
+    )
+
+
 def star_components(pairs: DataFrame) -> tuple[DataFrame, int]:
     """Alternating large-star/small-star rounds over an undirected pair
     set (columns ``a_id``, ``b_id``); returns (labels, rounds_used)
     where labels has (``u``, ``label``) = node → least node of its
-    component, one row per non-root node. See
+    component, one row per non-root node. Raises if the edge set still
+    changes after ``STAR_MAX_ROUNDS`` rounds. See
     :func:`dedup_cluster_cc_star` for the algorithm account."""
     # canonical orientation: u = larger endpoint, v = smaller
     oriented = (
@@ -175,64 +191,9 @@ def star_components(pairs: DataFrame) -> tuple[DataFrame, int]:
         .localCheckpoint()
     )
 
-    prev: tuple | None = None
-    converged = False
-    rounds = 0
-    for rounds in range(1, STAR_MAX_ROUNDS + 1):
-        # large-star over the symmetric neighbor view
-        sym = oriented.select(
-            F.col("u").alias("s"), F.col("v").alias("d")
-        ).union(oriented.select(F.col("v").alias("s"), F.col("u").alias("d")))
-        nbhd_min = sym.groupBy("s").agg(
-            F.least(F.col("s"), F.min("d")).alias("m")
-        )
-        large = (
-            sym.join(nbhd_min, "s")
-            .where(F.col("d") > F.col("s"))
-            .select(F.greatest("d", "m").alias("u"), F.least("d", "m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star on the larger->smaller orientation
-        small_min = large.groupBy("u").agg(F.min("v").alias("m"))
-        # r13 (VERDICT r12 item 7): LAZY checkpoint — the 4-scalar
-        # convergence checksum below is the round's first action, so
-        # one job materializes the checkpoint AND returns the witness
-        # (eager checkpoint + separate collect used to cost two). The
-        # checksum computation itself is unchanged.
-        rewired = (
-            large.join(small_min, "u")
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .union(small_min.select(F.col("u").alias("a"), F.col("m").alias("b")))
-            .where(F.col("a") != F.col("b"))
-            .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        oriented = rewired
-        cur = tuple(
-            oriented.agg(
-                F.count(F.lit(1)),
-                F.sum("u"),
-                F.sum("v"),
-                F.sum(F.col("u") * F.lit(1000003) + F.col("v")),
-            ).collect()[0]
-        )
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-
-    if not converged:
-        import warnings
-
-        warnings.warn(
-            f"star_components: edge set still changing after "
-            f"{STAR_MAX_ROUNDS} rounds; labels may be non-fixpoint",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-
+    oriented, rounds, _ = converge(
+        oriented, _star_round, _edge_checksum, STAR_MAX_ROUNDS, name="star_components"
+    )
     return oriented.groupBy("u").agg(F.min("v").alias("label")), rounds
 
 
@@ -252,7 +213,7 @@ def dedup_cluster_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     per component, rooted at the component minimum — so labels fall out
     of a single group-by. Each half-round is an aggregate + equi-join
     (hash-width shuffles only); `localCheckpoint` truncates lineage and
-    the convergence witness is a three-scalar checksum, never a data
+    the convergence witness is a four-scalar checksum, never a data
     collect. Output is identical to ``dedup_cluster_cc`` (same oracle):
     doc_id -> least doc_id of its near-dup component."""
     pairs = (

@@ -25,11 +25,12 @@ so its rounds shuffle nothing and share one adjacency broadcast; a
 larger one is persisted and hash-partitioned by source into
 ``spark.sql.shuffle.partitions``, so only the node-sized vector moves.
 Fixed-round loops (PageRank/PPR/LPA) chain all their rounds into one
-lazy plan that the caller's own action runs
-(:func:`_chunked_fixpoint_rounds`); convergence-driven loops (BFS,
-k-core) keep one action per round because the frontier/peel count
-decides whether to continue. The DuckDB oracle unrolls the same
-recurrence as chained CTEs — identical integer semantics, declaratively.
+lazy plan that the caller's own action runs; loops that run to
+convergence (BFS, k-core, coarse LPA, the approx exits) go through
+:func:`~.fixpoint.converge`, one probe action per round, and raise at
+their round cap unless capped by design (the approx exits). The DuckDB
+oracle unrolls the same recurrence as chained CTEs — identical integer
+semantics, declaratively.
 
 Reference parity: the reference (``/root/reference/etl.py``) has no
 graph stage; extension surface (SURVEY §6).
@@ -38,12 +39,15 @@ graph stage; extension surface (SURVEY §6).
 from __future__ import annotations
 
 import os
-import threading
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from udacity_data_engineer_capstone_spark.catalog import load_table, register_views
+from udacity_data_engineer_capstone_spark.operators.fixpoint import (
+    _state_signature,
+    converge,
+)
 from udacity_data_engineer_capstone_spark.registry import query
 from udacity_data_engineer_capstone_spark.session import (
     min_partition_bytes,
@@ -206,137 +210,6 @@ def _purchase_graph(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return out
 
 
-def _state_signature(df: DataFrame, cols: tuple[str, ...]) -> tuple[int, int]:
-    """O(1)-width fixpoint probe for iterative state: (row count, XOR
-    fold of 64-bit row hashes). Equal consecutive signatures means the state is
-    unchanged (collision odds ~2^-64 on deterministic data), every
-    remaining round is the identity, and the loop may stop WITHOUT
-    diverging from the fixed-round unrolled oracle. One scalar
-    partial+final aggregate per round over the node-sized (never
-    edge-sized) state — the probe piggybacks on the checkpoint
-    materialization the round performs anyway.
-
-    Measured honesty note (sf0.001–0.1): damped integer PageRank/PPR
-    still move every node's rank at round 6 (deltas shrink ~0.85×/round
-    from a 1e9 base — exact fixpoint needs ~tens of rounds), and
-    synchronous LPA two-colors the bipartite purchase graph into a
-    stable OSCILLATION (labels alternate sides each round, never
-    equal). So at these SFs an early exit would not fire for those
-    three, and they run their fixed rounds unprobed
-    (:func:`_chunked_fixpoint_rounds`); it fires where fixpoints exist
-    (BFS frontier exhaustion, k-core peel, and any production graph
-    whose rank lanes quantize to stability before the round cap)."""
-    hashed = df.select(
-        F.xxhash64(*[F.col(c) for c in cols]).alias("h")
-    )
-    r = hashed.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr("bit_xor(h)").alias("sig"),  # XOR fold: no ANSI overflow
-    ).collect()[0]
-    return (r["n"], r["sig"])
-
-
-# Chunk ends that a returned lazy result still reads stay persisted; this
-# bounded ring evicts the oldest (unpersist with lineage intact → any late
-# re-evaluation silently recomputes) so hundreds of bench/test runs in one
-# session can't accumulate CacheManager entries. Guarded by a lock: driver
-# threads that share a session run fixpoints concurrently.
-_ITER_STATE_RING: list[DataFrame] = []
-_ITER_STATE_RING_MAX = 8
-_ITER_STATE_LOCK = threading.Lock()
-
-
-def _retain_chunk_end(df: DataFrame) -> None:
-    with _ITER_STATE_LOCK:
-        _ITER_STATE_RING.append(df)
-        old = (
-            _ITER_STATE_RING.pop(0)
-            if len(_ITER_STATE_RING) > _ITER_STATE_RING_MAX
-            else None
-        )
-    if old is not None:
-        old.unpersist()  # recompute-safe: lineage survives
-
-
-def _chunked_fixpoint_rounds(
-    state: DataFrame,
-    step,
-    sig_cols: tuple[str, ...],
-    iters: int,
-    chunk: int | None = None,
-) -> DataFrame:
-    """Run ``iters`` synchronous rounds of ``step``, ``chunk`` rounds per
-    plan (``None``: all of them in one).
-
-    The chunk that reaches ``iters`` is returned unmaterialized: its
-    rounds are chained lazily onto the previous chunk end and run by the
-    caller's own action. No round follows it, so an early exit there could
-    not change the result, and it carries no probe. With the default, a
-    fixed-round loop (PageRank, PPR, LPA, the PageRank-approx sibling
-    check) builds one plan and launches no Spark job itself. A warm
-    6-round ``graph_pagerank`` with its noop write runs 3 jobs over the
-    driver-local sf0.001 adjacency (local[4]): the write, the initial
-    rank broadcast and one adjacency broadcast that the other rounds
-    share (7 jobs over a persisted adjacency, whose reads AQE broadcasts
-    once per round).
-
-    Every chunk that has rounds after it is materialized by one action:
-    each of its rounds is tagged with an ``observe()`` metric computing
-    the SAME (count, xxhash64-XOR) fixpoint signature as
-    :func:`_state_signature`, and ``persist()`` + ``count()`` fires every
-    round's probe at once. Exit parity is exact, not chunk-granular: if
-    any CONSECUTIVE pair of per-round signatures matches, every later
-    round is the identity, so the materialized chunk end equals the
-    fixpoint and the loop stops. The rounds, math and early-exit
-    condition are bit-identical to the one-action-per-round form.
-
-    Chunk ends persist() (recompute-safe lineage back to the shared
-    adjacency) rather than localCheckpoint: localCheckpoint
-    materialization is an RDD job that does NOT fire observe() metrics
-    (measured: the probes read n=0), so persist is load-bearing here. The
-    chunk end the returned frame reads (or returns, on an early exit)
-    stays persisted and enters the bounded, locked
-    ``_ITER_STATE_RING``."""
-    chunk = chunk or iters
-    sig_expr = "bit_xor(xxhash64({}))".format(", ".join(sig_cols))
-    prev_sig: tuple | None = None
-    chunk_end: DataFrame | None = None
-    done = 0
-    while iters - done > chunk:
-        probes: list[Observation] = []
-        cur = state
-        for _ in range(chunk):
-            cur = step(cur)
-            ob = Observation()
-            cur = cur.observe(
-                ob,
-                F.count(F.lit(1)).alias("n"),
-                F.expr(sig_expr).alias("sig"),
-            )
-            probes.append(ob)
-        cur = cur.persist()
-        cur.count()  # ONE job: materializes the chunk, fires all probes
-        done += chunk
-        if chunk_end is not None:
-            chunk_end.unpersist()
-        chunk_end = state = cur
-        fixpoint = False
-        for ob in probes:
-            m = ob.get
-            sig = (m["n"], m["sig"])
-            if sig == prev_sig:
-                fixpoint = True  # remaining rounds are identity
-            prev_sig = sig
-        if fixpoint:
-            break
-    else:  # no early exit: chain the last chunk's rounds lazily
-        for _ in range(iters - done):
-            state = step(state)
-    if chunk_end is not None:
-        _retain_chunk_end(chunk_end)
-    return state
-
-
 _PR_STEP = """
 pr{i} AS (
   SELECT b.d AS node,
@@ -392,14 +265,16 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (:func:`_purchase_graph` — one edge-sized shuffle amortized across
     the whole graph family); each round (:func:`_pagerank_step`) joins
     it to the rank vector and re-aggregates. All six rounds chain into
-    one lazy plan that the caller's action runs — see
-    :func:`_chunked_fixpoint_rounds`.
+    one lazy plan and building it launches no Spark job: a warm sf0.001
+    run with a noop write is 3 jobs (the write, the initial rank
+    broadcast and one adjacency broadcast that every round reuses).
     Rank mass ≈ conserved (modulo integer truncation), so high-degree
     suppliers surface with rank ≫ SCALE."""
     g = _purchase_graph(spark, sf_dir)
-    ranks = _chunked_fixpoint_rounds(
-        _pagerank_init(g), _pagerank_step(g["adj"]), ("node", "r"), ITERS
-    )
+    step = _pagerank_step(g["adj"])
+    ranks = _pagerank_init(g)
+    for _ in range(ITERS):
+        ranks = step(ranks)
     return ranks.select(F.col("node").alias("node_id"), F.col("r").alias("pr_rank"))
 
 
@@ -655,6 +530,21 @@ GROUP BY s
     )
 
 
+def _kcore_peel(edges: DataFrame) -> DataFrame:
+    """One peel round (:data:`_KCORE_STEP`) over directed ``(s, d)``."""
+    survivors = (
+        edges.groupBy("s")
+        .agg(F.count(F.lit(1)).alias("deg"))
+        .where(F.col("deg") >= KCORE_K)
+        .select("s")
+    )
+    return (
+        edges.join(survivors, "s", "left_semi")
+        .join(survivors.withColumnRenamed("s", "d"), "d", "left_semi")
+        .select("s", "d")
+    )
+
+
 @query("graph_kcore", oracle=_kcore_oracle(), tags=("graph", "iterative"))
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Members of the k-core (k=8) of the bipartite purchase graph:
@@ -670,35 +560,17 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     round for the convergence check; ``localCheckpoint`` truncates
     lineage so the plan stays O(1) per round. Rounds are bounded by the
     peel depth (degeneracy ordering), which on power-law graphs is
-    O(log n) in practice; per ADVICE r2 (clustering MAX_ITERS), we FAIL
-    LOUDLY if the fixpoint is not reached within the oracle's unroll
-    depth instead of returning a non-fixpoint silently. The starting
-    edge list is the session-shared persisted build
+    O(log n) in practice; the loop raises if the fixpoint is not reached
+    within the oracle's unroll depth instead of returning a non-fixpoint.
+    The starting edge list is the session-shared build
     (:func:`_purchase_graph`)."""
-    cur = _purchase_graph(spark, sf_dir)["bidir"]
-    n_edges = cur.count()
-    for _ in range(_KCORE_MAX_ROUNDS):
-        survivors = (
-            cur.groupBy("s")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .where(F.col("deg") >= KCORE_K)
-            .select("s")
-        )
-        nxt = (
-            cur.join(survivors, "s", "left_semi")
-            .join(survivors.withColumnRenamed("s", "d"), "d", "left_semi")
-            .select("s", "d")
-            .localCheckpoint(eager=False)
-        )
-        n_next = nxt.count()
-        cur = nxt
-        if n_next == n_edges:
-            break
-        n_edges = n_next
-    else:
-        raise RuntimeError(
-            f"k-core peel did not converge in {_KCORE_MAX_ROUNDS} rounds"
-        )
+    cur, _, _ = converge(
+        _purchase_graph(spark, sf_dir)["bidir"],
+        _kcore_peel,
+        DataFrame.count,
+        _KCORE_MAX_ROUNDS,
+        name="k-core peel",
+    )
     return cur.groupBy("s").agg(
         F.count(F.lit(1)).cast("long").alias("core_degree"),
     ).select(
@@ -755,45 +627,62 @@ FROM lv{_BFS_MAX_ROUNDS}
     )
 
 
+def _bfs_expand(adj: DataFrame, keys: tuple[str, ...]):
+    """One delta-BFS round over ``adj`` (``s``, ``d``) on the state
+    ``(seen, frontier)``: the levels found before the frontier, and the
+    frontier's. Both are keyed by ``keys`` — ``("node",)`` or ``("src",
+    "node")``, ``node`` last — plus ``lvl``. Only the frontier expands,
+    and a left-anti join against everything found keeps re-discoveries
+    out: a round's discoveries share one level, so first discovery IS
+    the min level, value-identical to the oracle's unrolled union + min
+    re-aggregate without re-aggregating the whole state. Per-round cost
+    follows the frontier wave, not the accumulated reach. Both outputs
+    read only the inputs, so checkpointing one never recomputes the
+    other."""
+
+    def step(state: tuple[DataFrame, DataFrame]) -> tuple[DataFrame, DataFrame]:
+        seen = state[0].unionAll(state[1])
+        found = (
+            adj.join(state[1].withColumnRenamed("node", "s"), "s")
+            .select(
+                *keys[:-1], F.col("d").alias("node"), (F.col("lvl") + 1).alias("lvl")
+            )
+            .groupBy(*keys)
+            .agg(F.min("lvl").alias("lvl"))
+            .join(seen, list(keys), "left_anti")
+        )
+        return seen, found
+
+    return step
+
+
+def _bfs_converge(adj: DataFrame, seeds: DataFrame, keys: tuple[str, ...], name: str):
+    """BFS levels from ``seeds`` to the empty-frontier fixpoint."""
+    (levels, _), _, _ = converge(
+        (seeds.limit(0), seeds),
+        _bfs_expand(adj, keys),
+        lambda state: state[1].count(),
+        _BFS_MAX_ROUNDS,
+        name=name,
+        stop=lambda _prev, n_found: n_found == 0,
+    )
+    return levels
+
+
 @query("graph_bfs_levels", oracle=_bfs_oracle(), tags=("graph", "iterative"))
 def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-source BFS over the purchase graph: hop distance from the
     seed customer to every reachable node (unweighted shortest paths —
     the crawl-frontier / influence-radius primitive).
 
-    DELTA (frontier) propagation: each round expands only the nodes
-    DISCOVERED LAST ROUND and left-anti-joins against the discovered
-    set — every round's new discoveries share one level, so
-    first-discovery IS min-level: value-identical to the oracle's
-    unrolled union+min-reaggregate without re-aggregating the full
-    state each round. At 100 TB the per-round cost follows the
-    frontier wave, not the accumulated reach. Fixpoint = empty
-    frontier (one scalar count per round, ``localCheckpoint``
-    truncates lineage); FAILS LOUDLY if the diameter exceeds the
-    oracle's unroll depth. The edge list is the session-shared
-    persisted build (:func:`_purchase_graph`)."""
-    bidir = _purchase_graph(spark, sf_dir)["bidir"]
-    seeds = spark.createDataFrame(
-        [(_BFS_SEED, 0)], "node long, lvl long"
+    Delta (frontier) propagation (:func:`_bfs_expand`). Fixpoint = empty
+    frontier, one count per round; the loop raises if the diameter
+    exceeds the oracle's unroll depth. The edge list is the
+    session-shared build (:func:`_purchase_graph`)."""
+    seeds = spark.createDataFrame([(_BFS_SEED, 0)], "node long, lvl long")
+    levels = _bfs_converge(
+        _purchase_graph(spark, sf_dir)["bidir"], seeds, ("node",), "BFS"
     )
-    levels, frontier = seeds, seeds
-    for _ in range(_BFS_MAX_ROUNDS):
-        expanded = (
-            bidir.join(frontier.withColumnRenamed("node", "s"), "s")
-            .select(F.col("d").alias("node"), (F.col("lvl") + 1).alias("lvl"))
-            .groupBy("node")
-            .agg(F.min("lvl").alias("lvl"))
-        )
-        frontier = expanded.join(
-            levels, ["node"], "left_anti"
-        ).localCheckpoint(eager=False)
-        if frontier.count() == 0:
-            break
-        levels = levels.unionAll(frontier).localCheckpoint(eager=False)
-    else:
-        raise RuntimeError(
-            f"BFS did not reach fixpoint in {_BFS_MAX_ROUNDS} rounds"
-        )
     return levels.select(
         F.col("node").alias("node_id"),
         F.col("lvl").alias("bfs_level"),
@@ -1026,10 +915,9 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``graph_pagerank``. The adjacency comes from the session-shared
     persisted build (:func:`_purchase_graph`); labels are
     node-sized, never edge-sized, on the shuffle. The {n} rounds chain
-    into one lazy plan (:func:`_chunked_fixpoint_rounds`), so no
-    early exit runs; on THIS bipartite graph labels measurably never
-    stabilize anyway (synchronous LPA two-colors it into a stable
-    oscillation).""".replace("{n}", str(_LPA_ITERS))
+    into one lazy plan with no early exit; on THIS bipartite graph
+    labels measurably never stabilize anyway (synchronous LPA two-colors
+    it into a stable oscillation).""".replace("{n}", str(_LPA_ITERS))
     g = _purchase_graph(spark, sf_dir)
     bidir = g["bidir"]
     labels = g["nodes"].select("node", F.col("node").alias("label"))
@@ -1048,9 +936,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("nd").alias("node"), "label")
         )
 
-    labels = _chunked_fixpoint_rounds(
-        labels, _round, ("node", "label"), _LPA_ITERS
-    )
+    for _ in range(_LPA_ITERS):
+        labels = _round(labels)
     return labels.select(
         F.col("node").alias("node_id"), F.col("label").alias("community")
     )
@@ -1094,6 +981,65 @@ FROM a2n
 """
 
 
+def _hits_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The directed (customer, supplier) purchase edges, derived from
+    the session-shared adjacency: ``bidir`` holds both orientations with
+    customers even / suppliers odd, so its even-source half *is* the
+    distinct original edge set — a cached-scan filter+project, not an
+    edge-sized shuffle."""
+    bidir = _purchase_graph(spark, sf_dir)["bidir"]
+    return (
+        bidir.where(F.col("s") % 2 == 0)
+        .select(
+            (F.col("s") / 2).cast("long").alias("c"),
+            ((F.col("d") - 1) / 2).cast("long").alias("s"),
+        )
+        .repartition("s")
+        .localCheckpoint(eager=True)
+    )
+
+
+def _hits_normalize(df: DataFrame, col: str) -> DataFrame:
+    mx = df.agg(F.max(col).alias("mx"))
+    return df.crossJoin(F.broadcast(mx)).select(
+        *[c for c in df.columns if c != col],
+        F.expr(f"{col} * {_HITS_SCALE} DIV mx").alias(col),
+    )
+
+
+def _hits_init(edges: DataFrame) -> DataFrame:
+    return edges.select("s").distinct().select(
+        "s", F.lit(_HITS_SCALE).cast("long").alias("a")
+    )
+
+
+def _hits_round(edges: DataFrame):
+    """One hub→authority round over ``edges`` (``c``, ``s``): authority
+    scores ``(s, a)`` -> ``(hub, auth)``, each half-round max-normalized
+    to integer milli-units. The hub half is checkpointed: it is both the
+    round's result and the authority half's input."""
+
+    def step(auth: DataFrame) -> tuple[DataFrame, DataFrame]:
+        hub = edges.join(auth, "s").groupBy("c").agg(F.sum("a").cast("long").alias("h"))
+        hub = _hits_normalize(hub, "h").localCheckpoint(eager=False)
+        auth = edges.join(hub, "c").groupBy("s").agg(F.sum("h").cast("long").alias("a"))
+        return hub, _hits_normalize(auth, "a")
+
+    return step
+
+
+def _hits_rounds(edges: DataFrame, rounds: int) -> tuple[DataFrame, DataFrame]:
+    """Exactly ``rounds`` HITS rounds from uniform authority scores:
+    ``(hub, auth)``. Shared by :func:`graph_hits`,
+    :func:`graph_hits_topk_fixed` and the :func:`graph_hits_approx`
+    self-check."""
+    step, auth = _hits_round(edges), _hits_init(edges)
+    for _ in range(rounds):
+        hub, auth = step(auth)
+        auth = auth.localCheckpoint(eager=False)
+    return hub, auth
+
+
 @query("graph_hits", oracle=_HITS_ORACLE, tags=("graph", "iterative"))
 def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS on the bipartite purchase graph: customers score as HUBS
@@ -1105,37 +1051,10 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per half-round, one equi-join of the static edge list
     with the node-sized score vector + one hash aggregate (the Pregel
     shape shared with ``graph_pagerank``); the normalizer is a scalar
-    MAX broadcast back. Edges are built once and checkpointed; scores
-    are node-sized on every shuffle."""
-    # r12: edges come from the session-shared persisted adjacency via
-    # _hits_edges (the even-source half of ``bidir`` IS the distinct
-    # (customer, supplier) edge set) — no per-run orders⋈lineitem
-    # DISTINCT rebuild.
-    edges = _hits_edges(spark, sf_dir)
-
-    def _normalize(df: DataFrame, col: str) -> DataFrame:
-        mx = df.agg(F.max(col).alias("mx"))
-        return df.crossJoin(F.broadcast(mx)).select(
-            *[c for c in df.columns if c != col],
-            F.expr(f"{col} * {_HITS_SCALE} DIV mx").alias(col),
-        )
-
-    auth = edges.select("s").distinct().select(
-        "s", F.lit(_HITS_SCALE).cast("long").alias("a")
-    )
-    for _ in range(_HITS_ITERS):
-        hub = (
-            edges.join(auth, "s")
-            .groupBy("c")
-            .agg(F.sum("a").cast("long").alias("h"))
-        )
-        hub = _normalize(hub, "h").localCheckpoint(eager=False)
-        auth = (
-            edges.join(hub, "c")
-            .groupBy("s")
-            .agg(F.sum("h").cast("long").alias("a"))
-        )
-        auth = _normalize(auth, "a").localCheckpoint(eager=False)
+    MAX broadcast back (:func:`_hits_round`). Edges come from the
+    session-shared adjacency (:func:`_hits_edges`); scores are
+    node-sized on every shuffle."""
+    hub, auth = _hits_rounds(_hits_edges(spark, sf_dir), _HITS_ITERS)
     hubs = hub.select(
         F.lit("hub").alias("role"),
         F.col("c").cast("long").alias("node_id"),
@@ -1283,6 +1202,20 @@ GROUP BY node
     )
 
 
+def _landmark_seeds(spark: SparkSession) -> DataFrame:
+    return spark.createDataFrame(
+        [(s, s, 0) for s in _LANDMARKS], "src long, node long, lvl long"
+    )
+
+
+def _landmark_distances(levels: DataFrame) -> DataFrame:
+    return levels.groupBy(F.col("node").alias("node_id")).agg(
+        F.count(F.lit(1)).alias("n_reached"),
+        F.sum("lvl").alias("sum_dist"),
+        F.min("lvl").alias("min_dist"),
+    )
+
+
 @query("graph_bfs_multisource", oracle=_mbfs_oracle(), tags=("graph", "iterative"))
 def graph_bfs_multisource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Simultaneous BFS from 4 landmark customers: per node, how many
@@ -1291,48 +1224,19 @@ def graph_bfs_multisource(spark: SparkSession, sf_dir: str) -> DataFrame:
     a fraction of all-pairs cost (Palmer et al.'s ANF idea in its
     exact small-k form).
 
-    Scale shape: classic DELTA (frontier) BFS — each round's edge join
-    touches only the rows DISCOVERED LAST ROUND, never the accumulated
-    levels set, and a left-anti join against the discovered set keeps
-    re-expansion out (every round's new discoveries share one lvl, so
-    first-discovery IS min-lvl: value-identical to the oracle's
-    unrolled union+min-reaggregate, without re-aggregating the full
-    state every round). One pass serves ALL k sources (the frontier
-    carries (src, node, lvl) triples — the multi-source trick: k BFS
-    runs share every edge scan). At 100 TB the per-round cost follows
-    the frontier wave, not the graph. Fixpoint = empty frontier, one
-    scalar count per round; fails loudly past the oracle's unroll
-    depth. The edge list is the session-shared persisted build
+    Scale shape: delta (frontier) BFS (:func:`_bfs_expand`). One pass
+    serves ALL k sources (the frontier carries (src, node, lvl) triples
+    — the multi-source trick: k BFS runs share every edge scan).
+    Fixpoint = empty frontier, one count per round; the loop raises past
+    the oracle's unroll depth. The edge list is the session-shared build
     (:func:`_purchase_graph`)."""
-    bidir = _purchase_graph(spark, sf_dir)["bidir"]
-    seeds = spark.createDataFrame(
-        [(s, s, 0) for s in _LANDMARKS], "src long, node long, lvl long"
+    levels = _bfs_converge(
+        _purchase_graph(spark, sf_dir)["bidir"],
+        _landmark_seeds(spark),
+        ("src", "node"),
+        "multi-source BFS",
     )
-    levels, frontier = seeds, seeds
-    for _ in range(_BFS_MAX_ROUNDS):
-        expanded = (
-            bidir.join(frontier.withColumnRenamed("node", "s"), "s")
-            .select(
-                "src", F.col("d").alias("node"), (F.col("lvl") + 1).alias("lvl")
-            )
-            .groupBy("src", "node")
-            .agg(F.min("lvl").alias("lvl"))
-        )
-        frontier = expanded.join(
-            levels, ["src", "node"], "left_anti"
-        ).localCheckpoint(eager=False)
-        if frontier.count() == 0:
-            break
-        levels = levels.unionAll(frontier).localCheckpoint(eager=False)
-    else:
-        raise RuntimeError(
-            f"multi-source BFS did not reach fixpoint in {_BFS_MAX_ROUNDS} rounds"
-        )
-    return levels.groupBy(F.col("node").alias("node_id")).agg(
-        F.count(F.lit(1)).alias("n_reached"),
-        F.sum("lvl").alias("sum_dist"),
-        F.min("lvl").alias("min_dist"),
-    )
+    return _landmark_distances(levels)
 
 
 # ---------------------------------------------------------------------------
@@ -1418,18 +1322,14 @@ def graph_bfs_multisource_bucketed(
     path = _bfs_bucketed_layout(spark, sf_dir)
     width = _BFS_LAYOUT_WIDTH[path]
     adj = spark.read.parquet(path)
-    seeds = spark.createDataFrame(
-        [(s, s, 0) for s in _LANDMARKS], "src long, node long, lvl long"
-    )
-    levels, frontier = seeds, seeds
-    # ONE driver job per round (r12): the frontier's bucket list, src
-    # range, and row count ride a single bounded agg — the count used
-    # to be a second job per round (collect stats, expand, then
-    # count()), pure job-barrier latency at every scale. Union-before-
-    # check is value-safe: unioning an EMPTY frontier into levels adds
-    # nothing, and the loop breaks at the next round's n == 0 probe
-    # before any lo/hi is read. Rounds = expansions + the final empty-
-    # frontier probe, hence the +1 bound.
+    frontier = _landmark_seeds(spark)
+    seen = frontier.limit(0)
+    # Not :func:`converge`: each round's stats collect both probes the
+    # frontier and prunes the NEXT expansion's scan, so probe and step
+    # are not independent. ONE driver job per round: the frontier's
+    # bucket list, src range and row count ride a single bounded agg.
+    # Rounds = expansions + the final empty-frontier probe, hence the +1
+    # bound.
     for _round in range(_BFS_MAX_ROUNDS + 1):
         # bounded collect: ≤ dir-count bucket ids + 3 scalars
         fstats = frontier.agg(
@@ -1441,12 +1341,9 @@ def graph_bfs_multisource_bucketed(
         n_frontier = int(fstats["n"])
         if n_frontier == 0:
             break
-        if _round == _BFS_MAX_ROUNDS:
-            # ADVICE r12: the final iteration is probe-only — without
-            # this, a non-converging graph would run MAX_ROUNDS+1 full
-            # expansions (one more than the documented bound)
+        if _round == _BFS_MAX_ROUNDS:  # the last iteration only probes
             raise RuntimeError(
-                f"bucketed multi-source BFS did not reach fixpoint in"
+                f"bucketed multi-source BFS did not converge in"
                 f" {_BFS_MAX_ROUNDS} rounds"
             )
         pruned = adj.where(
@@ -1455,31 +1352,15 @@ def graph_bfs_multisource_bucketed(
         )
         # broadcast the frontier only while it is provably small (the
         # count comes from the same per-round agg, so the gate is
-        # free). An UNCONDITIONAL broadcast collects the whole frontier
-        # to the driver — reach-bounded only because this fixture's
-        # landmark component is small; on a graph whose seed component
-        # is large it would OOM the driver, whereas a shuffle join
-        # degrades gracefully (ADVICE r11).
-        fside = frontier.withColumnRenamed("node", "s")
+        # free): a large seed component would OOM the driver, whereas a
+        # shuffle join degrades gracefully
         if n_frontier <= _BFS_BROADCAST_MAX:
-            fside = F.broadcast(fside)
-        expanded = (
-            pruned.join(fside, "s")
-            .select(
-                "src", F.col("d").alias("node"), (F.col("lvl") + 1).alias("lvl")
-            )
-            .groupBy("src", "node")
-            .agg(F.min("lvl").alias("lvl"))
+            frontier = F.broadcast(frontier)
+        seen, frontier = (
+            df.localCheckpoint(eager=False)
+            for df in _bfs_expand(pruned, ("src", "node"))((seen, frontier))
         )
-        frontier = expanded.join(
-            levels, ["src", "node"], "left_anti"
-        ).localCheckpoint(eager=False)
-        levels = levels.unionAll(frontier).localCheckpoint(eager=False)
-    return levels.groupBy(F.col("node").alias("node_id")).agg(
-        F.count(F.lit(1)).alias("n_reached"),
-        F.sum("lvl").alias("sum_dist"),
-        F.min("lvl").alias("min_dist"),
-    )
+    return _landmark_distances(seen)
 
 
 # ---------------------------------------------------------------------------
@@ -1561,8 +1442,7 @@ def graph_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round 1 touches only the seeds' out-edges — at 100 TB the cost
     grows with the seeds' damped reach, not the graph. Shares the
     session-cached adjacency (:func:`_purchase_graph`); unrolled-CTE
-    oracle; all rounds chain into one lazy plan
-    (:func:`_chunked_fixpoint_rounds`)."""
+    oracle; all rounds chain into one lazy plan."""
     g = _purchase_graph(spark, sf_dir)
     adj, nodes = g["adj"], g["nodes"]
     seed_base = (BASE * 2) // len(_PPR_SEEDS)
@@ -1601,7 +1481,8 @@ def graph_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    ranks = _chunked_fixpoint_rounds(ranks, _round, ("node", "r"), _PPR_ITERS)
+    for _ in range(_PPR_ITERS):
+        ranks = _round(ranks)
     return ranks.filter(F.col("r") > 0).select(
         F.col("node").alias("node_id"), F.col("r").alias("ppr_rank")
     )
@@ -1745,7 +1626,10 @@ def graph_ego_network_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # The exact iterative queries run a FIXED round count so their unrolled
 # SQL oracles stay byte-exact, and an exact-fixpoint probe measurably
-# cannot fire for pagerank/HITS/LPA at these SFs (_state_signature).
+# cannot fire for them at sf0.001–0.1: damped integer PageRank/PPR still
+# move every rank at round 6 (deltas shrink ~0.85×/round from a 1e9
+# base), and synchronous LPA two-colors the bipartite purchase graph
+# into a stable oscillation.
 # Production rarely needs value-exact ranks, though — it needs the
 # *ranking* (or the community structure) to stop moving. These ``_approx``
 # twins keep the exact variants untouched and add the production escape
@@ -1785,8 +1669,14 @@ def _topk_ids(ranks: DataFrame, rank_col: str, k: int = _APPROX_TOPK) -> frozens
 _APPROX_CHURN_TOL = 0.10
 
 
-def _churn_stable(top: frozenset, prev: frozenset | None, k: int) -> bool:
-    return prev is not None and len(top - prev) <= int(k * _APPROX_CHURN_TOL)
+def _churn_stable(k: int):
+    """``converge`` stop rule: the top-k membership changed by at most
+    the churn tolerance since the previous round."""
+
+    def stop(prev: frozenset | None, top: frozenset) -> bool:
+        return prev is not None and len(top - prev) <= int(k * _APPROX_CHURN_TOL)
+
+    return stop
 
 
 # --- rows-only self-check (round-12, VERDICT r11 directive 7) --------------
@@ -1797,18 +1687,16 @@ def _churn_stable(top: frozenset, prev: frozenset | None, k: int) -> bool:
 # churn-converged result EQUALS what the oracled sibling's kernel
 # produces AT THE CONVERGED ROUND, evaluated through an INDEPENDENT
 # code path:
-#   pagerank: converged top-100 membership == the exact query's
-#     chunked-fixpoint runner (_chunked_fixpoint_rounds + the
-#     _pagerank_step kernel graph_pagerank_topk_fixed's unrolled oracle
-#     certifies) run for exactly `rounds` rounds;
+#   pagerank: converged top-100 membership == the exact query's fixed
+#     lazy rounds (the _pagerank_step kernel graph_pagerank_topk_fixed's
+#     unrolled oracle certifies) run for exactly `rounds` rounds;
 #   HITS: converged top-20 authority membership ==
-#     _hits_auth_rounds(spark, sf_dir, rounds) — the literal shared
-#     kernel the oracled sibling graph_hits_topk_fixed hash-matches
-#     at its cap;
+#     _hits_rounds(edges, rounds) — the literal shared kernel the
+#     oracled sibling graph_hits_topk_fixed hash-matches at its cap;
 #   LPA: the returned coarse labeling is re-verified as a NO-CHANGE
-#     fixpoint of the LPA vote on the coarse graph (one distributed
-#     re-vote round — the convergence claim itself); the coarsen
-#     anchors are already hash-matched via graph_lpa_coarsen.
+#     fixpoint of the LPA vote (_lpa_vote) on the coarse graph (one
+#     distributed re-vote round — the convergence claim itself); the
+#     coarsen anchors are already hash-matched via graph_lpa_coarsen.
 # Set EQUALITY, not an overlap band: identical integer lanes at the
 # same round are deterministic, so the sibling-at-round-r membership
 # must match exactly — the driver's rows-only run now fails LOUDLY on
@@ -1819,9 +1707,7 @@ def _churn_stable(top: frozenset, prev: frozenset | None, k: int) -> bool:
 # top-20 drift at sf0.001 HITS — and cross-ROUND agreement is already
 # test-pinned at tests/test_graph_approx.py with per-query bounds.)
 # Cost: one fixed-round kernel evaluation on the session-cached
-# adjacency; SPARK_GRAFT_APPROX_SELFCHECK=0 reclaims the pure
-# early-exit latency in a production job that has certified a build.
-_APPROX_SELFCHECK = os.environ.get("SPARK_GRAFT_APPROX_SELFCHECK", "1") != "0"
+# adjacency.
 
 
 def _assert_sibling_equal(
@@ -1852,25 +1738,23 @@ def graph_pagerank_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     this variant only adds the churn exit."""
     g = _purchase_graph(spark, sf_dir)
     step = _pagerank_step(g["adj"])
-    ranks = _pagerank_init(g)
-    prev_top = None
-    rounds = 0
-    for _ in range(ITERS):
-        ranks = step(ranks).localCheckpoint(eager=False)
-        rounds += 1
-        top = _topk_ids(ranks, "r")
-        if _churn_stable(top, prev_top, _APPROX_TOPK):
-            break  # ranking churn below tolerance; values may still drift
-        prev_top = top
-    if _APPROX_SELFCHECK:
-        # the kernel at the CONVERGED round through the exact query's
-        # independent chunked runner (module self-check note)
-        sib_ranks = _chunked_fixpoint_rounds(
-            _pagerank_init(g), step, ("node", "r"), rounds
-        )
-        _assert_sibling_equal(
-            "graph_pagerank_approx", top, _topk_ids(sib_ranks, "r"), rounds
-        )
+    ranks, rounds, top = converge(
+        _pagerank_init(g),
+        step,
+        lambda r: _topk_ids(r, "r"),
+        ITERS,
+        name="graph_pagerank_approx",
+        stop=_churn_stable(_APPROX_TOPK),
+        capped_ok=True,
+    )
+    # the kernel at the CONVERGED round as the exact query's fixed lazy
+    # rounds (module self-check note)
+    sib_ranks = _pagerank_init(g)
+    for _ in range(rounds):
+        sib_ranks = step(sib_ranks)
+    _assert_sibling_equal(
+        "graph_pagerank_approx", top, _topk_ids(sib_ranks, "r"), rounds
+    )
     return (
         ranks.orderBy(F.col("r").desc(), F.col("node").asc())
         .limit(_APPROX_TOPK)
@@ -1988,37 +1872,44 @@ def _solve_coarse_lpa(pdf_iter):
     )
 
 
+def _undirected(coarse: DataFrame) -> DataFrame:
+    return coarse.union(coarse.select(F.col("b").alias("a"), F.col("a").alias("b")))
+
+
+def _lpa_vote(und: DataFrame, labels: DataFrame) -> DataFrame:
+    """One synchronous LPA round over the undirected edges ``und``
+    (``a``, ``b``): every node takes the mode of its neighbors' labels,
+    ties to the smallest label — the :func:`_solve_coarse_lpa` vote.
+    ``(node, label)`` -> ``(node, label)``."""
+    return (
+        und.join(labels, und["a"] == labels["node"])
+        .groupBy(F.col("b").alias("nd"), "label")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .groupBy(F.col("nd").alias("node"))
+        .agg(
+            F.max_by(
+                "label", F.struct(F.col("c"), (-F.col("label")).alias("t"))
+            ).alias("label")
+        )
+    )
+
+
 def _coarse_lpa_distributed(coarse: DataFrame) -> DataFrame:
     """Fallback when the coarse graph exceeds the single-task gate:
-    synchronous mode-label rounds over the (supplier-sized) coarse
-    edges with an exact-fixpoint signature exit, capped. Same vote and
-    tie-break as :func:`_solve_coarse_lpa`."""
-    und = coarse.union(
-        coarse.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint(eager=False)
+    synchronous :func:`_lpa_vote` rounds over the (supplier-sized)
+    coarse edges to an exact fixpoint (:func:`_state_signature`);
+    raises at the round cap rather than return a truncated labeling."""
+    und = _undirected(coarse).localCheckpoint(eager=False)
     labels = und.select(F.col("a").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
-    prev_sig = None
-    rounds = 0
-    for _ in range(_LPA_COARSE_DIST_CAP):
-        labels = (
-            und.join(labels, und["a"] == labels["node"])
-            .groupBy(F.col("b").alias("nd"), "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .groupBy(F.col("nd").alias("node"))
-            .agg(
-                F.max_by(
-                    "label", F.struct(F.col("c"), (-F.col("label")).alias("t"))
-                ).alias("label")
-            )
-            .localCheckpoint(eager=False)
-        )
-        rounds += 1
-        sig = _state_signature(labels, ("node", "label"))
-        if sig == prev_sig:
-            break
-        prev_sig = sig
+    labels, rounds, _ = converge(
+        labels,
+        lambda prev: _lpa_vote(und, prev),
+        lambda lab: _state_signature(lab, ("node", "label")),
+        _LPA_COARSE_DIST_CAP,
+        name="coarse LPA",
+    )
     return labels.withColumn("iters", F.lit(rounds).cast("int"))
 
 
@@ -2077,40 +1968,22 @@ def graph_lpa_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     head = solved.first()
     iters = head["iters"] if head is not None else 0
     supp_labels = solved.select("node", "label")
-    if _APPROX_SELFCHECK:
-        # re-verify the convergence claim itself: one distributed
-        # synchronous re-vote (same mode-of-neighbor-labels rule, ties
-        # to the smallest label — the max_by struct below is byte-for-
-        # byte the _coarse_lpa_distributed vote) must change ZERO
-        # labels, i.e. the returned labeling is a true LPA fixpoint of
-        # the coarse graph, not a cap-truncated snapshot
-        und = coarse.union(
-            coarse.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    # re-verify the convergence claim itself: one distributed re-vote
+    # must change ZERO labels, i.e. the returned labeling is a true LPA
+    # fixpoint of the coarse graph, not a cap-truncated snapshot
+    revote = _lpa_vote(_undirected(coarse), supp_labels)
+    n_changed = (
+        revote.select(F.col("node").alias("rv_node"), F.col("label").alias("vote"))
+        .join(supp_labels, F.col("rv_node") == supp_labels["node"])
+        .filter(F.col("vote") != F.col("label"))
+        .count()
+    )
+    if n_changed:
+        raise AssertionError(
+            f"graph_lpa_approx: returned labeling is NOT an LPA"
+            f" fixpoint — a re-vote round changes {n_changed}"
+            f" coarse labels (solver exited at iters={iters})"
         )
-        revote = (
-            und.join(supp_labels, und["a"] == supp_labels["node"])
-            .groupBy(F.col("b").alias("nd"), "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .groupBy(F.col("nd").alias("rv_node"))
-            .agg(
-                F.max_by(
-                    "label", F.struct(F.col("c"), (-F.col("label")).alias("t"))
-                ).alias("vote")
-            )
-        )
-        n_changed = (
-            revote.join(
-                supp_labels, revote["rv_node"] == supp_labels["node"]
-            )
-            .filter(F.col("vote") != F.col("label"))
-            .count()
-        )
-        if n_changed:
-            raise AssertionError(
-                f"graph_lpa_approx: returned labeling is NOT an LPA"
-                f" fixpoint — a re-vote round changes {n_changed}"
-                f" coarse labels (solver exited at iters={iters})"
-            )
     cust_labels = (
         lists.select("cust", "anchor")
         .join(supp_labels.withColumnRenamed("node", "anchor"), "anchor")
@@ -2137,59 +2010,6 @@ _HITS_APPROX_CAP = 6
 _HITS_APPROX_TOPK = 20
 
 
-def _hits_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The directed (customer, supplier) purchase edges, derived from
-    the SESSION-SHARED persisted adjacency instead of re-running the
-    orders⋈lineitem DISTINCT per call (r12): the cached ``bidir`` holds
-    both orientations with customers even / suppliers odd, so the
-    even-source half *is* the distinct original edge set — recovering
-    it is a cached-scan filter+project, not an edge-sized shuffle."""
-    bidir = _purchase_graph(spark, sf_dir)["bidir"]
-    return (
-        bidir.where(F.col("s") % 2 == 0)
-        .select(
-            (F.col("s") / 2).cast("long").alias("c"),
-            ((F.col("d") - 1) / 2).cast("long").alias("s"),
-        )
-        .repartition("s")
-        .localCheckpoint(eager=True)
-    )
-
-
-def _hits_normalize(df: DataFrame, col: str) -> DataFrame:
-    mx = df.agg(F.max(col).alias("mx"))
-    return df.crossJoin(F.broadcast(mx)).select(
-        *[c for c in df.columns if c != col],
-        F.expr(f"{col} * {_HITS_SCALE} DIV mx").alias(col),
-    )
-
-
-def _hits_auth_rounds(
-    spark: SparkSession, sf_dir: str, rounds: int
-) -> DataFrame:
-    """Exactly ``rounds`` integer max-normalized hub→authority rounds
-    (no early exit) — the shared kernel of :func:`graph_hits_approx`
-    and its oracled fixed-round sibling."""
-    edges = _hits_edges(spark, sf_dir)
-    auth = edges.select("s").distinct().select(
-        "s", F.lit(_HITS_SCALE).cast("long").alias("a")
-    )
-    for _ in range(rounds):
-        hub = (
-            edges.join(auth, "s")
-            .groupBy("c")
-            .agg(F.sum("a").cast("long").alias("h"))
-        )
-        hub = _hits_normalize(hub, "h").localCheckpoint(eager=False)
-        auth = (
-            edges.join(hub, "c")
-            .groupBy("s")
-            .agg(F.sum("h").cast("long").alias("a"))
-        )
-        auth = _hits_normalize(auth, "a").localCheckpoint(eager=False)
-    return auth
-
-
 @query("graph_hits_approx", tags=("graph", "iterative", "approx"))
 def graph_hits_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS with an authority-ranking stability exit: iterate
@@ -2204,46 +2024,27 @@ def graph_hits_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`graph_hits_topk_fixed` (round-11 directive 5); this variant
     only adds the churn exit.""".replace("{cap}", str(_HITS_APPROX_CAP))
     edges = _hits_edges(spark, sf_dir)
-    auth = edges.select("s").distinct().select(
-        "s", F.lit(_HITS_SCALE).cast("long").alias("a")
-    )
-    prev_top = None
-    rounds = 0
-    for _ in range(_HITS_APPROX_CAP):
-        hub = (
-            edges.join(auth, "s")
-            .groupBy("c")
-            .agg(F.sum("a").cast("long").alias("h"))
-        )
-        hub = _hits_normalize(hub, "h").localCheckpoint(eager=False)
-        auth = (
-            edges.join(hub, "c")
-            .groupBy("s")
-            .agg(F.sum("h").cast("long").alias("a"))
-        )
-        auth = _hits_normalize(auth, "a").localCheckpoint(eager=False)
-        rounds += 1
-        top = _topk_ids(
+    step = _hits_round(edges)
+
+    def top_auth(auth: DataFrame) -> frozenset:
+        return _topk_ids(
             auth.select(F.col("s").alias("node"), "a"), "a", _HITS_APPROX_TOPK
         )
-        if _churn_stable(top, prev_top, _HITS_APPROX_TOPK):
-            break
-        prev_top = top
-    if _APPROX_SELFCHECK:
-        # sibling kernel at the CONVERGED round — _hits_auth_rounds is
-        # the literal shared kernel the oracled fixed-round sibling
-        # hash-matches at its cap (module self-check note)
-        sib_auth = _hits_auth_rounds(spark, sf_dir, rounds)
-        _assert_sibling_equal(
-            "graph_hits_approx",
-            top,
-            _topk_ids(
-                sib_auth.select(F.col("s").alias("node"), "a"),
-                "a",
-                _HITS_APPROX_TOPK,
-            ),
-            rounds,
-        )
+
+    auth, rounds, top = converge(
+        _hits_init(edges),
+        lambda auth: step(auth)[1],
+        top_auth,
+        _HITS_APPROX_CAP,
+        name="graph_hits_approx",
+        stop=_churn_stable(_HITS_APPROX_TOPK),
+        capped_ok=True,
+    )
+    # sibling kernel at the CONVERGED round — _hits_rounds is the literal
+    # shared kernel the oracled fixed-round sibling hash-matches at its
+    # cap (module self-check note)
+    sib_auth = _hits_rounds(edges, rounds)[1]
+    _assert_sibling_equal("graph_hits_approx", top, top_auth(sib_auth), rounds)
     return (
         auth.orderBy(F.col("a").desc(), F.col("s").asc())
         .limit(_HITS_APPROX_TOPK)
@@ -2364,7 +2165,7 @@ def graph_hits_topk_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (authority desc, node asc) top-k, no churn exit.""".replace(
         "{k}", str(_HITS_APPROX_TOPK)
     ).replace("{r}", str(_HITS_APPROX_CAP))
-    auth = _hits_auth_rounds(spark, sf_dir, _HITS_APPROX_CAP)
+    _, auth = _hits_rounds(_hits_edges(spark, sf_dir), _HITS_APPROX_CAP)
     return (
         auth.orderBy(F.col("a").desc(), F.col("s").asc())
         .limit(_HITS_APPROX_TOPK)
@@ -2487,6 +2288,19 @@ CROSS JOIN guard
     )
 
 
+def _pointer_double(state: DataFrame) -> DataFrame:
+    """One doubling round: ``(node, ptr, mn)`` -> ``(node, ptr∘ptr,
+    min(mn, mn(ptr)))``, a self-equi-join on ``b.node = a.ptr``."""
+    nxt = state.select(
+        F.col("node").alias("b_node"),
+        F.col("ptr").alias("b_ptr"),
+        F.col("mn").alias("b_mn"),
+    )
+    return state.join(nxt, state.ptr == nxt.b_node).select(
+        "node", F.col("b_ptr").alias("ptr"), F.least("mn", "b_mn").alias("mn")
+    )
+
+
 @query("graph_scc_functional", oracle=_scc_oracle(), tags=("graph", "iterative"))
 def graph_scc_functional(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cycle (= SCC) detection over a functional graph by pointer
@@ -2518,21 +2332,10 @@ def graph_scc_functional(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("ptr"),
         F.col("c_custkey").cast("long").alias("mn"),
     ).localCheckpoint(eager=False)
+    # a fixed ceil(log2 n) rounds, so no convergence probe; each round's
+    # self-join is checkpointed so the next one starts from O(1) lineage
     for _ in range(t):
-        nxt = state.select(
-            F.col("node").alias("b_node"),
-            F.col("ptr").alias("b_ptr"),
-            F.col("mn").alias("b_mn"),
-        )
-        state = (
-            state.join(nxt, state.ptr == nxt.b_node)
-            .select(
-                "node",
-                F.col("b_ptr").alias("ptr"),
-                F.least("mn", "b_mn").alias("mn"),
-            )
-            .localCheckpoint(eager=False)
-        )
+        state = _pointer_double(state).localCheckpoint(eager=False)
     cyc = state.select(F.col("ptr").alias("cyc_node")).distinct()
     mn_of = state.select(
         F.col("node").alias("m_node"), F.col("mn").alias("m_mn")
