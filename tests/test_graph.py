@@ -92,18 +92,18 @@ def test_adjacency_build_shared_across_graph_family(spark):
     edge-sized orders⋈lineitem DISTINCT twice (~11 s of a 103 s
     bench)."""
     from udacity_data_engineer_capstone_spark.operators.graph import (
-        _GRAPH_CACHE,
+        _GRAPHS,
         _purchase_graph,
         graph_pagerank_personalized,
     )
 
     g1 = _purchase_graph(spark, SF_DIR)
     g2 = _purchase_graph(spark, SF_DIR)
-    assert g1 is g2  # second call is a dict hit, no rebuild
-    n_entries = len(_GRAPH_CACHE)
+    assert g1 is g2  # second call is a memo hit, no rebuild
+    n_entries = len(_GRAPHS._entries)
     graph_pagerank(spark, SF_DIR).collect()
     graph_pagerank_personalized(spark, SF_DIR).collect()
-    assert len(_GRAPH_CACHE) == n_entries  # both queries hit the cache
+    assert len(_GRAPHS._entries) == n_entries  # both queries hit the memo
 
 
 def _sizing_session(parallelism: int, shuffle: int, min_part: str = "1048576b"):
@@ -177,16 +177,16 @@ def test_adjacency_partitions_sized_to_data(spark):
 def test_invalidate_graph_cache_unpersists_every_build_frame(spark):
     """A small graph's build leaves no persistent RDD behind: its entry
     frames are driver-local relations and the edge frame its count pass
-    read is released. For a persisted graph (sf0.01),
-    invalidate_graph_cache() releases every frame the build persisted,
-    the edge frame included: no RDD the build cached stays registered as
+    read is released. For a persisted graph (sf0.01), clearing the
+    adjacency memo releases every frame the build persisted, the edge
+    frame included: no RDD the build cached stays registered as
     persistent."""
     from udacity_data_engineer_capstone_spark.operators.graph import (
+        _GRAPHS,
         _purchase_graph,
-        invalidate_graph_cache,
     )
 
-    invalidate_graph_cache()
+    _GRAPHS.clear()
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keys())
     small = _purchase_graph(spark, SF_DIR)
@@ -198,23 +198,21 @@ def test_invalidate_graph_cache_unpersists_every_build_frame(spark):
         df.count()
     built = set(jsc.getPersistentRDDs().keys()) - before
     assert len(built) >= len(g)
-    invalidate_graph_cache()
+    _GRAPHS.clear()
     assert built.isdisjoint(jsc.getPersistentRDDs().keys())
     for name, df in g.items():
         assert df.storageLevel == StorageLevel.NONE, name
 
 
 def test_lazy_pagerank_survives_graph_cache_invalidation(spark):
-    """A graph_pagerank frame built before invalidate_graph_cache() and
-    evaluated after it returns the same rows: the evicted entry's
+    """A graph_pagerank frame built before the adjacency memo is cleared
+    and evaluated after it returns the same rows: the released entry's
     driver-local relations carry their rows in the plan."""
-    from udacity_data_engineer_capstone_spark.operators.graph import (
-        invalidate_graph_cache,
-    )
+    from udacity_data_engineer_capstone_spark.operators.graph import _GRAPHS
 
     lazy = graph_pagerank(spark, SF_DIR)
     want = sorted(graph_pagerank(spark, SF_DIR).collect())
-    invalidate_graph_cache()
+    _GRAPHS.clear()
     assert sorted(lazy.collect()) == want
 
 

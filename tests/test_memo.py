@@ -1,0 +1,275 @@
+"""The session-scoped memo behind the engine's one-time builds, and the
+per-process scratch root its directories live under."""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
+from types import SimpleNamespace
+
+import pytest
+
+from tests.conftest import SF_DIR, SF_DIR_MED, bind_active_session
+from tests.oracle import _AGGHASH_DOUBLE_SCALE, _agghash_scalars_spark, canon_spark_type
+import udacity_data_engineer_capstone_spark as engine
+from udacity_data_engineer_capstone_spark import memo
+from udacity_data_engineer_capstone_spark.memo import Memo
+from udacity_data_engineer_capstone_spark.registry import QUERIES
+
+engine.load_all()
+
+
+def _app(app_id: str = "app-1"):
+    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+
+def test_concurrent_callers_of_one_key_share_one_build():
+    m = Memo()
+    builds = []
+
+    def build():
+        builds.append(1)
+        time.sleep(0.2)
+        return object()
+
+    with ThreadPoolExecutor(8) as pool:
+        got = list(pool.map(lambda _: m.get(_app(), "k", build), range(8)))
+    assert len(builds) == 1
+    assert all(v is got[0] for v in got)
+
+
+def test_other_keys_do_not_wait_for_a_build():
+    m = Memo()
+    started, release = threading.Event(), threading.Event()
+
+    def slow():
+        started.set()
+        release.wait(10)
+        return "slow"
+
+    t = threading.Thread(target=m.get, args=(_app(), "slow", slow))
+    t.start()
+    try:
+        assert started.wait(10)
+        assert m.get(_app(), "fast", lambda: "fast") == "fast"
+    finally:
+        release.set()
+        t.join(10)
+
+
+def test_keys_are_scoped_by_application():
+    m = Memo()
+    assert m.get(_app("a"), "k", lambda: 1) == 1
+    assert m.get(_app("b"), "k", lambda: 2) == 2
+    assert m.get(_app("a"), "k", lambda: 3) == 1
+
+
+def test_raising_build_leaves_no_entry():
+    m = Memo()
+
+    def boom():
+        raise ValueError("build failed")
+
+    with pytest.raises(ValueError):
+        m.get(_app(), "k", boom)
+    assert m.get(_app(), "k", lambda: "rebuilt") == "rebuilt"
+
+
+def test_nested_get_does_not_deadlock():
+    outer, inner = Memo(), Memo()
+    got = []
+
+    def build_a():
+        return ("a", outer.get(_app(), "b", build_b), inner.get(_app(), "c", lambda: "c"))
+
+    def build_b():
+        return "b"
+
+    t = threading.Thread(target=lambda: got.append(outer.get(_app(), "a", build_a)))
+    t.start()
+    t.join(10)
+    assert not t.is_alive(), "nested get deadlocked"
+    assert got == [("a", "b", "c")]
+
+
+def test_release_once_per_evicted_entry_and_clear_releases_all():
+    released = []
+    m = Memo(capacity=2, release=released.append)
+    for k in "abc":
+        m.get(_app(), k, lambda k=k: k)
+    assert released == ["a"]  # the least recently used entry
+    m.get(_app(), "b", lambda: "rebuilt")  # a hit: b becomes most recent
+    m.get(_app(), "d", lambda: "d")
+    assert released == ["a", "c"]
+    m.clear()
+    assert sorted(released) == ["a", "b", "c", "d"]
+    m.clear()
+    assert len(released) == 4
+
+
+def test_release_errors_are_swallowed():
+    def bad(_value):
+        raise RuntimeError("release failed")
+
+    m = Memo(capacity=1, release=bad)
+    m.get(_app(), "a", lambda: "a")
+    assert m.get(_app(), "b", lambda: "b") == "b"
+    m.clear()
+
+
+def test_invalid_entry_is_built_again(tmp_path):
+    m = Memo(valid=os.path.isdir)
+    first = str(tmp_path / "first")
+    os.mkdir(first)
+    assert m.get(_app(), "k", lambda: first) == first
+    os.rmdir(first)
+    second = str(tmp_path / "second")
+    os.mkdir(second)
+    assert m.get(_app(), "k", lambda: second) == second
+
+
+def test_scratch_root_is_removed_only_by_its_creator():
+    d = memo.scratch_dir("engine_t_")
+    root = os.path.dirname(d)
+    memo._remove_root(os.getpid() + 1, root)  # a forked child's exit
+    assert os.path.isdir(d)
+
+
+def test_builds_are_single_flight_across_threads(spark):
+    """Eight threads asking for one cold build get one object or path:
+    the adjacency, the events staging and the BFS layout are each built
+    once."""
+    from udacity_data_engineer_capstone_spark.operators.graph import (
+        _BFS_LAYOUTS,
+        _GRAPHS,
+        _bfs_bucketed_layout,
+        _purchase_graph,
+    )
+    from udacity_data_engineer_capstone_spark.streaming.events import (
+        _STAGED,
+        stage_events_dir,
+    )
+
+    for m in (_GRAPHS, _BFS_LAYOUTS, _STAGED):
+        m.clear()
+
+    def run(build):
+        def call(_):
+            bind_active_session(spark)
+            return build()
+
+        with ThreadPoolExecutor(8) as pool:
+            return list(pool.map(call, range(8)))
+
+    graphs = run(lambda: _purchase_graph(spark, SF_DIR_MED))
+    assert all(g is graphs[0] for g in graphs)
+    assert len(set(run(lambda: stage_events_dir(spark, SF_DIR)))) == 1
+    assert len(set(run(lambda: _bfs_bucketed_layout(spark, SF_DIR)))) == 1
+
+
+_SHARED_BUILD_QUERIES = (
+    "graph_pagerank",
+    "graph_kcore",
+    "graph_lpa_approx",
+    "graph_bfs_multisource_bucketed",
+    "stream_tumbling_counts",
+    "stream_dedup",
+    "stream_cdc_apply",
+    "sim_ann_ivf",
+)
+
+
+def _clear_memos() -> None:
+    from udacity_data_engineer_capstone_spark.operators import graph, similarity
+    from udacity_data_engineer_capstone_spark.streaming import events
+
+    for m in (
+        graph._GRAPHS,
+        graph._LPA_CAPPED,
+        graph._BFS_LAYOUTS,
+        events._STAGED,
+        similarity._IVF_CENTROIDS,
+    ):
+        m.clear()
+
+
+def _agghash(df) -> tuple:
+    types = {f.name: canon_spark_type(f.dataType) for f in df.schema.fields}
+    cols = sorted(df.columns)
+    return _agghash_scalars_spark(
+        df, cols, [types[c] for c in cols], _AGGHASH_DOUBLE_SCALE
+    )
+
+
+def test_concurrent_queries_over_shared_builds_match_serial(spark):
+    """Eight threads on one session, from cleared memos, run queries
+    that share the memoized builds (adjacency, LPA lists, BFS layout,
+    staged stream sources, IVF centroids); each result hashes the same
+    as its serial run from cleared memos."""
+    _clear_memos()
+    serial = {n: _agghash(QUERIES[n].fn(spark, SF_DIR)) for n in _SHARED_BUILD_QUERIES}
+    _clear_memos()
+
+    def run(name):
+        bind_active_session(spark)
+        return name, _agghash(QUERIES[name].fn(spark, SF_DIR))
+
+    with ThreadPoolExecutor(8) as pool:
+        concurrent = list(pool.map(run, _SHARED_BUILD_QUERIES))
+    for name, got in concurrent:
+        assert got == serial[name], name
+
+
+_EXIT_SCRIPT = """
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+spark = (SparkSession.builder.master("local[2]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false").getOrCreate())
+spark.sparkContext.setLogLevel("ERROR")
+import udacity_data_engineer_capstone_spark as engine
+engine.load_all()
+for name in ("graph_bfs_multisource_bucketed", "stream_tumbling_counts",
+             "stream_dedup", "snk_csv"):
+    engine.QUERIES[name].fn(spark, {sf_dir!r}).count()
+print("RAN")
+"""
+
+# on-disk caches that outlive the process by design, keyed by user and
+# source identity
+_CROSS_PROCESS = (
+    "engine_layout_cache_",
+    "engine_sas7bdat_",
+    "engine_eventslog_",
+    "engine_filemeta_",
+    "engine_compacted_",
+    "engine_orders_",
+)
+
+
+def test_engine_temp_dirs_die_with_their_process(tmp_path):
+    """A process that stages streams, writes the BFS layout and writes a
+    sink leaves no per-process ``engine_*`` directory in its TMPDIR."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _EXIT_SCRIPT.format(repo=repo, sf_dir=SF_DIR)],
+        env=dict(os.environ, TMPDIR=str(tmp_path)),
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "RAN" in out.stdout
+    uid = os.getuid()
+    left = [
+        e
+        for e in os.listdir(tmp_path)
+        if e.startswith("engine_")
+        and not any(e.startswith(f"{p}{uid}") for p in _CROSS_PROCESS)
+    ]
+    assert left == [], left

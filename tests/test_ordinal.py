@@ -542,7 +542,7 @@ def test_global_lag_dense_no_unbounded_window(spark):
     assert unbounded_global_windows(out) == []
 
 
-def test_checkpoint_ring_byte_bounded(spark):
+def test_checkpoint_ring_byte_bounded(spark, monkeypatch):
     """Round-9 directive 4: the ring must bound BYTES, not just handle
     count — 10 ordinal queries back-to-back with a tiny byte budget
     must keep ring-tracked executor storage at (approximately) the
@@ -550,7 +550,7 @@ def test_checkpoint_ring_byte_bounded(spark):
     from udacity_data_engineer_capstone_spark.operators import ordinal as o
 
     o.evict_checkpoints()
-    spark.conf.set(o._CKPT_RING_BYTES_CONF, "1")  # evict everything evictable
+    monkeypatch.setattr(o, "_CKPT_RING_MAX_BYTES", 1)  # evict everything evictable
     try:
         for i in range(10):
             df = spark.range(2000 + i).select(
@@ -568,7 +568,7 @@ def test_checkpoint_ring_byte_bounded(spark):
         # the ring's materialized residue is at most the KEEP floor's
         # frames (the current query's own checkpoints)
         floor_bytes = o.ring_storage_bytes(spark)
-        spark.conf.unset(o._CKPT_RING_BYTES_CONF)
+        monkeypatch.undo()
         for i in range(3):
             df = spark.range(5000).select(F.col("id"))
             got, _ = global_row_number(
@@ -579,10 +579,6 @@ def test_checkpoint_ring_byte_bounded(spark):
         assert len(o._CKPT_RING) <= o._CKPT_RING_MAX
         assert floor_bytes < 64 << 20  # KEEP floor stays far under 64 MB
     finally:
-        try:
-            spark.conf.unset(o._CKPT_RING_BYTES_CONF)
-        except Exception:
-            pass
         o.evict_checkpoints()
 
 

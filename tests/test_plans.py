@@ -1491,12 +1491,10 @@ def test_bfs_bucketed_scan_prunes_partitions_and_rowgroups(spark, sf_dir):
     skipping on the src-sorted files). Without these, every round is
     an edge-linear full scan and the layout buys nothing."""
     from udacity_data_engineer_capstone_spark.operators.graph import (
-        _BFS_LAYOUT_WIDTH,
         _bfs_bucketed_layout,
     )
 
-    path = _bfs_bucketed_layout(spark, sf_dir)
-    width = _BFS_LAYOUT_WIDTH[path]
+    path, width = _bfs_bucketed_layout(spark, sf_dir)
     adj = spark.read.parquet(path)
     # the shape the round loop builds: bucket IN-list + src range
     pruned = adj.where(

@@ -14,11 +14,12 @@ so inferring it on every ``load_table`` call cost a star join one driver
 job per table before it planned anything. ``load_table`` instead
 reads with ``spark.read.schema(cached).parquet(path)``: the first read of
 a file converts its footer to a ``StructType`` in the driver JVM, with
-Spark's own conversion, and every later read supplies it. The
-memo is keyed by the resolved read path (after the layout shim), the
-file's ``(st_mtime_ns, st_size)`` and the session values of the confs
-that change parquet schema inference, so a rewritten file or a changed
-conf resolves again. Only the ``StructType`` is kept, never a DataFrame:
+Spark's own conversion, and every later read supplies it. The schemas
+sit in a :class:`~.memo.Memo` (per application, LRU of 256) keyed by
+the resolved read path (after the layout shim), the file's
+``(st_mtime_ns, st_size)`` and the session values of the confs that
+change parquet schema inference, so a rewritten file or a changed conf
+resolves again. Only the ``StructType`` is kept, never a DataFrame:
 each call still returns a fresh relation with fresh expression IDs, so a
 self-join of two ``load_table`` frames stays unambiguous. Directories and
 paths ``os.stat`` cannot read fall through to plain inference.
@@ -29,12 +30,12 @@ from __future__ import annotations
 import json
 import os
 import stat
-import threading
-from collections import OrderedDict
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StructType
+
+from udacity_data_engineer_capstone_spark.memo import Memo
 
 TABLES = (
     "region",
@@ -156,31 +157,7 @@ _SCHEMA_CONFS = (
 )
 
 
-class _SchemaMemo:
-    """A locked LRU of resolved ``StructType``s. It holds no Spark
-    resources, so eviction only drops a key."""
-
-    def __init__(self, capacity: int) -> None:
-        self._capacity = capacity
-        self._lock = threading.Lock()
-        self._schemas: OrderedDict[tuple, StructType] = OrderedDict()
-
-    def get(self, key: tuple) -> StructType | None:
-        with self._lock:
-            schema = self._schemas.get(key)
-            if schema is not None:
-                self._schemas.move_to_end(key)
-            return schema
-
-    def put(self, key: tuple, schema: StructType) -> None:
-        with self._lock:
-            self._schemas[key] = schema
-            self._schemas.move_to_end(key)
-            while len(self._schemas) > self._capacity:
-                self._schemas.popitem(last=False)
-
-
-_SCHEMAS = _SchemaMemo(capacity=256)
+_SCHEMAS = Memo(capacity=256)
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -197,10 +174,11 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
         st.st_size,
         tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS),
     )
-    schema = _SCHEMAS.get(key)
-    if schema is None:
-        schema = _footer_schema(spark, path) or spark.read.parquet(path).schema
-        _SCHEMAS.put(key, schema)
+    schema = _SCHEMAS.get(
+        spark,
+        key,
+        lambda: _footer_schema(spark, path) or spark.read.parquet(path).schema,
+    )
     return spark.read.schema(schema).parquet(path)
 
 

@@ -37,6 +37,7 @@ from udacity_data_engineer_capstone_spark.catalog import (
     load_table_scaled,
     register_views,
 )
+from udacity_data_engineer_capstone_spark.memo import scratch_dir
 from udacity_data_engineer_capstone_spark.operators.ordinal import (
     composite_bucket_key,
     global_row_number,
@@ -1656,9 +1657,7 @@ def curate_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join; the rewrite is the unavoidable cost of physical
     erasure (at 100 TB, partition-scoped rewrites via
     ``snk_dynamic_partition_overwrite``'s mechanism)."""
-    import tempfile as _tmp
-
-    d = _tmp.mkdtemp(prefix="engine_gdpr_")
+    d = scratch_dir("engine_gdpr_")
     ev = load_table(spark, sf_dir, "events")
     del_list = ev.where(F.col("user_id") % 13 == 3).select("user_id").distinct()
     kept = ev.join(F.broadcast(del_list), "user_id", "left_anti")

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from udacity_data_engineer_capstone_spark.catalog import load_table, register_views
+from udacity_data_engineer_capstone_spark.memo import Memo, scratch_dir
 from udacity_data_engineer_capstone_spark.operators.fixpoint import (
     _state_signature,
     converge,
@@ -76,32 +77,21 @@ pr0 AS (SELECT node, CAST({scale} AS BIGINT) AS r FROM deg)
 # shared purchase-graph adjacency: built once per (session, sf_dir)
 # ---------------------------------------------------------------------------
 
-_GRAPH_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = {}
-# persisted adjacencies pin executor storage blocks: bound the cache so
-# a long-lived session iterating many sf_dirs doesn't accumulate them —
-# oldest entry evicted (and its blocks unpersisted). Entries are
-# driver-local relations (their rows live in the plan) or persist()ed
-# frames, never localCheckpointed ones, so eviction is recompute-safe
-# for any still-referenced derived frame (lineage survives unpersist).
-_GRAPH_CACHE_MAX = 4
+
+def _unpersist_all(entry: dict[str, DataFrame]) -> None:
+    for df in entry.values():
+        df.unpersist()
+
+
+# Adjacency builds per (application, sf_dir). Persisted adjacencies pin
+# executor storage blocks, so at most four are kept and an evicted
+# entry's frames are unpersisted. Entries are driver-local relations
+# (their rows live in the plan) or persist()ed frames, never
+# localCheckpointed ones, so eviction is recompute-safe for any
+# still-referenced derived frame (lineage survives unpersist).
+_GRAPHS = Memo(capacity=4, release=_unpersist_all)
 
 _EDGE_BYTES = 24  # one (s, d, deg) adjacency row: three BIGINTs
-
-
-def _graph_cache_evict(entry: dict[str, DataFrame]) -> None:
-    for df in entry.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-
-def invalidate_graph_cache() -> None:
-    """Explicit invalidation hook: drop every cached adjacency and
-    release its persisted blocks (e.g. after the underlying tables
-    are rewritten in place)."""
-    while _GRAPH_CACHE:
-        _graph_cache_evict(_GRAPH_CACHE.pop(next(iter(_GRAPH_CACHE))))
 
 
 def _adjacency_layout(spark: SparkSession, nbytes: int) -> tuple[bool, int]:
@@ -160,13 +150,15 @@ def _purchase_graph(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
     SCALE.md "Persisted frames are sized to their data" has the
     measurements."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    hit = _GRAPH_CACHE.get(key)
-    if hit is not None:
-        return hit
+    return _GRAPHS.get(
+        spark, os.path.abspath(sf_dir), lambda: _build_purchase_graph(spark, sf_dir)
+    )
+
+
+def _build_purchase_graph(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
-    # Cache entries are never localCheckpointed: a local checkpoint's
+    # Memo entries are never localCheckpointed: a local checkpoint's
     # blocks are the only copy (lineage truncated), so unpersisting an
     # evicted entry would break any still-referenced derived frame with
     # missing-block errors. persist() keeps the lineage (after eviction
@@ -203,11 +195,7 @@ def _purchase_graph(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         .repartition(parts, F.col("s"))
     )
     nodes = keep(deg.select(F.col("s").alias("node")))
-    out = {"edges": edges, "bidir": bidir, "deg": deg, "adj": adj, "nodes": nodes}
-    if len(_GRAPH_CACHE) >= _GRAPH_CACHE_MAX:
-        _graph_cache_evict(_GRAPH_CACHE.pop(next(iter(_GRAPH_CACHE))))
-    _GRAPH_CACHE[key] = out
-    return out
+    return {"edges": edges, "bidir": bidir, "deg": deg, "adj": adj, "nodes": nodes}
 
 
 _PR_STEP = """
@@ -1268,24 +1256,27 @@ _BFS_LAYOUT_DIRS = 128  # target directory count for the bucketed layout
 # back to a shuffle hash join, which degrades gracefully instead of
 # collecting an arbitrarily large frontier onto the driver
 _BFS_BROADCAST_MAX = 1_000_000
-_BFS_LAYOUT_CACHE: dict[tuple[str, str], str] = {}
+# (path, bucket width) per (application, sf_dir); a directory deleted
+# from outside the process is written again
+_BFS_LAYOUTS = Memo(valid=lambda layout: os.path.isdir(layout[0]))
 
 
-def _bfs_bucketed_layout(spark: SparkSession, sf_dir: str) -> str:
+def _bfs_bucketed_layout(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     """Write (once per session, sf_dir) the bidirectional adjacency as
-    a src-range-bucketed, src-sorted parquet layout; returns its path.
-    Build cost is one edge-linear write — the ingest-time investment
-    that buys reach-bounded traversals thereafter."""
-    import tempfile
+    a src-range-bucketed, src-sorted parquet layout; returns its path
+    and bucket width. Build cost is one edge-linear write — the
+    ingest-time investment that buys reach-bounded traversals
+    thereafter."""
+    return _BFS_LAYOUTS.get(
+        spark, os.path.abspath(sf_dir), lambda: _write_bfs_layout(spark, sf_dir)
+    )
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    hit = _BFS_LAYOUT_CACHE.get(key)
-    if hit is not None and os.path.isdir(hit):
-        return hit
+
+def _write_bfs_layout(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     bidir = _purchase_graph(spark, sf_dir)["bidir"]
     max_s = bidir.agg(F.max("s")).collect()[0][0] or 0
     width = max(1, (int(max_s) + _BFS_LAYOUT_DIRS) // _BFS_LAYOUT_DIRS)
-    out = tempfile.mkdtemp(prefix="engine_bfs_adj_")
+    out = scratch_dir("engine_bfs_adj_")
     (
         bidir.withColumn("sb", (F.col("s") / width).cast("long"))
         .repartition("sb")
@@ -1294,13 +1285,7 @@ def _bfs_bucketed_layout(spark: SparkSession, sf_dir: str) -> str:
         .partitionBy("sb")
         .parquet(out)
     )
-    # the bucket width rides in the path map so readers re-derive it
-    _BFS_LAYOUT_CACHE[key] = out
-    _BFS_LAYOUT_WIDTH[out] = width
-    return out
-
-
-_BFS_LAYOUT_WIDTH: dict[str, int] = {}
+    return out, width
 
 
 @query(
@@ -1319,8 +1304,7 @@ def graph_bfs_multisource_bucketed(
     text). The frontier side broadcasts (bounded by reach); the round
     math (delta frontier, min-lvl first-discovery, anti-join) is
     unchanged."""
-    path = _bfs_bucketed_layout(spark, sf_dir)
-    width = _BFS_LAYOUT_WIDTH[path]
+    path, width = _bfs_bucketed_layout(spark, sf_dir)
     adj = spark.read.parquet(path)
     frontier = _landmark_seeds(spark)
     seen = frontier.limit(0)
@@ -1796,20 +1780,22 @@ def _lpa_coarse_gate() -> int:
 _LPA_COARSE_ITER_CAP = 50
 _LPA_COARSE_DIST_CAP = 8
 
-# capped per-customer incoming-supplier lists, cached per (application,
-# sf_dir) like the shared adjacency — the one window sort is paid once
-# shared between the engine window and the DuckDB coarsen oracle —
-# one textual definition of the capped-sample order
+# one textual definition of the capped-sample order, shared between the
+# engine window and the DuckDB coarsen oracle
 _LPA_CAP_HASH_SQL = "(s * 2654435761 + d * 40503) % 4294967296"
 
-_LPA_CAPPED_CACHE: dict[tuple[str, str], tuple[DataFrame, int]] = {}
+# capped per-customer incoming-supplier lists per (application, sf_dir),
+# like the shared adjacency: the one window sort is paid once
+_LPA_CAPPED = Memo(capacity=4, release=lambda entry: entry[0].unpersist())
 
 
 def _lpa_capped_lists(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    hit = _LPA_CAPPED_CACHE.get(key)
-    if hit is not None:
-        return hit
+    return _LPA_CAPPED.get(
+        spark, os.path.abspath(sf_dir), lambda: _build_lpa_capped(spark, sf_dir)
+    )
+
+
+def _build_lpa_capped(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     from pyspark.sql import Window as W
 
     bidir = _purchase_graph(spark, sf_dir)["bidir"]
@@ -1829,11 +1815,7 @@ def _lpa_capped_lists(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]
         # per-customer groupBy below needs no exchange
         .persist()
     )
-    n = capped.count()
-    if len(_LPA_CAPPED_CACHE) >= _GRAPH_CACHE_MAX:
-        _LPA_CAPPED_CACHE.pop(next(iter(_LPA_CAPPED_CACHE)))[0].unpersist()
-    _LPA_CAPPED_CACHE[key] = (capped, n)
-    return capped, n
+    return capped, capped.count()
 
 
 def _solve_coarse_lpa(pdf_iter):

@@ -48,6 +48,7 @@ can fold a high-cardinality tiebreak INTO the bucket key (see
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -76,45 +77,42 @@ _MAX_BUCKETS = 1024
 # alone leaves the BYTE footprint unbounded — 64 handles of
 # sf-proportional frames is still O(64·sf) storage under a long bench
 # loop): at most _CKPT_RING_MAX handles, and at most
-# ``spark.graft.ordinal.ckptRingMaxBytes`` (default 8 GiB) of
-# MATERIALIZED block bytes, measured from the JVM storage registry on
-# every new checkpoint.  Byte eviction is oldest-first and never
-# touches the newest _CKPT_RING_KEEP entries (the ones the CURRENT
-# query may still be executing against), so a single query whose own
-# checkpoints exceed the budget degrades to the count bound instead of
-# self-evicting.
+# _CKPT_RING_MAX_BYTES (8 GiB) of MATERIALIZED block bytes, measured
+# from the JVM storage registry on every new checkpoint.  Byte
+# eviction is oldest-first and never touches the newest _CKPT_RING_KEEP
+# entries (the ones the CURRENT query may still be executing against),
+# so a single query whose own checkpoints exceed the budget degrades
+# to the count bound instead of self-evicting. _CKPT_LOCK guards every
+# mutation of the ring, which queries on several driver threads share.
 _CKPT_RING: list = []  # (rdd_id, JVM RDD handle), oldest first
 _CKPT_RING_MAX = 64
 _CKPT_RING_KEEP = 8
 _CKPT_RING_MAX_BYTES = 8 << 30
-_CKPT_RING_BYTES_CONF = "spark.graft.ordinal.ckptRingMaxBytes"
+_CKPT_LOCK = threading.Lock()
 
 
 def _ring_checkpoint(df: DataFrame) -> DataFrame:
     """Lazy ``localCheckpoint`` routed through the bounded eviction
     ring: the checkpointed frame's underlying RDD handle is tracked and
     the oldest entries beyond ``_CKPT_RING_MAX`` handles or the
-    ``spark.graft.ordinal.ckptRingMaxBytes`` byte budget (materialized
-    block bytes, from the JVM storage registry) are unpersisted."""
+    ``_CKPT_RING_MAX_BYTES`` byte budget (materialized block bytes,
+    from the JVM storage registry) are unpersisted."""
     ck = df.localCheckpoint(eager=False)
     try:
         # the analyzed plan of a checkpointed Dataset is a LogicalRDD
         # wrapping the (to-be-)checkpointed RDD — the handle unpersist
         # must target to actually free the blocks
         jrdd = ck._jdf.queryExecution().analyzed().rdd()
-        _CKPT_RING.append((jrdd.id(), jrdd))
-        while len(_CKPT_RING) > _CKPT_RING_MAX:
-            _CKPT_RING.pop(0)[1].unpersist(False)
-        spark = df.sparkSession
-        budget = int(
-            spark.conf.get(_CKPT_RING_BYTES_CONF, str(_CKPT_RING_MAX_BYTES))
-        )
-        sizes = _storage_bytes_by_id(spark)
-        total = sum(sizes.get(rid, 0) for rid, _ in _CKPT_RING)
-        while total > budget and len(_CKPT_RING) > _CKPT_RING_KEEP:
-            rid, h = _CKPT_RING.pop(0)
-            h.unpersist(False)
-            total -= sizes.get(rid, 0)
+        with _CKPT_LOCK:
+            _CKPT_RING.append((jrdd.id(), jrdd))
+            while len(_CKPT_RING) > _CKPT_RING_MAX:
+                _CKPT_RING.pop(0)[1].unpersist(False)
+            sizes = _storage_bytes_by_id(df.sparkSession)
+            total = sum(sizes.get(rid, 0) for rid, _ in _CKPT_RING)
+            while total > _CKPT_RING_MAX_BYTES and len(_CKPT_RING) > _CKPT_RING_KEEP:
+                rid, h = _CKPT_RING.pop(0)
+                h.unpersist(False)
+                total -= sizes.get(rid, 0)
     except Exception:
         pass  # introspection failure = no eviction, never a query failure
     return ck
@@ -141,11 +139,12 @@ def evict_checkpoints() -> None:
     """Unpersist every ring-tracked ordinal checkpoint (test/bench
     hygiene hook — do not call while a returned frame is still
     pending execution)."""
-    while _CKPT_RING:
-        try:
-            _CKPT_RING.pop()[1].unpersist(False)
-        except Exception:
-            pass
+    with _CKPT_LOCK:
+        while _CKPT_RING:
+            try:
+                _CKPT_RING.pop()[1].unpersist(False)
+            except Exception:
+                pass
 
 
 def _bucket_expr(bounds: list[float], col: Column) -> Column:
@@ -338,12 +337,11 @@ def global_row_number(
     payloads); at cluster scale the checkpoint is executor-local
     disk-backed storage sized by the pruned frame, far below the
     corpus it ranks.  Checkpoints live in a bounded eviction ring
-    (``_CKPT_RING_MAX`` = 64 handles AND a
-    ``spark.graft.ordinal.ckptRingMaxBytes`` byte budget, default
-    8 GiB); an evicted localCheckpoint cannot recompute, so a caller
-    that lazily holds a returned frame across many LATER ``global_*``
-    calls must pass ``checkpoint=False`` (or act on the frame before
-    issuing them) — a stale handle fails loudly at its first action,
+    (``_CKPT_RING_MAX`` = 64 handles AND a ``_CKPT_RING_MAX_BYTES``
+    byte budget of 8 GiB); an evicted localCheckpoint cannot recompute,
+    so a caller that lazily holds a returned frame across many LATER
+    ``global_*`` calls must pass ``checkpoint=False`` (or act on the
+    frame before issuing them) — a stale handle fails loudly at its first action,
     never silently wrong.
 
     Returns ``(df_with_rank, total_rows)`` — the exact total row count

@@ -19,6 +19,7 @@ linear left-fold, so Spark and the DuckDB oracle agree bit-for-bit.
 
 from __future__ import annotations
 
+import functools
 import os
 
 import numpy as np
@@ -28,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from udacity_data_engineer_capstone_spark.catalog import load_table, load_table_scaled
+from udacity_data_engineer_capstone_spark.memo import Memo
 from udacity_data_engineer_capstone_spark.registry import query
 
 TOP_K = 10
@@ -109,25 +111,10 @@ N_TABLES = 16
 N_PLANES = 4
 _LSH_SEED = 7
 
-# trained IVF coarse quantizers, one per (session, table, k, iters) —
-# the index-train-once/serve-many shape (see ann_ivf_topk). Bounded:
-# entries are k×d floats, but a long-lived session iterating many
-# sf_dirs shouldn't accumulate stale fits — oldest-first eviction.
-_IVF_CENTROID_CACHE: dict[tuple, list] = {}
-_IVF_CACHE_MAX = 8
-
-
-def _ivf_cache_put(key: tuple, centroids: list) -> None:
-    if len(_IVF_CENTROID_CACHE) >= _IVF_CACHE_MAX:
-        _IVF_CENTROID_CACHE.pop(next(iter(_IVF_CENTROID_CACHE)))
-    _IVF_CENTROID_CACHE[key] = centroids
-
-
-def invalidate_ivf_cache() -> None:
-    """Explicit invalidation hook (e.g. after the embeddings table is
-    rewritten in place — the (session, path, params) key can't see
-    content changes)."""
-    _IVF_CENTROID_CACHE.clear()
+# trained IVF coarse quantizers per (application, table, k, iters) —
+# the index-train-once/serve-many shape (see ann_ivf_topk). Entries are
+# k×d floats; the oldest of more than eight is dropped.
+_IVF_CENTROIDS = Memo(capacity=8)
 
 
 def _plane_matrix(
@@ -210,28 +197,18 @@ def ann_ivf_topk(
         emb = _as_double(load_table_scaled(spark, sf_dir, "embeddings"))
         fit_cache_token = fit_cache_token or "default"
     # a production ANN deployment trains the coarse quantizer ONCE and
-    # serves many queries against it — cache the k×d centroids per
-    # (session, table, params), like the graph adjacency cache. Callers
-    # passing a DERIVED emb frame opt in with a token proving the
-    # derivation is deterministic per (session, sf_dir).
-    # abspath-normalized like _purchase_graph's key — relative vs
-    # absolute spellings of the same sf_dir must share one fit
-    cache_key = (
-        (spark.sparkContext.applicationId, os.path.abspath(sf_dir), n_cells,
-         iters, fit_cache_token)
-        if fit_cache_token
-        else None
-    )
-
+    # serves many queries against it, so the k×d centroids are memoized
+    # per (session, table, params). Callers passing a DERIVED emb frame
+    # opt in with a token proving the derivation is deterministic per
+    # (session, sf_dir); the abspath makes relative and absolute
+    # spellings of one sf_dir share one fit.
     from udacity_data_engineer_capstone_spark.operators.embeddings import (
         lloyd_fit,
     )
 
-    centroids = _IVF_CENTROID_CACHE.get(cache_key) if cache_key else None
-    if centroids is None:
-        centroids = lloyd_fit(emb, k=n_cells, iters=iters)
-        if cache_key:
-            _ivf_cache_put(cache_key, centroids)
+    fit = functools.partial(lloyd_fit, emb, k=n_cells, iters=iters)
+    key = (os.path.abspath(sf_dir), n_cells, iters, fit_cache_token)
+    centroids = _IVF_CENTROIDS.get(spark, key, fit) if fit_cache_token else fit()
     cent_rows = [(c, [float(x) for x in centroids[c]]) for c in range(n_cells)]
     cent_df = spark.createDataFrame(cent_rows, "cell int, cv array<double>")
 

@@ -15,6 +15,8 @@ engines agree bit-for-bit.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,8 +29,10 @@ from udacity_data_engineer_capstone_spark.registry import query
 # otherwise accumulate cached blocks for the session lifetime. persist
 # (not localCheckpoint) keeps eviction recompute-safe — lineage
 # survives unpersist, so a still-referenced result silently recomputes.
+# Queries on several driver threads share it, so it mutates under a lock.
 _PERSIST_RING: list[DataFrame] = []
 _PERSIST_RING_MAX = 4
+_PERSIST_LOCK = threading.Lock()
 
 # populated by spatial_knn_join with its lazy cert/unproven frames —
 # test introspection only (see the hook comment in the operator)
@@ -37,12 +41,13 @@ _LAST_PARTS: dict[str, DataFrame] = {}
 
 def _ring_persist(df: DataFrame) -> DataFrame:
     df.persist()
-    _PERSIST_RING.append(df)
-    while len(_PERSIST_RING) > _PERSIST_RING_MAX:
-        try:
-            _PERSIST_RING.pop(0).unpersist()
-        except Exception:
-            pass
+    with _PERSIST_LOCK:
+        _PERSIST_RING.append(df)
+        while len(_PERSIST_RING) > _PERSIST_RING_MAX:
+            try:
+                _PERSIST_RING.pop(0).unpersist()
+            except Exception:
+                pass
     return df
 
 

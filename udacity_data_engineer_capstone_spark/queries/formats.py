@@ -7,13 +7,13 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from udacity_data_engineer_capstone_spark.catalog import load_table
+from udacity_data_engineer_capstone_spark.memo import scratch_dir
 from udacity_data_engineer_capstone_spark.registry import query
 
 
@@ -25,7 +25,7 @@ from udacity_data_engineer_capstone_spark.registry import query
 def src_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines source with an explicit schema (no inference pass —
     at 100 TB a schema-inference pre-scan doubles the read)."""
-    d = tempfile.mkdtemp(prefix="engine_src_json_")
+    d = scratch_dir("engine_src_json_")
     load_table(spark, sf_dir, "nation").coalesce(1).write.mode("overwrite").json(d)
     schema = T.StructType(
         [
@@ -50,7 +50,7 @@ FROM lineitem GROUP BY l_returnflag, l_linestatus
 def snk_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV sink round-trip of an aggregate (header + explicit read-back
     schema so types survive the text format)."""
-    d = tempfile.mkdtemp(prefix="engine_snk_csv_")
+    d = scratch_dir("engine_snk_csv_")
     agg = (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag", "l_linestatus")
@@ -135,7 +135,7 @@ def snk_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate pushdown all preserved), read it back, and aggregate.
     DuckDB cannot read ORC, so the oracle runs the same aggregate on the
     parquet original — equality proves the round-trip is lossless."""
-    d = tempfile.mkdtemp(prefix="engine_snk_orc_")
+    d = scratch_dir("engine_snk_orc_")
     load_table(spark, sf_dir, "orders").write.mode("overwrite").orc(d)
     return (
         spark.read.orc(d)
@@ -163,7 +163,7 @@ def snk_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     label-dim stage, cf. ``/root/reference/etl.py:120-141``, done as a
     distributed sink instead of a driver-side file write). Read back
     with an explicit schema so integer types survive the text format."""
-    d = tempfile.mkdtemp(prefix="engine_snk_json_")
+    d = scratch_dir("engine_snk_json_")
     load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     ).write.mode("overwrite").json(d)
@@ -199,7 +199,7 @@ def src_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     at planning, before any file IO). At 100 TB this is the difference
     between scanning one status and scanning the lake; the plan
     assertion lives in tests/test_plans.py."""
-    d = tempfile.mkdtemp(prefix="engine_src_part_")
+    d = scratch_dir("engine_src_part_")
     load_table(spark, sf_dir, "orders").write.mode("overwrite").partitionBy(
         "o_orderstatus"
     ).parquet(d)
@@ -258,7 +258,7 @@ def src_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         + render_label_block("modefmt", modes)
         + "run ;\n"
     )
-    d = tempfile.mkdtemp(prefix="engine_pyds_")
+    d = scratch_dir("engine_pyds_")
     path = f"{d}/labels.SAS"
     with open(path, "w", encoding="utf-8") as fh:
         fh.write(text)
@@ -309,7 +309,7 @@ def snk_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     from udacity_data_engineer_capstone_spark.sources import pyds
 
     pyds.register_manifest_sink(spark)
-    d = os.path.join(tempfile.mkdtemp(prefix="engine_pysnk_"), "log")
+    d = os.path.join(scratch_dir("engine_pysnk_"), "log")
     (
         load_table(spark, sf_dir, "events")
         .select(
@@ -395,7 +395,7 @@ def src_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     must match the originals, proving the format preserves content
     byte-for-byte (the testdata texts contain no newlines, the
     precondition one-doc-per-line requires)."""
-    d = tempfile.mkdtemp(prefix="engine_src_text_")
+    d = scratch_dir("engine_src_text_")
     load_table(spark, sf_dir, "documents").select("text").write.mode(
         "overwrite"
     ).text(d)
@@ -452,7 +452,7 @@ def src_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     full scan, unaffordable on large feeds. DuckDB cannot read XML, so
     the oracle runs on the parquet original; equality proves the
     round-trip is lossless."""
-    d = tempfile.mkdtemp(prefix="engine_src_xml_")
+    d = scratch_dir("engine_src_xml_")
     load_table(spark, sf_dir, "nation").write.mode("overwrite").option(
         "rowTag", "nation"
     ).format("xml").save(d)
@@ -554,7 +554,7 @@ def src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     footer reconciliation is a metadata operation (per-file, no data
     rewrite) — exactly why additive evolution is the cheap path."""
     orders = load_table(spark, sf_dir, "orders")
-    d = tempfile.mkdtemp(prefix="engine_src_evolve_")
+    d = scratch_dir("engine_src_evolve_")
     orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice"
     ).write.mode("overwrite").parquet(d + "/batch=1")
@@ -664,8 +664,6 @@ def src_csv_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     the property an incident replay depends on. At scale this is the
     same scan (PERMISSIVE parsing is per-row, embarrassingly parallel);
     the tally is one 2-row aggregate."""
-    import tempfile
-
     from udacity_data_engineer_capstone_spark.catalog import load_table
 
     orders = load_table(spark, sf_dir, "orders")
@@ -701,7 +699,7 @@ def src_csv_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("value")
         )
     )
-    out = tempfile.mkdtemp(prefix="engine_csv_quarantine_")
+    out = scratch_dir("engine_csv_quarantine_")
     lines.write.mode("overwrite").text(out)
 
     schema = T.StructType(
@@ -768,12 +766,10 @@ def snk_parquet_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB deployment tunes (zstd ≈ gzip ratio at snappy-class decode
     speed); the verification aggregate is identical across codecs by
     construction, which is precisely the claim being checked."""
-    import tempfile
-
     from udacity_data_engineer_capstone_spark.catalog import load_table
 
     orders = load_table(spark, sf_dir, "orders")
-    out = tempfile.mkdtemp(prefix="engine_codec_")
+    out = scratch_dir("engine_codec_")
     frames = []
     for codec in _CODECS:
         path = f"{out}/{codec}"
@@ -815,7 +811,7 @@ def src_json_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import os
 
-    d = tempfile.mkdtemp(prefix="engine_src_mljson_")
+    d = scratch_dir("engine_src_mljson_")
     rows = [
         {"r_regionkey": r.r_regionkey, "r_name": r.r_name}
         for r in load_table(spark, sf_dir, "region").collect()  # 5-row dim
@@ -1001,7 +997,7 @@ def src_jsonl_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
     splittable compressed text at rest, prefer zstd-in-parquet
     (``snk_parquet_codecs``); gzip JSONL is the interchange format you
     READ, not the layout you keep."""
-    d = tempfile.mkdtemp(prefix="engine_src_jsonl_gz_")
+    d = scratch_dir("engine_src_jsonl_gz_")
     docs = load_table(spark, sf_dir, "documents")
     docs.select("doc_id", "text", "source").write.mode("overwrite").option(
         "compression", "gzip"
@@ -1059,7 +1055,7 @@ def snk_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sampled range boundaries) + a per-partition sort — the same cost
     profile as any global sort, amortized over every future box query.
     """
-    out = tempfile.mkdtemp(prefix="engine_zlayout_")
+    out = scratch_dir("engine_zlayout_")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_extendedprice"
     )
@@ -1228,10 +1224,8 @@ def src_csv_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout keeps multiline CSVs many-and-small, or converts once to
     parquet (this repo's standing recommendation for every text
     format)."""
-    import tempfile
-
     nation = load_table(spark, sf_dir, "nation")
-    d = tempfile.mkdtemp(prefix="engine_csv_ml_")
+    d = scratch_dir("engine_csv_ml_")
     staged = nation.select(
         "n_nationkey",
         F.concat(
@@ -1284,8 +1278,6 @@ def snk_parquet_nested_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     list aggregation; nested parquet preserves columnar pushdown on
     the struct header fields. The o_orderkey <= 2000 slice keeps the
     sink fixture-sized at every SF."""
-    import tempfile
-
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") <= 2000
     )
@@ -1315,7 +1307,7 @@ def snk_parquet_nested_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("header"),
         "lines",
     )
-    d = tempfile.mkdtemp(prefix="engine_nested_")
+    d = scratch_dir("engine_nested_")
     nested.write.mode("overwrite").parquet(d)
     back = spark.read.parquet(d)
     exploded = back.select(
@@ -1354,8 +1346,6 @@ def snk_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Map-only format + one text write; the read-back parse is the
     codegen'd slicing projection."""
-    import tempfile
-
     nation = load_table(spark, sf_dir, "nation")
     lines = nation.select(
         F.concat(
@@ -1364,7 +1354,7 @@ def snk_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lpad(F.col("n_regionkey").cast("string"), 2, "0"),
         ).alias("value")
     )
-    d = tempfile.mkdtemp(prefix="engine_fw_sink_")
+    d = scratch_dir("engine_fw_sink_")
     lines.coalesce(1).write.mode("overwrite").text(d)
     back = spark.read.text(d)
     return back.select(
@@ -1422,7 +1412,7 @@ def src_file_pruning_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly one file per bucket); the audit is a map-side-combinable
     aggregate grouped by file. The audit output is file-inventory-sized,
     not data-sized."""
-    d = tempfile.mkdtemp(prefix="engine_prune_stats_")
+    d = scratch_dir("engine_prune_stats_")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_shipdate",
@@ -1494,7 +1484,7 @@ def src_apache_logs(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-stage codegen) → hash aggregate. The regex never backtracks
     (anchored, single pass) — the property that keeps CPU linear on a
     100 TB log lake."""
-    d = tempfile.mkdtemp(prefix="engine_access_log_")
+    d = scratch_dir("engine_access_log_")
     ev = load_table(spark, sf_dir, "events")
     lines = ev.select(
         F.format_string(

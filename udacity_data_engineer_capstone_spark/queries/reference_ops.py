@@ -13,7 +13,6 @@ string column → SUM(CAST(... AS DOUBLE))), and int-casts of doubles use
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,6 +30,7 @@ from udacity_data_engineer_capstone_spark.functions.dates import (
     sas_day_to_iso_string,
 )
 from udacity_data_engineer_capstone_spark.functions.quality import dq_count
+from udacity_data_engineer_capstone_spark.memo import scratch_dir
 from udacity_data_engineer_capstone_spark.registry import query
 from udacity_data_engineer_capstone_spark.sources import config as cfg_src
 from udacity_data_engineer_capstone_spark.sources import local_dims
@@ -42,7 +42,7 @@ from udacity_data_engineer_capstone_spark.sources.sas_labels import (
 
 
 def _tmpdir(name: str) -> str:
-    return tempfile.mkdtemp(prefix=f"engine_{name}_")
+    return scratch_dir(f"engine_{name}_")
 
 
 # ---------------------------------------------------------------------------

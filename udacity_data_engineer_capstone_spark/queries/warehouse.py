@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from udacity_data_engineer_capstone_spark.catalog import load_table, register_views
+from udacity_data_engineer_capstone_spark.memo import scratch_dir
 from udacity_data_engineer_capstone_spark.operators.ordinal import (
     composite_bucket_key,
     global_cum,
@@ -428,13 +429,11 @@ def snk_parquet_global_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     content checksum (the oracle pins both against the source), and
     verifies the disjointness claim from the per-file min/max
     boundaries (a bounded |files|-row collect)."""
-    import tempfile
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("cents"),
     )
-    d = tempfile.mkdtemp(prefix="engine_global_sorted_")
+    d = scratch_dir("engine_global_sorted_")
     (
         orders.repartitionByRange(_gs_file_count(spark, sf_dir), "o_orderkey")
         .sortWithinPartitions("o_orderkey")
@@ -781,14 +780,12 @@ def snk_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
     snk_parquet_part2); `partitionOverwriteMode=dynamic` is set on the
     WRITER (per-operation, not session-wide — the conf-leak lesson from
     src_csv_quarantine applies to sinks too)."""
-    import tempfile
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderstatus",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    d = tempfile.mkdtemp(prefix="engine_dyn_overwrite_")
+    d = scratch_dir("engine_dyn_overwrite_")
     (
         orders.repartition("o_orderstatus")
         .write.mode("overwrite")
@@ -910,9 +907,8 @@ def snk_manifest_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract here, like the partitioned-write sinks."""
     import json
     import os
-    import tempfile
 
-    d = tempfile.mkdtemp(prefix="engine_snk_manifest_")
+    d = scratch_dir("engine_snk_manifest_")
     data_dir = os.path.join(d, "data")
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus") == "O"
@@ -965,13 +961,12 @@ def snk_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     disabled so the sort-merge path is what's proven). The aggregate
     here re-reads THROUGH the bucketed tables, so the oracle verifies
     the bucketed write+read round-trip, not just the plan shape."""
-    import tempfile
     import uuid
 
     suffix = uuid.uuid4().hex[:8]
     for name, key in (("lineitem", "l_orderkey"), ("orders", "o_orderkey")):
         tbl = f"bq_{name}_{suffix}"
-        d = tempfile.mkdtemp(prefix=f"engine_bucketed_{name}_")
+        d = scratch_dir(f"engine_bucketed_{name}_")
         (
             load_table(spark, sf_dir, name)
             .write.mode("overwrite")
@@ -1021,10 +1016,8 @@ def join_dpp_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     The dim is the month→quarter mapping (broadcast); the oracle is the
     statically-pruned twin — parity proves runtime pruning selects
     exactly the same rows."""
-    import tempfile
-
     lineitem = load_table(spark, sf_dir, "lineitem")
-    d = tempfile.mkdtemp(prefix="engine_dpp_")
+    d = scratch_dir("engine_dpp_")
     (
         lineitem.withColumn("ship_month", F.month("l_shipdate"))
         # one file per partition dir: repartition on the partition key
@@ -1393,9 +1386,8 @@ def snk_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta."""
     import json
     import os
-    import tempfile
 
-    d = tempfile.mkdtemp(prefix="engine_time_travel_")
+    d = scratch_dir("engine_time_travel_")
     data_dir = os.path.join(d, "data")
     orders = load_table(spark, sf_dir, "orders")
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
@@ -1519,9 +1511,8 @@ def snk_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized; the deletes are embarrassingly parallel."""
     import json
     import os
-    import tempfile
 
-    d = tempfile.mkdtemp(prefix="engine_vacuum_")
+    d = scratch_dir("engine_vacuum_")
     data_dir = os.path.join(d, "data")
     orders = load_table(spark, sf_dir, "orders")
 

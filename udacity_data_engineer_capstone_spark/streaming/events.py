@@ -20,7 +20,6 @@ from __future__ import annotations
 import contextlib
 import os
 import shutil
-import tempfile
 import threading
 import time
 import uuid
@@ -32,6 +31,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from udacity_data_engineer_capstone_spark.catalog import load_table
+from udacity_data_engineer_capstone_spark.memo import Memo, scratch_dir
 from udacity_data_engineer_capstone_spark.registry import query
 from udacity_data_engineer_capstone_spark.session import sized_partitions
 
@@ -47,34 +47,40 @@ EVENTS_STREAM_SCHEMA = T.StructType(
 )
 
 
-# Staged source dirs, memoized per (application, sf_dir, events-file
-# identity): ~15 streaming queries each re-wrote the identical 8-shard
-# event-time-ordered staging before this cache — a full events-table
-# write per query run. The staged dir is read-only input (every stream
-# keeps its own checkpoint), so sharing is safe; the two queries that
-# MUTATE their staging (planted-duplicate shards) request
-# ``private=True`` and never touch the shared copy. The key includes
-# the source parquet's (mtime_ns, size) so an in-place rewrite of the
-# testdata invalidates naturally.
-_STAGE_CACHE: dict[tuple, str] = {}
+# Staged source directories per (application, kind, source file
+# identity): about fifteen streaming queries read the same 8-shard
+# event-time-ordered staging, so it is written once. A staged dir is
+# read-only input (every stream keeps its own checkpoint); the two
+# queries that plant duplicates build on their own unmemoized staging
+# and memoize the finished dir under their own kind. The source's
+# (mtime_ns, size) in the key makes an in-place rewrite of the testdata
+# stage again, and a dir deleted from outside the process is staged
+# again. Entries are never evicted: a drain on another thread may still
+# be reading one, and there is one per sf_dir and kind.
+_STAGED = Memo(valid=os.path.isdir)
 
 
-def _events_src_key(
-    spark: SparkSession, sf_dir: str, kind: str, table: str = "events"
-) -> tuple:
+def _staged(spark: SparkSession, sf_dir: str, kind: str, stage, table="events") -> str:
+    """The directory ``stage(spark, sf_dir)`` writes, memoized per
+    (application, kind, source file identity)."""
     src = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
     try:
         st = os.stat(src)
-        ident: tuple = (st.st_mtime_ns, st.st_size)
+        ident = (st.st_mtime_ns, st.st_size)
     except OSError:  # directory-shaped table: key on the path only
         ident = (0, 0)
-    return (spark.sparkContext.applicationId, kind, src, ident)
+    return _STAGED.get(spark, (kind, src, ident), lambda: stage(spark, sf_dir))
 
 
-def stage_events_dir(
-    spark: SparkSession, sf_dir: str, private: bool = False
-) -> str:
-    """Materialize the events table into a temp directory the file-source
+def stage_events_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The events table staged once per session as a directory the
+    file-source stream can watch (:func:`_stage_events`). Callers must
+    treat it as read-only."""
+    return _staged(spark, sf_dir, "events", _stage_events)
+
+
+def _stage_events(spark: SparkSession, sf_dir: str) -> str:
+    """Materialize the events table into a new directory the file-source
     stream can watch (normalizing the NANOS timestamp on the way).
 
     Files are staged in EVENT-TIME order: range-partitioned on ``ts``
@@ -84,17 +90,8 @@ def stage_events_dir(
     would let the watermark jump to max(ts)−delay on an early batch and
     silently drop later-arriving older files from join/aggregation
     state — exactly the failure a production job avoids by reading an
-    append-ordered log (kafka, LSM'd object store listing).
-
-    ``private=False`` returns the session-cached staging (callers must
-    treat it as read-only); ``private=True`` always builds a fresh dir
-    for callers that append/mutate after staging."""
-    key = _events_src_key(spark, sf_dir, "events")
-    if not private:
-        hit = _STAGE_CACHE.get(key)
-        if hit is not None and os.path.isdir(hit):
-            return hit
-    out = tempfile.mkdtemp(prefix="engine_stream_src_")
+    append-ordered log (kafka, LSM'd object store listing)."""
+    out = scratch_dir("engine_stream_src_")
     shutil.rmtree(out)
     (
         load_table(spark, sf_dir, "events")
@@ -106,8 +103,6 @@ def stage_events_dir(
     base = time.time() - len(parts) - 10
     for i, p in enumerate(parts):
         os.utime(os.path.join(out, p), (base + i, base + i))
-    if not private:
-        _STAGE_CACHE[key] = out
     return out
 
 
@@ -530,6 +525,15 @@ FROM events
 """
 
 
+def _stage_events_with_dup_batch(spark: SparkSession, sf_dir: str) -> str:
+    """A new events staging plus a planted duplicate batch: one third
+    of the events appended again."""
+    src = _stage_events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
+    ev.filter(F.col("event_id") % 3 == 0).write.mode("append").parquet(src)
+    return src
+
+
 @query(
     "stream_dedup",
     oracle=_STREAM_DEDUP_ORACLE,
@@ -544,19 +548,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Unbounded state here (exact semantics, matching the oracle);
     production would bound it with ``dropDuplicatesWithinWatermark``
     when duplicates are known to arrive close together."""
-    # private staging: this query APPENDS duplicate rows to its source
-    # dir, so it must never mutate the session-shared staging — but the
-    # mutated result is itself deterministic, so memoize it under its
-    # own cache key.
-    key = _events_src_key(spark, sf_dir, "events+dupbatch")
-    src = _STAGE_CACHE.get(key)
-    if src is None or not os.path.isdir(src):
-        src = stage_events_dir(spark, sf_dir, private=True)
-        # plant cross-batch duplicates: one-third of the events again
-        ev = load_table(spark, sf_dir, "events")
-        ev.filter(F.col("event_id") % 3 == 0).write.mode("append").parquet(src)
-        _STAGE_CACHE[key] = src
-
+    src = _staged(spark, sf_dir, "events+dupbatch", _stage_events_with_dup_batch)
     deduped = (
         stream_events(spark, src)
         .dropDuplicates(["event_id"])
@@ -645,7 +637,7 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     must contain every event exactly once across all batch files; the
     read-back aggregate equals the batch oracle."""
     src = stage_events_dir(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="engine_fbsink_")
+    out = scratch_dir("engine_fbsink_")
     shutil.rmtree(out)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -739,15 +731,15 @@ def stage_cdc_dir(spark: SparkSession, sf_dir: str) -> str:
     production CDC stream (debezium→kafka) provides. Session-memoized
     like :func:`stage_events_dir` (read-only input; streams keep their
     own checkpoints)."""
+    return _staged(spark, sf_dir, "cdc", _stage_cdc, table="orders")
+
+
+def _stage_cdc(spark: SparkSession, sf_dir: str) -> str:
     from udacity_data_engineer_capstone_spark.catalog import register_views
 
-    key = _events_src_key(spark, sf_dir, "cdc", table="orders")
-    hit = _STAGE_CACHE.get(key)
-    if hit is not None and os.path.isdir(hit):
-        return hit
     register_views(spark, sf_dir, ("orders",))
     changes = spark.sql(_CDC_CHANGES_SQL)
-    out = tempfile.mkdtemp(prefix="engine_cdc_src_")
+    out = scratch_dir("engine_cdc_src_")
     base = time.time() - 20
     for i, seq in enumerate(sorted(r[0] for r in changes.select("seq").distinct().collect())):
         batch_dir = os.path.join(out, f"tmp_seq{seq}")
@@ -759,7 +751,6 @@ def stage_cdc_dir(spark: SparkSession, sf_dir: str) -> str:
         os.rename(os.path.join(batch_dir, part), dst)
         shutil.rmtree(batch_dir)
         os.utime(dst, (base + i, base + i))
-    _STAGE_CACHE[key] = out
     return out
 
 
@@ -1388,13 +1379,13 @@ def stage_events_with_dups(spark: SparkSession, sf_dir: str) -> str:
     same event-time range — duplicates are discovered while their
     keys' state is still live. Mutates its staging, so it builds on a
     PRIVATE copy (never the session-shared dir) and memoizes the
-    finished dup-planted dir under its own cache key."""
-    key = _events_src_key(spark, sf_dir, "events+dupshards")
-    hit = _STAGE_CACHE.get(key)
-    if hit is not None and os.path.isdir(hit):
-        return hit
-    src = stage_events_dir(spark, sf_dir, private=True)
-    dup_tmp = tempfile.mkdtemp(prefix="engine_stream_dup_")
+    finished dup-planted dir under its own kind."""
+    return _staged(spark, sf_dir, "events+dupshards", _stage_events_with_dup_shards)
+
+
+def _stage_events_with_dup_shards(spark: SparkSession, sf_dir: str) -> str:
+    src = _stage_events(spark, sf_dir)
+    dup_tmp = scratch_dir("engine_stream_dup_")
     shutil.rmtree(dup_tmp)
     (
         load_table(spark, sf_dir, "events")
@@ -1412,7 +1403,6 @@ def stage_events_with_dups(spark: SparkSession, sf_dir: str) -> str:
         shutil.move(os.path.join(dup_tmp, p), dst)
         os.utime(dst, (anchor_m + 0.4, anchor_m + 0.4))
     shutil.rmtree(dup_tmp, ignore_errors=True)
-    _STAGE_CACHE[key] = src
     return src
 
 
@@ -2109,8 +2099,8 @@ def stream_python_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents"),
         )
     )
-    out = os.path.join(tempfile.mkdtemp(prefix="engine_pysink_"), "log")
-    cp = tempfile.mkdtemp(prefix="engine_pysink_cp_")
+    out = os.path.join(scratch_dir("engine_pysink_"), "log")
+    cp = scratch_dir("engine_pysink_cp_")
     if _capture_for_audit(stream):
         df = spark.createDataFrame([], _PYSINK_SCHEMA)
     else:
