@@ -83,9 +83,6 @@ def main() -> int:
     # honest per-rung corpus size (drives the derived Bloom width);
     # 500k = the sf10 documents row count, override per replay dir
     os.environ.setdefault("SPARK_GRAFT_CORPUS_DOCS", "500000")
-    os.environ["SPARK_GRAFT_STREAM_PARTS"] = os.environ.get(
-        "SPARK_GRAFT_CPUS", "32"
-    )
     os.environ["SPARK_GRAFT_STREAM_DRAIN_SEC"] = "1800"
     import udacity_data_engineer_capstone_spark as engine
 

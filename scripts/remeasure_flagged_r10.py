@@ -33,9 +33,6 @@ SHOTS = 3
 
 
 def main() -> int:
-    os.environ["SPARK_GRAFT_STREAM_PARTS"] = os.environ.get(
-        "SPARK_GRAFT_CPUS", "32"
-    )
     engine.load_all()
     from pyspark.sql import SparkSession
 

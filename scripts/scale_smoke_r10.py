@@ -111,9 +111,6 @@ def main() -> int:
     # engine default (8 parts / 120 s) is the bench/test profile, and
     # the 120 s cap now FAILS LOUDLY instead of returning a partial
     # sink (the sf10 ladder's first find)
-    os.environ["SPARK_GRAFT_STREAM_PARTS"] = os.environ.get(
-        "SPARK_GRAFT_CPUS", "32"
-    )
     os.environ["SPARK_GRAFT_STREAM_DRAIN_SEC"] = "1800"
     engine.load_all()
     from pyspark.sql import SparkSession

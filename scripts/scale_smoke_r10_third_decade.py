@@ -104,9 +104,6 @@ def run_at(spark, label: str, sf_dir: str, corpus_docs: str) -> dict:
 
 def main() -> int:
     skip_sf100 = "--skip-sf100" in sys.argv
-    os.environ["SPARK_GRAFT_STREAM_PARTS"] = os.environ.get(
-        "SPARK_GRAFT_CPUS", "32"
-    )
     os.environ["SPARK_GRAFT_STREAM_DRAIN_SEC"] = "1800"
     engine.load_all()
     from pyspark.sql import SparkSession

@@ -77,9 +77,6 @@ SCALES = [
 
 
 def main() -> int:
-    os.environ["SPARK_GRAFT_STREAM_PARTS"] = os.environ.get(
-        "SPARK_GRAFT_CPUS", "32"
-    )
     os.environ["SPARK_GRAFT_STREAM_DRAIN_SEC"] = "1800"
     engine.load_all()
     from pyspark.sql import SparkSession

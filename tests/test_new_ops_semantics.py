@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import Row
@@ -40,9 +39,9 @@ _EVENTS_SCHEMA = T.StructType(
 
 
 @pytest.fixture(scope="module")
-def crafted_dir(spark):
+def crafted_dir(spark, tmp_path_factory):
     """A tiny sf-dir with hand-written events + embeddings parquet."""
-    out = tempfile.mkdtemp(prefix="engine_crafted_")
+    out = str(tmp_path_factory.mktemp("crafted"))
     events = [
         # user 1: click @0, purchase @5, click @7  -> nearest is +2min fwd
         Row(event_id=1, ts=_mins(0), user_id=1, event_type="click",
@@ -120,10 +119,10 @@ def test_semdedup_collapses_near_duplicates(spark, crafted_dir):
     assert kept == {10}
 
 
-def test_theil_sen_exact_slope_on_linear_series(spark, crafted_dir):
+def test_theil_sen_exact_slope_on_linear_series(spark, crafted_dir, tmp_path):
     # user events across distinct hours with linearly increasing value:
     # build a dedicated dir — value = 100 + 60*k cents at hour k.
-    out = tempfile.mkdtemp(prefix="engine_ts_lin_")
+    out = str(tmp_path)
     events = [
         Row(event_id=k, ts=_TS0 + dt.timedelta(hours=k), user_id=1,
             event_type="lin", value=1.0 + 0.6 * k, props="{}")
@@ -139,8 +138,8 @@ def test_theil_sen_exact_slope_on_linear_series(spark, crafted_dir):
     assert r.slope_microcents_per_hour == 60_000_000
 
 
-def test_rolling_median_rejects_single_spike(spark, crafted_dir):
-    out = tempfile.mkdtemp(prefix="engine_ts_med_")
+def test_rolling_median_rejects_single_spike(spark, crafted_dir, tmp_path):
+    out = str(tmp_path)
     vals = [1.0, 1.0, 1.0, 99.0, 1.0, 1.0, 1.0]
     events = [
         Row(event_id=k, ts=_TS0 + dt.timedelta(hours=k), user_id=1,
@@ -163,10 +162,10 @@ def test_rolling_median_rejects_single_spike(spark, crafted_dir):
 
 
 @pytest.fixture(scope="module")
-def basket_dir(spark):
+def basket_dir(spark, tmp_path_factory):
     """Crafted baskets: {10,20}, {10,20,30}, {10,30}, {40} (singleton,
     excluded), {10,20} with a duplicated line (dedup check)."""
-    out = tempfile.mkdtemp(prefix="engine_basket_")
+    out = str(tmp_path_factory.mktemp("basket"))
     rows = [
         Row(l_orderkey=1, l_partkey=10), Row(l_orderkey=1, l_partkey=20),
         Row(l_orderkey=2, l_partkey=10), Row(l_orderkey=2, l_partkey=20),
@@ -267,12 +266,12 @@ def test_file_pruning_one_file_per_bucket(spark):
 
 
 @pytest.fixture(scope="module")
-def signal_dir(spark):
+def signal_dir(spark, tmp_path_factory):
     """25 hourly 'click' events at $1.00 with one $100.00 spike at hour
     20 (Bollinger fixture), plus a 'view' series whose counts at hour h
     equal the 'purchase' counts at hour h+1 exactly (cross-correlation
     fixture: purchase lags view by 1 hour with r = 1)."""
-    out = tempfile.mkdtemp(prefix="engine_signal_")
+    out = str(tmp_path_factory.mktemp("signal"))
     rows = []
     eid = 0
     for h in range(25):
@@ -331,11 +330,11 @@ def test_cross_correlation_finds_the_lag(spark, signal_dir):
 
 
 @pytest.fixture(scope="module")
-def funnel_dir(spark):
+def funnel_dir(spark, tmp_path_factory):
     """Three crafted journeys: A 'vcp' (converts), B 'pvc' (view never
     followed by purchase), C 'vpp' (immediate conversion) — plus a
     same-timestamp pair on A ordered by event_id."""
-    out = tempfile.mkdtemp(prefix="engine_funnel_")
+    out = str(tmp_path_factory.mktemp("funnel"))
     mk = lambda eid, mins, uid, et: Row(
         event_id=eid, ts=_mins(mins), user_id=uid, event_type=et,
         value=1.0, props="{}")
@@ -404,11 +403,11 @@ def test_length_sorted_batching_never_wastes_more(spark):
     )
 
 
-def test_kaplan_meier_hand_computed(spark):
+def test_kaplan_meier_hand_computed(spark, tmp_path):
     """4 users, horizon 7d, high-water day 20: durations {0:churn,
     2:churn+censor, 16:censor}; n-at-risk 4/3/1; S = 3/4 then 1/2,
     flat through the censored tail."""
-    out = tempfile.mkdtemp(prefix="engine_km_")
+    out = str(tmp_path)
     day = lambda d: _TS0 + dt.timedelta(days=d)
     mk = lambda eid, d, uid: Row(event_id=eid, ts=day(d), user_id=uid,
                                  event_type="view", value=1.0, props="{}")
@@ -434,10 +433,10 @@ def test_kaplan_meier_hand_computed(spark):
     assert got[16].survival_ppm == got[2].survival_ppm
 
 
-def test_skyline_dominance_hand_computed(spark):
+def test_skyline_dominance_hand_computed(spark, tmp_path):
     """Frontier = {(5,1), (10,5), (20,8)}: equal-size-but-pricier and
     equal-price-but-smaller parts are dominated."""
-    out = tempfile.mkdtemp(prefix="engine_sky_")
+    out = str(tmp_path)
     schema = T.StructType(
         [
             T.StructField("p_partkey", T.LongType()),
@@ -474,8 +473,8 @@ _DOCS_SCHEMA = T.StructType(
 )
 
 
-def _meta_docs_dir(spark, lengths_by_source):
-    out = tempfile.mkdtemp(prefix="engine_meta_")
+def _meta_docs_dir(spark, out, lengths_by_source):
+    out = str(out)
     rows, did = [], 0
     for src, lengths in lengths_by_source.items():
         for n in lengths:
@@ -489,7 +488,7 @@ def _meta_docs_dir(spark, lengths_by_source):
     return out
 
 
-def test_meta_analysis_heterogeneity_gate_hand_computed(spark):
+def test_meta_analysis_heterogeneity_gate_hand_computed(spark, tmp_path):
     """Hand-derived Cochran's Q for 3 sources, each n=5 with
     within-source SS=8 (var_d = 0.4, w_micro = 2_500_000 exactly).
 
@@ -501,6 +500,7 @@ def test_meta_analysis_heterogeneity_gate_hand_computed(spark):
     and oracle parity could never catch it (shared SQL)."""
     het = _meta_docs_dir(
         spark,
+        tmp_path / "het",
         {
             "a": [100, 102, 98, 100, 100],
             "b": [120, 122, 118, 120, 120],
@@ -516,6 +516,7 @@ def test_meta_analysis_heterogeneity_gate_hand_computed(spark):
     # q_milli = 5000 < 6000 = df·1000 + 2·floor(sqrt(2·df)·1000)
     hom = _meta_docs_dir(
         spark,
+        tmp_path / "hom",
         {
             "a": [100, 102, 98, 100, 100],
             "b": [101, 103, 99, 101, 101],
@@ -527,11 +528,11 @@ def test_meta_analysis_heterogeneity_gate_hand_computed(spark):
     assert row.heterogeneous is False
 
 
-def test_chunk_overlap_windows_hand_computed(spark):
+def test_chunk_overlap_windows_hand_computed(spark, tmp_path):
     """50 tokens, size 30 / stride 20 -> chunks at 0 (30 toks), 20 (30
     toks), 40 (10-token tail); consecutive chunks share exactly 10
     tokens."""
-    out = tempfile.mkdtemp(prefix="engine_chunk_")
+    out = str(tmp_path)
     words = [f"w{i:02d}" for i in range(50)]
     rows = [Row(doc_id=1, text=" ".join(words), lang="en", source="a",
                 n_chars=len(" ".join(words)))]
@@ -554,7 +555,7 @@ def test_chunk_overlap_windows_hand_computed(spark):
     assert got[2].chunk_md5 == exp(40, 50)  # shares w40..w49 with chunk 1
 
 
-def test_mmr_rerank_matches_numpy_greedy_and_diversifies(spark):
+def test_mmr_rerank_matches_numpy_greedy_and_diversifies(spark, tmp_path):
     """Replicate the exact integer MMR greedy in numpy over a crafted
     candidate set containing an exact duplicate pair, assert the engine
     emits the same 5-pick trace, and that the duplicate of an
@@ -563,7 +564,7 @@ def test_mmr_rerank_matches_numpy_greedy_and_diversifies(spark):
 
     import numpy as np
 
-    out = tempfile.mkdtemp(prefix="engine_mmr_")
+    out = str(tmp_path)
     rng = np.random.default_rng(5)
     vecs = {0: np.array([1.0, 0, 0, 0, 0, 0, 0, 0])}  # the query
     for i in range(1, 9):
@@ -619,13 +620,13 @@ def test_mmr_rerank_matches_numpy_greedy_and_diversifies(spark):
     assert not ({1, 9} <= set(picked))
 
 
-def test_dp_release_noise_is_two_sided(spark):
+def test_dp_release_noise_is_two_sided(spark, tmp_path):
     """40 cells all holding exactly 7 documents: released counts must
     scatter BOTH below and above the true count (the r5 first-draft
     expression collapsed to always-positive noise — a shared-SQL bug
     oracle parity cannot see), and the mean absolute perturbation must
     be Laplace(1)-sized, not zero and not huge."""
-    out = tempfile.mkdtemp(prefix="engine_dp_")
+    out = str(tmp_path)
     rows = []
     did = 0
     for s in range(8):
@@ -648,14 +649,14 @@ def test_dp_release_noise_is_two_sided(spark):
     assert 0.2 < mean_abs < 4.0  # E|Laplace(1)| = 1, rounded/clamped
 
 
-def test_wilcoxon_hand_computed(spark):
+def test_wilcoxon_hand_computed(spark, tmp_path):
     """7 users with hand-set per-day counts. Day-1 holds 16 of 30
     events, so percentile_disc(0.5) lands on day 1 and the split is
     day1 vs day2. Diffs (n2−n1): +1, +2, −3, +2, 0(drops), −1, −3 →
     |d| avg-rank ×2: |1|→3 (ranks 1,2), |2|→7 (ranks 3,4), |3|→11
     (ranks 5,6). W+×2 = 3+7+7 = 17, W−×2 = 3+11+11 = 25, n = 6
     (checks: 17+25 = n(n+1) = 42)."""
-    out = tempfile.mkdtemp(prefix="engine_wlx_")
+    out = str(tmp_path)
     d1 = dt.datetime(2024, 1, 1, 12, 0, 0)
     d2 = dt.datetime(2024, 1, 2, 12, 0, 0)
     counts = {  # user: (day1 events, day2 events)
@@ -685,11 +686,11 @@ def test_wilcoxon_hand_computed(spark):
     assert r.w_plus_x2 == 17 and r.w_minus_x2 == 25
 
 
-def test_brown_forsythe_flags_only_heteroscedastic(spark):
+def test_brown_forsythe_flags_only_heteroscedastic(spark, tmp_path_factory):
     """Two tight groups + one wide group: the dispersion gate must fire;
     rebuilt with all groups tight, it must not."""
     def build(spread_c):
-        out = tempfile.mkdtemp(prefix="engine_bf_")
+        out = str(tmp_path_factory.mktemp("bf"))
         rows, eid = [], 0
         specs = {"a": [10, 11, 12, 10, 11, 12] * 4,
                  "b": [10, 12, 11, 11, 10, 12] * 4,
@@ -713,11 +714,11 @@ def test_brown_forsythe_flags_only_heteroscedastic(spark):
     assert r.heteroscedastic is False
 
 
-def test_overdispersion_hand_cases(spark):
+def test_overdispersion_hand_cases(spark, tmp_path_factory):
     """Flat daily counts (variance 0 ≪ mean) must NOT flag; bursty
     counts (variance ≫ mean) must flag."""
     def build(daily_counts):
-        out = tempfile.mkdtemp(prefix="engine_od_")
+        out = str(tmp_path_factory.mktemp("od"))
         rows, eid = [], 0
         for d, n in enumerate(daily_counts):
             for _ in range(n):
@@ -739,13 +740,13 @@ def test_overdispersion_hand_cases(spark):
     assert r.overdispersed is True
 
 
-def test_histogram_quantile_brackets_hand_computed(spark):
+def test_histogram_quantile_brackets_hand_computed(spark, tmp_path_factory):
     """100 events worth 1 cent + 1 event worth 1000 cents (bucket 10:
     512..1023): p50 bracket must be [1,1] (bucket 1), p99 still [1,1]
     (cum 100/101 ≥ 99%), and rebuilt with 5 big events p99 moves to the
     big bucket."""
     def build(n_small, n_big):
-        out = tempfile.mkdtemp(prefix="engine_hq_")
+        out = str(tmp_path_factory.mktemp("hq"))
         rows = []
         for i in range(n_small):
             rows.append(Row(event_id=i + 1, ts=_mins(i), user_id=1,

@@ -478,14 +478,13 @@ def test_moment_sketch_partial_aggregation(spark, sf_dir):
     assert_not_in_plan(df, "BatchEvalPython", "ArrowEvalPython")
 
 
-def test_zorder_layout_files_mostly_skippable(spark):
+def test_zorder_layout_files_mostly_skippable(spark, tmp_path):
     """The z-ordered rewrite must produce files whose per-file
     (l_orderkey, l_partkey) min stats exclude the 2-D box for most
     files — the min/max-stats file-skipping that makes the layout worth
     the sort. Asserted at sf0.01, where the box is selective."""
     import glob
     import os
-    import tempfile
 
     import pyarrow.parquet as pq
 
@@ -495,7 +494,7 @@ def test_zorder_layout_files_mostly_skippable(spark):
         _ZLAYOUT_EXPR,
     )
 
-    out = tempfile.mkdtemp(prefix="engine_zlayout_test_")
+    out = str(tmp_path)
     (
         load_table(spark, SF_DIR_MED, "lineitem")
         .select("l_orderkey", "l_partkey")

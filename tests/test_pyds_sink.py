@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -40,8 +39,8 @@ def _write(spark, df, path: str) -> None:
     ).save()
 
 
-def test_manifest_scoped_read_ignores_orphan_files(spark, sf_dir):
-    d = os.path.join(tempfile.mkdtemp(prefix="engine_pysnk_t_"), "out")
+def test_manifest_scoped_read_ignores_orphan_files(spark, sf_dir, tmp_path):
+    d = str(tmp_path / "out")
     nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name"
     )
@@ -56,8 +55,8 @@ def test_manifest_scoped_read_ignores_orphan_files(spark, sf_dir):
     assert df.filter(F.col("n_nationkey") == 9999).count() == 0
 
 
-def test_overwrite_replaces_previous_commit(spark, sf_dir):
-    d = os.path.join(tempfile.mkdtemp(prefix="engine_pysnk_t_"), "out")
+def test_overwrite_replaces_previous_commit(spark, sf_dir, tmp_path):
+    d = str(tmp_path / "out")
     nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name"
     )
@@ -79,8 +78,8 @@ def test_overwrite_replaces_previous_commit(spark, sf_dir):
     assert on_disk == names
 
 
-def test_empty_partitions_commit_no_files(spark, sf_dir):
-    d = os.path.join(tempfile.mkdtemp(prefix="engine_pysnk_t_"), "out")
+def test_empty_partitions_commit_no_files(spark, sf_dir, tmp_path):
+    d = str(tmp_path / "out")
     nation = (
         load_table(spark, sf_dir, "nation")
         .select("n_nationkey", "n_name")
@@ -95,7 +94,7 @@ def test_empty_partitions_commit_no_files(spark, sf_dir):
     assert len(manifest["files"]) <= n_src
 
 
-def test_stream_sink_batch_replay_is_idempotent(spark, sf_dir):
+def test_stream_sink_batch_replay_is_idempotent(spark, sf_dir, tmp_path):
     """Replaying a micro-batch (failure after sink commit, before the
     engine checkpoints) rewrites the SAME per-batch manifest: the
     retry's files replace the first attempt's in manifest scope, the
@@ -105,7 +104,7 @@ def test_stream_sink_batch_replay_is_idempotent(spark, sf_dir):
         read_stream_manifests,
     )
 
-    d = os.path.join(tempfile.mkdtemp(prefix="engine_pysnk_t_"), "out")
+    d = str(tmp_path / "out")
     w = _ManifestParquetStreamWriter({"path": d})
     batch = pa.record_batch(
         {"n_nationkey": [1, 2, 3], "n_name": ["A", "B", "C"]}
@@ -129,8 +128,8 @@ def test_stream_sink_batch_replay_is_idempotent(spark, sf_dir):
     assert m1.filename not in visible and m2.filename in visible
 
 
-def test_commit_cleans_staging_and_counts_agree(spark, sf_dir):
-    d = os.path.join(tempfile.mkdtemp(prefix="engine_pysnk_t_"), "out")
+def test_commit_cleans_staging_and_counts_agree(spark, sf_dir, tmp_path):
+    d = str(tmp_path / "out")
     nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name"
     )
@@ -141,3 +140,21 @@ def test_commit_cleans_staging_and_counts_agree(spark, sf_dir):
     assert manifest["n_rows"] == sum(f["n_rows"] for f in manifest["files"])
     for f in manifest["files"]:
         assert os.path.isfile(os.path.join(d, f["filename"]))
+
+
+def test_registration_is_per_session(spark, tmp_path):
+    """Spark keeps registered data sources per session: a ``newSession()``
+    child of a session that already registered ``sas_labels`` gets its
+    own registration, and reads through it."""
+    from udacity_data_engineer_capstone_spark.sources.pyds import register
+
+    labels = tmp_path / "labels.sas"
+    labels.write_text("value i94cntyl\n  101 = 'ALBANIA'\n  102 = 'ANDORRA'\n;\n")
+    register(spark)
+    child = spark.newSession()
+    register(child)
+    rows = child.read.format("sas_labels").option("path", str(labels)).load()
+    assert sorted(tuple(r) for r in rows.collect()) == [
+        ("i94cntyl", "101", "ALBANIA"),
+        ("i94cntyl", "102", "ANDORRA"),
+    ]

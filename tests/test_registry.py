@@ -84,3 +84,22 @@ def test_no_decimal_invariant_guard(spark):
     )
     with pytest.raises(AssertionError, match="DECIMAL"):
         assert_no_decimal("nested", nested)
+
+
+def test_env_settings_documented():
+    """Every ``SPARK_GRAFT_*`` name the package source mentions is listed
+    in README.md's "Settings" section, and the section lists nothing
+    else: a new knob cannot land undocumented."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(engine.__file__).parent
+    used = {
+        name
+        for path in root.rglob("*.py")
+        for name in re.findall(r"SPARK_GRAFT_[A-Z0-9_]+", path.read_text())
+    }
+    readme = (root.parent / "README.md").read_text()
+    section = readme.split("\n## Settings\n", 1)[1].split("\n## ", 1)[0]
+    documented = set(re.findall(r"^\| `(SPARK_GRAFT_[A-Z0-9_]+)`", section, re.M))
+    assert used == documented

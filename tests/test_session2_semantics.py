@@ -10,7 +10,6 @@ from __future__ import annotations
 import datetime as dt
 import hashlib
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import Row
@@ -51,8 +50,8 @@ _DOCS_SCHEMA = T.StructType(
 
 
 @pytest.fixture(scope="module")
-def crafted_dir(spark):
-    out = tempfile.mkdtemp(prefix="engine_crafted_s2_")
+def crafted_dir(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("crafted_s2"))
 
     # --- events: conversion latencies 10/20/30s + an hourly gap series
     events = []
@@ -441,14 +440,13 @@ def test_pref_pairs_margins_positive(spark, sf_dir):
         assert r["chosen_doc"] != r["rejected_doc"]
 
 
-def test_normalized_dedup_catches_formatting_variants(spark, crafted_dir):
+def test_normalized_dedup_catches_formatting_variants(spark, crafted_dir, tmp_path):
     """'The cat sat. The dog ran.' has no variant in the crafted set,
     but a case/punct variant corpus must group under one canon hash
     while raw md5 treats them as distinct."""
     import os
-    import tempfile
 
-    out = tempfile.mkdtemp(prefix="engine_normdup_")
+    out = str(tmp_path)
     # ids 51-53 dodge the corpus() plant rules (id%50 in {0, 7})
     docs = [
         Row(doc_id=51, text="Hello, World!  How are you?", lang="en",
@@ -468,13 +466,12 @@ def test_normalized_dedup_catches_formatting_variants(spark, crafted_dir):
     assert all(r["n_copies"] == 1 for r in raw)
 
 
-def test_hits_hand_computed(spark):
+def test_hits_hand_computed(spark, tmp_path):
     """Star graph (c1 buys s1,s2,s3; c2 buys s1), two rounds by hand:
     hubs c1=1000, c2=400; authorities s1=1000, s2=s3=714."""
     import os
-    import tempfile
 
-    out = tempfile.mkdtemp(prefix="engine_hits_")
+    out = str(tmp_path)
     ords = [
         Row(o_orderkey=1, o_custkey=1, o_orderstatus="F", o_totalprice=1.0,
             o_orderdate=_TS0, o_orderpriority="1"),

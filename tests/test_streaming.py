@@ -30,12 +30,10 @@ def _temp_views(spark) -> set[str]:
     return {t.name for t in spark.catalog.listTables() if t.isTemporary}
 
 
-def test_stream_matches_batch_tumbling(spark, sf_dir, monkeypatch):
+def test_stream_matches_batch_tumbling(spark, sf_dir):
     """The drained stream equals the batch aggregate. run_to_memory
     leaves no memory-sink view behind (the returned frame still reads the
-    rows), and SPARK_GRAFT_STREAM_PARTS=0 clamps to one state partition
-    instead of failing the drain."""
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTS", "0")
+    rows)."""
     src = stage_events_dir(spark, sf_dir)
     before = _temp_views(spark)
     streamed = run_to_memory(
@@ -67,23 +65,20 @@ def test_python_source_drain_drops_its_sink_view(spark, sf_dir):
 
 
 def test_drain_env_overrides_clamped(spark, sf_dir, monkeypatch):
-    """SPARK_GRAFT_STREAM_PARTS / SPARK_GRAFT_STREAM_DRAIN_SEC: unset
-    gives the default, values below 1 clamp to 1, and a non-integer
-    raises a ValueError naming the variable before any stream starts."""
+    """SPARK_GRAFT_STREAM_DRAIN_SEC: unset gives the default, values
+    below 1 clamp to 1, and a non-integer raises a ValueError naming the
+    variable before any stream starts."""
     from udacity_data_engineer_capstone_spark.streaming.events import _env_count
 
-    for var, default in (
-        ("SPARK_GRAFT_STREAM_PARTS", 8),
-        ("SPARK_GRAFT_STREAM_DRAIN_SEC", 120),
-    ):
-        monkeypatch.delenv(var, raising=False)
-        assert _env_count(var, default) == default
-        for raw, want in (("0", 1), ("-3", 1), ("1", 1), ("16", 16)):
-            monkeypatch.setenv(var, raw)
-            assert _env_count(var, default) == want
-        monkeypatch.setenv(var, "1.5")
-        with pytest.raises(ValueError, match=var):
-            _env_count(var, default)
+    var, default = "SPARK_GRAFT_STREAM_DRAIN_SEC", 120
+    monkeypatch.delenv(var, raising=False)
+    assert _env_count(var, default) == default
+    for raw, want in (("0", 1), ("-3", 1), ("1", 1), ("16", 16)):
+        monkeypatch.setenv(var, raw)
+        assert _env_count(var, default) == want
+    monkeypatch.setenv(var, "1.5")
+    with pytest.raises(ValueError, match=var):
+        _env_count(var, default)
     src = stage_events_dir(spark, sf_dir)
     n_active = len(spark.streams.active)
     with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_DRAIN_SEC"):
@@ -112,15 +107,14 @@ class _StatePartitions(StreamingQueryListener):
         pass
 
 
-def test_drains_size_state_partitions_to_input(spark, sf_dir, monkeypatch):
-    """With SPARK_GRAFT_STREAM_PARTS unset, a drain's state stores are
-    sized to the bytes its source reads: sf0.001's staged events (~40 KB)
-    and its sorted event log each drain through ONE state partition."""
+def test_drains_size_state_partitions_to_input(spark, sf_dir):
+    """A drain's state stores are sized to the bytes its source reads:
+    sf0.001's staged events (~40 KB) and its sorted event log each drain
+    through ONE state partition."""
     from udacity_data_engineer_capstone_spark.streaming.events import (
         stream_python_source,
     )
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTS", raising=False)
     src = stage_events_dir(spark, sf_dir)
     listener = _StatePartitions()
     spark.streams.addListener(listener)
@@ -138,45 +132,48 @@ def test_drains_size_state_partitions_to_input(spark, sf_dir, monkeypatch):
     assert drains == {"mem": {1}, "pystream": {1}}, listener.parts
 
 
-def test_drain_restores_conf_while_query_runs(spark, sf_dir, monkeypatch):
+def test_drain_restores_conf_while_query_runs(spark, sf_dir):
     """The drain writes ``spark.sql.shuffle.partitions`` only around
     ``start()``: while the started query is still active the session
     reads its prior value, and the query keeps the drain's count."""
-    from udacity_data_engineer_capstone_spark.streaming.events import (
-        _start_drain,
-        _stream_source_bytes,
-    )
+    from udacity_data_engineer_capstone_spark.streaming.events import _drain
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTS", raising=False)
     key = "spark.sql.shuffle.partitions"
+    name = f"conf_probe_{os.getpid()}"
     prior = spark.conf.get(key)
     spark.conf.set(key, "4")
+    seen = []
+
+    def done() -> bool:  # runs while the drained query is active
+        (q,) = [q for q in spark.streams.active if q.name == name]
+        confs = [spark.conf.get(key)]
+        q.processAllAvailable()
+        confs.append(spark.conf.get(key))
+        seen.append((q.isActive, confs, q.lastProgress))
+        return True
+
     try:
         src = stage_events_dir(spark, sf_dir)
         df = tumbling_counts(stream_events(spark, src))
         writer = (
             df.writeStream.format("memory")
-            .queryName(f"conf_probe_{os.getpid()}")
+            .queryName(name)
             .outputMode("complete")
             .trigger(processingTime="0 seconds")
         )
-        q = _start_drain(writer, spark, _stream_source_bytes(df))
-        try:
-            assert q.isActive
-            assert spark.conf.get(key) == "4"
-            q.processAllAvailable()
-            assert q.isActive
-            assert spark.conf.get(key) == "4"
-            ops = q.lastProgress["stateOperators"]
-            assert [op["numShufflePartitions"] for op in ops] == [1]
-        finally:
-            q.stop()
-            spark.catalog.dropTempView(f"conf_probe_{os.getpid()}")
+        assert _drain(df, writer, done=done)
+        spark.catalog.dropTempView(name)
+        assert spark.conf.get(key) == "4"
     finally:
         spark.conf.set(key, prior)
+    [(active, confs, progress)] = seen
+    assert active
+    assert confs == ["4", "4"]
+    ops = progress["stateOperators"]
+    assert [op["numShufflePartitions"] for op in ops] == [1]
 
 
-def test_concurrent_drains_keep_conf_and_results(spark, sf_dir, monkeypatch):
+def test_concurrent_drains_keep_conf_and_results(spark, sf_dir):
     """Four threads draining at once on one session: the session's
     shuffle-partition conf ends where it started, and each drain equals
     the serial drain."""
@@ -184,7 +181,6 @@ def test_concurrent_drains_keep_conf_and_results(spark, sf_dir, monkeypatch):
 
     from tests.conftest import bind_active_session
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTS", raising=False)
     key = "spark.sql.shuffle.partitions"
     prior = spark.conf.get(key)
     spark.conf.set(key, "5")
@@ -204,6 +200,53 @@ def test_concurrent_drains_keep_conf_and_results(spark, sf_dir, monkeypatch):
     finally:
         spark.conf.set(key, prior)
     assert all(r == serial for r in results)
+
+
+def _never_finishes(monkeypatch) -> None:
+    """Every ``awaitTermination`` wait reports "not finished"."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    monkeypatch.setattr(
+        StreamingQuery, "awaitTermination", lambda self, timeout=None: False
+    )
+
+
+def _deadline_passes(monkeypatch) -> None:
+    """The drain's clock jumps past any deadline after its first read."""
+    import itertools
+    import types
+
+    from udacity_data_engineer_capstone_spark.streaming import events
+
+    ticks = itertools.count(step=10**6)
+    monkeypatch.setattr(
+        events, "time", types.SimpleNamespace(monotonic=lambda: next(ticks))
+    )
+
+
+@pytest.mark.parametrize(
+    "query, stall",
+    [
+        ("stream_tumbling_counts", _never_finishes),
+        ("stream_foreach_batch_sink", _never_finishes),
+        ("stream_python_sink", _never_finishes),
+        ("stream_python_source", _deadline_passes),
+    ],
+)
+def test_unfinished_drain_raises_and_stops(spark, sf_dir, monkeypatch, query, stall):
+    """Each drain kind (memory sink, foreachBatch, Python sink, Python
+    source) raises when its query does not finish in time, instead of
+    returning a partial result, and leaves no query or sink view."""
+    from udacity_data_engineer_capstone_spark.streaming import events
+
+    getattr(events, query)(spark, sf_dir)  # stage and register untimed
+    n_active = len(spark.streams.active)
+    views = _temp_views(spark)
+    stall(monkeypatch)
+    with pytest.raises(RuntimeError, match="did not finish"):
+        getattr(events, query)(spark, sf_dir)
+    assert len(spark.streams.active) == n_active
+    assert _temp_views(spark) == views
 
 
 def test_running_user_totals_stateful(spark, sf_dir):
@@ -597,22 +640,47 @@ def test_python_stream_source_reader_yields_arrow_batches(spark, sf_dir):
     assert all(1e14 < t < 1e17 for t in ts)
 
 
-def test_cdc_state_buckets_derived_from_key_cardinality(spark, sf_dir, tmp_path):
-    """r13 (VERDICT r12 item 6): the CDC state-bucket count is derived
-    GENERATOR-AGNOSTICALLY — key cardinality upper-bounded by the total
-    staged change-log rows (every live key appears at least once), no
-    knowledge of which batch plants which keys. ~1024 keys/bucket,
-    floor 64; the env override still wins; invalid/non-positive
-    overrides fall back to the derived value (ADVICE r12)."""
+def _query_buckets(spark, monkeypatch, query, sf_dir):
+    """The state-bucket counts ``query`` derives for ``sf_dir``: the
+    query runs in plan-audit mode (nothing is drained) with
+    :func:`_state_buckets` wrapped to record its results."""
+    from udacity_data_engineer_capstone_spark.streaming import events
+
+    seen = []
+    rule = events._state_buckets
+
+    def recorded(*args, **kwargs):
+        seen.append(rule(*args, **kwargs))
+        return seen[-1]
+
+    with monkeypatch.context() as m:
+        m.setattr(events, "_state_buckets", recorded)
+        with events.capture_stream_plans():
+            getattr(events, query)(spark, sf_dir)
+    return seen
+
+
+def test_cdc_state_buckets_derived_from_key_cardinality(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The CDC state-bucket count is derived GENERATOR-AGNOSTICALLY — key
+    cardinality upper-bounded by the total staged change-log rows (every
+    live key appears at least once), no knowledge of which batch plants
+    which keys: ``ceil(rows / 1024)`` clamped to ``[64, 2^20]``, 1024
+    when the footers are unreadable. ``stream_cdc_apply`` uses 64 buckets
+    at sf0.001 and at sf0.01."""
+    from tests.conftest import SF_DIR_MED
     from udacity_data_engineer_capstone_spark.streaming.events import (
-        _cdc_state_buckets,
+        _state_buckets,
         stage_cdc_dir,
     )
 
-    src = stage_cdc_dir(spark, sf_dir)
-    total_rows = spark.read.parquet(src).count()
-    expected = min(1 << 20, max(64, -(-total_rows // 1024)))
-    assert _cdc_state_buckets(src) == expected
+    for sf in (sf_dir, SF_DIR_MED):
+        src = stage_cdc_dir(spark, sf)
+        total_rows = spark.read.parquet(src).count()
+        expected = min(1 << 20, max(64, -(-total_rows // 1024)))
+        assert _state_buckets(src, rows_per_bucket=1024, floor=64) == expected
+        assert _query_buckets(spark, monkeypatch, "stream_cdc_apply", sf) == [64]
 
     # a synthetic log WITHOUT the fixture's planted-key pattern: the
     # derivation must still work (pure row-count bound)
@@ -629,23 +697,9 @@ def test_cdc_state_buckets_derived_from_key_cardinality(spark, sf_dir, tmp_path)
         pa.table({"o_orderkey": list(range(500))}),
         str(alt / "batch-1.parquet"),
     )
-    assert _cdc_state_buckets(str(alt)) == min(
-        1 << 20, max(64, -(-3500 // 1024))
-    )
-
-    old = os.environ.get("SPARK_GRAFT_CDC_BUCKETS")
-    try:
-        os.environ["SPARK_GRAFT_CDC_BUCKETS"] = "77"
-        assert _cdc_state_buckets(src) == 77
-        # ADVICE r12: "0"/negative/garbage must not reach pmod(key, 0)
-        for bad in ("0", "-5", "many"):
-            os.environ["SPARK_GRAFT_CDC_BUCKETS"] = bad
-            assert _cdc_state_buckets(src) == expected
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_CDC_BUCKETS", None)
-        else:
-            os.environ["SPARK_GRAFT_CDC_BUCKETS"] = old
+    assert _state_buckets(str(alt), rows_per_bucket=1024, floor=64) == 64
+    assert _state_buckets(str(alt), rows_per_bucket=100, floor=1) == 35
+    assert _state_buckets(str(tmp_path / "missing"), 1024, 64) == 1024
 
 
 def _drain_append(spark, df, name):
@@ -673,7 +727,7 @@ def test_session_timeout_bucketed_equals_per_key(spark, sf_dir):
     across many batches, not one)."""
     from udacity_data_engineer_capstone_spark.streaming.events import (
         EVENTS_STREAM_SCHEMA,
-        _session_state_buckets,
+        _state_buckets,
         sessionize_with_timeout,
         sessionize_with_timeout_bucketed,
         stage_events_dir,
@@ -694,7 +748,8 @@ def test_session_timeout_bucketed_equals_per_key(spark, sf_dir):
     got = _drain_append(
         spark,
         sessionize_with_timeout_bucketed(
-            stepped_stream(), _session_state_buckets(src)
+            stepped_stream(),
+            _state_buckets(src, rows_per_bucket=4096, floor=32),
         ),
         "sess_eq_bucketed",
     )
@@ -802,25 +857,22 @@ def test_session_timeout_bucketed_late_user_times_out(spark, tmp_path):
     )
 
 
-def test_ewma_state_buckets_derived_from_staged_rows(spark, sf_dir):
-    """r12: EWMA state buckets follow staged-log size (~4096 rows per
-    bucket, floor 32) so Python dispatch tracks data, not a constant;
-    env override wins."""
+def test_ewma_state_buckets_derived_from_staged_rows(spark, sf_dir, monkeypatch):
+    """EWMA and bucketed-session state buckets follow staged-log size
+    (~4096 rows per bucket, floor 32) so Python dispatch tracks data,
+    not a constant: ``stream_ewma_state`` and
+    ``stream_session_timeout_state`` use 32 buckets at sf0.001 and at
+    sf0.01."""
+    from tests.conftest import SF_DIR_MED
     from udacity_data_engineer_capstone_spark.streaming.events import (
-        _ewma_state_buckets,
+        _state_buckets,
         stage_events_dir,
     )
 
-    src = stage_events_dir(spark, sf_dir)
-    rows = load_table(spark, sf_dir, "events").count()
-    expected = min(1 << 20, max(32, -(-rows // 4096)))
-    assert _ewma_state_buckets(src) == expected
-    old = os.environ.get("SPARK_GRAFT_EWMA_BUCKETS")
-    try:
-        os.environ["SPARK_GRAFT_EWMA_BUCKETS"] = "19"
-        assert _ewma_state_buckets(src) == 19
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_EWMA_BUCKETS", None)
-        else:
-            os.environ["SPARK_GRAFT_EWMA_BUCKETS"] = old
+    for sf in (sf_dir, SF_DIR_MED):
+        src = stage_events_dir(spark, sf)
+        rows = load_table(spark, sf, "events").count()
+        expected = min(1 << 20, max(32, -(-rows // 4096)))
+        assert _state_buckets(src, rows_per_bucket=4096, floor=32) == expected
+        for query in ("stream_ewma_state", "stream_session_timeout_state"):
+            assert _query_buckets(spark, monkeypatch, query, sf) == [32]

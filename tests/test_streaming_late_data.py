@@ -9,7 +9,6 @@ must count only the on-time rows.
 from __future__ import annotations
 
 import os
-import tempfile
 from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
@@ -23,20 +22,25 @@ from udacity_data_engineer_capstone_spark.streaming.events import (
 T0 = datetime(2024, 6, 1, 0, 0, 0)
 
 
-def _write_batch(spark, dest_file, rows):
-    """Write one flat parquet *file* (file-source microbatch unit); a
-    directory name with '=' would be misread as a partition column."""
+def _write_batch(spark, tmp_path, fname, rows):
+    """Write one flat parquet *file* ``tmp_path/src/fname`` (file-source
+    microbatch unit; a directory name with '=' would be misread as a
+    partition column), staged through ``tmp_path/stage/fname``. Returns
+    its path."""
     import glob
     import shutil
 
     df = spark.createDataFrame(rows, EVENTS_STREAM_SCHEMA)
-    tmp = tempfile.mkdtemp(prefix="engine_late_stage_")
+    tmp = str(tmp_path / "stage" / fname)
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-    shutil.copy(part, dest_file)
+    dest = str(tmp_path / "src" / fname)
+    os.makedirs(os.path.dirname(dest), exist_ok=True)
+    shutil.copy(part, dest)
+    return dest
 
 
-def test_watermark_guarantees(spark):
+def test_watermark_guarantees(spark, tmp_path):
     """Microbatch order (the file source sorts by mtime):
     1. on-time events at 10:05/10:20 → watermark advances to 09:20
     2. an event at 00:10, 9+ hours behind the watermark
@@ -52,7 +56,6 @@ def test_watermark_guarantees(spark):
     it immediately (its window has no state to have evicted), so we pin
     that observed behavior too.
     """
-    src = tempfile.mkdtemp(prefix="engine_late_")
     batches = [
         ("000.parquet", [
             (1, T0 + timedelta(hours=10, minutes=5), 1, "click", 1.0, "{}"),
@@ -66,9 +69,9 @@ def test_watermark_guarantees(spark):
         ]),
     ]
     for i, (fname, rows) in enumerate(batches):
-        dest = os.path.join(src, fname)
-        _write_batch(spark, dest, rows)
+        dest = _write_batch(spark, tmp_path, fname, rows)
         os.utime(dest, (1000000 + i * 100, 1000000 + i * 100))
+    src = str(tmp_path / "src")
 
     stream = (
         spark.readStream.schema(EVENTS_STREAM_SCHEMA)
@@ -87,19 +90,18 @@ def test_watermark_guarantees(spark):
     assert result.get(T0) in (None, 1)  # beyond-watermark: no guarantee
 
 
-def test_late_events_kept_without_watermark_in_complete_mode(spark):
+def test_late_events_kept_without_watermark_in_complete_mode(spark, tmp_path):
     """Contrast case: complete mode + no watermark keeps everything."""
-    src = tempfile.mkdtemp(prefix="engine_late2_")
     _write_batch(
         spark,
-        os.path.join(src, "000.parquet"),
+        tmp_path,
+        "000.parquet",
         [(1, T0 + timedelta(hours=10), 1, "click", 1.0, "{}")],
     )
     _write_batch(
-        spark,
-        os.path.join(src, "001.parquet"),
-        [(2, T0, 1, "click", 1.0, "{}")],
+        spark, tmp_path, "001.parquet", [(2, T0, 1, "click", 1.0, "{}")]
     )
+    src = str(tmp_path / "src")
     stream = (
         spark.readStream.schema(EVENTS_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", 1)

@@ -79,19 +79,34 @@ class SasLabelsDataSource(DataSource):
 # independent queries per guide §2.6; a multi-tenant notebook session
 # does the same) raced intermittently to a DATA_SOURCE_NOT_FOUND at
 # lookup. One lock + register-once-per-session removes both the race
-# window and the repeated pickling cost.
+# window and the repeated pickling cost. The key is the JVM session's
+# UUID, not the application: each ``newSession()`` has its own
+# registry, so a child session needs its own registration. Spark checks
+# a new name against the ACTIVE session's registry, so the session is
+# made active around its registration (a child registering while its
+# parent is active would fail with DATA_SOURCE_ALREADY_EXISTS).
 _REG_LOCK = threading.Lock()
 _REGISTERED: set[tuple[str, str]] = set()
 
 
 def _register_once(spark, cls) -> None:
-    key = (spark.sparkContext.applicationId, cls.name())
+    jss = spark._jsparkSession
+    key = (jss.sessionUUID(), cls.name())
     if key in _REGISTERED:
         return
     with _REG_LOCK:
         if key in _REGISTERED:
             return
-        spark.dataSource.register(cls)
+        sessions = spark._jvm.org.apache.spark.sql.SparkSession
+        prev = sessions.getActiveSession()
+        sessions.setActiveSession(jss)
+        try:
+            spark.dataSource.register(cls)
+        finally:
+            if prev.isDefined():
+                sessions.setActiveSession(prev.get())
+            else:
+                sessions.clearActiveSession()
         _REGISTERED.add(key)
 
 

@@ -144,20 +144,11 @@ def tumbling_counts(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
 # This hook closes that hole without draining: inside
 # capture_stream_plans(), every drain point records its un-drained
 # streaming DataFrame (whose analyzed plan + explainString are
-# inspectable pre-start) and skips the physical run, returning an empty
-# batch frame of the drained schema so the query's post-drain code
-# still composes a plan the audit can also read.
+# inspectable pre-start) and skips the physical run (:func:`_drain`);
+# the query returns an empty batch frame of the drained schema so its
+# post-drain code still composes a plan the audit can also read.
 
 _PLAN_CAPTURE: list[DataFrame] | None = None
-
-
-def _capture_for_audit(df: DataFrame) -> bool:
-    """True iff an audit sweep is active: the PRE-DRAIN streaming frame
-    was recorded and the caller must skip starting the query."""
-    if _PLAN_CAPTURE is None:
-        return False
-    _PLAN_CAPTURE.append(df)
-    return True
 
 
 @contextlib.contextmanager
@@ -236,63 +227,83 @@ def _stream_source_bytes(df: DataFrame) -> int | None:
 _DRAIN_CONF_LOCK = threading.Lock()
 
 
-def _start_drain(writer, spark: SparkSession, nbytes: int | None):
-    """``writer.start()`` with ``spark.sql.shuffle.partitions`` (the
-    stream's state-store count) at ``SPARK_GRAFT_STREAM_PARTS`` when set
-    (clamped, :func:`_env_count`), else :func:`sized_partitions` of the
-    input's ``nbytes``, else 8 when the input size is unknown. The
-    session's value is restored as soon as ``start()`` returns: the
-    query's ``StreamExecution`` clones the session when it is built, so
-    the clone keeps the drain's count and records it in the checkpoint's
-    offset log."""
+def _drain(df: DataFrame, writer, nbytes: int | None = None, done=None) -> bool:
+    """Run the streaming query ``writer`` (a ``DataStreamWriter`` of
+    ``df``) to completion and stop it. Every ``stream_*`` query drains
+    through here. Returns False, starting nothing, when an audit sweep
+    captured ``df`` instead (:func:`capture_stream_plans`).
+
+    State stores are sized to the input: ``spark.sql.shuffle.partitions``
+    is :func:`sized_partitions` of ``nbytes`` (default: the files the
+    stream's sources read, :func:`_stream_source_bytes`), 8 when that is
+    unknown. A vanilla session's 200 would mean 200 state stores per
+    stateful operator per micro-batch, pure fixed overhead for an input
+    of a few MB; sf0.001's staged events (~40 KB) drain through one. The
+    conf is written only around ``start()``, under a module lock, and
+    restored as soon as ``start()`` returns: the query's
+    ``StreamExecution`` clones the session when it is built, so the
+    clone keeps the drain's count and records it in the checkpoint's
+    offset log.
+
+    The query is finished when ``awaitTermination`` returns (an
+    availableNow trigger), or, for a source without availableNow, when
+    ``done()`` turns true, polled while the query runs. Either must
+    happen within ``SPARK_GRAFT_STREAM_DRAIN_SEC`` seconds (default 120,
+    clamped to at least 1, :func:`_env_count`), else the drain RAISES
+    instead of returning a partially-filled sink: a silently truncated
+    result reads exactly like a correct small one, the worst failure
+    mode for an oracle-compared query (found by the sf10 ladder: the
+    state sessionizer's drain crossed 120 s at 10M events and returned
+    0 rows). The query is stopped on every path, and a failed drain
+    drops its memory-sink view."""
+    if _PLAN_CAPTURE is not None:
+        _PLAN_CAPTURE.append(df)
+        return False
+    spark = df.sparkSession
+    timeout_sec = _env_count("SPARK_GRAFT_STREAM_DRAIN_SEC", 120)
+    if nbytes is None:
+        nbytes = _stream_source_bytes(df)
     with _DRAIN_CONF_LOCK:
         old = spark.conf.get("spark.sql.shuffle.partitions")
-        sized = 8 if nbytes is None else sized_partitions(spark, nbytes)
-        parts = _env_count("SPARK_GRAFT_STREAM_PARTS", sized)
+        parts = 8 if nbytes is None else sized_partitions(spark, nbytes)
         spark.conf.set("spark.sql.shuffle.partitions", str(parts))
         try:
-            return writer.start()
+            q = writer.start()
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", old)
+    try:
+        if done is None:
+            finished = q.awaitTermination(timeout_sec)
+        else:
+            deadline = time.monotonic() + timeout_sec
+            while not (finished := done()) and time.monotonic() < deadline:
+                q.awaitTermination(0.2)  # raises if the query failed
+        if not finished:
+            raise RuntimeError(
+                f"streaming drain {q.name or q.id} did not finish in "
+                f"{timeout_sec}s; raise SPARK_GRAFT_STREAM_DRAIN_SEC for "
+                "bigger inputs (refusing to return a partial result)"
+            )
+    except BaseException:
+        if q.name:  # a memory sink's view holds the partial result
+            spark.catalog.dropTempView(q.name)
+        raise
+    finally:
+        if q.isActive:
+            q.stop()
+    return True
 
 
-def run_to_memory(
-    df: DataFrame, output_mode: str = "complete", timeout_sec: int | None = None
-) -> DataFrame:
+def run_to_memory(df: DataFrame, output_mode: str = "complete") -> DataFrame:
     """Drain a streaming DataFrame with trigger(availableNow) into a
-    memory sink; returns the sink table as a batch DataFrame.
-
-    State stores are sized to the input (:func:`_start_drain`): one per
-    ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` of the
-    files the stream's sources read (:func:`_stream_source_bytes`),
-    capped like a batch shuffle. A vanilla session's 200 shuffle
-    partitions would mean 200 state stores per stateful operator per
-    micro-batch, pure fixed overhead for an input of a few MB; sf0.001's
-    staged events (~40 KB) drain through one. The session-global conf is
-    written only around ``start()``, under a module lock, and restored
-    as soon as ``start()`` returns. Both drain knobs are
-    environment-tunable for bigger inputs (the round-10 sf10 ladder runs
-    100x the default data):
-    ``SPARK_GRAFT_STREAM_DRAIN_SEC`` (default 120) and
-    ``SPARK_GRAFT_STREAM_PARTS`` (default: sized), each clamped to at
-    least 1 (see :func:`_env_count`).
+    memory sink (:func:`_drain`); returns the sink table as a batch
+    DataFrame.
 
     The sink's temp view is dropped before returning: the returned
     frame is bound to the sink's plan, so its rows stay reachable
     through it and are released with it, instead of piling up in
-    driver heap under a view name nothing reads again.
-
-    The timeout FAILS LOUDLY: a drain that exceeds the cap raises
-    instead of returning the partially-filled sink — a silently
-    truncated memory table reads exactly like a correct small result,
-    which is the worst possible failure mode for an oracle-compared
-    query (found by the sf10 ladder: the state sessionizer's drain
-    crossed 120 s at 10M events and returned 0 rows)."""
+    driver heap under a view name nothing reads again."""
     spark = df.sparkSession
-    if _capture_for_audit(df):
-        return spark.createDataFrame([], df.schema)
-    if timeout_sec is None:
-        timeout_sec = _env_count("SPARK_GRAFT_STREAM_DRAIN_SEC", 120)
     name = f"mem_{uuid.uuid4().hex[:12]}"
     writer = (
         df.writeStream.format("memory")
@@ -300,18 +311,8 @@ def run_to_memory(
         .outputMode(output_mode)
         .trigger(availableNow=True)
     )
-    q = _start_drain(writer, spark, _stream_source_bytes(df))
-    try:
-        finished = q.awaitTermination(timeout_sec)
-        if not finished:
-            raise RuntimeError(
-                f"streaming drain exceeded {timeout_sec}s (availableNow "
-                "did not terminate) — raise SPARK_GRAFT_STREAM_DRAIN_SEC "
-                "for bigger inputs; refusing to return a partial sink"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
+    if not _drain(df, writer):
+        return spark.createDataFrame([], df.schema)
     return _detach_sink(spark, name)
 
 
@@ -648,23 +649,17 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     events = stream_events(spark, src)
-    if _capture_for_audit(events):
+    writer = (
+        events.writeStream.foreachBatch(write_batch)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", out + "_ckpt")
+    )
+    if _drain(events, writer):
+        staged = spark.read.parquet(out)
+    else:
         staged = spark.createDataFrame(
             [], events.select("event_id", "event_type", "value").schema
         )
-    else:
-        q = (
-            events.writeStream.foreachBatch(write_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", out + "_ckpt")
-            .start()
-        )
-        try:
-            q.awaitTermination(120)
-        finally:
-            if q.isActive:
-                q.stop()
-        staged = spark.read.parquet(out)
 
     return (
         staged.groupBy("event_type")
@@ -762,94 +757,46 @@ from udacity_data_engineer_capstone_spark.queries.warehouse import (  # noqa: E4
 # Python state functions are invoked ONCE PER GROUP per micro-batch, so
 # keying the state by raw o_orderkey costs one Arrow slice + one pandas
 # call per KEY (~220k calls at sf0.1 — measured 69 s, >half the round-10
-# rotation bench). The state key is therefore a HASH BUCKET of the
-# orderkey and the bucket's live keys ride as array-valued state: Python
-# dispatch is ∝ buckets, the per-bucket fold is one vectorized pandas
-# sort/drop_duplicates, and per-bucket state stays bounded by
-# keys/bucket. r12: the bucket count is DERIVED from the key
-# cardinality at ~1024 keys/bucket (the sizing rule the r11 docstring
-# prescribed but hard-coded at 1024 buckets — which at sf0.1 meant 150
-# keys/bucket: 4096 Python dispatches for 165k keys, dispatch-bound
-# exactly like an oversized shuffle-partition count). The cardinality
-# comes free from the staged batch-0 parquet footer (one insert per
-# original key); a fixed count would be wrong in one direction at every
-# scale. `SPARK_GRAFT_CDC_BUCKETS` still overrides.
-_CDC_KEYS_PER_BUCKET = 1024
+# rotation bench). The state key of the CDC fold, the EWMA and the
+# bucketed sessionizer is therefore a HASH BUCKET of the key, and the
+# bucket's live keys ride as array-valued state: Python dispatch is ∝
+# buckets, the per-bucket fold is one vectorized pandas pass, and
+# per-bucket state stays bounded by keys/bucket. The bucket count
+# follows the DATA (:func:`_state_buckets`): a fixed count would be
+# wrong in one direction at every scale (1024 buckets at sf0.1 meant
+# 150 keys/bucket, dispatch-bound exactly like an oversized
+# shuffle-partition count).
 
 
-def _env_buckets(var: str) -> int | None:
-    """Parse a bucket-count env override. Invalid or non-positive values
-    fall through to the derived sizing (ADVICE r12: a literal "0" used
-    to reach pmod(key, 0) and silently collapse all state into one null
-    bucket)."""
-    env = os.environ.get(var)
-    if not env:
-        return None
-    try:
-        n = int(env)
-    except ValueError:
-        return None
-    return n if n >= 1 else None
-
-
-def _cdc_state_buckets(src_dir: str) -> int:
-    """Bucket count for the CDC fold, derived generator-agnostically
-    (VERDICT r12 item 6): key cardinality is upper-bounded by the TOTAL
-    staged change-log rows (every live key appears at least once), a
-    free parquet-footer read — no fixture knowledge about which batch
-    plants which keys. Result is bucket-count-invariant (the per-key
-    LWW fold is internal to each bucket); the count only sizes Python
-    dispatch.
+def _state_buckets(src_dir: str, rows_per_bucket: int, floor: int) -> int:
+    """Hash-bucket count for a bucketed state fold over the staged
+    parquet files in ``src_dir``: ``ceil(rows / rows_per_bucket)``
+    clamped to ``[floor, 2^20]``, 1024 when the footers are unreadable.
+    The row count is a free footer read, no job, and upper-bounds the
+    key cardinality (every live key appears at least once), so the rule
+    needs no knowledge of which rows plant which keys. Results are
+    bucket-count-invariant (the per-key fold is internal to each
+    bucket); the count only sizes Python dispatch. The floor keeps the
+    drain parallel across cores.
 
     NOTE: the bucket count keys the state hash, so it must be STABLE
     across a checkpoint's lifetime — a stream resumed from an existing
-    checkpoint after the staged input grows (or the env override
-    changes) would re-key previously checkpointed state. The drains
-    here always start fresh checkpoints; a long-lived deployment should
-    persist the chosen count beside the checkpoint and reuse it."""
-    env = _env_buckets("SPARK_GRAFT_CDC_BUCKETS")
-    if env is not None:
-        return env
-    try:
-        import pyarrow.parquet as pq
-
-        n_keys = sum(
-            pq.ParquetFile(os.path.join(src_dir, p)).metadata.num_rows
-            for p in os.listdir(src_dir)
-            if p.startswith("batch-") and p.endswith(".parquet")
-        )
-        if n_keys <= 0:
-            raise ValueError("no staged batch files")
-    except Exception:
-        return 1024  # conservative r11 default when the footer is unreadable
-    return min(1 << 20, max(64, -(-n_keys // _CDC_KEYS_PER_BUCKET)))
-
-
-# EWMA bucket sizing: dispatch follows DATA size — ~4096 staged rows
-# per bucket (the user cardinality is not known without a job; row
-# count is a free footer read and upper-bounds it). Floor 32 keeps the
-# drain parallel across cores; cap 2^20 mirrors the CDC rule.
-_EWMA_ROWS_PER_BUCKET = 4096
-
-
-def _ewma_state_buckets(src_dir: str) -> int:
-    """Same stability caveat as :func:`_cdc_state_buckets`: the count
-    keys the state hash and must not change across a checkpoint's
-    lifetime."""
-    env = _env_buckets("SPARK_GRAFT_EWMA_BUCKETS")
-    if env is not None:
-        return env
+    checkpoint after the staged input grows would re-key previously
+    checkpointed state. The drains here always start fresh checkpoints;
+    a long-lived deployment should persist the chosen count beside the
+    checkpoint and reuse it."""
     try:
         import pyarrow.parquet as pq
 
         rows = sum(
             pq.ParquetFile(os.path.join(src_dir, p)).metadata.num_rows
             for p in os.listdir(src_dir)
-            if p.startswith("part-") and p.endswith(".parquet")
+            if p.endswith(".parquet") and not p.startswith(("_", "."))
         )
     except Exception:
         return 1024
-    return min(1 << 20, max(32, -(-rows // _EWMA_ROWS_PER_BUCKET)))
+    return min(1 << 20, max(floor, -(-rows // rows_per_bucket)))
+
 
 _CDC_STATE_COLS = ["o_orderkey", "seq", "o_orderstatus", "price_cents", "deleted"]
 
@@ -934,8 +881,10 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
+    # ~1024 change-log rows per bucket, floor 64
+    buckets = _state_buckets(src, rows_per_bucket=1024, floor=64)
     bucketed = stream.withColumn(
-        "bucket", F.pmod(F.col("o_orderkey"), F.lit(_cdc_state_buckets(src)))
+        "bucket", F.pmod(F.col("o_orderkey"), F.lit(buckets))
     )
     applied = bucketed.groupBy("bucket").applyInPandasWithState(
         update,
@@ -1140,8 +1089,9 @@ def stream_ewma_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 4)
         .parquet(src)
     )
+    buckets = _state_buckets(src, rows_per_bucket=4096, floor=32)
     bucketed = stream.withColumn(
-        "bucket", F.pmod(F.col("user_id"), F.lit(_ewma_state_buckets(src)))
+        "bucket", F.pmod(F.col("user_id"), F.lit(buckets))
     )
     folded = bucketed.groupBy("bucket").applyInPandasWithState(
         update,
@@ -1626,9 +1576,9 @@ def stream_session_timeout_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule Spark applies per key); tests pin bucketed-vs-per-key output
     equality and the late-user-still-times-out case."""
     src = stage_events_dir(spark, sf_dir)
-    stream = stream_events(spark, src)
+    buckets = _state_buckets(src, rows_per_bucket=4096, floor=32)
     return run_to_memory(
-        sessionize_with_timeout_bucketed(stream, _session_state_buckets(src)),
+        sessionize_with_timeout_bucketed(stream_events(spark, src), buckets),
         output_mode="append",
     )
 
@@ -1698,27 +1648,6 @@ def sessionize_with_timeout(stream: DataFrame) -> DataFrame:
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-
-
-def _session_state_buckets(src_dir: str) -> int:
-    """Bucket count for the bucketed sessionizer — same row-count rule
-    as :func:`_ewma_state_buckets` (~4096 staged rows per bucket, floor
-    32, cap 2^20), own env override. Same checkpoint-lifetime stability
-    caveat as :func:`_cdc_state_buckets`."""
-    env = _env_buckets("SPARK_GRAFT_SESSION_BUCKETS")
-    if env is not None:
-        return env
-    try:
-        import pyarrow.parquet as pq
-
-        rows = sum(
-            pq.ParquetFile(os.path.join(src_dir, p)).metadata.num_rows
-            for p in os.listdir(src_dir)
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-    except Exception:
-        return 1024
-    return min(1 << 20, max(32, -(-rows // _EWMA_ROWS_PER_BUCKET)))
 
 
 def sessionize_with_timeout_bucketed(
@@ -1963,9 +1892,6 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     This is the offset-cursor source shape (kafka-like); the
     file-listing shape is covered by the other ``stream_*`` queries."""
-    import time as _time
-    import uuid as _uuid
-
     from udacity_data_engineer_capstone_spark.sources.pyds import (
         register_events_log,
     )
@@ -2004,31 +1930,21 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("sum_value_micros"),
     )
-    if _capture_for_audit(agg):
-        return spark.createDataFrame([], agg.schema)
-    name = f"pystream_{_uuid.uuid4().hex[:12]}"
+    name = f"pystream_{uuid.uuid4().hex[:12]}"
     writer = (
         agg.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
         .trigger(processingTime="0 seconds")
     )
+
+    def done() -> bool:  # the cursor reached the end of the log
+        snap = spark.table(name).agg(F.sum("n_events")).collect()[0][0]
+        return snap == expected
+
     # the log file is all the source reads: size state stores to it
-    q = _start_drain(writer, spark, os.path.getsize(path))
-    try:
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
-            snap = spark.table(name).agg(F.sum("n_events")).collect()[0][0]
-            if snap == expected:
-                break  # cursor reached end of log; snapshot complete
-            _time.sleep(0.2)
-        else:
-            raise TimeoutError(
-                f"python streaming source drained {snap}/{expected} rows"
-            )
-    finally:
-        q.stop()
-        q.awaitTermination(30)
+    if not _drain(agg, writer, nbytes=os.path.getsize(path), done=done):
+        return spark.createDataFrame([], agg.schema)
     return _detach_sink(spark, name)
 
 
@@ -2101,17 +2017,15 @@ def stream_python_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = os.path.join(scratch_dir("engine_pysink_"), "log")
     cp = scratch_dir("engine_pysink_cp_")
-    if _capture_for_audit(stream):
+    writer = (
+        stream.writeStream.format("manifest_parquet_stream")
+        .option("path", out)
+        .option("checkpointLocation", cp)
+        .trigger(availableNow=True)
+    )
+    if not _drain(stream, writer):
         df = spark.createDataFrame([], _PYSINK_SCHEMA)
     else:
-        q = (
-            stream.writeStream.format("manifest_parquet_stream")
-            .option("path", out)
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
         df, manifests = read_stream_manifests(spark, out, _PYSINK_SCHEMA)
         assert len(manifests) >= 2, (
             f"expected >=2 per-batch manifest commits, got {len(manifests)}"
