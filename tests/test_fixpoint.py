@@ -92,9 +92,10 @@ def test_fixed_round_query_builds_without_jobs(spark, name):
 
 
 # warm build + action jobs per query before the loops moved onto the
-# driver (sf0.001, local[4], 8 shuffle partitions)
+# driver (sf0.001, local[4], 8 shuffle partitions); graph_pagerank's is
+# its one noop write since its small-graph rounds run on the driver
 _JOB_BUDGET = {
-    "graph_pagerank": 0 + 3,
+    "graph_pagerank": 0 + 1,
     "graph_pagerank_personalized": 0 + 3,
     "graph_label_propagation": 0 + 3,
     "graph_kcore": 10 + 2,

@@ -10,7 +10,10 @@ from __future__ import annotations
 
 from types import SimpleNamespace
 
+import numpy as np
+import pytest
 from pyspark import StorageLevel
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from udacity_data_engineer_capstone_spark.operators.clustering import (
@@ -186,14 +189,17 @@ def test_invalidate_graph_cache_unpersists_every_build_frame(spark):
         _purchase_graph,
     )
 
+    def frames(entry):
+        return {k: v for k, v in entry.items() if isinstance(v, DataFrame)}
+
     _GRAPHS.clear()
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keys())
     small = _purchase_graph(spark, SF_DIR)
-    for df in small.values():
+    for df in frames(small).values():
         df.count()
     assert set(jsc.getPersistentRDDs().keys()) == before
-    g = _purchase_graph(spark, SF_DIR_MED)
+    g = frames(_purchase_graph(spark, SF_DIR_MED))
     for df in g.values():
         df.count()
     built = set(jsc.getPersistentRDDs().keys()) - before
@@ -214,6 +220,76 @@ def test_lazy_pagerank_survives_graph_cache_invalidation(spark):
     want = sorted(graph_pagerank(spark, SF_DIR).collect())
     _GRAPHS.clear()
     assert sorted(lazy.collect()) == want
+
+
+def _spark_rounds(adj, rounds):
+    """PageRank's Spark rounds (:func:`_pagerank_step`) over ``adj``."""
+    from udacity_data_engineer_capstone_spark.operators.graph import (
+        _pagerank_step,
+    )
+
+    step = _pagerank_step(adj)
+    ranks = adj.select(F.col("s").alias("node"), F.lit(SCALE).cast("long").alias("r"))
+    ranks = ranks.distinct()
+    for _ in range(rounds):
+        ranks = step(ranks)
+    return sorted(map(tuple, ranks.collect()))
+
+
+def test_pagerank_kernel_equals_spark_rounds_on_small_graph(spark, monkeypatch):
+    """At sf0.001 the driver kernel returns exactly the rows the Spark
+    rounds return over the same graph held persisted (the layout forced
+    through ``_adjacency_layout``). The local entry's arrays are
+    read-only."""
+    from udacity_data_engineer_capstone_spark.operators import graph
+
+    def persisted(s, nbytes):
+        return False, int(s.conf.get("spark.sql.shuffle.partitions"))
+
+    graph._GRAPHS.clear()
+    monkeypatch.setattr(graph, "_adjacency_layout", persisted)
+    assert "adj_arrays" not in graph._purchase_graph(spark, SF_DIR)
+    want = graph_pagerank(spark, SF_DIR)
+    want_rows = sorted(map(tuple, want.collect()))
+    graph._GRAPHS.clear()
+    monkeypatch.undo()
+
+    arrays = graph._purchase_graph(spark, SF_DIR)["adj_arrays"]
+    got = graph_pagerank(spark, SF_DIR)
+    assert got.schema == want.schema
+    assert sorted(map(tuple, got.collect())) == want_rows
+    assert len(want_rows) > 100
+    for a in arrays:
+        assert a.dtype == np.int64
+        with pytest.raises(ValueError):
+            a[0] = 0
+
+
+def test_pagerank_kernel_drops_nodes_that_stop_receiving_mass(spark):
+    """A hand-built asymmetric graph: node 4 has no in-edge, so it is
+    reached by no round; node 1's only in-edge is from 4, so 1 is
+    reached in round 1 and by no later round, and its out-edges stop
+    contributing from round 3; sink 6 is fed only by 5, which no round
+    reaches. Each round the kernel's (node, r) rows equal the Spark
+    rounds' rows."""
+    from udacity_data_engineer_capstone_spark.operators.graph import (
+        _pagerank_kernel,
+    )
+
+    edges = [(4, 1), (1, 2), (1, 3), (2, 3), (3, 2), (5, 2), (5, 3), (5, 6)]
+    out_deg = {}
+    for s, _ in edges:
+        out_deg[s] = out_deg.get(s, 0) + 1
+    rows = [(s, d, out_deg[s]) for s, d in edges]
+    adj = spark.createDataFrame(rows, "s long, d long, deg long")
+    s, d, deg = (np.array(c, dtype=np.int64) for c in zip(*rows))
+    reached = {1: {1, 2, 3, 6}, 2: {2, 3}, ITERS: {2, 3}}
+    for rounds in range(1, ITERS + 1):
+        node, r = _pagerank_kernel(s, d, deg, rounds)
+        got = list(zip(node.tolist(), r.tolist()))
+        assert got == _spark_rounds(adj, rounds), rounds
+        if rounds in reached:
+            assert set(node.tolist()) == reached[rounds], rounds
 
 
 def test_iterative_fixpoint_exit_fires_on_converging_state(spark):

@@ -249,6 +249,22 @@ def test_unfinished_drain_raises_and_stops(spark, sf_dir, monkeypatch, query, st
     assert _temp_views(spark) == views
 
 
+def test_checkpoints_go_through_the_filesystem_manager(spark, tmp_path):
+    """The engine session writes streaming checkpoints through the
+    FileSystem-based manager, which forks no ``readlink`` per checkpoint
+    file on a local filesystem without native Hadoop."""
+    jvm = spark.sparkContext._jvm
+    pkg = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    mgr = pkg.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert mgr.getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+
 def test_running_user_totals_stateful(spark, sf_dir):
     src = stage_events_dir(spark, sf_dir)
     out = run_to_memory(

@@ -16,14 +16,16 @@ fold-order-free, so Spark and DuckDB agree exactly, at any parallelism.
 (Headroom: 85·N·SCALE must fit in int64 → fine to ~10^8 nodes at
 SCALE=1e9; shrink SCALE for bigger graphs.)
 
-Scale shape: each iteration is one equi-join of the static
-(src, dst, deg) adjacency against the current rank vector plus one
-partial+final integer aggregate, with no driver data collect per
-round. The adjacency is built once per session (:func:`_purchase_graph`):
-a graph under ~1 MB is held as a one-partition driver-local relation,
-so its rounds shuffle nothing and share one adjacency broadcast; a
-larger one is persisted and hash-partitioned by source into
-``spark.sql.shuffle.partitions``, so only the node-sized vector moves.
+Scale shape: the adjacency is built once per session
+(:func:`_purchase_graph`). A graph under ~1 MB is held on the driver,
+as one-partition driver-local relations plus read-only int64 arrays of
+its (src, dst, deg) adjacency; PageRank over it is one vectorized
+integer pass on the driver (:func:`_pagerank_kernel`), and the other
+operators' rounds shuffle nothing. A larger graph is persisted and
+hash-partitioned by source into ``spark.sql.shuffle.partitions``; each
+PageRank iteration over it is one equi-join of the adjacency against
+the current rank vector plus one partial+final integer aggregate, with
+no driver data collect per round, so only the node-sized vector moves.
 Fixed-round loops (PageRank/PPR/LPA) chain all their rounds into one
 lazy plan that the caller's own action runs; loops that run to
 convergence (BFS, k-core, coarse LPA, the approx exits) go through
@@ -40,6 +42,8 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -78,9 +82,10 @@ pr0 AS (SELECT node, CAST({scale} AS BIGINT) AS r FROM deg)
 # ---------------------------------------------------------------------------
 
 
-def _unpersist_all(entry: dict[str, DataFrame]) -> None:
-    for df in entry.values():
-        df.unpersist()
+def _unpersist_all(entry: dict) -> None:
+    for value in entry.values():
+        if isinstance(value, DataFrame):
+            value.unpersist()
 
 
 # Adjacency builds per (application, sf_dir). Persisted adjacencies pin
@@ -112,17 +117,24 @@ def _adjacency_layout(spark: SparkSession, nbytes: int) -> tuple[bool, int]:
     return False, int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
+def _arrow_frame(spark: SparkSession, table: pa.Table) -> DataFrame:
+    """``table``'s rows as a one-partition ``LocalRelation``."""
+    return spark.createDataFrame(table).coalesce(1)
+
+
 def _driver_local(df: DataFrame) -> DataFrame:
     """``df``'s rows as a one-partition ``LocalRelation`` (Arrow
     round-trip through the driver)."""
-    return df.sparkSession.createDataFrame(df.toArrow()).coalesce(1)
+    return _arrow_frame(df.sparkSession, df.toArrow())
 
 
-def _purchase_graph(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+def _purchase_graph(spark: SparkSession, sf_dir: str) -> dict:
     """The bipartite purchase graph every iterative operator here walks:
     distinct (customer, supplier) edges symmetrized and hash-partitioned
     by source ONCE (``bidir``), plus the derived degree table (``deg``),
-    (s, d, deg) adjacency (``adj``) and node set (``nodes``). Cached per
+    (s, d, deg) adjacency (``adj``) and node set (``nodes``); a graph
+    held on the driver also carries ``adj_arrays``, the adjacency's
+    ``(s, d, deg)`` columns as read-only int64 arrays. Cached per
     (application, sf_dir), so graph_pagerank /
     graph_pagerank_personalized / BFS / k-core / LPA / HITS /
     assortativity share ONE adjacency build instead of each re-running
@@ -137,13 +149,16 @@ def _purchase_graph(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
       directed edges, ~68 KB) is held as driver-local relations: each
       entry frame is collected through Arrow into a one-partition
       ``LocalRelation`` and the persisted edge frame is released. The
-      rounds read a plan leaf, not a cached frame, so AQE builds the
+      rounds read a plan leaf, not a cached frame, so AQE builds an
       adjacency broadcast once and every later round reuses it
       (``ReusedExchange``; AQE never reuses a broadcast over a
       persisted frame's ``TableCacheQueryStage``), all rounds run in
       one stage with no shuffle, and analysis walks no nested cache
-      lineage. A warm sf0.001 ``graph_pagerank`` with its noop write
-      runs 3 jobs, down from 7 over the persisted adjacency.
+      lineage. The Arrow table that ``adj`` is built from is also kept
+      as ``adj_arrays``, so ``graph_pagerank`` runs on the driver
+      (:func:`_pagerank_kernel`): a warm sf0.001 run with its noop
+      write is 1 job, down from 3 over the local relations and 7 over
+      the persisted adjacency.
     - A larger graph is persisted and hash-partitioned into
       ``spark.sql.shuffle.partitions`` partitions, which every round of
       every operator here inherits, so only the node-sized vector moves.
@@ -155,7 +170,7 @@ def _purchase_graph(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     )
 
 
-def _build_purchase_graph(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+def _build_purchase_graph(spark: SparkSession, sf_dir: str) -> dict:
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
     # Memo entries are never localCheckpointed: a local checkpoint's
@@ -185,7 +200,7 @@ def _build_purchase_graph(spark: SparkSession, sf_dir: str) -> dict[str, DataFra
         .repartition(parts, F.col("s"))
     )
     deg = keep(bidir.groupBy("s").agg(F.count(F.lit(1)).cast("long").alias("deg")))
-    adj = keep(
+    adj = (
         bidir.join(deg.withColumnRenamed("s", "node"), bidir["s"] == F.col("node"))
         .select("s", "d", "deg")
         # hash-partition the static edge list by its join key ONCE: each
@@ -194,8 +209,24 @@ def _build_purchase_graph(spark: SparkSession, sf_dir: str) -> dict[str, DataFra
         # node-sized rank/label vector moves.
         .repartition(parts, F.col("s"))
     )
+    if local:
+        # one collect serves both the local relation and the arrays
+        rows = adj.toArrow()
+        adj = _arrow_frame(spark, rows)
+        arrays = {"adj_arrays": tuple(_read_only(rows[c]) for c in ("s", "d", "deg"))}
+    else:
+        adj, arrays = adj.persist(), {}
     nodes = keep(deg.select(F.col("s").alias("node")))
-    return {"edges": edges, "bidir": bidir, "deg": deg, "adj": adj, "nodes": nodes}
+    g = {"edges": edges, "bidir": bidir, "deg": deg, "adj": adj, "nodes": nodes}
+    return {**g, **arrays}
+
+
+def _read_only(column: pa.ChunkedArray) -> np.ndarray:
+    """``column`` as a numpy array no caller can write: memo entries
+    are shared across threads."""
+    out = column.to_numpy()
+    out.setflags(write=False)
+    return out
 
 
 _PR_STEP = """
@@ -245,20 +276,49 @@ def _pagerank_step(adj: DataFrame):
     return step
 
 
+def _pagerank_kernel(
+    s: np.ndarray, d: np.ndarray, deg: np.ndarray, rounds: int = ITERS
+) -> tuple[np.ndarray, np.ndarray]:
+    """``rounds`` rounds of the :data:`_PR_STEP` recurrence over the
+    adjacency ``(s, d, deg)`` on the driver, in int64: ``(node, r)``
+    sorted by node. The initial nodes are the sources, each with
+    ``SCALE``; each round an edge contributes ``r[s] // deg`` only when
+    its source was reached in the previous round, contributions are
+    summed per destination with an exact integer add, and each reached
+    destination gets ``BASE + (85 * sum) // 100``."""
+    nodes, ids = np.unique(np.concatenate((s, d)), return_inverse=True)
+    src, dst = ids[: len(s)], ids[len(s) :]
+    live = np.zeros(len(nodes), dtype=bool)
+    live[src] = True
+    r = np.full(len(nodes), SCALE, dtype=np.int64)
+    for _ in range(rounds):
+        e = live[src]
+        total = np.zeros(len(nodes), dtype=np.int64)
+        np.add.at(total, dst[e], r[src[e]] // deg[e])
+        live = np.zeros(len(nodes), dtype=bool)
+        live[dst[e]] = True
+        r = BASE + (85 * total) // 100
+    return nodes[live], r[live]
+
+
 @query("graph_pagerank", oracle=_pagerank_oracle(), tags=("graph", "iterative"))
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Six damped PageRank iterations over the purchase graph in exact
     integer micro-units (see module docstring). The adjacency (src, dst,
     src-degree) comes from the SESSION-SHARED build
     (:func:`_purchase_graph` — one edge-sized shuffle amortized across
-    the whole graph family); each round (:func:`_pagerank_step`) joins
-    it to the rank vector and re-aggregates. All six rounds chain into
-    one lazy plan and building it launches no Spark job: a warm sf0.001
-    run with a noop write is 3 jobs (the write, the initial rank
-    broadcast and one adjacency broadcast that every round reuses).
-    Rank mass ≈ conserved (modulo integer truncation), so high-degree
-    suppliers surface with rank ≫ SCALE."""
+    the whole graph family). A graph held on the driver runs the six
+    rounds there (:func:`_pagerank_kernel`) and returns the ranks as one
+    Arrow-built local relation: a warm sf0.001 run with a noop write is
+    1 job, the write. Over a persisted adjacency each round
+    (:func:`_pagerank_step`) joins it to the rank vector and
+    re-aggregates; all six rounds chain into one lazy plan and building
+    it launches no Spark job. Rank mass ≈ conserved (modulo integer
+    truncation), so high-degree suppliers surface with rank ≫ SCALE."""
     g = _purchase_graph(spark, sf_dir)
+    if "adj_arrays" in g:
+        node, r = _pagerank_kernel(*g["adj_arrays"])
+        return _arrow_frame(spark, pa.table({"node_id": node, "pr_rank": r}))
     step = _pagerank_step(g["adj"])
     ranks = _pagerank_init(g)
     for _ in range(ITERS):

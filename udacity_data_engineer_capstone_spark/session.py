@@ -199,6 +199,15 @@ def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
         # loader rebuilds microsecond timestamps from them
         # (catalog._load_events). Set here so no query writes it.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Streaming checkpoints through the FileSystem API. The default
+        # FileContext manager resolves each checkpoint file's symlinks,
+        # and without native Hadoop the local filesystem forks a
+        # `readlink` per file: ~64 child processes per small drain.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in profile_from_env().derive().items():
