@@ -8,9 +8,12 @@ rank-mass conservation.
 
 from __future__ import annotations
 
+from collections import Counter
 from types import SimpleNamespace
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -27,7 +30,7 @@ from udacity_data_engineer_capstone_spark.operators.graph import (
 )
 from udacity_data_engineer_capstone_spark.session import sized_partitions
 
-from tests.conftest import SF_DIR, SF_DIR_MED
+from tests.conftest import SF_DIR, SF_DIR_MED, spark_job_ids
 
 
 def test_star_cc_deep_chain_logarithmic(spark):
@@ -179,8 +182,8 @@ def test_adjacency_partitions_sized_to_data(spark):
 
 def test_invalidate_graph_cache_unpersists_every_build_frame(spark):
     """A small graph's build leaves no persistent RDD behind: its entry
-    frames are driver-local relations and the edge frame its count pass
-    read is released. For a persisted graph (sf0.01), clearing the
+    frames are driver-local relations built on the driver with no
+    persisted frame. For a persisted graph (sf0.01), clearing the
     adjacency memo releases every frame the build persisted, the edge
     frame included: no RDD the build cached stays registered as
     persistent."""
@@ -290,6 +293,128 @@ def test_pagerank_kernel_drops_nodes_that_stop_receiving_mass(spark):
         assert got == _spark_rounds(adj, rounds), rounds
         if rounds in reached:
             assert set(node.tolist()) == reached[rounds], rounds
+
+
+_ENTRY_FRAMES = ("edges", "bidir", "deg", "adj", "nodes")
+
+
+def _entry_rows(entry: dict) -> dict:
+    """Each entry frame's schema (names, types, nullability) and rows as
+    a multiset."""
+    return {
+        k: (entry[k].schema, Counter(map(tuple, entry[k].collect())))
+        for k in _ENTRY_FRAMES
+    }
+
+
+def _persisted_build(spark, monkeypatch, sf_dir: str) -> dict:
+    """The Spark build's entry frames at ``sf_dir``, its persisted
+    layout forced through ``_adjacency_layout``."""
+    from udacity_data_engineer_capstone_spark.operators import graph
+
+    def persisted(s, nbytes):
+        return False, int(s.conf.get("spark.sql.shuffle.partitions"))
+
+    graph._GRAPHS.clear()
+    with monkeypatch.context() as m:
+        m.setattr(graph, "_adjacency_layout", persisted)
+        g = graph._purchase_graph(spark, sf_dir)
+        assert "adj_arrays" not in g
+        want = _entry_rows(g)
+    graph._GRAPHS.clear()
+    return want
+
+
+def _driver_build(spark, sf_dir: str) -> dict:
+    """A fresh build at ``sf_dir`` that must run no Spark job."""
+    from udacity_data_engineer_capstone_spark.operators import graph
+
+    graph._GRAPHS.clear()
+    with spark_job_ids(spark) as ids:
+        g = graph._purchase_graph(spark, sf_dir)
+    assert ids == []
+    for k in _ENTRY_FRAMES:
+        assert g[k].rdd.getNumPartitions() == 1, k
+    return g
+
+
+def test_arrow_build_equals_persisted_build(spark, monkeypatch):
+    """At sf0.001 every entry frame of the driver's Arrow build holds
+    the rows of the persisted Spark build, with the same names, types
+    and nullability (``deg`` is not nullable)."""
+    want = _persisted_build(spark, monkeypatch, SF_DIR)
+    g = _driver_build(spark, SF_DIR)
+    assert _entry_rows(g) == want
+    assert not want["deg"][0]["deg"].nullable
+    assert len(want["edges"][1]) > 1000
+
+
+def test_arrow_build_keeps_spark_semantics(spark, monkeypatch, tmp_path):
+    """A hand-built orders/lineitem pair gives the same entry frames
+    from both builds: the join drops null and unmatched keys, DISTINCT
+    keeps a null source or destination and collapses repeated pairs,
+    ``deg`` counts the null source and ``adj`` drops it. An INT32
+    ``o_custkey`` and ``l_orderkey`` check the types: ``edges.s`` stays
+    INT, and the union widens ``bidir`` to BIGINT."""
+    orders = pa.table(
+        {
+            "o_orderkey": pa.array([1, 2, 3, 4, None, 5], pa.int64()),
+            "o_custkey": pa.array([10, None, 11, 12, 13, 10], pa.int32()),
+        }
+    )
+    lineitem = pa.table(
+        {
+            "l_orderkey": pa.array([1, 1, 1, 2, 3, 3, 9, None, 5, 5], pa.int32()),
+            "l_suppkey": pa.array(
+                [100, 100, 101, 100, None, None, 102, 103, 100, 101], pa.int64()
+            ),
+        }
+    )
+    pq.write_table(orders, tmp_path / "orders.parquet")
+    pq.write_table(lineitem, tmp_path / "lineitem.parquet")
+    want = _persisted_build(spark, monkeypatch, str(tmp_path))
+    g = _driver_build(spark, str(tmp_path))
+    assert _entry_rows(g) == want
+    assert want["edges"][1] == Counter(
+        {(20, 201): 1, (20, 203): 1, (None, 201): 1, (22, None): 1}
+    )
+    assert [f.dataType.simpleString() for f in want["edges"][0]] == ["int", "bigint"]
+    assert [f.dataType.simpleString() for f in want["bidir"][0]] == ["bigint"] * 2
+    assert want["deg"][1][(None, 2)] == 1  # from (None, 201) and (22, None)
+    assert all(s is not None for s, _, _ in want["adj"][1])
+    assert "adj_arrays" not in g  # a null destination: no driver kernel
+
+
+def test_failed_footer_check_reads_nothing_on_driver(spark, monkeypatch):
+    """When the inputs' footer row counts fail the layout rule, no input
+    column is read on the driver: the edges come from the Spark join,
+    and a small edge count still gives the driver-local build."""
+    from udacity_data_engineer_capstone_spark.operators import graph
+
+    want = _entry_rows(_driver_build(spark, SF_DIR))
+    real = graph.parquet_file
+
+    class FooterOnly:
+        def __init__(self, f):
+            self.metadata, self.schema_arrow = f.metadata, f.schema_arrow
+            self.close = f.close
+
+        def read(self, *args, **kwargs):
+            raise AssertionError("input read on the driver")
+
+    monkeypatch.setattr(graph, "parquet_file", lambda *a: FooterOnly(real(*a)))
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    prior = spark.conf.get(key)
+    # 100 KB: under the 7,500 input rows at 24 B, over the 2,888 edges
+    spark.conf.set(key, "100k")
+    try:
+        graph._GRAPHS.clear()
+        g = graph._purchase_graph(spark, SF_DIR)
+        assert _entry_rows(g) == want
+        assert "adj_arrays" in g
+    finally:
+        spark.conf.set(key, prior)
+        graph._GRAPHS.clear()
 
 
 def test_iterative_fixpoint_exit_fires_on_converging_state(spark):

@@ -8,6 +8,7 @@ format, not just self-consistency."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pandas as pd
 import pytest
@@ -87,6 +88,59 @@ def test_spark_reader_stage_is_cached(spark, tmp_path):
     assert before  # staged once
     read_sas7bdat(spark, path)
     assert set(glob.glob(os.path.join(stage_root, "*cached*"))) == before
+
+
+def _stage_root() -> str:
+    import tempfile
+
+    return os.path.join(tempfile.gettempdir(), f"engine_sas7bdat_{os.getuid()}")
+
+
+def _stages(path: str) -> list[str]:
+    """The staged copies of the input at ``path``: one per fingerprint."""
+    import glob
+
+    base = os.path.abspath(path).replace("/", "_").strip("_")
+    return glob.glob(os.path.join(_stage_root(), f"{base}-{'?' * 16}.parquet"))
+
+
+def test_rewritten_input_leaves_one_stage(spark, tmp_path):
+    """Reading an input again after it was rewritten (a new mtime and
+    size) stages it anew and removes the stage of its old contents."""
+    path = str(tmp_path / "rewritten.sas7bdat")
+    write_sas7bdat(path, COLS, _rows(20), dataset_name="OLD")
+    assert read_sas7bdat(spark, path).count() == 20
+    old = _stages(path)
+    assert len(old) == 1
+    write_sas7bdat(path, COLS, _rows(30), dataset_name="NEW")
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert read_sas7bdat(spark, path).count() == 30
+    now = _stages(path)
+    assert len(now) == 1 and now != old
+
+
+def test_stale_stage_removed_on_read(spark, tmp_path):
+    """A stage of the same input under another fingerprint (left by an
+    earlier session, before the input changed) is removed by the next
+    read; a stage of a different input whose name extends this one's is
+    kept."""
+    path = str(tmp_path / "planted.sas7bdat")
+    write_sas7bdat(path, COLS, _rows(10), dataset_name="PLANT")
+    os.makedirs(_stage_root(), mode=0o700, exist_ok=True)
+    base = os.path.abspath(path).replace("/", "_").strip("_")
+    stale = os.path.join(_stage_root(), f"{base}-{'0' * 16}.parquet")
+    other = os.path.join(_stage_root(), f"{base}-2-{'0' * 16}.parquet")
+    for d in (stale, other):
+        os.makedirs(d)
+    try:
+        assert _stages(path) == [stale]
+        assert read_sas7bdat(spark, path).count() == 10
+        staged = _stages(path)
+        assert len(staged) == 1 and staged != [stale]
+        assert os.path.isdir(other)
+    finally:
+        shutil.rmtree(other, ignore_errors=True)
 
 
 def test_writer_rejects_nothing_but_reader_strips_padding(tmp_path):

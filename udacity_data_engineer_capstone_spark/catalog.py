@@ -100,6 +100,20 @@ def _layout_cache_dir() -> str | None:
     return d
 
 
+def parquet_file(sf_dir: str, name: str):
+    """Table ``name``'s single parquet file, opened at its footer with
+    no row group read: ``metadata.num_rows`` is its row count and
+    ``read(columns)`` returns the named columns as an Arrow table.
+    ``None`` for a directory-shaped table or an unreadable footer."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        return pq.ParquetFile(table_path(sf_dir, name))
+    except (OSError, pa.ArrowException):
+        return None
+
+
 def _normalized_path(sf_dir: str, name: str) -> str:
     """Return a read path for the table with scan-parallel layout,
     rewriting once into the cache dir if the source needs it.
@@ -111,10 +125,12 @@ def _normalized_path(sf_dir: str, name: str) -> str:
     src = table_path(sf_dir, name)
     if os.environ.get("SPARK_GRAFT_DISABLE_LAYOUT_SHIM"):
         return src
+    meta = parquet_file(sf_dir, name)
+    if meta is None:
+        return src
     try:
         import pyarrow.parquet as pq
 
-        meta = pq.ParquetFile(src)
         rows = meta.metadata.num_rows
         if rows < _MIN_ROWS_TO_NORMALIZE or meta.num_row_groups >= max(
             4, _TARGET_ROW_GROUPS // 2

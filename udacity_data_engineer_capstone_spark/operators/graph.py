@@ -17,15 +17,17 @@ fold-order-free, so Spark and DuckDB agree exactly, at any parallelism.
 SCALE=1e9; shrink SCALE for bigger graphs.)
 
 Scale shape: the adjacency is built once per session
-(:func:`_purchase_graph`). A graph under ~1 MB is held on the driver,
-as one-partition driver-local relations plus read-only int64 arrays of
-its (src, dst, deg) adjacency; PageRank over it is one vectorized
-integer pass on the driver (:func:`_pagerank_kernel`), and the other
-operators' rounds shuffle nothing. A larger graph is persisted and
-hash-partitioned by source into ``spark.sql.shuffle.partitions``; each
-PageRank iteration over it is one equi-join of the adjacency against
-the current rank vector plus one partial+final integer aggregate, with
-no driver data collect per round, so only the node-sized vector moves.
+(:func:`_purchase_graph`). A graph under ~1 MB is built on the driver
+with pyarrow from the two inputs' key columns, with no Spark job, and
+held there as one-partition driver-local relations plus read-only int64
+arrays of its (src, dst, deg) adjacency; PageRank over it is one
+vectorized integer pass on the driver (:func:`_pagerank_kernel`), and
+the other operators' rounds shuffle nothing. A larger graph is
+persisted and hash-partitioned by source into
+``spark.sql.shuffle.partitions``; each PageRank iteration over it is one
+equi-join of the adjacency against the current rank vector plus one
+partial+final integer aggregate, with no driver data collect per round,
+so only the node-sized vector moves.
 Fixed-round loops (PageRank/PPR/LPA) chain all their rounds into one
 lazy plan that the caller's own action runs; loops that run to
 convergence (BFS, k-core, coarse LPA, the approx exits) go through
@@ -47,7 +49,11 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from udacity_data_engineer_capstone_spark.catalog import load_table, register_views
+from udacity_data_engineer_capstone_spark.catalog import (
+    load_table,
+    parquet_file,
+    register_views,
+)
 from udacity_data_engineer_capstone_spark.memo import Memo, scratch_dir
 from udacity_data_engineer_capstone_spark.operators.fixpoint import (
     _state_signature,
@@ -122,43 +128,38 @@ def _arrow_frame(spark: SparkSession, table: pa.Table) -> DataFrame:
     return spark.createDataFrame(table).coalesce(1)
 
 
-def _driver_local(df: DataFrame) -> DataFrame:
-    """``df``'s rows as a one-partition ``LocalRelation`` (Arrow
-    round-trip through the driver)."""
-    return _arrow_frame(df.sparkSession, df.toArrow())
-
-
 def _purchase_graph(spark: SparkSession, sf_dir: str) -> dict:
     """The bipartite purchase graph every iterative operator here walks:
-    distinct (customer, supplier) edges symmetrized and hash-partitioned
-    by source ONCE (``bidir``), plus the derived degree table (``deg``),
-    (s, d, deg) adjacency (``adj``) and node set (``nodes``); a graph
-    held on the driver also carries ``adj_arrays``, the adjacency's
-    ``(s, d, deg)`` columns as read-only int64 arrays. Cached per
-    (application, sf_dir), so graph_pagerank /
+    distinct (customer, supplier) edges (``edges``) symmetrized and
+    hash-partitioned by source ONCE (``bidir``), plus the derived degree
+    table (``deg``), (s, d, deg) adjacency (``adj``) and node set
+    (``nodes``); a graph held on the driver also carries ``adj_arrays``,
+    the adjacency's ``(s, d, deg)`` columns as read-only int64 arrays.
+    Cached per (application, sf_dir), so graph_pagerank /
     graph_pagerank_personalized / BFS / k-core / LPA / HITS /
     assortativity share ONE adjacency build instead of each re-running
     the identical orders⋈lineitem DISTINCT — the only edge-sized shuffle
     in the family, paid once per session like a materialized view.
 
-    Layout: the build counts the distinct edges once (the persisted
-    ``edges`` frame) and sizes the adjacency at 24 B (three BIGINTs) per
-    directed edge (:func:`_adjacency_layout`).
+    Layout: :func:`_adjacency_layout` is the only rule. It sizes the
+    adjacency at 24 B (three BIGINTs) per directed edge.
 
     - A graph under ``minPartitionSize`` (1 MB; sf0.001 has ~2,900
-      directed edges, ~68 KB) is held as driver-local relations: each
-      entry frame is collected through Arrow into a one-partition
-      ``LocalRelation`` and the persisted edge frame is released. The
+      directed edges, ~68 KB) is built on the driver with pyarrow
+      (:func:`_local_graph`) and held as one-partition driver-local
+      relations, with no Spark job. The rule is asked twice: first with
+      the two inputs' parquet footer row counts at 24 B a row, and only
+      if that passes are their key columns read on the driver
+      (:func:`_driver_edges`); then with the distinct edge count. When
+      the inputs are too big to read but the Spark build's edge count
+      passes, its edges are collected once into the same builder. The
       rounds read a plan leaf, not a cached frame, so AQE builds an
       adjacency broadcast once and every later round reuses it
-      (``ReusedExchange``; AQE never reuses a broadcast over a
-      persisted frame's ``TableCacheQueryStage``), all rounds run in
-      one stage with no shuffle, and analysis walks no nested cache
-      lineage. The Arrow table that ``adj`` is built from is also kept
-      as ``adj_arrays``, so ``graph_pagerank`` runs on the driver
-      (:func:`_pagerank_kernel`): a warm sf0.001 run with its noop
-      write is 1 job, down from 3 over the local relations and 7 over
-      the persisted adjacency.
+      (``ReusedExchange``), all rounds run in one stage with no shuffle,
+      and analysis walks no nested cache lineage. ``graph_pagerank``
+      runs on the driver over ``adj_arrays``
+      (:func:`_pagerank_kernel`): a warm sf0.001 run with its noop write
+      is 1 job.
     - A larger graph is persisted and hash-partitioned into
       ``spark.sql.shuffle.partitions`` partitions, which every round of
       every operator here inherits, so only the node-sized vector moves.
@@ -171,6 +172,9 @@ def _purchase_graph(spark: SparkSession, sf_dir: str) -> dict:
 
 
 def _build_purchase_graph(spark: SparkSession, sf_dir: str) -> dict:
+    table = _driver_edges(spark, sf_dir)
+    if table is not None and _adjacency_layout(spark, 2 * len(table) * _EDGE_BYTES)[0]:
+        return _local_graph(spark, table)
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
     # Memo entries are never localCheckpointed: a local checkpoint's
@@ -191,15 +195,17 @@ def _build_purchase_graph(spark: SparkSession, sf_dir: str) -> dict:
         .persist()
     )
     local, parts = _adjacency_layout(spark, 2 * edges.count() * _EDGE_BYTES)
-    keep = _driver_local if local else DataFrame.persist
     if local:
-        counted, edges = edges, _driver_local(edges)
-        counted.unpersist()
-    bidir = keep(
+        table = edges.toArrow()
+        edges.unpersist()
+        return _local_graph(spark, table)
+    bidir = (
         edges.union(edges.select(F.col("d").alias("s"), F.col("s").alias("d")))
         .repartition(parts, F.col("s"))
+        .persist()
     )
-    deg = keep(bidir.groupBy("s").agg(F.count(F.lit(1)).cast("long").alias("deg")))
+    deg = bidir.groupBy("s").agg(F.count(F.lit(1)).cast("long").alias("deg"))
+    deg = deg.persist()
     adj = (
         bidir.join(deg.withColumnRenamed("s", "node"), bidir["s"] == F.col("node"))
         .select("s", "d", "deg")
@@ -208,17 +214,95 @@ def _build_purchase_graph(spark: SparkSession, sf_dir: str) -> dict:
         # re-exchanging the (big) adjacency — edges stay put, only the
         # node-sized rank/label vector moves.
         .repartition(parts, F.col("s"))
+        .persist()
     )
-    if local:
-        # one collect serves both the local relation and the arrays
-        rows = adj.toArrow()
-        adj = _arrow_frame(spark, rows)
-        arrays = {"adj_arrays": tuple(_read_only(rows[c]) for c in ("s", "d", "deg"))}
-    else:
-        adj, arrays = adj.persist(), {}
-    nodes = keep(deg.select(F.col("s").alias("node")))
+    nodes = deg.select(F.col("s").alias("node")).persist()
+    return {"edges": edges, "bidir": bidir, "deg": deg, "adj": adj, "nodes": nodes}
+
+
+# The key columns the driver build reads. Spark reads a parquet INT32 or
+# INT64 column as the same type, so only those are read on the driver.
+_EDGE_INPUTS = {
+    "orders": ["o_orderkey", "o_custkey"],
+    "lineitem": ["l_orderkey", "l_suppkey"],
+}
+_KEY_TYPES = (pa.int32(), pa.int64())
+
+
+def _driver_edges(spark: SparkSession, sf_dir: str) -> pa.Table | None:
+    """The distinct purchase edges computed on the driver from the two
+    inputs' key columns; ``None``, with no column read, unless both
+    inputs are single parquet files with INT32/INT64 keys whose footer
+    row counts, at 24 B a row, pass :func:`_adjacency_layout`."""
+    files = {name: parquet_file(sf_dir, name) for name in _EDGE_INPUTS}
+    try:
+        for name, f in files.items():
+            schema = pa.schema([]) if f is None else f.schema_arrow
+            types = dict(zip(schema.names, schema.types))
+            if any(types.get(c) not in _KEY_TYPES for c in _EDGE_INPUTS[name]):
+                return None
+        rows = sum(f.metadata.num_rows for f in files.values())
+        if not _adjacency_layout(spark, rows * _EDGE_BYTES)[0]:
+            return None
+        return _arrow_edges(*(f.read(_EDGE_INPUTS[n]) for n, f in files.items()))
+    finally:
+        for f in files.values():
+            if f is not None:
+                f.close()
+
+
+def _arrow_edges(orders: pa.Table, lineitem: pa.Table) -> pa.Table:
+    """The Spark build's DISTINCT ``(s, d)`` edges of ``orders ⋈
+    lineitem``, in pyarrow: the inner join drops null keys, DISTINCT
+    keeps a null ``s`` or ``d``, and the id arithmetic raises on
+    overflow, as under ANSI mode."""
+    import pyarrow.compute as pc  # loaded on first use: only this build needs it
+
+    orders, lineitem = (
+        t.set_column(0, t.column_names[0], pc.cast(t[0], pa.int64()))  # BIGINT key
+        for t in (orders, lineitem)
+    )
+    joined = orders.join(lineitem, "o_orderkey", "l_orderkey", join_type="inner")
+    cust, supp = joined["o_custkey"], joined["l_suppkey"]
+    s = pc.multiply_checked(cust, pa.scalar(2, cust.type))
+    d = pc.add_checked(
+        pc.multiply_checked(supp, pa.scalar(2, supp.type)), pa.scalar(1, supp.type)
+    )
+    return pa.table({"s": s, "d": d}).group_by(["s", "d"]).aggregate([])
+
+
+def _local_graph(spark: SparkSession, edges: pa.Table) -> dict:
+    """The purchase graph's entries built from its distinct ``edges``
+    with pyarrow on the driver. Each frame is a one-partition
+    driver-local relation with the names, types and nullability of the
+    persisted build's frame: every column nullable but ``deg``, ``deg``
+    counting per source (a null one included), ``adj`` without null
+    sources. ``adj_arrays`` is left out when a destination is null, as
+    the kernel reads columns with no nulls."""
+    import pyarrow.compute as pc
+
+    s, d = edges["s"], edges["d"]
+    if s.type != d.type:  # UNION widens INT and BIGINT to BIGINT
+        s, d = pc.cast(s, pa.int64()), pc.cast(d, pa.int64())
+    bidir = pa.table(
+        {
+            "s": pa.chunked_array(s.chunks + d.chunks, s.type),
+            "d": pa.chunked_array(d.chunks + s.chunks, s.type),
+        }
+    )
+    counts = bidir.group_by("s").aggregate([([], "count_all")])
+    deg = pa.table({"s": counts["s"], "deg": counts["count_all"]})
+    adj = bidir.join(deg, "s", join_type="inner")
+    nodes = pa.table({"node": deg["s"]})
     g = {"edges": edges, "bidir": bidir, "deg": deg, "adj": adj, "nodes": nodes}
-    return {**g, **arrays}
+    out = {}
+    for k, t in g.items():
+        # a column read from parquet is nullable, a COUNT (deg) is not
+        schema = pa.schema(f.with_nullable(f.name != "deg") for f in t.schema)
+        out[k] = _arrow_frame(spark, t.cast(schema))
+    if adj["d"].null_count == 0:
+        out["adj_arrays"] = tuple(_read_only(adj[c]) for c in ("s", "d", "deg"))
+    return out
 
 
 def _read_only(column: pa.ChunkedArray) -> np.ndarray:

@@ -52,6 +52,8 @@ IEEE doubles; strings are fixed-width, space-padded.
 from __future__ import annotations
 
 import os
+import re
+import shutil
 import struct
 import tempfile
 from typing import Sequence
@@ -335,7 +337,9 @@ def read_sas7bdat(
     ``spark.read.parquet``, so scan parallelism, pushdown, and column
     pruning apply to every downstream query. The stage is cached per
     fingerprint of every input file's (path, mtime, size); repeated
-    reads parse the binary once.
+    reads parse the binary once, and once a read has published or reused
+    its stage, the input's stages of other fingerprints (stale, since the
+    input changed) are removed.
     """
     import hashlib
 
@@ -357,9 +361,18 @@ def read_sas7bdat(
         .strip("_")
     )
     dst = os.path.join(stage_root, f"{base}-{fp.hexdigest()[:16]}.parquet")
-    if os.path.exists(dst):
-        return spark.read.parquet(dst)
+    if not os.path.exists(dst):
+        _stage(spark, files, chunk_rows, dst)
+    stale = re.compile(re.escape(base) + r"-[0-9a-f]{16}\.parquet")
+    for name in os.listdir(stage_root):
+        if stale.fullmatch(name) and os.path.join(stage_root, name) != dst:
+            shutil.rmtree(os.path.join(stage_root, name), ignore_errors=True)
+    return spark.read.parquet(dst)
 
+
+def _stage(spark: SparkSession, files: list[str], chunk_rows: int, dst: str) -> None:
+    """Parse ``files`` one executor task each and publish the rows as the
+    parquet stage ``dst`` (one shard per file)."""
     schema = _peek_spark_schema(files[0])
     col_names = [f.name for f in schema.fields]
     # pandas dtype kinds each peeked Spark type tolerates — checked
@@ -415,9 +428,6 @@ def read_sas7bdat(
     try:
         os.rename(tmp, dst)  # atomic publish; loser of a race cleans up
     except OSError:
-        import shutil
-
         shutil.rmtree(tmp, ignore_errors=True)
         if not os.path.exists(dst):
             raise
-    return spark.read.parquet(dst)
