@@ -7,6 +7,7 @@ format, not just self-consistency."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -120,11 +121,18 @@ def test_rewritten_input_leaves_one_stage(spark, tmp_path):
     assert len(now) == 1 and now != old
 
 
+def _plant_stage(stage: str, inputs: list[str]) -> None:
+    """An empty stage directory whose sidecar records ``inputs``."""
+    os.makedirs(stage)
+    with open(os.path.join(stage, "_inputs.json"), "w") as fh:
+        json.dump(inputs, fh)
+
+
 def test_stale_stage_removed_on_read(spark, tmp_path):
     """A stage of the same input under another fingerprint (left by an
     earlier session, before the input changed) is removed by the next
-    read; a stage of a different input whose name extends this one's is
-    kept."""
+    read; a stage of a different input whose name extends this one's,
+    and whose recorded input exists, is kept."""
     path = str(tmp_path / "planted.sas7bdat")
     write_sas7bdat(path, COLS, _rows(10), dataset_name="PLANT")
     os.makedirs(_stage_root(), mode=0o700, exist_ok=True)
@@ -132,7 +140,7 @@ def test_stale_stage_removed_on_read(spark, tmp_path):
     stale = os.path.join(_stage_root(), f"{base}-{'0' * 16}.parquet")
     other = os.path.join(_stage_root(), f"{base}-2-{'0' * 16}.parquet")
     for d in (stale, other):
-        os.makedirs(d)
+        _plant_stage(d, [path])
     try:
         assert _stages(path) == [stale]
         assert read_sas7bdat(spark, path).count() == 10
@@ -141,6 +149,28 @@ def test_stale_stage_removed_on_read(spark, tmp_path):
         assert os.path.isdir(other)
     finally:
         shutil.rmtree(other, ignore_errors=True)
+
+
+def test_stage_of_deleted_input_removed_on_read(spark, tmp_path):
+    """Each stage records its inputs in an ``_inputs.json`` sidecar that
+    Spark does not read as data. Once an input is deleted, a read of any
+    other source removes its stage, and a stage with no sidecar goes
+    too."""
+    gone = str(tmp_path / "gone.sas7bdat")
+    write_sas7bdat(gone, COLS, _rows(10), dataset_name="GONE")
+    assert read_sas7bdat(spark, gone).count() == 10
+    (stage,) = _stages(gone)
+    with open(os.path.join(stage, "_inputs.json")) as fh:
+        assert json.load(fh) == [os.path.abspath(gone)]
+    bare = os.path.join(_stage_root(), f"bare-{'0' * 16}.parquet")
+    os.makedirs(bare)
+    os.remove(gone)
+    kept = str(tmp_path / "kept.sas7bdat")
+    write_sas7bdat(kept, COLS, _rows(5), dataset_name="KEPT")
+    assert read_sas7bdat(spark, kept).count() == 5
+    assert not os.path.exists(stage)
+    assert not os.path.exists(bare)
+    assert len(_stages(kept)) == 1
 
 
 def test_writer_rejects_nothing_but_reader_strips_padding(tmp_path):

@@ -109,7 +109,7 @@ class _StatePartitions(StreamingQueryListener):
 
 def test_drains_size_state_partitions_to_input(spark, sf_dir):
     """A drain's state stores are sized to the bytes its source reads:
-    sf0.001's staged events (~40 KB) and its sorted event log each drain
+    sf0.001's staged events (~45 KB) and its sorted event log each drain
     through ONE state partition."""
     from udacity_data_engineer_capstone_spark.streaming.events import (
         stream_python_source,
@@ -892,3 +892,217 @@ def test_ewma_state_buckets_derived_from_staged_rows(spark, sf_dir, monkeypatch)
         assert _state_buckets(src, rows_per_bucket=4096, floor=32) == expected
         for query in ("stream_ewma_state", "stream_session_timeout_state"):
             assert _query_buckets(spark, monkeypatch, query, sf) == [32]
+
+
+# --- events staging: on the driver with Arrow when small, Spark otherwise ---
+
+
+def _forced_spark(monkeypatch, stage, spark, sf_dir):
+    """``stage(spark, sf_dir)`` with the driver path switched off."""
+    from udacity_data_engineer_capstone_spark.streaming import events
+
+    with monkeypatch.context() as m:
+        m.setattr(events, "_driver_events", lambda *a: None)
+        return stage(spark, sf_dir)
+
+
+def _staged_rows(spark, src):
+    """A staging's rows, as a multiset, read back through
+    ``stream_events``' schema."""
+    from collections import Counter
+
+    from udacity_data_engineer_capstone_spark.streaming.events import (
+        EVENTS_STREAM_SCHEMA,
+    )
+
+    rows = spark.read.schema(EVENTS_STREAM_SCHEMA).parquet(src).collect()
+    return Counter(tuple(r) for r in rows)
+
+
+def _shards(src, prefix="part-"):
+    """``(mtime, ts values)`` of each ``prefix`` shard in ``src``, in
+    file-name order; ``ts`` as integers (None for null), file order."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out = []
+    for p in sorted(p for p in os.listdir(src) if p.startswith(prefix)):
+        path = os.path.join(src, p)
+        ts = pq.read_table(path, columns=["ts"])["ts"]
+        out.append((os.path.getmtime(path), ts.cast(pa.int64()).to_pylist()))
+    return out
+
+
+def _assert_ordered_shards(shards):
+    """At most 8 shards, ascending by mtime, each sorted by ``ts`` with
+    nulls first, disjoint in ``ts`` and ascending from one to the next,
+    so no value (null included) spans two shards."""
+    assert 1 < len(shards) <= 8
+    mtimes = [m for m, _ in shards]
+    assert mtimes == sorted(mtimes) and len(set(mtimes)) == len(mtimes)
+    lo = float("-inf")
+    seen = set()
+    for _, ts in shards:
+        keys = [float("-inf") if v is None else v for v in ts]
+        assert keys == sorted(keys)
+        assert not seen & set(ts), "a ts value spans two shards"
+        seen |= set(ts)
+        assert keys[0] >= lo
+        lo = keys[-1]
+
+
+def _hand_built_events(tmp_path, id_type=None):
+    """A ``tmp_path`` events table of 160 rows: 5 null ``ts``, runs of
+    1 to 29 equal ``ts``, one null ``event_id``; ``event_id`` typed
+    ``id_type`` (INT64 by default)."""
+    from datetime import datetime, timedelta
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = datetime(2024, 6, 1)
+    ts, run, k = [None] * 5, 1, 0
+    while len(ts) < 160:
+        ts += [t0 + timedelta(minutes=7 * k)] * min(run, 160 - len(ts))
+        run, k = run * 3 % 29 + 1, k + 1
+    n = len(ts)
+    table = pa.table(
+        {
+            "event_id": pa.array(
+                [None if i == 33 else (i * 7) % n - 40 for i in range(n)],
+                id_type or pa.int64(),
+            ),
+            "ts": pa.array(ts[::-1], pa.timestamp("us")),
+            "user_id": pa.array([i % 11 for i in range(n)], pa.int64()),
+            "event_type": pa.array(["view", "purchase"] * (n // 2)),
+            "value": pa.array([i / 4 for i in range(n)], pa.float64()),
+            "props": pa.array(["{}"] * n),
+        }
+    )
+    pq.write_table(table, str(tmp_path / "events.parquet"))
+    return str(tmp_path)
+
+
+@pytest.mark.parametrize("tier", ["sf0.001", "sf0.01"])
+def test_arrow_staging_equals_spark_staging(spark, monkeypatch, tier):
+    """sf0.001 and sf0.01 are staged on the driver; the rows read back
+    through the stream schema equal the Spark staging's, and both are
+    cut into ordered shards."""
+    from tests.conftest import SF_DIR, SF_DIR_MED
+    from udacity_data_engineer_capstone_spark.streaming import events
+
+    sf = {"sf0.001": SF_DIR, "sf0.01": SF_DIR_MED}[tier]
+    assert events._driver_events(spark, sf) is not None
+    arrow = events._stage_events(spark, sf)
+    forced = _forced_spark(monkeypatch, events._stage_events, spark, sf)
+    assert _staged_rows(spark, arrow) == _staged_rows(spark, forced)
+    for src in (arrow, forced):
+        _assert_ordered_shards(_shards(src))
+
+
+def test_stagings_cut_only_between_distinct_ts(spark, monkeypatch, tmp_path):
+    """On a table with a null ``ts`` and runs of equal ``ts``, both
+    stagings write shards disjoint in ``ts``, ascending by mtime, with
+    no value spanning two shards, and hold the same rows."""
+    from udacity_data_engineer_capstone_spark.streaming import events
+
+    sf = _hand_built_events(tmp_path)
+    assert events._driver_events(spark, sf) is not None
+    arrow = events._stage_events(spark, sf)
+    forced = _forced_spark(monkeypatch, events._stage_events, spark, sf)
+    for src in (arrow, forced):
+        _assert_ordered_shards(_shards(src))
+    assert _staged_rows(spark, arrow) == _staged_rows(spark, forced)
+    assert sum(r[1] is None for r in _staged_rows(spark, arrow).elements()) == 5
+
+
+def test_dup_stagings_equal_spark_stagings(spark, monkeypatch, tmp_path):
+    """The duplicate-batch and duplicate-shard stagings hold the same
+    rows whether built on the driver or by Spark: ``event_id % 3 == 0``
+    rows twice, a null ``event_id`` once. Each duplicate shard lands
+    0.4 s behind its anchor shard, and its shards are ordered too."""
+    from udacity_data_engineer_capstone_spark.streaming import events
+
+    sf = _hand_built_events(tmp_path)
+    stagings = {}
+    for stage in (
+        events._stage_events_with_dup_batch,
+        events._stage_events_with_dup_shards,
+    ):
+        arrow = stage(spark, sf)
+        forced = _forced_spark(monkeypatch, stage, spark, sf)
+        rows = _staged_rows(spark, arrow)
+        assert rows == _staged_rows(spark, forced)
+        for (event_id, *_), n in rows.items():
+            want = 1 if event_id is None or event_id % 3 else 2
+            assert n == want, (stage.__name__, event_id, n)
+        stagings[stage] = (arrow, forced)
+    for src in stagings[events._stage_events_with_dup_shards]:
+        orig, dups = _shards(src), _shards(src, "dup-")
+        _assert_ordered_shards(dups)
+        for i, (m, _) in enumerate(dups):
+            assert m == pytest.approx(orig[min(i, len(orig) - 1)][0] + 0.4)
+
+
+def test_small_staging_launches_no_spark_job(spark):
+    """Staging sf0.001, with or without planted duplicates, launches no
+    Spark job."""
+    from tests.conftest import SF_DIR, spark_job_ids
+    from udacity_data_engineer_capstone_spark.streaming import events
+
+    with spark_job_ids(spark) as ids:
+        events._stage_events(spark, SF_DIR)
+        events._stage_events_with_dup_batch(spark, SF_DIR)
+        events._stage_events_with_dup_shards(spark, SF_DIR)
+    assert ids == []
+
+
+@pytest.mark.parametrize("case", ["footer_size", "column_types", "session_tz"])
+def test_staging_falls_back_to_spark_without_driver_read(
+    spark, monkeypatch, tmp_path, case
+):
+    """A footer over one ``minPartitionSize``, a column of another type
+    or a non-UTC session stages through Spark, and no column is read on
+    the driver."""
+    import pyarrow as pa
+
+    from tests.conftest import SF_DIR, spark_job_ids
+    from udacity_data_engineer_capstone_spark.streaming import events
+
+    real = events.parquet_file
+
+    class FooterOnly:
+        def __init__(self, f):
+            self.metadata, self.schema_arrow = f.metadata, f.schema_arrow
+            self.close = f.close
+
+        def read(self, *args, **kwargs):
+            raise AssertionError("events read on the driver")
+
+    def footer_only(*args):
+        f = real(*args)
+        return None if f is None else FooterOnly(f)
+
+    monkeypatch.setattr(events, "parquet_file", footer_only)
+    min_part = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    sf, key, value = {
+        # sf0.001's row group is 31 KB uncompressed
+        "footer_size": (SF_DIR, min_part, "16k"),
+        "column_types": (_hand_built_events(tmp_path, pa.int32()), None, None),
+        "session_tz": (SF_DIR, "spark.sql.session.timeZone", "America/New_York"),
+    }[case]
+    prior = spark.conf.get(key) if key else None
+    try:
+        if key:
+            spark.conf.set(key, value)
+        assert events._driver_events(spark, sf) is None
+        with spark_job_ids(spark) as ids:
+            src = events._stage_events(spark, sf)
+    finally:
+        if key:
+            spark.conf.set(key, prior)
+    assert ids, "expected the Spark staging"
+    _assert_ordered_shards(_shards(src))
+    assert sum(_staged_rows(spark, src).values()) == (
+        load_table(spark, sf, "events").count()
+    )

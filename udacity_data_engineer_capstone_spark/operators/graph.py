@@ -61,7 +61,7 @@ from udacity_data_engineer_capstone_spark.operators.fixpoint import (
 )
 from udacity_data_engineer_capstone_spark.registry import query
 from udacity_data_engineer_capstone_spark.session import (
-    min_partition_bytes,
+    fits_one_partition,
     sized_partitions,
 )
 
@@ -116,7 +116,7 @@ def _adjacency_layout(spark: SparkSession, nbytes: int) -> tuple[bool, int]:
     hash partitions (one where the sizing rule gives one): a join reuses
     a cached side's hash partitioning only when it has at least that
     many, so with fewer every round re-shuffles the adjacency."""
-    if nbytes <= min_partition_bytes(spark):
+    if fits_one_partition(spark, nbytes):
         return True, 1
     if sized_partitions(spark, nbytes) == 1:
         return False, 1

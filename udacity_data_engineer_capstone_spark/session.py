@@ -232,6 +232,15 @@ def min_partition_bytes(spark: SparkSession) -> int:
     )
 
 
+def fits_one_partition(spark: SparkSession, nbytes: int) -> bool:
+    """Whether ``nbytes`` of data is at most one
+    ``spark.sql.adaptive.coalescePartitions.minPartitionSize``: small
+    enough that AQE would coalesce it into a single partition, so the
+    driver can hold it. The graph adjacency and the events staging both
+    decide by this rule whether to build on the driver."""
+    return nbytes <= min_partition_bytes(spark)
+
+
 def sized_partitions(spark: SparkSession, nbytes: int) -> int:
     """Partition count for a persisted frame of ``nbytes``, by AQE's own
     coalescing arithmetic: one partition per

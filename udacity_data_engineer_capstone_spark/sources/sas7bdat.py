@@ -51,6 +51,7 @@ IEEE doubles; strings are fixed-width, space-padded.
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import shutil
@@ -337,9 +338,12 @@ def read_sas7bdat(
     ``spark.read.parquet``, so scan parallelism, pushdown, and column
     pruning apply to every downstream query. The stage is cached per
     fingerprint of every input file's (path, mtime, size); repeated
-    reads parse the binary once, and once a read has published or reused
-    its stage, the input's stages of other fingerprints (stale, since the
-    input changed) are removed.
+    reads parse the binary once. Each stage records its input paths in
+    an ``_inputs.json`` sidecar (Spark skips ``_`` files), and once a
+    read has published or reused its stage it sweeps the stage root
+    (:func:`_sweep`): the input's stages of other fingerprints (stale,
+    since the input changed) are removed, and so is every stage whose
+    recorded inputs are gone or that has no sidecar.
     """
     import hashlib
 
@@ -363,11 +367,38 @@ def read_sas7bdat(
     dst = os.path.join(stage_root, f"{base}-{fp.hexdigest()[:16]}.parquet")
     if not os.path.exists(dst):
         _stage(spark, files, chunk_rows, dst)
-    stale = re.compile(re.escape(base) + r"-[0-9a-f]{16}\.parquet")
-    for name in os.listdir(stage_root):
-        if stale.fullmatch(name) and os.path.join(stage_root, name) != dst:
-            shutil.rmtree(os.path.join(stage_root, name), ignore_errors=True)
+    _sweep(stage_root, base, dst)
     return spark.read.parquet(dst)
+
+
+_INPUTS = "_inputs.json"  # a stage's input paths; Spark skips "_" files
+_STAGE = r"-[0-9a-f]{16}\.parquet"  # the fingerprint suffix of a stage
+
+
+def _sweep(stage_root: str, base: str, dst: str) -> None:
+    """Remove every published stage in ``stage_root`` but ``dst`` that
+    no read can reach again: ``base``'s stages of other fingerprints,
+    stages whose recorded inputs are gone, and stages with no
+    ``_inputs.json`` sidecar. A stage being written (``….tmp.<pid>``) is
+    not published, and a published one always has its sidecar."""
+    own = re.compile(re.escape(base) + _STAGE)
+    stage = re.compile(".+" + _STAGE)
+    for name in os.listdir(stage_root):
+        path = os.path.join(stage_root, name)
+        if path == dst or not stage.fullmatch(name):
+            continue
+        if own.fullmatch(name) or not _inputs_exist(path):
+            shutil.rmtree(path, ignore_errors=True)
+
+
+def _inputs_exist(stage: str) -> bool:
+    """Whether ``stage`` has a sidecar and every input it names exists."""
+    try:
+        with open(os.path.join(stage, _INPUTS)) as fh:
+            inputs = json.load(fh)
+    except (OSError, ValueError):
+        return False
+    return all(os.path.exists(p) for p in inputs)
 
 
 def _stage(spark: SparkSession, files: list[str], chunk_rows: int, dst: str) -> None:
@@ -425,6 +456,8 @@ def _stage(spark: SparkSession, files: list[str], chunk_rows: int, dst: str) -> 
     parsed = paths_df.mapInPandas(_parse_files, schema=schema)
     tmp = f"{dst}.tmp.{os.getpid()}"
     parsed.write.parquet(tmp)
+    with open(os.path.join(tmp, _INPUTS), "w") as fh:
+        json.dump(files, fh)
     try:
         os.rename(tmp, dst)  # atomic publish; loser of a race cleans up
     except OSError:

@@ -24,16 +24,23 @@ import threading
 import time
 import uuid
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from udacity_data_engineer_capstone_spark.catalog import load_table
+from udacity_data_engineer_capstone_spark.catalog import load_table, parquet_file
 from udacity_data_engineer_capstone_spark.memo import Memo, scratch_dir
 from udacity_data_engineer_capstone_spark.registry import query
-from udacity_data_engineer_capstone_spark.session import sized_partitions
+from udacity_data_engineer_capstone_spark.session import (
+    fits_one_partition,
+    sized_partitions,
+)
 
 EVENTS_STREAM_SCHEMA = T.StructType(
     [
@@ -74,8 +81,10 @@ def _staged(spark: SparkSession, sf_dir: str, kind: str, stage, table="events") 
 
 def stage_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """The events table staged once per session as a directory the
-    file-source stream can watch (:func:`_stage_events`). Callers must
-    treat it as read-only."""
+    file-source stream can watch (:func:`_stage_events`): at most 8
+    ``ts``-ordered shards with ascending modification times, written on
+    the driver with pyarrow when the table is small and by Spark
+    otherwise. Callers must treat it as read-only."""
     return _staged(spark, sf_dir, "events", _stage_events)
 
 
@@ -83,27 +92,151 @@ def _stage_events(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the events table into a new directory the file-source
     stream can watch (normalizing the NANOS timestamp on the way).
 
-    Files are staged in EVENT-TIME order: range-partitioned on ``ts``
-    with ascending modification times, so the file source's
+    Files are staged in EVENT-TIME order: cut into contiguous ``ts``
+    ranges with ascending modification times, so the file source's
     discovery order (mod-time, then path) feeds micro-batches whose
     watermark only ever trails data still to come. Unordered staging
     would let the watermark jump to max(ts)−delay on an early batch and
     silently drop later-arriving older files from join/aggregation
     state — exactly the failure a production job avoids by reading an
-    append-ordered log (kafka, LSM'd object store listing)."""
+    append-ordered log (kafka, LSM'd object store listing).
+
+    A small table (:func:`_driver_events`: sf0.001 and sf0.01) is read,
+    sorted and cut on the driver with pyarrow and launches no Spark job;
+    a larger one (sf0.1) is range-partitioned and written by Spark.
+    Both go through :func:`_write_ordered_shards`."""
+    return _stage_ordered(_events_source(spark, sf_dir))
+
+
+def _stage_ordered(events: DataFrame | pa.Table) -> str:
+    """``events`` written by :func:`_write_ordered_shards` into a new
+    directory, its shards' modification times ascending in ``ts``
+    order."""
     out = scratch_dir("engine_stream_src_")
     shutil.rmtree(out)
-    (
-        load_table(spark, sf_dir, "events")
-        .repartitionByRange(8, "ts")
-        .sortWithinPartitions("ts")
-        .write.parquet(out)
-    )
+    _write_ordered_shards(events, out)
     parts = sorted(p for p in os.listdir(out) if p.startswith("part-"))
     base = time.time() - len(parts) - 10
     for i, p in enumerate(parts):
         os.utime(os.path.join(out, p), (base + i, base + i))
     return out
+
+
+def _events_source(spark: SparkSession, sf_dir: str) -> DataFrame | pa.Table:
+    """The events table to stage: the Arrow table :func:`_driver_events`
+    reads when the table is small, else ``load_table``'s frame."""
+    table = _driver_events(spark, sf_dir)
+    return load_table(spark, sf_dir, "events") if table is None else table
+
+
+def _driver_events(spark: SparkSession, sf_dir: str) -> pa.Table | None:
+    """The events table read on the driver with pyarrow; ``None``, with
+    no column read, unless all of these hold:
+
+    - the session time zone is UTC (Spark's path reads a naive ``ts``
+      in the session time zone; the driver's reads it as UTC);
+    - the table is a single parquet file whose row groups hold at most
+      one ``minPartitionSize`` uncompressed
+      (:func:`~udacity_data_engineer_capstone_spark.session.fits_one_partition`,
+      the rule the graph adjacency also uses);
+    - its columns are exactly :data:`EVENTS_STREAM_SCHEMA`'s, with the
+      same Arrow types and ``ts`` as ``timestamp[us]``, naive or UTC (a
+      NANOS ``ts``, which Spark reads as a long, is left to Spark)."""
+    if spark.conf.get("spark.sql.session.timeZone") != "UTC":
+        return None
+    f = parquet_file(sf_dir, "events")
+    if f is None:
+        return None
+    try:
+        meta = f.metadata
+        nbytes = sum(
+            meta.row_group(i).total_byte_size for i in range(meta.num_row_groups)
+        )
+        if not fits_one_partition(spark, nbytes) or not _stream_typed(f.schema_arrow):
+            return None
+        return f.read()
+    finally:
+        f.close()
+
+
+def _stream_typed(schema: pa.Schema) -> bool:
+    """Whether ``schema`` has exactly the columns and Arrow types of
+    :data:`EVENTS_STREAM_SCHEMA`, ``ts`` naive or UTC."""
+    got = dict(zip(schema.names, schema.types))
+    return len(got) == len(schema.names) and any(
+        got == dict(zip(want.names, want.types))
+        for want in (
+            to_arrow_schema(EVENTS_STREAM_SCHEMA, timestamp_utc=utc)
+            for utc in (True, False)
+        )
+    )
+
+
+def _every_third(events: DataFrame | pa.Table) -> DataFrame | pa.Table:
+    """The rows of ``events`` whose ``event_id % 3 == 0``, the planted
+    duplicates; a null ``event_id`` is dropped, as Spark's filter drops
+    it."""
+    if isinstance(events, DataFrame):
+        return events.filter(F.col("event_id") % 3 == 0)
+    ids = events["event_id"]
+    rem = pc.subtract(ids, pc.multiply(pc.divide(ids, 3), 3))  # x - trunc(x / 3) * 3
+    return events.filter(pc.equal(rem, 0))
+
+
+_SHARDS = 8  # time-ordered files per staging
+
+
+def _write_ordered_shards(events: DataFrame | pa.Table, out: str) -> None:
+    """Write ``events`` (a Spark frame or an Arrow table) into the new
+    directory ``out`` as at most 8 ``part-NNNNN`` parquet files sorted
+    by ``ts``, nulls first, each holding a contiguous ``ts`` range.
+    A boundary falls only between distinct ``ts`` values, so no value
+    spans two files: Spark's range partitioner never splits one key,
+    and the Arrow cut (:func:`_shard_bounds`) moves each near-equal cut
+    forward to the next new value."""
+    if isinstance(events, DataFrame):
+        (
+            events.repartitionByRange(_SHARDS, "ts")
+            .sortWithinPartitions("ts")
+            .write.parquet(out)
+        )
+        return
+    order = pc.sort_indices(events, [("ts", "ascending")], null_placement="at_start")
+    events = events.take(order)
+    bounds = _shard_bounds(events["ts"], _SHARDS)
+    _write_parts([events.slice(lo, hi - lo) for lo, hi in bounds], out)
+
+
+def _shard_bounds(ts: pa.ChunkedArray, k: int) -> list[tuple[int, int]]:
+    """``[lo, hi)`` row ranges cutting the sorted, nulls-first ``ts``
+    into at most ``k`` shards: each of the ``k - 1`` near-equal cuts
+    moves forward to the first row whose value differs from the row
+    before it (a null run counts as one value). One empty range for an
+    empty column."""
+    n, nulls = len(ts), ts.null_count
+    values = ts.drop_null().cast(pa.int64()).to_numpy()
+    starts = np.flatnonzero(np.diff(values)) + 1 + nulls
+    if 0 < nulls < n:
+        starts = np.concatenate([[nulls], starts])
+    wanted = -(-np.arange(1, k) * n // k)  # ceil(i * n / k)
+    found = np.searchsorted(starts, wanted)
+    cuts = [0, *np.unique(starts[found[found < len(starts)]]).tolist(), n]
+    return list(zip(cuts, cuts[1:]))
+
+
+def _write_parts(tables: list[pa.Table], out: str) -> None:
+    """Write each table as one ``part-NNNNN-<uuid>.snappy.parquet`` file
+    in ``out`` (created if missing; names unique per call, as Spark's
+    append makes them), with :data:`EVENTS_STREAM_SCHEMA`'s Arrow types:
+    ``ts`` as ``timestamp[us, UTC]``."""
+    import pyarrow.parquet as pq  # loaded on first use: only a staging writes
+
+    schema = to_arrow_schema(EVENTS_STREAM_SCHEMA)
+    tag = uuid.uuid4().hex
+    os.makedirs(out, exist_ok=True)
+    for i, t in enumerate(tables):
+        path = os.path.join(out, f"part-{i:05d}-{tag}.snappy.parquet")
+        pq.write_table(t.select(schema.names).cast(schema), path)
 
 
 def stream_events(spark: SparkSession, src_dir: str) -> DataFrame:
@@ -529,9 +662,13 @@ FROM events
 def _stage_events_with_dup_batch(spark: SparkSession, sf_dir: str) -> str:
     """A new events staging plus a planted duplicate batch: one third
     of the events appended again."""
-    src = _stage_events(spark, sf_dir)
-    ev = load_table(spark, sf_dir, "events")
-    ev.filter(F.col("event_id") % 3 == 0).write.mode("append").parquet(src)
+    events = _events_source(spark, sf_dir)
+    src = _stage_ordered(events)
+    dups = _every_third(events)
+    if isinstance(dups, DataFrame):
+        dups.write.mode("append").parquet(src)
+    else:
+        _write_parts([dups], src)
     return src
 
 
@@ -1334,16 +1471,11 @@ def stage_events_with_dups(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _stage_events_with_dup_shards(spark: SparkSession, sf_dir: str) -> str:
-    src = _stage_events(spark, sf_dir)
+    events = _events_source(spark, sf_dir)
+    src = _stage_ordered(events)
     dup_tmp = scratch_dir("engine_stream_dup_")
     shutil.rmtree(dup_tmp)
-    (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_id") % 3 == 0)
-        .repartitionByRange(8, "ts")
-        .sortWithinPartitions("ts")
-        .write.parquet(dup_tmp)
-    )
+    _write_ordered_shards(_every_third(events), dup_tmp)
     orig_parts = sorted(p for p in os.listdir(src) if p.startswith("part-"))
     dup_parts = sorted(p for p in os.listdir(dup_tmp) if p.startswith("part-"))
     for i, p in enumerate(dup_parts):
