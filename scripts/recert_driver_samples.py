@@ -21,6 +21,7 @@ Run:  python scripts/recert_driver_samples.py  [round_label]
 
 from __future__ import annotations
 
+import argparse
 import glob
 import json
 import os
@@ -30,7 +31,9 @@ import time
 import traceback
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+# In place of the script's own directory, whose profile.py would shadow
+# the standard library module pyspark imports.
+sys.path[0] = REPO
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -44,7 +47,9 @@ def sampled_ids() -> set[str]:
 
 
 def main() -> int:
-    label = sys.argv[1] if len(sys.argv) > 1 else "adhoc"
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("round_label", nargs="?", default="adhoc")
+    label = ap.parse_args().round_label
     sampled = sampled_ids()
 
     import udacity_data_engineer_capstone_spark as engine

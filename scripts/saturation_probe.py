@@ -27,12 +27,15 @@ Outputs one JSON line; the numbers are recorded in SCALE.md.
 
 from __future__ import annotations
 
+import argparse
 import hashlib
 import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# In place of the script's own directory, whose profile.py would shadow
+# the standard library module pyspark imports.
+sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def bloom_probe(
@@ -117,6 +120,7 @@ def minhash_bucket_probe(spark, sf_dir: str) -> dict:
 
 
 if __name__ == "__main__":
+    argparse.ArgumentParser(description=__doc__.split("\n\n")[0]).parse_args()
     out = {
         "bloom": [
             bloom_probe(60_000, hex_width=5),  # sf0.1-equiv, 5-hex floor
