@@ -500,16 +500,17 @@ def main() -> None:
     # VERDICT r12 item 8 (measurement honesty): the two remaining
     # one-time costs are timed explicitly per bench run instead of
     # being absorbed by a first timed sample (the session-shared
-    # purchase-graph adjacency) or hidden entirely by a cross-process
-    # /tmp cache (the python-source sorted log). Both are recorded in
+    # purchase-graph adjacency) or hidden entirely by the cross-process
+    # stage cache (the python-source sorted log). Both are recorded in
     # BENCH_DETAIL like `bfs_layout`; the graph headline samples below
     # then time traversal over the session-cached adjacency, the same
     # split r12 made for the BFS layout.
+    from udacity_data_engineer_capstone_spark.memo import scratch_dir
     from udacity_data_engineer_capstone_spark.operators.graph import (
         _purchase_graph,
     )
     from udacity_data_engineer_capstone_spark.streaming.events import (
-        _stage_sorted_log,
+        _write_sorted_log,
     )
 
     t0 = time.perf_counter()
@@ -527,12 +528,14 @@ def main() -> None:
         ),
     }
     t0 = time.perf_counter()
-    _stage_sorted_log(spark, sf_dir, force=True)
+    _write_sorted_log(
+        spark, sf_dir, os.path.join(scratch_dir("engine_log_"), "log")
+    )
     events_staging = {
         "build_sec": round(time.perf_counter() - t0, 3),
         "note": (
-            "stream_python_source's event_id-sorted log staging,"
-            " rebuilt with force=True so the cross-process /tmp cache"
+            "stream_python_source's event_id-sorted log build, written"
+            " into a scratch directory so the cross-process stage cache"
             " can't hide the cost from every recorded number"
         ),
     }

@@ -270,7 +270,7 @@ def _cell_exprs(col: str, canon_type: str, engine: str, scale: int):
         base = f"CAST({q} AS STRING)" if engine == "spark" else f"CAST({q} AS VARCHAR)"
     elif canon_type == "timestamp":
         base = (
-            f"CAST(unix_micros({q}) AS STRING)"
+            f"CAST(unix_micros(CAST({q} AS TIMESTAMP)) AS STRING)"
             if engine == "spark"
             else f"CAST(epoch_us({q}) AS VARCHAR)"
         )

@@ -53,6 +53,14 @@ def test_agghash_agrees_where_exact_gate_passes(spark, name):
     compare_agghash(spark, name, SF)  # must agree
 
 
+@pytest.mark.parametrize("sf_dir", [SF, "/root/testdata/sf0.01"])
+def test_agghash_renders_timestamp_ntz(spark, sf_dir):
+    """``canon_spark_type`` folds TIMESTAMP_NTZ into timestamp, so the
+    Spark rendering must accept both: ``tpch_q3_shipping_priority``
+    returns ``o_orderdate`` as TIMESTAMP_NTZ."""
+    compare_agghash(spark, "tpch_q3_shipping_priority", sf_dir)
+
+
 def _mutated(name: str, old: str, new: str):
     spec = QUERIES[name]
     orig = spec.oracle_text()

@@ -3,24 +3,34 @@ per-process scratch root its directories live under."""
 
 from __future__ import annotations
 
+import ast
 import os
+import shutil
+import signal
 import subprocess
 import sys
+import tempfile
 import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 from types import SimpleNamespace
+from urllib.parse import urlparse
 
+import pyarrow.parquet as pq
 import pytest
 
 from tests.conftest import SF_DIR, SF_DIR_MED, bind_active_session
 from tests.oracle import _AGGHASH_DOUBLE_SCALE, _agghash_scalars_spark, canon_spark_type
 import udacity_data_engineer_capstone_spark as engine
-from udacity_data_engineer_capstone_spark import memo
+from udacity_data_engineer_capstone_spark import catalog, memo
 from udacity_data_engineer_capstone_spark.memo import Memo
 from udacity_data_engineer_capstone_spark.registry import QUERIES
+from udacity_data_engineer_capstone_spark.sources import i94_fixtures, sas7bdat
+from udacity_data_engineer_capstone_spark.streaming import events
 
 engine.load_all()
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _app(app_id: str = "app-1"):
@@ -240,24 +250,15 @@ for name in ("graph_bfs_multisource_bucketed", "stream_tumbling_counts",
 print("RAN")
 """
 
-# on-disk caches that outlive the process by design, keyed by user and
-# source identity
-_CROSS_PROCESS = (
-    "engine_layout_cache_",
-    "engine_sas7bdat_",
-    "engine_eventslog_",
-    "engine_filemeta_",
-    "engine_compacted_",
-    "engine_orders_",
-)
+# the one on-disk cache that outlives the process by design
+_CROSS_PROCESS = ("engine_stage_",)
 
 
 def test_engine_temp_dirs_die_with_their_process(tmp_path):
     """A process that stages streams, writes the BFS layout and writes a
     sink leaves no per-process ``engine_*`` directory in its TMPDIR."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = subprocess.run(
-        [sys.executable, "-c", _EXIT_SCRIPT.format(repo=repo, sf_dir=SF_DIR)],
+        [sys.executable, "-c", _EXIT_SCRIPT.format(repo=REPO, sf_dir=SF_DIR)],
         env=dict(os.environ, TMPDIR=str(tmp_path)),
         capture_output=True,
         text=True,
@@ -273,3 +274,170 @@ def test_engine_temp_dirs_die_with_their_process(tmp_path):
         and not any(e.startswith(f"{p}{uid}") for p in _CROSS_PROCESS)
     ]
     assert left == [], left
+
+
+_KILLED_SCRIPT = """
+import os, signal, sys
+sys.path.insert(0, {repo!r})
+from udacity_data_engineer_capstone_spark.memo import scratch_dir
+with open(os.path.join(scratch_dir("engine_t_"), "staged"), "w") as fh:
+    fh.write("left behind")
+os.kill(os.getpid(), signal.SIGKILL)
+"""
+
+
+def test_scratch_roots_of_killed_processes_are_removed(tmp_path, monkeypatch):
+    """A process killed before its exit handler runs leaves its scratch
+    root; the next process to create a root in that TMPDIR removes it."""
+    out = subprocess.run(
+        [sys.executable, "-c", _KILLED_SCRIPT.format(repo=REPO)],
+        env=dict(os.environ, TMPDIR=str(tmp_path)),
+        capture_output=True,
+        timeout=120,
+    )
+    assert out.returncode == -signal.SIGKILL, out.stderr[-2000:]
+    (dead,) = [e for e in os.listdir(tmp_path) if e.startswith("engine_proc_")]
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(memo, "_ROOT", None)
+    memo.scratch_dir("engine_t_")
+    assert not os.path.exists(tmp_path / dead)
+
+
+def test_only_memo_and_fixtures_use_tempfile():
+    """Engine temp paths come from ``memo.scratch_dir`` or
+    ``memo.stage_once``; the i94 fixtures keep their own fixed path
+    because oracle SQL bakes it in at import."""
+    pkg = os.path.dirname(engine.__file__)
+    users = set()
+    for dirpath, _dirs, files in os.walk(pkg):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, f)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Import)
+                    and any(a.name == "tempfile" for a in node.names)
+                ) or (isinstance(node, ast.ImportFrom) and node.module == "tempfile"):
+                    users.add(os.path.relpath(path, pkg))
+    assert users == {"memo.py", os.path.join("sources", "i94_fixtures.py")}
+
+
+_STAGES = {  # a stage that returns a file path: (call, sf dir, source table)
+    "sorted_log": (lambda spark: events._stage_sorted_log(spark, SF_DIR), SF_DIR, "events"),
+    "layout_rewrite": (
+        lambda spark: catalog._normalized_path(SF_DIR_MED, "lineitem"),
+        SF_DIR_MED,
+        "lineitem",
+    ),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_STAGES))
+def test_artifact_under_an_open_root_is_never_returned(spark, tmp_path, monkeypatch, kind):
+    """A stage root that other users can write is not trusted: after the
+    root that holds a built artifact is opened to 0o755 and the artifact
+    replaced, the next call builds elsewhere instead of serving it."""
+    stage, sf_dir, table = _STAGES[kind]
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    first = stage(spark)
+    assert first.startswith(f"{tmp_path}{os.sep}")
+    top = os.path.join(tmp_path, os.path.relpath(first, tmp_path).split(os.sep)[0])
+    os.chmod(top, 0o755)
+    with open(first, "wb") as fh:
+        fh.write(b"planted")
+    again = stage(spark)
+    assert not again.startswith(top + os.sep)
+    rows = pq.read_metadata(catalog.table_path(sf_dir, table)).num_rows
+    assert pq.read_metadata(again).num_rows == rows
+
+
+def test_raising_build_leaves_nothing_and_the_next_call_builds(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def boom(*_args):
+        raise RuntimeError("build failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(events, "load_table", boom)
+        with pytest.raises(RuntimeError, match="build failed"):
+            events._stage_sorted_log(spark, SF_DIR)
+    left = [
+        os.path.relpath(os.path.join(d, n), tmp_path)
+        for d, dirs, files in os.walk(tmp_path)
+        for n in dirs + files
+    ]
+    assert left in ([], [f"engine_stage_{os.getuid()}"]), left
+    path = events._stage_sorted_log(spark, SF_DIR)
+    assert pq.read_metadata(path).num_rows == pq.read_metadata(
+        catalog.table_path(SF_DIR, "events")
+    ).num_rows
+
+
+def test_publish_sweeps_stale_and_orphaned_stages(spark, tmp_path, monkeypatch):
+    """Publishing a stage removes its source's stage of older contents,
+    the stage of a source that was deleted, and the unpublished build of
+    a process that died."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    (tmp_path / "tmp").mkdir()
+    a, b = tmp_path / "a", tmp_path / "b"
+    for d in (a, b):
+        d.mkdir()
+        shutil.copy(catalog.table_path(SF_DIR, "events"), d)
+    old = events._stage_sorted_log(spark, str(a))
+    orphan = events._stage_sorted_log(spark, str(b))
+    os.remove(catalog.table_path(str(b), "events"))
+    dead = subprocess.run([sys.executable, "-c", "import os; print(os.getpid())"],
+                          capture_output=True, text=True, timeout=60).stdout.strip()
+    build = os.path.join(os.path.dirname(os.path.dirname(old)), f".{dead}_build")
+    os.mkdir(build)
+    src = catalog.table_path(str(a), "events")
+    st = os.stat(src)
+    os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    new = events._stage_sorted_log(spark, str(a))
+    assert os.path.exists(new) and new != old
+    assert not os.path.exists(old)
+    assert not os.path.exists(orphan)
+    assert not os.path.exists(build)
+
+
+def test_concurrent_stagings_of_one_input_share_one_stage(spark, tmp_path, monkeypatch):
+    """Two threads that parse one new SAS7BDAT file at the same time both
+    read the one published stage."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    (tmp_path / "tmp").mkdir()
+    path = str(tmp_path / "race.sas7bdat")
+    sas7bdat.write_sas7bdat(path, [("k", "num", 8)], [(float(i),) for i in range(50)])
+    both = threading.Barrier(2, timeout=60)
+    peek = sas7bdat._peek_spark_schema
+
+    def peek_together(p):
+        both.wait()  # both builds are under way before either writes
+        return peek(p)
+
+    monkeypatch.setattr(sas7bdat, "_peek_spark_schema", peek_together)
+
+    def read(_):
+        bind_active_session(spark)
+        df = sas7bdat.read_sas7bdat(spark, path)
+        return sorted(df.inputFiles()), df.count()
+
+    with ThreadPoolExecutor(2) as pool:
+        (files_a, n_a), (files_b, n_b) = pool.map(read, range(2))
+    assert n_a == n_b == 50
+    assert files_a == files_b
+    (stage,) = {os.path.dirname(urlparse(f).path) for f in files_a}
+    assert os.listdir(os.path.dirname(stage)) == [os.path.basename(stage)]
+
+
+def test_i94_fixtures_refuse_an_open_stable_dir(tmp_path, monkeypatch):
+    """The fixtures' fixed path is predictable in the shared temp
+    directory, so one that other users can write raises."""
+    planted = tmp_path / "stable"
+    planted.mkdir()
+    os.chmod(planted, 0o755)
+    monkeypatch.setattr(i94_fixtures, "STABLE_DIR", str(planted))
+    with pytest.raises(PermissionError):
+        i94_fixtures.generate_stable()

@@ -83,7 +83,7 @@ def test_spark_reader_stage_is_cached(spark, tmp_path):
     import tempfile
 
     stage_root = os.path.join(
-        tempfile.gettempdir(), f"engine_sas7bdat_{os.getuid()}"
+        tempfile.gettempdir(), f"engine_stage_{os.getuid()}"
     )
     before = set(glob.glob(os.path.join(stage_root, "*cached*")))
     assert before  # staged once
@@ -94,7 +94,7 @@ def test_spark_reader_stage_is_cached(spark, tmp_path):
 def _stage_root() -> str:
     import tempfile
 
-    return os.path.join(tempfile.gettempdir(), f"engine_sas7bdat_{os.getuid()}")
+    return os.path.join(tempfile.gettempdir(), f"engine_stage_{os.getuid()}")
 
 
 def _stages(path: str) -> list[str]:
@@ -102,7 +102,7 @@ def _stages(path: str) -> list[str]:
     import glob
 
     base = os.path.abspath(path).replace("/", "_").strip("_")
-    return glob.glob(os.path.join(_stage_root(), f"{base}-{'?' * 16}.parquet"))
+    return glob.glob(os.path.join(_stage_root(), f"sas7bdat-{base}-{'?' * 16}"))
 
 
 def test_rewritten_input_leaves_one_stage(spark, tmp_path):
@@ -137,8 +137,8 @@ def test_stale_stage_removed_on_read(spark, tmp_path):
     write_sas7bdat(path, COLS, _rows(10), dataset_name="PLANT")
     os.makedirs(_stage_root(), mode=0o700, exist_ok=True)
     base = os.path.abspath(path).replace("/", "_").strip("_")
-    stale = os.path.join(_stage_root(), f"{base}-{'0' * 16}.parquet")
-    other = os.path.join(_stage_root(), f"{base}-2-{'0' * 16}.parquet")
+    stale = os.path.join(_stage_root(), f"sas7bdat-{base}-{'0' * 16}")
+    other = os.path.join(_stage_root(), f"sas7bdat-{base}-2-{'0' * 16}")
     for d in (stale, other):
         _plant_stage(d, [path])
     try:
@@ -213,12 +213,12 @@ def test_multi_file_dir_parses_one_shard_per_file(spark, tmp_path):
     import tempfile
 
     stage_root = os.path.join(
-        tempfile.gettempdir(), f"engine_sas7bdat_{os.getuid()}"
+        tempfile.gettempdir(), f"engine_stage_{os.getuid()}"
     )
     sanitized = str(src).replace("/", "_").strip("_")
     staged = [
         d
-        for d in glob.glob(os.path.join(stage_root, f"{sanitized}-*.parquet"))
+        for d in glob.glob(os.path.join(stage_root, f"sas7bdat-{sanitized}-*"))
         if os.path.isdir(d)
     ]
     assert len(staged) == 1

@@ -35,7 +35,7 @@ from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StructType
 
-from udacity_data_engineer_capstone_spark.memo import Memo
+from udacity_data_engineer_capstone_spark.memo import Memo, stage_once
 
 TABLES = (
     "region",
@@ -72,32 +72,15 @@ def table_path(sf_dir: str, name: str) -> str:
 # ``SPARK_GRAFT_DISABLE_LAYOUT_SHIM=1`` to hard-disable it and serve
 # original paths — a cluster deployment runs the maintenance job instead).
 # Tables whose layout already feeds the cores are read as-is (bypass pinned
-# in tests/test_maintenance.py). The rewrite is one-time, keyed by
-# (path, mtime, size) for staleness, written atomically into a per-user
-# 0700 cache dir (ADVICE round 2: no predictable world-shared paths, no
-# partial reads under concurrency). Oracles keep reading the ORIGINAL
+# in tests/test_maintenance.py). The rewrite is one ``memo.stage_once``
+# stage, keyed by (path, mtime, size) for staleness and published
+# atomically into the per-user 0700 stage root, so no read sees a file
+# another user planted or a partial write. Oracles keep reading the ORIGINAL
 # files — only Spark's scan path is redirected, the rows are
 # byte-identical.
 
 _MIN_ROWS_TO_NORMALIZE = 50_000
 _TARGET_ROW_GROUPS = 32
-
-
-def _layout_cache_dir() -> str | None:
-    import tempfile
-
-    d = os.path.join(
-        tempfile.gettempdir(), f"engine_layout_cache_{os.getuid()}"
-    )
-    os.makedirs(d, mode=0o700, exist_ok=True)
-    # mode=0o700 applies only on creation: verify ownership and perms so
-    # a directory pre-created by another local user can't feed us
-    # substituted parquet (cache poisoning). On mismatch, disable the
-    # cache rather than read attacker-controllable files.
-    st = os.stat(d)
-    if st.st_uid != os.getuid() or stat.S_IMODE(st.st_mode) & 0o077:
-        return None
-    return d
 
 
 def parquet_file(sf_dir: str, name: str):
@@ -116,7 +99,7 @@ def parquet_file(sf_dir: str, name: str):
 
 def _normalized_path(sf_dir: str, name: str) -> str:
     """Return a read path for the table with scan-parallel layout,
-    rewriting once into the cache dir if the source needs it.
+    rewriting it once into a stage if the source needs it.
 
     TEST-ONLY shim (see module comment): production layout repair is
     the distributed ``maintenance.compact_parquet`` job; this exists
@@ -136,27 +119,18 @@ def _normalized_path(sf_dir: str, name: str) -> str:
             4, _TARGET_ROW_GROUPS // 2
         ):
             return src
-        cache_dir = _layout_cache_dir()
-        if cache_dir is None:  # untrusted cache dir — serve the original
-            return src
-        st = os.stat(src)
-        # no leading "_"/"." — Spark skips those as hidden/metadata files
-        key = (
-            os.path.abspath(src).replace("/", "_").strip("_")
-            + f"-{st.st_mtime_ns}-{st.st_size}"
-        )
-        dst = os.path.join(cache_dir, f"{key}.parquet")
-        if not os.path.exists(dst):
-            tbl = meta.read()
-            tmp = f"{dst}.tmp.{os.getpid()}"
+        leaf = os.path.basename(src)
+
+        def rewrite(path: str) -> None:
+            os.mkdir(path)
             pq.write_table(
-                tbl,
-                tmp,
+                meta.read(),
+                os.path.join(path, leaf),
                 row_group_size=max(8192, rows // _TARGET_ROW_GROUPS),
                 compression="snappy",
             )
-            os.replace(tmp, dst)  # atomic; concurrent writers converge
-        return dst
+
+        return os.path.join(stage_once("layout", [src], rewrite), leaf)
     except Exception:
         return src  # any surprise (no pyarrow, unreadable) → original path
 

@@ -6,14 +6,13 @@ statistics. Registered with oracles like everything else.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from udacity_data_engineer_capstone_spark.catalog import load_table
-from udacity_data_engineer_capstone_spark.memo import scratch_dir
+from udacity_data_engineer_capstone_spark.memo import scratch_dir, stage_once
 from udacity_data_engineer_capstone_spark.registry import query
 
 
@@ -925,30 +924,21 @@ def src_sas7bdat_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     to parquet by a distributed write for the scan. Demonstrates the
     reference's saurfang-connector slot (etl.py:103-107,227) as a
     working DataSource detail rather than a documented substitution."""
-    import os
-    import tempfile
-
     from udacity_data_engineer_capstone_spark.sources.sas7bdat import (
         read_sas7bdat,
         write_sas7bdat,
     )
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    stage_dir = tempfile.gettempdir()
-    sas_path = os.path.join(
-        stage_dir,
-        f"engine_orders_{os.getuid()}_{st.st_mtime_ns}_{st.st_size}.sas7bdat",
-    )
-    if not os.path.exists(sas_path):
+    def write_orders(path: str) -> None:
         subset = (
             load_table(spark, sf_dir, "orders")
             .where(F.col("o_orderkey") % 3 == 0)
             .select("o_orderkey", "o_totalprice", "o_orderstatus")
             .collect()
         )
+        os.mkdir(path)
         write_sas7bdat(
-            sas_path,
+            os.path.join(path, "orders.sas7bdat"),
             [
                 ("o_orderkey", "num", 8),
                 ("o_totalprice", "num", 8),
@@ -957,7 +947,11 @@ def src_sas7bdat_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
             [(r.o_orderkey, r.o_totalprice, r.o_orderstatus) for r in subset],
             dataset_name="ORDERS",
         )
-    df = read_sas7bdat(spark, sas_path)
+
+    stage = stage_once(
+        "orders_sas7bdat", [os.path.join(sf_dir, "orders.parquet")], write_orders
+    )
+    df = read_sas7bdat(spark, os.path.join(stage, "orders.sas7bdat"))
     return df.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.min("o_orderkey").cast("long").alias("min_key"),
@@ -1544,34 +1538,14 @@ def src_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: metadata columns are populated by the reader per
     split — no join, no extra I/O; the rollup is one hash aggregate."""
-    import os
-    import tempfile
-
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    d = os.path.join(
-        tempfile.gettempdir(),
-        f"engine_filemeta_{os.getuid()}_{st.st_mtime_ns}_{st.st_size}",
+    d = stage_once(
+        "filemeta",
+        [os.path.join(sf_dir, "orders.parquet")],
+        lambda path: load_table(spark, sf_dir, "orders")
+        .filter(F.col("o_orderstatus") == "F")
+        .repartition(4)
+        .write.parquet(path),
     )
-    if not os.path.exists(d):
-        # atomic publish: stage into a tmp sibling, os.rename into the
-        # final path — a crash mid-write can no longer poison the cache
-        # (the (mtime,size) key only guards *source* identity, not write
-        # completeness). rename is atomic on the same filesystem; a
-        # concurrent publisher losing the race just discards its copy.
-        tmp = tempfile.mkdtemp(prefix="engine_filemeta_stage_",
-                               dir=tempfile.gettempdir())
-        (
-            load_table(spark, sf_dir, "orders")
-            .filter(F.col("o_orderstatus") == "F")
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        try:
-            os.rename(tmp, d)
-        except OSError:  # another process published first
-            shutil.rmtree(tmp, ignore_errors=True)
     back = spark.read.parquet(d).select(
         F.col("_metadata.file_name").alias("file_name"),
         F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("cents"),

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from udacity_data_engineer_capstone_spark.catalog import load_table, register_views
-from udacity_data_engineer_capstone_spark.memo import scratch_dir
+from udacity_data_engineer_capstone_spark.memo import scratch_dir, stage_once
 from udacity_data_engineer_capstone_spark.operators.ordinal import (
     composite_bucket_key,
     global_cum,
@@ -488,9 +488,6 @@ def snk_compaction_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit row is computed FROM THE REWRITTEN FILES, so the oracle
     (recomputing from the original table) proves the rewrite lossless,
     while the layout booleans prove the files landed on target."""
-    import os
-    import tempfile
-
     from udacity_data_engineer_capstone_spark.catalog import table_path
     from udacity_data_engineer_capstone_spark.maintenance import (
         _list_data_files,
@@ -499,26 +496,17 @@ def snk_compaction_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = table_path(sf_dir, "lineitem")
-    st = os.stat(src)
-    # target bytes is part of the cache key: a target change must not
+    # target bytes is part of the stage key: a target change must not
     # reuse a rewrite laid out for the old target (the audit booleans
     # would be computed against the wrong geometry)
-    dst = os.path.join(
-        tempfile.gettempdir(),
-        f"engine_compacted_{os.getuid()}_{st.st_mtime_ns}_{st.st_size}"
-        f"_{_COMPACT_EXEC_TARGET}",
+    dst = stage_once(
+        "compacted",
+        [src],
+        lambda path: compact_parquet(
+            spark, src, path, target_bytes=_COMPACT_EXEC_TARGET
+        ),
+        key=str(_COMPACT_EXEC_TARGET),
     )
-    if not os.path.exists(dst):
-        stage = tempfile.mkdtemp(prefix="engine_compact_stage_")
-        stats = compact_parquet(
-            spark, src, stage, target_bytes=_COMPACT_EXEC_TARGET
-        )
-        try:
-            os.rename(stage, dst)  # atomic publish (cf. ADVICE r5)
-        except OSError:
-            import shutil
-
-            shutil.rmtree(stage, ignore_errors=True)
 
     n_files, total_bytes = _list_data_files(spark, dst)
     # recompute the plan from the SOURCE listing for the as-planned check

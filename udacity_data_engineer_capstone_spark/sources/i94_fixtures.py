@@ -19,6 +19,7 @@ import tempfile
 import numpy as np
 import pandas as pd
 
+from udacity_data_engineer_capstone_spark.memo import private_dir
 from udacity_data_engineer_capstone_spark.sources.sas_labels import (
     render_label_block,
 )
@@ -262,8 +263,11 @@ def generate_stable() -> dict[str, str]:
     fully-written private (0o700) staging dir, so its presence implies
     complete content — concurrent bench/pytest processes either skip
     (already present) or lose the rename race harmlessly. Seeded numpy
-    means every generation writes identical bytes."""
-    if not os.path.isdir(STABLE_DIR):
+    means every generation writes identical bytes. The path is
+    predictable in the shared temp directory, so an existing STABLE_DIR
+    that is not this user's 0700 directory raises instead of serving
+    fixtures another user could have planted."""
+    if not os.path.lexists(STABLE_DIR):
         parent = os.path.dirname(STABLE_DIR)
         staging = tempfile.mkdtemp(prefix=".engine_i94_staging_", dir=parent)
         os.chmod(staging, 0o700)
@@ -276,4 +280,8 @@ def generate_stable() -> dict[str, str]:
             import shutil
 
             shutil.rmtree(staging, ignore_errors=True)
+    if not private_dir(STABLE_DIR):
+        raise PermissionError(
+            f"{STABLE_DIR} is not a 0700 directory owned by this user"
+        )
     return fixture_paths()

@@ -51,15 +51,13 @@ IEEE doubles; strings are fixed-width, space-padded.
 
 from __future__ import annotations
 
-import json
 import os
-import re
-import shutil
 import struct
-import tempfile
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+
+from udacity_data_engineer_capstone_spark.memo import stage_once
 
 _MAGIC = (
     b"\x00\x00\x00\x00\x00\x00\x00\x00"
@@ -336,74 +334,26 @@ def read_sas7bdat(
     staged once to parquet by a DISTRIBUTED write — one shard per input
     file, written by the executor tasks themselves — and served from
     ``spark.read.parquet``, so scan parallelism, pushdown, and column
-    pruning apply to every downstream query. The stage is cached per
-    fingerprint of every input file's (path, mtime, size); repeated
-    reads parse the binary once. Each stage records its input paths in
-    an ``_inputs.json`` sidecar (Spark skips ``_`` files), and once a
-    read has published or reused its stage it sweeps the stage root
-    (:func:`_sweep`): the input's stages of other fingerprints (stale,
-    since the input changed) are removed, and so is every stage whose
-    recorded inputs are gone or that has no sidecar.
+    pruning apply to every downstream query. The stage is one
+    :func:`~..memo.stage_once` stage keyed by every input file's (path,
+    mtime, size), and by the directory's when ``path`` is one, so
+    repeated reads parse the binary once and a changed input set
+    stages anew.
     """
-    import hashlib
-
     files = _sas_file_list(path)
-    stage_root = os.path.join(
-        tempfile.gettempdir(), f"engine_sas7bdat_{os.getuid()}"
+    # a directory names its stage, and its listing is one more input
+    dirs = [path] if isinstance(path, str) and os.path.isdir(path) else []
+    inputs = dirs + files
+    return spark.read.parquet(
+        stage_once(
+            "sas7bdat", inputs, lambda dst: _stage(spark, files, chunk_rows, dst)
+        )
     )
-    os.makedirs(stage_root, mode=0o700, exist_ok=True)
-    own = os.stat(stage_root)
-    if own.st_uid != os.getuid():  # same poisoning guard as the catalog
-        stage_root = tempfile.mkdtemp(prefix="engine_sas7bdat_")
-    fp = hashlib.md5()
-    for f in files:
-        st = os.stat(f)
-        fp.update(f"{f}|{st.st_mtime_ns}|{st.st_size};".encode())
-    base = (
-        os.path.abspath(path if isinstance(path, str) else files[0])
-        .replace("/", "_")
-        .strip("_")
-    )
-    dst = os.path.join(stage_root, f"{base}-{fp.hexdigest()[:16]}.parquet")
-    if not os.path.exists(dst):
-        _stage(spark, files, chunk_rows, dst)
-    _sweep(stage_root, base, dst)
-    return spark.read.parquet(dst)
-
-
-_INPUTS = "_inputs.json"  # a stage's input paths; Spark skips "_" files
-_STAGE = r"-[0-9a-f]{16}\.parquet"  # the fingerprint suffix of a stage
-
-
-def _sweep(stage_root: str, base: str, dst: str) -> None:
-    """Remove every published stage in ``stage_root`` but ``dst`` that
-    no read can reach again: ``base``'s stages of other fingerprints,
-    stages whose recorded inputs are gone, and stages with no
-    ``_inputs.json`` sidecar. A stage being written (``….tmp.<pid>``) is
-    not published, and a published one always has its sidecar."""
-    own = re.compile(re.escape(base) + _STAGE)
-    stage = re.compile(".+" + _STAGE)
-    for name in os.listdir(stage_root):
-        path = os.path.join(stage_root, name)
-        if path == dst or not stage.fullmatch(name):
-            continue
-        if own.fullmatch(name) or not _inputs_exist(path):
-            shutil.rmtree(path, ignore_errors=True)
-
-
-def _inputs_exist(stage: str) -> bool:
-    """Whether ``stage`` has a sidecar and every input it names exists."""
-    try:
-        with open(os.path.join(stage, _INPUTS)) as fh:
-            inputs = json.load(fh)
-    except (OSError, ValueError):
-        return False
-    return all(os.path.exists(p) for p in inputs)
 
 
 def _stage(spark: SparkSession, files: list[str], chunk_rows: int, dst: str) -> None:
-    """Parse ``files`` one executor task each and publish the rows as the
-    parquet stage ``dst`` (one shard per file)."""
+    """Parse ``files`` one executor task each and write the rows as the
+    parquet directory ``dst`` (one shard per file)."""
     schema = _peek_spark_schema(files[0])
     col_names = [f.name for f in schema.fields]
     # pandas dtype kinds each peeked Spark type tolerates — checked
@@ -453,14 +403,4 @@ def _stage(spark: SparkSession, files: list[str], chunk_rows: int, dst: str) -> 
         spark.sparkContext.parallelize([(p,) for p in files], len(files)),
         "path string",
     )
-    parsed = paths_df.mapInPandas(_parse_files, schema=schema)
-    tmp = f"{dst}.tmp.{os.getpid()}"
-    parsed.write.parquet(tmp)
-    with open(os.path.join(tmp, _INPUTS), "w") as fh:
-        json.dump(files, fh)
-    try:
-        os.rename(tmp, dst)  # atomic publish; loser of a race cleans up
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(dst):
-            raise
+    paths_df.mapInPandas(_parse_files, schema=schema).write.parquet(dst)

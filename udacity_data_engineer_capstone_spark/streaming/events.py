@@ -35,7 +35,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from udacity_data_engineer_capstone_spark.catalog import load_table, parquet_file
-from udacity_data_engineer_capstone_spark.memo import Memo, scratch_dir
+from udacity_data_engineer_capstone_spark.memo import Memo, scratch_dir, stage_once
 from udacity_data_engineer_capstone_spark.registry import query
 from udacity_data_engineer_capstone_spark.session import (
     fits_one_partition,
@@ -1957,52 +1957,34 @@ GROUP BY event_type
 """
 
 
-def _stage_sorted_log(
-    spark: SparkSession, sf_dir: str, force: bool = False
-) -> str:
+def _stage_sorted_log(spark: SparkSession, sf_dir: str) -> str:
     """One event_id-sorted single-file parquet — the 'topic' the custom
     source replays. Single-file is test scaffolding (the source's offset
-    cursor addresses row ids, however the log is physically stored);
-    cached per source fingerprint, atomically published. This cache
-    SURVIVES across processes (keyed on the source parquet's
-    mtime/size), so the staging cost is otherwise invisible to any
-    recorded number — ``force=True`` rebuilds unconditionally so
-    bench.py can time it per run (VERDICT r12 item 8)."""
-    import os
-    import shutil
-    import tempfile
-
+    cursor addresses row ids, however the log is physically stored). It
+    is one :func:`~..memo.stage_once` stage keyed on the source parquet,
+    so it survives across processes; bench.py times
+    :func:`_write_sorted_log` itself."""
     src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    dst = os.path.join(
-        tempfile.gettempdir(),
-        f"engine_eventslog_{os.getuid()}_{st.st_mtime_ns}_{st.st_size}",
+    stage = stage_once(
+        "eventslog", [src], lambda path: _write_sorted_log(spark, sf_dir, path)
     )
-    final = os.path.join(dst, "log.parquet")
-    if os.path.exists(final) and not force:
-        return final
-    stage = tempfile.mkdtemp(prefix="engine_eventslog_stage_")
+    return os.path.join(stage, "log.parquet")
+
+
+def _write_sorted_log(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """Write the event_id-sorted log as the one file ``path/log.parquet``."""
     (
         load_table(spark, sf_dir, "events")
         .select("event_id", "ts", "user_id", "event_type", "value")
         .orderBy("event_id")
         .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(stage)
+        .write.parquet(path)
     )
     part = next(
-        p for p in os.listdir(stage)
+        p for p in os.listdir(path)
         if p.startswith("part-") and p.endswith(".parquet")
     )
-    os.makedirs(os.path.dirname(final), exist_ok=True)
-    inner = tempfile.mkdtemp(prefix="engine_eventslog_pub_")
-    shutil.move(os.path.join(stage, part), os.path.join(inner, "log.parquet"))
-    try:
-        os.rename(inner, dst)
-    except OSError:
-        shutil.rmtree(inner, ignore_errors=True)
-    shutil.rmtree(stage, ignore_errors=True)
-    return final
+    os.rename(os.path.join(path, part), os.path.join(path, "log.parquet"))
 
 
 @query(
