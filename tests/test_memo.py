@@ -403,6 +403,26 @@ def test_publish_sweeps_stale_and_orphaned_stages(spark, tmp_path, monkeypatch):
     assert not os.path.exists(build)
 
 
+def test_a_long_source_path_stages_and_is_reused(tmp_path, monkeypatch):
+    """A source path far longer than a file name still stages: the
+    stage name keeps a bounded head of it plus a hash."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    (tmp_path / "tmp").mkdir()
+    src = tmp_path / "d" / ("n" * 200) / ("m" * 60)
+    src.mkdir(parents=True)
+    assert len(str(src)) >= 250
+    builds = []
+
+    def build(path):
+        builds.append(path)
+        os.mkdir(path)
+
+    first = memo.stage_once("long", [str(src)], build)
+    assert memo.stage_once("long", [str(src)], build) == first
+    assert len(builds) == 1
+    assert len(os.path.basename(first)) < 150
+
+
 def test_concurrent_stagings_of_one_input_share_one_stage(spark, tmp_path, monkeypatch):
     """Two threads that parse one new SAS7BDAT file at the same time both
     read the one published stage."""

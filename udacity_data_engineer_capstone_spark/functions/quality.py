@@ -33,14 +33,3 @@ def dq_count(df: DataFrame, name: str, at_least: int = 1) -> int:
         )
     return n
 
-
-def dq_no_nulls(df: DataFrame, cols: list[str], name: str) -> None:
-    """Raise if any listed column contains NULLs."""
-    from pyspark.sql import functions as F
-
-    cond = None
-    for c in cols:
-        expr = F.col(c).isNull()
-        cond = expr if cond is None else (cond | expr)
-    if not df.filter(cond).isEmpty():
-        raise DataQualityError(f"data quality check failed: {name} has NULLs in {cols}")

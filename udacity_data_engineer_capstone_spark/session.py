@@ -15,12 +15,19 @@ SCALE.md §"Cluster sizing profile".
 
 from __future__ import annotations
 
+import atexit
 import math
 import os
 import re
+import shutil
+import struct
+import subprocess
 from dataclasses import dataclass
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+from udacity_data_engineer_capstone_spark import memo
 
 _MB = 1 << 20
 _GB = 1 << 30
@@ -183,7 +190,16 @@ def get_spark(app_name: str = "udacity_data_engineer_capstone_spark") -> SparkSe
 def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
     """Apply engine configs to any builder (used when the driver owns the
     session). Scale-sensitive knobs come from the active
-    :class:`SizingProfile`; the rest are scale-invariant engine policy."""
+    :class:`SizingProfile`; the rest are scale-invariant engine policy.
+    A driver JVM the builder will start also gets the class-data
+    archive option of :func:`_class_data_option`, appended to the
+    caller's ``spark.driver.extraJavaOptions``."""
+    option = _class_data_option() if SparkContext._gateway is None else None
+    if option:
+        caller = builder._options.get("spark.driver.extraJavaOptions")
+        builder = builder.config(
+            "spark.driver.extraJavaOptions", f"{caller} {option}" if caller else option
+        )
     builder = (
         builder
         # AQE: runtime partition coalescing, skew-join splitting, and
@@ -213,6 +229,159 @@ def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
     for k, v in profile_from_env().derive().items():
         builder = builder.config(k, v)
     return builder
+
+
+# -- class-data archive for the driver JVM ---------------------------------
+
+_DYNAMIC_MAGIC = 0xF00BABA8  # first word of a complete JDK 13+ dynamic archive
+_DUMP = "classes.jsa"  # what a dumping JVM writes in its pending directory
+_ARCHIVE = re.compile(r"classes-(\d+)\.jsa")  # a published archive and its size
+_DUMP_WAIT_S = 120
+_AT_EXIT: list = []  # the dump this process claimed: [pending, final, source, inputs]
+
+
+def _class_data_option() -> str | None:
+    """The option that starts a new driver JVM from this user's dynamic
+    class-data archive, or that has it dump one; ``None`` to start
+    without. The JVM maps a class-data archive at start instead of
+    loading and verifying each class from the jars.
+
+    The archive is one :func:`~.memo.stage_path` stage under
+    ``$XDG_CACHE_HOME/spark-graft/cds`` (default ``~/.cache``), keyed on
+    the real ``java`` binary and the listing of Spark's ``jars/``. It is
+    per user and outlives processes; that root must pass
+    :func:`~.memo.private_dir`, because an archive another user can
+    write is code that runs in the JVM.
+
+    - Published: ``-XX:SharedArchiveFile=<archive>``. An archive whose
+      size is not the one recorded when it was published is dropped.
+    - Missing: a pending dump of a dead process that the JVM finished
+      is published first. Otherwise, if no live process is dumping,
+      this process claims ``.<pid>_<stage>/`` and its JVM dumps there
+      with ``-XX:ArchiveClassesAtExit``; :func:`_finish_dump` publishes
+      it when this process exits.
+
+    JDK 17 refuses an archive whose classpath holds a non-empty
+    directory, and Spark puts its conf directory on the classpath. So
+    ``SPARK_CONF_DIR`` is pointed at an empty directory beside the
+    archives, only when ``$SPARK_HOME/conf`` holds nothing but
+    ``*.template`` files: the JVM then reads the same configuration.
+    A conf directory with any other file, or a ``SPARK_CONF_DIR`` set
+    by the user, means no archive and an untouched environment."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    cache = os.environ.get("XDG_CACHE_HOME") or os.path.join(
+        os.path.expanduser("~"), ".cache"
+    )
+    root = os.path.join(cache, "spark-graft")
+    conf, cds = os.path.join(root, "conf"), os.path.join(root, "cds")
+    spark_home = _find_spark_home()
+    user_conf = os.environ.get("SPARK_CONF_DIR")
+    try:
+        if user_conf is None:
+            default = os.path.join(spark_home, "conf")
+            names = os.listdir(default) if os.path.isdir(default) else []
+            if not all(n.endswith(".template") for n in names):
+                return None
+        elif user_conf != conf:
+            return None
+        if not (memo.private_root(root) and memo.private_root(cds)):
+            return None
+        os.makedirs(conf, exist_ok=True)
+        java = (
+            os.path.join(os.environ["JAVA_HOME"], "bin", "java")
+            if os.environ.get("JAVA_HOME")
+            else shutil.which("java")
+        )
+        if os.listdir(conf) or java is None:
+            return None
+        jars = os.path.join(spark_home, "jars")
+        source, final, inputs = memo.stage_path(
+            cds, "jvm", [os.path.realpath(java), jars], "\n".join(sorted(os.listdir(jars)))
+        )
+        stage = os.path.basename(final)
+        archive = _archive(final)
+        if archive is None:
+            for name in os.listdir(cds):
+                if name.split("_", 1)[-1] == stage and memo.dead_build(name):
+                    _publish_dump(os.path.join(cds, name), final, source, inputs)
+            archive = _archive(final)
+        if archive is None:
+            pending = os.path.join(cds, f".{os.getpid()}_{stage}")
+            os.makedirs(pending, 0o700, exist_ok=True)
+            if any(
+                n.startswith(".") and not memo.dead_build(n)
+                for n in os.listdir(cds)
+                if n != os.path.basename(pending)
+            ):  # another process is dumping
+                shutil.rmtree(pending, ignore_errors=True)
+                return None
+            if not _AT_EXIT:
+                atexit.register(_finish_dump, os.getpid())
+            _AT_EXIT[:] = [pending, final, source, inputs]
+    except OSError:
+        return None
+    os.environ["SPARK_CONF_DIR"] = conf
+    if archive is None:
+        return f"-XX:ArchiveClassesAtExit={os.path.join(pending, _DUMP)}"
+    return f"-XX:SharedArchiveFile={archive}"
+
+
+def _archive(stage: str) -> str | None:
+    """The archive published in ``stage``, or ``None``. A stage whose
+    archive is missing or not the size it was published at (a JVM maps
+    a truncated archive and faults) is removed, to be dumped again."""
+    if not os.path.isdir(stage):
+        return None
+    for name in os.listdir(stage):
+        m = _ARCHIVE.fullmatch(name)
+        path = os.path.join(stage, name)
+        if m and os.path.getsize(path) == int(m[1]):
+            return path
+    shutil.rmtree(stage, ignore_errors=True)
+    return None
+
+
+def _publish_dump(pending: str, final: str, source: str, inputs: list[str]) -> None:
+    """Publish the archive a JVM dumped into ``pending`` as the stage
+    ``final``, if the JVM finished it: it writes the header, and so the
+    magic word, last."""
+    dump = os.path.join(pending, _DUMP)
+    try:
+        with open(dump, "rb") as fh:
+            head = fh.read(4)
+    except FileNotFoundError:
+        return
+    if len(head) == 4 and struct.unpack("=I", head)[0] == _DYNAMIC_MAGIC:
+        os.rename(dump, os.path.join(pending, f"classes-{os.path.getsize(dump)}.jsa"))
+        memo.publish(pending, final, source, inputs)
+
+
+def _finish_dump(pid: int) -> None:
+    """At the exit of the process that claimed a dump: stop its Spark
+    context, end its driver JVM, which writes the archive as it exits,
+    and publish the archive. A JVM that outlives the wait leaves its
+    dump for a later start to publish."""
+    if os.getpid() != pid:  # a forked child inherits this handler
+        return
+    pending, final, source, inputs = _AT_EXIT
+    proc = getattr(SparkContext._gateway, "proc", None)
+    if proc is not None:
+        try:
+            if SparkContext._active_spark_context is not None:
+                SparkContext._active_spark_context.stop()
+        except Exception:
+            pass
+        proc.stdin.close()
+        try:
+            proc.wait(timeout=_DUMP_WAIT_S)
+        except subprocess.TimeoutExpired:
+            return
+    try:
+        _publish_dump(pending, final, source, inputs)
+    except OSError:
+        pass
+    shutil.rmtree(pending, ignore_errors=True)
 
 
 def _byte_string(v: str) -> int:

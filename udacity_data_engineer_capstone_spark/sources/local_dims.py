@@ -16,7 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 from udacity_data_engineer_capstone_spark.sources.sas_labels import LABEL_SCHEMA
 
 I94_MODES = [("1", "Air"), ("2", "Sea"), ("3", "Land"), ("9", "Not reported")]
-I94_VISAS = [("1", "Business"), ("2", "Pleasure"), ("3", "Student")]
 
 
 def dim_from_rows(
@@ -27,7 +26,3 @@ def dim_from_rows(
 
 def i94_modes(spark: SparkSession) -> DataFrame:
     return dim_from_rows(spark, I94_MODES)
-
-
-def i94_visas(spark: SparkSession) -> DataFrame:
-    return dim_from_rows(spark, I94_VISAS)

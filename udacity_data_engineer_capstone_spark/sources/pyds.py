@@ -156,30 +156,26 @@ class _EventsLogStreamReader(DataSourceStreamReader):
 
         # planning metadata only: the row count bounds the cursor
         self.n_rows = pq.ParquetFile(self.path).metadata.num_rows
+        self._planned = 0
 
     def initialOffset(self) -> dict:
         return {"next": 0}
 
     def latestOffset(self) -> dict:
-        # advance one chunk per micro-batch until the log is drained
-        cur = getattr(self, "_cursor", 0)
-        nxt = min(cur + self.chunk, self.n_rows)
-        self._cursor = nxt
-        return {"next": nxt}
+        # one chunk per micro-batch past the furthest offset Spark has
+        # planned or committed, until the log is drained. The cursor is
+        # derived from those offsets, never kept on its own: on a
+        # restart Spark plans the checkpointed batch through
+        # partitions() before it asks for the next one, so a fresh
+        # reader resumes at the committed offset instead of 0.
+        return {"next": min(self._planned + self.chunk, self.n_rows)}
 
-    def _clamp_cursor(self, committed: int) -> None:
-        # RESTART SAFETY: a fresh reader starts its in-memory cursor at
-        # 0, but on checkpoint recovery Spark resumes from the committed
-        # offset and hands it back through partitions()/commit(). Clamp
-        # the cursor to every offset the engine shows us so latestOffset
-        # never falls below the checkpointed position (which would skip
-        # ranges / emit non-monotonic offsets).
-        if committed > getattr(self, "_cursor", 0):
-            self._cursor = committed
+    def _plan(self, offset: int) -> None:
+        self._planned = max(self._planned, offset)
 
     def partitions(self, start: dict, end: dict):
         lo, hi = start["next"], end["next"]
-        self._clamp_cursor(hi)
+        self._plan(max(lo, hi))
         if hi <= lo:
             return [_RangePartition(self.path, lo, lo)]
         step = max(1, (hi - lo) // self.tasks)
@@ -223,7 +219,7 @@ class _EventsLogStreamReader(DataSourceStreamReader):
         yield from out.to_batches()
 
     def commit(self, end: dict) -> None:
-        self._clamp_cursor(end["next"])
+        self._plan(end["next"])
 
     def stop(self) -> None:
         pass
