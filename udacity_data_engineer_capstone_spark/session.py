@@ -296,8 +296,9 @@ def _class_data_option() -> str | None:
         if os.listdir(conf) or java is None:
             return None
         jars = os.path.join(spark_home, "jars")
+        listing = "\n".join(sorted(os.listdir(jars)))
         source, final, inputs = memo.stage_path(
-            cds, "jvm", [os.path.realpath(java), jars], "\n".join(sorted(os.listdir(jars)))
+            cds, "jvm", [os.path.realpath(java), jars], listing
         )
         stage = os.path.basename(final)
         archive = _archive(final)
