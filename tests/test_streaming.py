@@ -531,11 +531,11 @@ def test_python_stream_source_resumes_from_checkpoint(spark, sf_dir, tmp_path):
     """Exactly-once for the custom offset-cursor source
     (sources/pyds.py events_log): stop a checkpointed drain mid-log,
     restart from the SAME checkpoint with a FRESH reader instance
-    (its cursor derives from the offsets Spark hands back, so it
-    resumes at the committed offset, not 0), and prove the final
-    totals equal the batch ground truth: no offset range lost, none
-    double-delivered. The sink writes each batch id once, since Spark
-    may replay a batch that ran but was not committed."""
+    (its ``cursor`` file holds the furthest offset Spark planned, so
+    it resumes there, not at 0), and prove the final totals equal the
+    batch ground truth: no offset range lost, none double-delivered.
+    The sink writes each batch id once, since Spark may replay a batch
+    that ran but was not committed."""
     import time
 
     from udacity_data_engineer_capstone_spark.sources.pyds import (
@@ -556,6 +556,7 @@ def test_python_stream_source_resumes_from_checkpoint(spark, sf_dir, tmp_path):
             spark.readStream.format("events_log")
             .option("path", path)
             .option("chunk", str(chunk))
+            .option("cursor", f"{ckpt}/events_log.cursor")
             .load()
         )
 
@@ -625,9 +626,52 @@ def test_python_stream_source_resumes_from_checkpoint(spark, sf_dir, tmp_path):
     assert streamed == truth
 
 
-def test_python_stream_source_cursor_resumes_at_the_planned_offset(tmp_path):
-    """A fresh reader's next offset is one chunk past the furthest
-    offset Spark planned or committed, however often it is asked."""
+def test_python_stream_source_resumes_after_a_committed_stop(spark, sf_dir, tmp_path):
+    """Each availableNow run of the events_log source plans one chunk
+    and stops only once that batch is committed; every restart is a
+    fresh reader on the same checkpoint. Run after run, the log is
+    delivered one chunk at a time, each row exactly once."""
+    from udacity_data_engineer_capstone_spark.sources.pyds import (
+        register_events_log,
+    )
+    from udacity_data_engineer_capstone_spark.streaming.events import (
+        _stage_sorted_log,
+    )
+
+    path = _stage_sorted_log(spark, sf_dir)
+    register_events_log(spark)
+    ckpt = str(tmp_path / "ckpt")
+    out_dir = str(tmp_path / "rows")
+    total = load_table(spark, sf_dir, "events").count()
+    chunk = -(-total // 3)
+
+    def sink(batch_df, batch_id):
+        batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
+
+    delivered = []
+    for _ in range(4):
+        q = (
+            spark.readStream.format("events_log")
+            .option("path", path)
+            .option("chunk", str(chunk))
+            .option("cursor", f"{ckpt}/events_log.cursor")
+            .load()
+            .writeStream.foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120)
+        delivered.append(spark.read.parquet(out_dir).count())
+    assert delivered == [chunk, 2 * chunk, total, total]
+    got = spark.read.parquet(out_dir)
+    assert got.select("event_id").distinct().count() == total
+
+
+def test_python_stream_source_cursor_file_resumes_a_fresh_reader(tmp_path):
+    """The furthest offset Spark planned or committed outlives the
+    reader in its ``cursor`` file: a fresh reader resumes one chunk
+    past it before Spark shows it any offset."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -637,13 +681,24 @@ def test_python_stream_source_cursor_resumes_at_the_planned_offset(tmp_path):
 
     path = str(tmp_path / "log.parquet")
     pq.write_table(pa.table({"event_id": list(range(100))}), path)
-    reader = _EventsLogStreamReader({"path": path, "chunk": "30"})
-    assert reader.latestOffset() == reader.latestOffset() == {"next": 30}
-    # a restart: Spark plans the checkpointed batch before asking on
-    reader.partitions({"next": 30}, {"next": 60})
-    assert reader.latestOffset() == {"next": 90}
+    cursor = tmp_path / "ckpt" / "events_log.cursor"
+    options = {"path": path, "chunk": "30", "cursor": str(cursor)}
+    reader = _EventsLogStreamReader(options)
+    assert reader.latestOffset() == {"next": 30}
+    assert not cursor.exists()  # an offset Spark has not planned
+    reader.partitions({"next": 0}, {"next": 30})
+    # restarted after that batch was committed: no call from Spark first
+    assert _EventsLogStreamReader(options).latestOffset() == {"next": 60}
+    # restarted to replay it: the replayed range moves nothing
+    fresh = _EventsLogStreamReader(options)
+    fresh.partitions({"next": 0}, {"next": 30})
+    assert fresh.latestOffset() == {"next": 60}
+    # without a cursor file a fresh reader starts at the log's head
+    assert _EventsLogStreamReader({"path": path, "chunk": "30"}).latestOffset() == {
+        "next": 30
+    }
     reader.commit({"next": 90})
-    assert reader.latestOffset() == reader.latestOffset() == {"next": 100}
+    assert _EventsLogStreamReader(options).latestOffset() == {"next": 100}
 
 
 def test_python_stream_source_reader_yields_arrow_batches(spark, sf_dir):

@@ -21,9 +21,8 @@ Artifacts built once from input files and reused by later processes
 compaction rewrite, the orders ``.sas7bdat``, the file-metadata shards)
 go through :func:`stage_once`: one per-user 0700 root, one key rule,
 one atomic publish and one sweep of stages no call can reach again.
-The driver JVM's class-data archive, which the JVM writes as it exits,
-uses the same key rule, publish and sweep (:func:`stage_path`,
-:func:`publish`) under its own root (``session._class_data_option``).
+The driver JVM's class-data archive is one more such stage, under a
+per-user cache root instead (``session._class_data_option``).
 """
 
 from __future__ import annotations
@@ -178,50 +177,35 @@ def private_root(path: str) -> bool:
 
 
 def stage_once(
-    kind: str, inputs: list[str], build: Callable[[str], None], key: str = ""
+    kind: str,
+    inputs: list[str],
+    build: Callable[[str], None],
+    key: str = "",
+    root: str | None = None,
 ) -> str:
     """The directory of the ``kind`` artifact built from ``inputs``,
     built by ``build(path)`` the first time any process asks for it.
 
-    The stage is named by :func:`stage_path`. ``build`` creates and
-    fills ``path`` inside a private dot-prefixed directory, and
-    :func:`publish` renames it into place. A build that raises leaves
-    nothing behind; of two concurrent builders the loser deletes its
-    copy and both return the published one. Stages live in
-    ``<tempdir>/engine_stage_<uid>``; when that is not this user's 0700
-    directory, they are built under the scratch root instead and
-    nothing is read from it. Only a publish sweeps (:func:`_sweep`),
-    so reusing a stage costs a ``stat`` per input."""
-    root = os.path.join(tempfile.gettempdir(), f"engine_stage_{os.getuid()}")
+    ``inputs[0]`` is the source the caller read (a file or a directory);
+    the stage is named by ``kind``, that source and a fingerprint of
+    every input's ``(abspath, st_mtime_ns, st_size)`` and ``key``, so a
+    rewritten input or another ``key`` builds a new stage. A source
+    longer than ``_SOURCE_CHARS`` keeps its head plus a hash of the
+    whole, so a name stays far below the file-name limit. ``build``
+    creates and fills ``path`` inside a private dot-prefixed directory;
+    the stage is published with one ``os.rename`` after an
+    ``_inputs.json`` sidecar records the inputs. A build that raises
+    leaves nothing behind; of two concurrent builders the loser deletes
+    its copy and both return the published one. Stages live in
+    ``root``, by default ``<tempdir>/engine_stage_<uid>``; when that is
+    not this user's 0700 directory, they are built under the scratch
+    root instead and nothing is read from it. Only a publish sweeps
+    (:func:`_sweep`), so reusing a stage costs a ``stat`` per input."""
+    if root is None:
+        root = os.path.join(tempfile.gettempdir(), f"engine_stage_{os.getuid()}")
     if not private_root(root):
         root = os.path.join(_scratch_root(), "stage")
         os.makedirs(root, exist_ok=True)
-    source, final, inputs = stage_path(root, kind, inputs, key)
-    if os.path.isdir(final):
-        return final
-    tmp = tempfile.mkdtemp(prefix=f".{os.getpid()}_", dir=root)
-    try:
-        path = os.path.join(tmp, "stage")
-        build(path)
-        publish(path, final, source, inputs)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return final
-
-
-def stage_path(
-    root: str, kind: str, inputs: list[str], key: str = ""
-) -> tuple[str, str, list[str]]:
-    """``(source, path, inputs)`` of the ``kind`` stage under ``root``
-    built from ``inputs``, made absolute.
-
-    ``inputs[0]`` is the source the caller read (a file or a
-    directory). The stage is named ``<kind>-<source>-<fingerprint>``:
-    the source is that path with ``/`` as ``_``, and one longer than
-    ``_SOURCE_CHARS`` keeps its head plus a hash of the whole, so a
-    name stays far below the file-name limit. The fingerprint hashes
-    every input's ``(abspath, st_mtime_ns, st_size)`` and ``key``, so a
-    rewritten input or another ``key`` names a new stage."""
     inputs = [os.path.abspath(p) for p in inputs]
     fingerprint = hashlib.md5(key.encode())
     for p in inputs:
@@ -232,31 +216,25 @@ def stage_path(
     if len(src) > _SOURCE_CHARS:
         src = f"{src[:_SOURCE_CHARS - 9]}-{hashlib.md5(src.encode()).hexdigest()[:8]}"
     source = f"{kind}-{src}-"
-    return source, os.path.join(root, source + fingerprint.hexdigest()[:16]), inputs
-
-
-def publish(built: str, final: str, source: str, inputs: list[str]) -> None:
-    """Publish the directory ``built`` as the stage ``final``: an
-    ``_inputs.json`` sidecar records ``inputs``, then one ``os.rename``
-    puts it in place and the stage root is swept. If another builder
-    published ``final`` first, ``built`` is left for its caller to
-    delete."""
-    with open(os.path.join(built, _SIDECAR), "w") as fh:
-        json.dump(inputs, fh)
+    final = os.path.join(root, source + fingerprint.hexdigest()[:16])
+    if os.path.isdir(final):
+        return final
+    tmp = tempfile.mkdtemp(prefix=f".{os.getpid()}_", dir=root)
     try:
-        os.rename(built, final)
-    except OSError:  # another builder published first
-        if not os.path.isdir(final):
-            raise
-    else:
-        _sweep(os.path.dirname(final), source, final)
-
-
-def dead_build(name: str) -> bool:
-    """Whether ``name`` is the dot-prefixed build directory of a
-    process that is gone (``.<pid>_...``)."""
-    pid = name[1:].split("_", 1)[0]
-    return name.startswith(".") and pid.isdigit() and not _alive(int(pid))
+        path = os.path.join(tmp, "stage")
+        build(path)
+        with open(os.path.join(path, _SIDECAR), "w") as fh:
+            json.dump(inputs, fh)
+        try:
+            os.rename(path, final)
+        except OSError:  # another builder published first
+            if not os.path.isdir(final):
+                raise
+        else:
+            _sweep(root, source, final)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return final
 
 
 def _sweep(root: str, source: str, keep: str) -> None:
@@ -270,7 +248,8 @@ def _sweep(root: str, source: str, keep: str) -> None:
         if path == keep:
             continue
         if name.startswith("."):
-            gone = dead_build(name)
+            pid = name[1:].split("_", 1)[0]
+            gone = pid.isdigit() and not _alive(int(pid))
         else:
             gone = own.fullmatch(name) or not _inputs_exist(path)
         if gone:

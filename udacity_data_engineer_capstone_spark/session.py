@@ -15,13 +15,13 @@ SCALE.md §"Cluster sizing profile".
 
 from __future__ import annotations
 
-import atexit
 import math
 import os
 import re
 import shutil
 import struct
 import subprocess
+import sys
 from dataclasses import dataclass
 
 from pyspark import SparkContext
@@ -234,32 +234,53 @@ def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
 # -- class-data archive for the driver JVM ---------------------------------
 
 _DYNAMIC_MAGIC = 0xF00BABA8  # first word of a complete JDK 13+ dynamic archive
-_DUMP = "classes.jsa"  # what a dumping JVM writes in its pending directory
 _ARCHIVE = re.compile(r"classes-(\d+)\.jsa")  # a published archive and its size
-_DUMP_WAIT_S = 120
-_AT_EXIT: list = []  # the dump this process claimed: [pending, final, source, inputs]
+_DUMP_TIMEOUT_S = 300
+
+# What the JVM that dumps the archive runs: a session whose first
+# queries read and write parquet, convert through Arrow, join,
+# aggregate, rank and cache, so the archive holds the classes such
+# queries load. The JVM writes the archive as it exits; closing its
+# stdin ends it, and the script waits for it.
+_DUMP_SCRIPT = """
+import sys
+from pyspark import SparkContext
+from pyspark.sql import SparkSession
+spark = (
+    SparkSession.builder.master("local[2]")
+    .config("spark.driver.extraJavaOptions", f"-XX:ArchiveClassesAtExit={sys.argv[1]}")
+    .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+)
+spark.range(10000).selectExpr("id", "id % 97 AS k", "id / 7 AS v").write.parquet("probe")
+spark.read.parquet("probe").createOrReplaceTempView("t")
+spark.sql(
+    "SELECT a.k, count(*) AS n, sum(b.v) AS v FROM t a JOIN t b ON a.id = b.id "
+    "GROUP BY a.k ORDER BY n DESC"
+).toPandas()
+spark.sql("SELECT k, rank() OVER (PARTITION BY k ORDER BY v) AS r FROM t").cache().count()
+spark.stop()
+SparkContext._gateway.proc.stdin.close()
+sys.exit(SparkContext._gateway.proc.wait())
+"""
 
 
 def _class_data_option() -> str | None:
     """The option that starts a new driver JVM from this user's dynamic
-    class-data archive, or that has it dump one; ``None`` to start
-    without. The JVM maps a class-data archive at start instead of
-    loading and verifying each class from the jars.
+    class-data archive, or ``None`` to start without. The JVM maps the
+    archive at start instead of loading and verifying each class from
+    the jars.
 
-    The archive is one :func:`~.memo.stage_path` stage under
+    The archive is one :func:`~.memo.stage_once` stage under
     ``$XDG_CACHE_HOME/spark-graft/cds`` (default ``~/.cache``), keyed on
     the real ``java`` binary and the listing of Spark's ``jars/``. It is
     per user and outlives processes; that root must pass
     :func:`~.memo.private_dir`, because an archive another user can
-    write is code that runs in the JVM.
-
-    - Published: ``-XX:SharedArchiveFile=<archive>``. An archive whose
-      size is not the one recorded when it was published is dropped.
-    - Missing: a pending dump of a dead process that the JVM finished
-      is published first. Otherwise, if no live process is dumping,
-      this process claims ``.<pid>_<stage>/`` and its JVM dumps there
-      with ``-XX:ArchiveClassesAtExit``; :func:`_finish_dump` publishes
-      it when this process exits.
+    write is code that runs in the JVM. When the stage is missing, the
+    caller waits while :func:`_dump_class_data` builds it in a short
+    JVM of its own. An archive whose size is not the one recorded when
+    it was built is dropped and built again.
 
     JDK 17 refuses an archive whose classpath holds a non-empty
     directory, and Spark puts its conf directory on the classpath. So
@@ -296,44 +317,47 @@ def _class_data_option() -> str | None:
         if os.listdir(conf) or java is None:
             return None
         jars = os.path.join(spark_home, "jars")
-        listing = "\n".join(sorted(os.listdir(jars)))
-        source, final, inputs = memo.stage_path(
-            cds, "jvm", [os.path.realpath(java), jars], listing
-        )
-        stage = os.path.basename(final)
-        archive = _archive(final)
-        if archive is None:
-            for name in os.listdir(cds):
-                if name.split("_", 1)[-1] == stage and memo.dead_build(name):
-                    _publish_dump(os.path.join(cds, name), final, source, inputs)
-            archive = _archive(final)
-        if archive is None:
-            pending = os.path.join(cds, f".{os.getpid()}_{stage}")
-            os.makedirs(pending, 0o700, exist_ok=True)
-            if any(
-                n.startswith(".") and not memo.dead_build(n)
-                for n in os.listdir(cds)
-                if n != os.path.basename(pending)
-            ):  # another process is dumping
-                shutil.rmtree(pending, ignore_errors=True)
-                return None
-            if not _AT_EXIT:
-                atexit.register(_finish_dump, os.getpid())
-            _AT_EXIT[:] = [pending, final, source, inputs]
-    except OSError:
+        env = {**os.environ, "SPARK_CONF_DIR": conf}
+
+        def stage() -> str:
+            return memo.stage_once(
+                "jvm",
+                [os.path.realpath(java), jars],
+                lambda path: _dump_class_data(path, env),
+                key="\n".join(sorted(os.listdir(jars))),
+                root=cds,
+            )
+
+        archive = _archive(stage()) or _archive(stage())
+    except (OSError, subprocess.SubprocessError):
+        return None
+    if archive is None:
         return None
     os.environ["SPARK_CONF_DIR"] = conf
-    if archive is None:
-        return f"-XX:ArchiveClassesAtExit={os.path.join(pending, _DUMP)}"
     return f"-XX:SharedArchiveFile={archive}"
 
 
+def _dump_class_data(path: str, env: dict[str, str]) -> None:
+    """Build the archive stage ``path``: a JVM started as every later
+    driver JVM is (same ``java``, jars and conf directory) runs
+    :data:`_DUMP_SCRIPT` and writes the archive as it exits."""
+    os.mkdir(path)
+    dump = os.path.join(path, "classes.jsa")
+    subprocess.run(
+        [sys.executable, "-c", _DUMP_SCRIPT, dump],
+        cwd=path, env=env, check=True, capture_output=True, timeout=_DUMP_TIMEOUT_S,
+    )
+    shutil.rmtree(os.path.join(path, "probe"))
+    with open(dump, "rb") as fh:  # the JVM writes the header last
+        if fh.read(4) != struct.pack("=I", _DYNAMIC_MAGIC):
+            raise OSError(f"{dump}: not a complete class-data archive")
+    os.rename(dump, os.path.join(path, f"classes-{os.path.getsize(dump)}.jsa"))
+
+
 def _archive(stage: str) -> str | None:
-    """The archive published in ``stage``, or ``None``. A stage whose
-    archive is missing or not the size it was published at (a JVM maps
-    a truncated archive and faults) is removed, to be dumped again."""
-    if not os.path.isdir(stage):
-        return None
+    """The archive built in ``stage``, or ``None``. A stage whose
+    archive is missing or not the size it was built at (a JVM maps a
+    truncated archive and faults) is removed, to be built again."""
     for name in os.listdir(stage):
         m = _ARCHIVE.fullmatch(name)
         path = os.path.join(stage, name)
@@ -341,48 +365,6 @@ def _archive(stage: str) -> str | None:
             return path
     shutil.rmtree(stage, ignore_errors=True)
     return None
-
-
-def _publish_dump(pending: str, final: str, source: str, inputs: list[str]) -> None:
-    """Publish the archive a JVM dumped into ``pending`` as the stage
-    ``final``, if the JVM finished it: it writes the header, and so the
-    magic word, last."""
-    dump = os.path.join(pending, _DUMP)
-    try:
-        with open(dump, "rb") as fh:
-            head = fh.read(4)
-    except FileNotFoundError:
-        return
-    if len(head) == 4 and struct.unpack("=I", head)[0] == _DYNAMIC_MAGIC:
-        os.rename(dump, os.path.join(pending, f"classes-{os.path.getsize(dump)}.jsa"))
-        memo.publish(pending, final, source, inputs)
-
-
-def _finish_dump(pid: int) -> None:
-    """At the exit of the process that claimed a dump: stop its Spark
-    context, end its driver JVM, which writes the archive as it exits,
-    and publish the archive. A JVM that outlives the wait leaves its
-    dump for a later start to publish."""
-    if os.getpid() != pid:  # a forked child inherits this handler
-        return
-    pending, final, source, inputs = _AT_EXIT
-    proc = getattr(SparkContext._gateway, "proc", None)
-    if proc is not None:
-        try:
-            if SparkContext._active_spark_context is not None:
-                SparkContext._active_spark_context.stop()
-        except Exception:
-            pass
-        proc.stdin.close()
-        try:
-            proc.wait(timeout=_DUMP_WAIT_S)
-        except subprocess.TimeoutExpired:
-            return
-    try:
-        _publish_dump(pending, final, source, inputs)
-    except OSError:
-        pass
-    shutil.rmtree(pending, ignore_errors=True)
 
 
 def _byte_string(v: str) -> int:

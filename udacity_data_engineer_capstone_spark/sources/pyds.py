@@ -15,6 +15,7 @@ file too large or too numerous to parse on one machine.
 
 from __future__ import annotations
 
+import os
 import re
 import threading
 
@@ -156,26 +157,44 @@ class _EventsLogStreamReader(DataSourceStreamReader):
 
         # planning metadata only: the row count bounds the cursor
         self.n_rows = pq.ParquetFile(self.path).metadata.num_rows
-        self._planned = 0
+        # RESTART SAFETY: Spark hands a fresh reader no offset of a
+        # batch it committed before the stop, so a checkpointed query
+        # names a ``cursor`` file in which the reader keeps the
+        # furthest offset Spark planned. Spark logs a batch's offsets
+        # before it plans the batch, so that offset never passes the
+        # checkpoint; a logged batch the file missed was not committed,
+        # and Spark plans it again before asking for a new offset.
+        self.cursor_file = options.get("cursor")
+        self._kept = 0
+        if self.cursor_file and os.path.exists(self.cursor_file):
+            with open(self.cursor_file) as fh:
+                self._kept = int(fh.read())
+        self._cursor = self._kept
 
     def initialOffset(self) -> dict:
         return {"next": 0}
 
     def latestOffset(self) -> dict:
-        # one chunk per micro-batch past the furthest offset Spark has
-        # planned or committed, until the log is drained. The cursor is
-        # derived from those offsets, never kept on its own: on a
-        # restart Spark plans the checkpointed batch through
-        # partitions() before it asks for the next one, so a fresh
-        # reader resumes at the committed offset instead of 0.
-        return {"next": min(self._planned + self.chunk, self.n_rows)}
+        # advance one chunk per micro-batch until the log is drained
+        self._cursor = min(self._cursor + self.chunk, self.n_rows)
+        return {"next": self._cursor}
 
-    def _plan(self, offset: int) -> None:
-        self._planned = max(self._planned, offset)
+    def _planned(self, offset: int) -> None:
+        # Spark shows every offset it planned (partitions) or committed
+        # (commit): the cursor never falls below one, so latestOffset
+        # never goes back past the checkpointed position
+        self._cursor = max(self._cursor, offset)
+        if self.cursor_file and offset > self._kept:
+            tmp = f"{self.cursor_file}.tmp"
+            os.makedirs(os.path.dirname(os.path.abspath(tmp)), exist_ok=True)
+            with open(tmp, "w") as fh:
+                fh.write(str(offset))
+            os.replace(tmp, self.cursor_file)
+            self._kept = offset
 
     def partitions(self, start: dict, end: dict):
         lo, hi = start["next"], end["next"]
-        self._plan(max(lo, hi))
+        self._planned(max(lo, hi))
         if hi <= lo:
             return [_RangePartition(self.path, lo, lo)]
         step = max(1, (hi - lo) // self.tasks)
@@ -219,14 +238,16 @@ class _EventsLogStreamReader(DataSourceStreamReader):
         yield from out.to_batches()
 
     def commit(self, end: dict) -> None:
-        self._plan(end["next"])
+        self._planned(end["next"])
 
     def stop(self) -> None:
         pass
 
 
 class EventsLogDataSource(DataSource):
-    """``spark.readStream.format("events_log").option("path", ...)``."""
+    """``spark.readStream.format("events_log").option("path", ...)``;
+    a query that restarts from a checkpoint also sets
+    ``.option("cursor", <file beside the checkpoint>)``."""
 
     @classmethod
     def name(cls) -> str:
